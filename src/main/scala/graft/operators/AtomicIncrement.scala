@@ -1163,7 +1163,7 @@ object AtomicIncrement {
     */
   def appendIncrementAtomic(df: DataFrame, sink: String,
       watermarkCol: String): Long =
-    appendWithHook(df, sink, watermarkCol, () => ())
+    appendIncrementAtomic(df, sink, watermarkCol, Nil)
 
   /** Outcome of a counted append: rows published vs rows the
     * watermark gate dropped (watermark ≤ committed max, or NULL).
@@ -1184,7 +1184,7 @@ object AtomicIncrement {
   def appendIncrementAtomicCounted(df: DataFrame, sink: String,
       watermarkCol: String, extraStatsCols: Seq[String] = Nil,
       failOnDropped: Boolean = false): AppendResult =
-    appendGated(df, sink, watermarkCol, () => (), extraStatsCols,
+    appendGated(df, sink, watermarkCol, extraStatsCols,
       countDropped = true, failOnDropped = failOnDropped)(_ => true)
       .map { case (a, d) => AppendResult(a, d) }
       .getOrElse(throw new IllegalStateException(
@@ -1198,7 +1198,10 @@ object AtomicIncrement {
     */
   def appendIncrementAtomic(df: DataFrame, sink: String,
       watermarkCol: String, extraStatsCols: Seq[String]): Long =
-    appendWithHook(df, sink, watermarkCol, () => (), extraStatsCols)
+    appendGated(df, sink, watermarkCol, extraStatsCols)(_ => true)
+      .map(_._1)
+      .getOrElse(throw new IllegalStateException(
+        "unreachable: the always-true gate rejected"))
 
   /** WRITE-AUDIT-PUBLISH append (round 14 — the Iceberg WAP / staging
     * pattern): the increment stages exactly like
@@ -1221,28 +1224,14 @@ object AtomicIncrement {
   def appendAuditedAtomic(df: DataFrame, sink: String,
       watermarkCol: String, extraStatsCols: Seq[String] = Nil)(
       audit: DataFrame => Boolean): Option[Long] =
-    appendGated(df, sink, watermarkCol, () => (),
-      extraStatsCols)(audit).map(_._1)
-
-  /** [[appendIncrementAtomic]] with a seam between stage and publish —
-    * the spec injects a competing commit there to exercise the
-    * optimistic-concurrency loss path deterministically.
-    */
-  private[graft] def appendWithHook(df: DataFrame, sink: String,
-      watermarkCol: String, beforePublish: () => Unit,
-      extraStatsCols: Seq[String] = Nil): Long =
-    appendGated(df, sink, watermarkCol, beforePublish,
-      extraStatsCols)(_ => true)
-      .map(_._1)
-      .getOrElse(throw new IllegalStateException(
-        "unreachable: the always-true gate rejected"))
+    appendGated(df, sink, watermarkCol, extraStatsCols)(audit).map(_._1)
 
   /** Returns Some((appended, dropped)) on publish/no-op, None on audit
     * rejection; `dropped` is counted only when `countDropped` (one
     * extra job over the incoming frame), else reported as 0.
     */
   private def appendGated(df: DataFrame, sink: String,
-      watermarkCol: String, beforePublish: () => Unit,
+      watermarkCol: String,
       extraStatsCols: Seq[String], countDropped: Boolean = false,
       failOnDropped: Boolean = false)(
       audit: DataFrame => Boolean): Option[(Long, Long)] = {
@@ -1256,8 +1245,8 @@ object AtomicIncrement {
       .find(_.name.equalsIgnoreCase(c))
       .getOrElse(throw new IllegalArgumentException(
         s"stats column '$c' not in ${df.columns.mkString(",")}")))
-    val (version, dataEntries, dvEntries) = snapshotSplit(spark, sink)
-    val priorEntries = dataEntries ++ dvEntries
+    val txn = Txn.begin(spark, sink)
+    val Txn.Snap(version, dataEntries, _) = txn.snap
     val prior = dataEntries.map(_.path)
     // watermark resolution, cheapest exact answer first: the manifest's
     // recorded stats (zero I/O beyond the manifest itself), then the
@@ -1327,104 +1316,57 @@ object AtomicIncrement {
             "batch is a retry, DATA LOSS if the stream delivers " +
             "out-of-order event times (the append contract requires " +
             "cross-batch watermark monotonicity)")
-      val (batchDir, staged0) =
-        if (preN == 0) ("", Seq.empty[ManifestEntry])
-        else {
-          val (dir, rels) = stageBatchDir(fresh, spark, fs, sink)
-          (dir, inParallel(rels)(rel =>
-            entryForStagedFile(spark, sink, rel, resolved +: extraFields)))
-        }
-      val n =
-        if (preN >= 0) preN
-        else staged0.foldLeft(Option(0L)) { (acc, e) =>
-          for { a <- acc; st <- e.statsFor(RowsCol)
-                c <- st.max.toLongOption } yield a + c
-        }.getOrElse( // unreadable footer: count the staged bytes
-          spark.read.schema(fresh.schema)
-            .parquet(staged0.map(e => s"$sink/${e.path}"): _*).count())
-      if (n == 0 && batchDir.nonEmpty)
-        fs.delete(new Path(s"$sink/$batchDir"), true)
-      if (n > 0) {
-        // on a dv-carrying table new data must outrank every standing
-        // tombstone, or an appended key that was once deleted would be
-        // re-masked — stamp the staged lines at this commit's sequence
-        val staged = if (dvEntries.isEmpty) staged0
-          else staged0.map(stampSeq(_, version + 1))
-        def dropStaged(): Unit =
-          staged.headOption.foreach(e0 =>
-            fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-        // the WAP seam: the audit reads the STAGED FILES — the exact
-        // bytes a publish would serve — and a rejection (or an audit
-        // crash) removes them before any manifest moves
-        val verdict =
-          try audit(spark.read.schema(fresh.schema)
+      if (preN == 0) return Some((0L, dropped))
+      // snapshot schema to embed: a fresh table declares the
+      // increment's own schema; a standing one merges the embedded
+      // prior (memo — seeded by the snapshot parse above when the
+      // last commit embedded one) with the increment's. A memo miss
+      // or merge conflict embeds nothing — the legacy footer sweep
+      // stays the adjudicator and the NEXT commit upgrades (any
+      // dataSchema sweep seeds the memo).
+      def snapSchemaOver(dataNow: Seq[ManifestEntry])
+          : Option[org.apache.spark.sql.types.StructType] =
+        if (dataNow.isEmpty) Some(fresh.schema)
+        else Option(schemaMemo.get(schemaKey(sink, dataNow)))
+          .flatMap(mergeStructs(_, fresh.schema))
+      // APPEND-SIDE OCC RETRY (round 17): a lost race re-publishes
+      // the already-staged batch on top of the winner when the
+      // EFFECTIVE WATERMARK BOUND provably did not move — the raw
+      // manifest max AND the floor line for the gate column are
+      // byte-identical at the winner's version — because then the
+      // staged rows are still exactly the fresh set this gate
+      // admitted. A winner that raised the max (another appender —
+      // a single-writer-contract violation anyway) or lowered it
+      // (a replace) fails the fingerprint and rethrows; maintenance
+      // rewrites and confined merges keep it intact and retry. Gates
+      // that resolved their bound OUTSIDE manifest stats (footer
+      // sweep / scan) have no comparable fingerprint and never retry.
+      val wmFp0 = rawMaxFingerprint(dataEntries, resolved.name)
+      val floorFp0 = floorStatsFor(fs, sink, version, resolved.name)
+      var n = 0L
+      // the gate: an all-filtered replay (zero staged rows) and a WAP
+      // audit rejection both reclaim the batch before any manifest
+      // moves. The audit reads the STAGED FILES — the exact bytes a
+      // publish would serve
+      val published = txn.commit(
+        gate = staged => {
+          n = if (preN >= 0) preN
+            else staged.foldLeft(Option(0L)) { (acc, e) =>
+              for { a <- acc; st <- e.statsFor(RowsCol)
+                    c <- st.max.toLongOption } yield a + c
+            }.getOrElse( // unreadable footer: count the staged bytes
+              spark.read.schema(fresh.schema)
+                .parquet(staged.map(e => s"$sink/${e.path}"): _*).count())
+          n > 0 && audit(spark.read.schema(fresh.schema)
             .parquet(staged.map(e => s"$sink/${e.path}"): _*))
-          catch { case e: Throwable => dropStaged(); throw e }
-        if (!verdict) { dropStaged(); return None }
-        // snapshot schema to embed: a fresh table declares the
-        // increment's own schema; a standing one merges the embedded
-        // prior (memo — seeded by the snapshot parse above when the
-        // last commit embedded one) with the increment's. A memo miss
-        // or merge conflict embeds nothing — the legacy footer sweep
-        // stays the adjudicator and the NEXT commit upgrades (any
-        // dataSchema sweep seeds the memo).
-        def snapSchemaOver(dataNow: Seq[ManifestEntry])
-            : Option[org.apache.spark.sql.types.StructType] =
-          if (dataNow.isEmpty) Some(fresh.schema)
-          else Option(schemaMemo.get(schemaKey(sink, dataNow)))
-            .flatMap(mergeStructs(_, fresh.schema))
-        // APPEND-SIDE OCC RETRY (round 17): a lost race re-publishes
-        // the already-staged batch on top of the winner when the
-        // EFFECTIVE WATERMARK BOUND provably did not move — the raw
-        // manifest max AND the floor line for the gate column are
-        // byte-identical at the winner's version — because then the
-        // staged rows are still exactly the fresh set this gate
-        // admitted. A winner that raised the max (another appender —
-        // a single-writer-contract violation anyway) or lowered it
-        // (a replace) fails the fingerprint and rethrows; maintenance
-        // rewrites and confined merges keep it intact and retry. The
-        // staged lines RE-STAMP at the new version+1, so dvs the
-        // winner added still rank below this append (its rows
-        // serialize after the winner's deletes — correct survival).
-        // Gates that resolved their bound OUTSIDE manifest stats
-        // (footer sweep / scan) have no comparable fingerprint and
-        // never retry.
-        val wmFp0 = rawMaxFingerprint(dataEntries, resolved.name)
-        val floorFp0 = floorStatsFor(fs, sink, version, resolved.name)
-        try {
-          beforePublish()
-          var v = version
-          var dataNow = dataEntries
-          var dvNow = dvEntries
-          var attempt = 0
-          var done = false
-          while (!done) {
-            val st = if (dvNow.isEmpty) staged0
-              else staged0.map(stampSeq(_, v + 1))
-            try {
-              publish(fs, sink, (dataNow ++ dvNow ++ st).map(_.render),
-                v + 1, snapshotSchema = snapSchemaOver(dataNow))
-              done = true
-            } catch {
-              case cme: java.util.ConcurrentModificationException =>
-                if (attempt >= 2 || wmFp0.isEmpty) throw cme
-                attempt += 1
-                val (v2, d2, dv2) = snapshotSplit(spark, sink)
-                val boundSame =
-                  rawMaxFingerprint(d2, resolved.name) == wmFp0 &&
-                    floorStatsFor(fs, sink, v2, resolved.name) == floorFp0
-                if (!boundSame) throw cme
-                v = v2; dataNow = d2; dvNow = dv2
-            }
-          }
-        } catch { case e: Throwable =>
-          // failed commit must not leak half-staged state into a GC
-          // race with the winner's readers — drop the whole batch dir
-          dropStaged()
-          throw e
-        }
-      }
-      Some((n, dropped))
+        },
+        schema = s => snapSchemaOver(s.data),
+        retry = wmFp0.map(_ => (_, winner) =>
+          rawMaxFingerprint(winner.data, resolved.name) == wmFp0 &&
+            floorStatsFor(fs, sink, winner.version, resolved.name) ==
+              floorFp0))(
+        txn.stage(fresh, resolved +: extraFields))
+      if (published.isEmpty && n > 0) None else Some((n, dropped))
     } finally { if (countBoth) df.unpersist(); () }
   }
 
@@ -1552,54 +1494,12 @@ object AtomicIncrement {
     }
   }
 
-  /** Phase 1: write the increment under `_data/batch-<id>` and return
-    * the new files' sink-relative paths. Package-visible so the spec
-    * can crash-inject between stage and publish.
-    */
-  private[graft] def stageBatch(fresh: DataFrame, spark: SparkSession,
-      fs: FileSystem, sink: String): Seq[String] =
-    stageBatchDir(fresh, spark, fs, sink)._2
-
-  /** [[stageBatch]] that also returns the batch directory itself, so a
-    * caller that discovers the staged batch is empty (zero parquet
-    * parts, or zero rows by footer count) can reclaim the directory
-    * without parsing it back out of a file path.
-    */
-  private[graft] def stageBatchDir(fresh: DataFrame, spark: SparkSession,
-      fs: FileSystem, sink: String): (String, Seq[String]) = {
-    val batch = s"$DataDir/batch-${java.util.UUID.randomUUID()}"
-    fresh.write.parquet(s"$sink/$batch")
-    (batch, fs.listStatus(new Path(s"$sink/$batch")).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-      .sorted
-      .map(n => s"$batch/$n"))
-  }
-
-  /** [[stageBatch]] plus per-file footer stats for each of
-    * `statsFields`, read from the just-written files (batch-local —
-    * the write that just produced them is the expensive part). A
-    * column whose footer cannot answer exactly (all-null chunks,
-    * suppressed float stats) stages without that group: it disables
-    * the manifest watermark shortcut and is never pruned on, both
-    * conservative.
-    */
-  private[graft] def stageEntries(fresh: DataFrame, spark: SparkSession,
-      fs: FileSystem, sink: String,
-      statsFields: Seq[org.apache.spark.sql.types.StructField])
-      : Seq[ManifestEntry] =
-    // footer opens are independent per staged file — read them on the
-    // driver pool (a 16-file OPTIMIZE rewrite pays one round trip, not
-    // sixteen in series; order is preserved by inParallel)
-    inParallel(stageBatch(fresh, spark, fs, sink))(rel =>
-      entryForStagedFile(spark, sink, rel, statsFields))
-
-  /** One manifest line for an ALREADY-WRITTEN staged file — the
-    * footer-stats half of [[stageEntries]], shared with the DSv2
-    * row-level write path (whose parquet parts are written by
-    * executor [[org.apache.spark.sql.connector.write.DataWriter]]s
-    * and reach the driver as commit messages, not through
-    * [[stageBatch]]).
+  /** One manifest line for an ALREADY-WRITTEN staged file: footer
+    * stats for each of `statsFields`, read from the just-written file
+    * (batch-local — the write that just produced it is the expensive
+    * part). A column whose footer cannot answer exactly (suppressed
+    * float stats) stages without that group: it disables the manifest
+    * watermark shortcut and is never pruned on, both conservative.
     */
   private[graft] def entryForStagedFile(spark: SparkSession,
       sink: String, rel: String,
@@ -2018,75 +1918,6 @@ object AtomicIncrement {
     ()
   }
 
-  /** BOUNDED OCC RETRY for a CONFINED copy-on-write commit (round 17,
-    * the r16 verdict's #6 — Delta-style logical conflict detection):
-    * when the optimistic publish loses the version token, the loser
-    * RE-READS the winner's snapshot and checks, structurally, that
-    * its already-staged rewrite is still exactly right there:
-    *
-    *  1. every file this statement REWROTE still stands in the new
-    *     snapshot with an IDENTICAL manifest line — the winner
-    *     carried it verbatim, neither rewriting nor retiring what we
-    *     read;
-    *  2. the delete-vector set is unchanged by path (a new dv could
-    *     mask rows our rewrite already materialized as survivors; a
-    *     dropped one could resurrect rows we anti-joined away);
-    *  3. every file the winner ADDED is provably OUTSIDE this
-    *     statement's scope (`addedSafe` — churn-interval
-    *     disjointness for a keyed merge, a no-may-match stats
-    *     verdict for a predicate DELETE/UPDATE): our commit
-    *     serializes AFTER the winner, so it must behave as if it had
-    *     read those rows, and "provably irrelevant" is the only
-    *     recomputation-free way to honor that;
-    *  4. the snapshot schema is unchanged — a racing evolution would
-    *     make the staged files' schema stale.
-    *
-    * All four hold → re-publish `carried′ ++ dv ++ staged` on top of
-    * the winner with ZERO recomputation (the staged parquet is
-    * immutable and still exact). Any check fails → rethrow the
-    * original conflict and the caller re-runs the whole statement
-    * (the pre-round-17 behavior). `retries` bounds the loop, so a
-    * sink hot enough to lose every re-race still terminates loudly.
-    * Returns the version actually published.
-    */
-  private[graft] def publishConfinedRetry(spark: SparkSession,
-      fs: FileSystem, sink: String,
-      snap0: (Long, Seq[ManifestEntry], Seq[ManifestEntry]),
-      touchedPaths: Set[String],
-      schemaAtRead: org.apache.spark.sql.types.StructType,
-      addedSafe: Seq[ManifestEntry] => Boolean,
-      doPublish: (Long, Seq[ManifestEntry], Seq[ManifestEntry]) => Unit,
-      retries: Int = 2): Long = {
-    var (v, dataE, dvE) = snap0
-    val dvPaths0 = snap0._3.map(_.path).toSet
-    var attempt = 0
-    while (true) {
-      try {
-        doPublish(v,
-          dataE.filterNot(e => touchedPaths.contains(e.path)), dvE)
-        return v + 1
-      } catch {
-        case cme: java.util.ConcurrentModificationException =>
-          if (attempt >= retries) throw cme
-          attempt += 1
-          val (v2, dataE2, dvE2) = snapshotSplit(spark, sink)
-          val line = dataE.map(e => e.path -> e.render).toMap
-          val line2 = dataE2.map(e => e.path -> e.render).toMap
-          val touchedIntact = touchedPaths.forall(p =>
-            line.get(p).exists(r => line2.get(p).contains(r)))
-          val dvSame = dvE2.map(_.path).toSet == dvPaths0
-          val added = dataE2.filterNot(e => line.contains(e.path))
-          lazy val schemaSame =
-            asNullableStruct(dataSchema(spark, sink, dataE2)) ==
-              asNullableStruct(schemaAtRead)
-          if (!(touchedIntact && dvSame && addedSafe(added) &&
-              schemaSame)) throw cme
-          v = v2; dataE = dataE2; dvE = dvE2
-      }
-    }
-    -1L // unreachable
-  }
-
   /** Maintenance compaction: rewrite the committed snapshot into
     * `numFiles` coalesced data files and publish THAT list as the next
     * manifest version. Incremental appends accrete one small batch dir
@@ -2114,12 +1945,7 @@ object AtomicIncrement {
     * after the rewrite.
     */
   def compact(spark: SparkSession, sink: String,
-      numFiles: Int = 1, bloomCols: Seq[String] = Nil): (Int, Int) =
-    compactWithHook(spark, sink, numFiles, () => (), bloomCols)
-
-  private[graft] def compactWithHook(spark: SparkSession, sink: String,
-      numFiles: Int, beforePublish: () => Unit,
-      bloomCols: Seq[String] = Nil): (Int, Int) = {
+      numFiles: Int = 1, bloomCols: Seq[String] = Nil): (Int, Int) = {
     val (version, dataE, _) = snapshotSplit(spark, sink)
     require(dataE.nonEmpty, s"nothing committed to compact at $sink")
     // readCommitted applies any delete vectors, so the rewrite FOLDS
@@ -2133,8 +1959,8 @@ object AtomicIncrement {
     val statsFields = coveredStatsFields(dataE, snap.schema)
     // row-preserving maintenance must CARRY the watermark floor —
     // only a deliberate snapshot replace may reset it
-    val staged = replaceWithHook(snap.repartition(numFiles),
-      sink, version, beforePublish, statsFields, resetFloors = false)
+    val staged = replaceGated(snap.repartition(numFiles),
+      sink, version, statsFields, resetFloors = false)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -2180,8 +2006,8 @@ object AtomicIncrement {
     val clustered = snap
       .repartitionByRange(numFiles, byCols.map(col): _*)
       .sortWithinPartitions(byCols.map(col): _*)
-    val staged = replaceWithHook(clustered, sink, version, () => (),
-      statsFields, resetFloors = false)
+    val staged = replaceGated(clustered, sink, version, statsFields,
+      resetFloors = false)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -2215,7 +2041,8 @@ object AtomicIncrement {
       bloomCols: Seq[String] = Nil): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1: $targetFiles")
     val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+    val txn = Txn.begin(spark, sink)
+    val Txn.Snap(_, dataE, dvE) = txn.snap
     require(dataE.nonEmpty, s"nothing committed to compact at $sink")
     val sizes = inParallel(dataE)(e =>
       e.path -> fs.getFileStatus(new Path(s"$sink/${e.path}")).getLen)
@@ -2233,17 +2060,8 @@ object AtomicIncrement {
     val statsFields = ((keyCol.toSeq ++ coveredStatsFields(dataE,
         fullSchema).map(_.name)).distinct)
       .flatMap(c => fullSchema.fields.find(_.name.equalsIgnoreCase(c)))
-    val staged0 = stageEntries(packed, spark, fs, sink, statsFields)
-    val staged = if (dvE.isEmpty) staged0
-      else staged0.map(stampSeq(_, version + 1))
-    try publish(fs, sink,
-      (large ++ dvE ++ staged).map(_.render), version + 1,
-      snapshotSchema = Some(fullSchema))
-    catch { case e: Throwable =>
-      staged.headOption.foreach(e0 =>
-        fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-      throw e
-    }
+    val staged = txn.commit(carry = _ => large ++ dvE,
+      schema = _ => Some(fullSchema))(txn.stage(packed, statsFields)).get._2
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (small.size, staged.size)
   }
@@ -2442,8 +2260,8 @@ object AtomicIncrement {
     val statsFields = (zCols
         .flatMap(c => snap.schema.fields.find(_.name.equalsIgnoreCase(c)))
       ++ coveredStatsFields(dataE, snap.schema)).distinct
-    val staged = replaceWithHook(clustered, sink, version, () => (),
-      statsFields, resetFloors = false)
+    val staged = replaceGated(clustered, sink, version, statsFields,
+      resetFloors = false)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -2475,7 +2293,7 @@ object AtomicIncrement {
     */
   def replaceSnapshot(df: DataFrame, sink: String,
       expectVersion: Long): Unit =
-    { replaceWithHook(df, sink, expectVersion, () => ()); () }
+    { replaceGated(df, sink, expectVersion); () }
 
   /** BLIND append — SQL `INSERT INTO` semantics through the catalog
     * face: rows land as new staged files with NO watermark gate (ANSI
@@ -2489,42 +2307,26 @@ object AtomicIncrement {
     * commit. Returns the appended row count.
     */
   def appendBlindAtomic(df: DataFrame, sink: String): Long = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+    val txn = Txn.begin(df.sparkSession, sink)
+    val dataE = txn.snap.data
     val statsFields =
       if (dataE.isEmpty)
         df.schema.fields.filter(f => tagOf(f.dataType).nonEmpty).toSeq
       else coveredStatsFields(dataE, df.schema)
-    val staged0 = stageEntries(df, spark, fs, sink, statsFields)
-    val staged = if (dvE.isEmpty) staged0
-      else staged0.map(stampSeq(_, version + 1))
-    val counts = staged.map(_.statsFor(RowsCol)
-      .flatMap(_.min.toLongOption))
-    val appended = counts.flatten.sum
-    // INSERT of an empty SELECT: drop the empty staged parts and
-    // publish nothing — a zero-row version helps no reader. Only
-    // when every part's row count is KNOWN zero: an unreadable
-    // footer stages without the count, and treating that as empty
-    // would silently drop real rows
-    if (dataE.nonEmpty && counts.forall(_.contains(0L))) {
-      staged.headOption.foreach(e0 =>
-        fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-      return 0L
-    }
-    val snapSchema =
-      if (dataE.isEmpty) Some(df.schema)
-      else Option(schemaMemo.get(schemaKey(sink, dataE)))
-        .flatMap(mergeStructs(_, df.schema))
-    try publish(fs, sink,
-      (dataE ++ dvE ++ staged).map(_.render), version + 1,
-      snapshotSchema = snapSchema)
-    catch { case e: Throwable =>
-      staged.headOption.foreach(e0 =>
-        fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-      throw e
-    }
-    appended
+    def counts(staged: Seq[ManifestEntry]) =
+      staged.map(_.statsFor(RowsCol).flatMap(_.min.toLongOption))
+    // INSERT of an empty SELECT publishes nothing — a zero-row version
+    // helps no reader. Only when every part's row count is KNOWN zero:
+    // an unreadable footer stages without the count, and treating
+    // that as empty would silently drop real rows
+    txn.commit(
+      gate = st => dataE.isEmpty || !counts(st).forall(_.contains(0L)),
+      schema = _ =>
+        if (dataE.isEmpty) Some(df.schema)
+        else Option(schemaMemo.get(schemaKey(sink, dataE)))
+          .flatMap(mergeStructs(_, df.schema)))(
+      txn.stage(df, statsFields))
+      .fold(0L)(p => counts(p._2).flatten.sum)
   }
 
   /** SQL `CREATE TABLE` (no AS SELECT): publish a SCHEMA-ONLY
@@ -2565,68 +2367,43 @@ object AtomicIncrement {
     */
   def evolveSchemaAtomic(spark: SparkSession, sink: String,
       evolved: org.apache.spark.sql.types.StructType): Long = {
-    val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
-    require(version > 0L, s"nothing committed at $sink")
+    val txn = Txn.begin(spark, sink)
+    require(txn.snap.version > 0L, s"nothing committed at $sink")
     val norm = asNullableStruct(evolved)
     val bridge = org.apache.spark.sql.graftbridge.ParquetIoBridge
     val (factory, conf) = bridge.parquetWriterFactory(spark, norm)
-    val uuid = java.util.UUID.randomUUID()
-    val rel = s"$DataDir/batch-$uuid/part-00000-$uuid" +
-      bridge.fileExtension(factory, conf)
-    // driver-written (a zero-row footer is a handful of KB — no job)
-    bridge.openWriter(factory, conf, s"$sink/$rel", norm).close()
-    val stats = norm.fields.toSeq.flatMap(f => tagOf(f.dataType).map(_ =>
-      FileColumnStats(f.name, NullTag, "", ""))) :+
-      FileColumnStats(RowsCol, "long", "0", "0")
-    val staged0 = ManifestEntry(rel, stats)
-    val staged =
-      if (dvE.isEmpty) staged0 else stampSeq(staged0, version + 1)
-    try publish(fs, sink, ((dataE ++ dvE) :+ staged).map(_.render),
-      version + 1, snapshotSchema = Some(norm))
-    catch { case e: Throwable =>
-      fs.delete(new Path(s"$sink/$rel").getParent, true)
-      throw e
-    }
-    version + 1
+    txn.commit(schema = _ => Some(norm)) {
+      val rel = s"${txn.newDir()}/part-00000-${java.util.UUID.randomUUID()}" +
+        bridge.fileExtension(factory, conf)
+      // written in-process (a zero-row footer is a handful of KB — no job)
+      bridge.openWriter(factory, conf, s"$sink/$rel", norm).close()
+      Seq(ManifestEntry(rel, norm.fields.toSeq.flatMap(f =>
+        tagOf(f.dataType).map(_ => FileColumnStats(f.name, NullTag, "", ""))) :+
+        FileColumnStats(RowsCol, "long", "0", "0")))
+    }.get._1
   }
 
-  /** `publishIf` runs after the staging write and before any publish
-    * intent: false reclaims the staged batch and publishes NOTHING
-    * (the snapshot is untouched; returns Nil). It exists so a fold can
-    * read a metric OBSERVED during the staging scan (e.g. "how many
-    * fresh rows did this batch contribute") and turn a no-op replay
-    * into a skipped publish without a dedicated counting action.
+  /** [[replaceSnapshot]] with a gate: `gate` runs after the staging
+    * write and before any publish intent; false reclaims the staged
+    * batch and publishes NOTHING (the snapshot is untouched; returns
+    * Nil). It exists so a fold can read a metric OBSERVED during the
+    * staging scan (e.g. "how many fresh rows did this batch
+    * contribute") and turn a no-op replay into a skipped publish
+    * without a dedicated counting action. A full replace's snapshot
+    * schema IS the replacing frame's; floors RESET by default — a
+    * replace is a deliberate new history (the Complete-mode sink
+    * rewrites its rollup every batch), not a destructive edit the
+    * replay shield must remember.
     */
-  private[graft] def replaceWithHook(df: DataFrame, sink: String,
-      expectVersion: Long, beforePublish: () => Unit,
+  private[graft] def replaceGated(df: DataFrame, sink: String,
+      expectVersion: Long,
       statsFields: Seq[org.apache.spark.sql.types.StructField] = Nil,
       resetFloors: Boolean = true,
-      publishIf: () => Boolean = () => true): Seq[ManifestEntry] = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, sink)
-    val staged = stageEntries(df, spark, fs, sink, statsFields)
-    def dropStaged(): Unit =
-      staged.headOption.foreach(e0 =>
-        fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-    val keep =
-      try publishIf()
-      catch { case e: Throwable => dropStaged(); throw e }
-    if (!keep) { dropStaged(); return Nil }
-    try {
-      beforePublish()
-      // a full replace's snapshot schema IS the replacing frame's;
-      // floors RESET — a replace is a deliberate new history (the
-      // Complete-mode sink rewrites its rollup every batch), not a
-      // destructive edit the replay shield must remember
-      publish(fs, sink, staged.map(_.render), expectVersion + 1,
-        snapshotSchema = Some(df.schema), resetFloors = resetFloors)
-    } catch { case e: Throwable =>
-      staged.headOption.foreach(e0 =>
-        fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-      throw e
-    }
-    staged
+      gate: () => Boolean = () => true): Seq[ManifestEntry] = {
+    val txn = new Txn(df.sparkSession, sink, Txn.Snap(expectVersion, Nil, Nil))
+    txn.commit(gate = _ => gate(), carry = _ => Nil,
+      schema = _ => Some(df.schema), resetFloors = resetFloors)(
+      txn.stage(df, statsFields)).fold(Seq.empty[ManifestEntry])(_._2)
   }
 
   /** A merge batch's distinct, non-null churn keys, collected once and
@@ -2794,7 +2571,8 @@ object AtomicIncrement {
     */
   def mergeAtomic(changes: DataFrame, sink: String, keyCol: String,
       deleteCol: String, maxChurnKeys: Int = 10000000): MergeResult =
-    mergeWithHook(changes, sink, keyCol, deleteCol, maxChurnKeys, () => ())
+    mergeAtomic(changes, sink, keyCol, deleteCol, maxChurnKeys,
+      collectChurn(changes, keyCol, maxChurnKeys))
 
   /** [[mergeAtomic]] with the churn key set already collected — the
     * streaming CDC apply computes it once per micro-batch (its rollup
@@ -2803,24 +2581,15 @@ object AtomicIncrement {
     */
   private[graft] def mergeAtomic(changes: DataFrame, sink: String,
       keyCol: String, deleteCol: String, maxChurnKeys: Int,
-      churn: ChurnKeys): MergeResult =
-    mergeWithHook(changes, sink, keyCol, deleteCol, maxChurnKeys,
-      () => (), Some(churn))
-
-  private[graft] def mergeWithHook(changes: DataFrame, sink: String,
-      keyCol: String, deleteCol: String, maxChurnKeys: Int,
-      beforePublish: () => Unit,
-      precollected: Option[ChurnKeys] = None): MergeResult = {
+      churn: ChurnKeys): MergeResult = {
     val spark = changes.sparkSession
-    val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+    val txn = Txn.begin(spark, sink)
+    val Txn.Snap(_, dataE, dvE) = txn.snap
     require(dataE.nonEmpty, s"nothing committed to merge into at $sink")
     // key-contract enforcement (type family, nulls, churn fence) lives
     // in collectChurn — LOUD, because a silently nulled cast would
     // read as "no file intersects" and old rows would survive beside
     // their upserts: a wrong table, not a missed optimization
-    val churn = precollected.getOrElse(
-      collectChurn(changes, keyCol, maxChurnKeys))
     require(churn.size <= maxChurnKeys,
       s"precollected churn carries ${churn.size} keys (> $maxChurnKeys)")
     val (carried, touched) = splitByKeyIntervals(dataE, keyCol, churn)
@@ -2863,38 +2632,21 @@ object AtomicIncrement {
     val statsFields = ((keyCol +: coveredStatsFields(dataE,
         merged.schema).map(_.name)).distinct)
       .flatMap(c => merged.schema.fields.find(_.name.equalsIgnoreCase(c)))
-    val staged0 = stageEntries(merged, spark, fs, sink, statsFields)
-    // on a dv-carrying table the rewrite must outrank every standing
-    // tombstone (a re-upserted once-deleted key would otherwise be
-    // re-masked); carried dv lines still apply to the carried files
-    val stagedEntries = if (dvE.isEmpty) staged0
-      else staged0.map(stampSeq(_, version + 1))
-    val published =
-      try {
-        beforePublish()
-        // merged already unions any change-batch-only columns over the
-        // carried schema (allowMissingColumns), so this IS the new
-        // snapshot's merge-schema. A lost OCC race retries WITHOUT
-        // recomputation when the winner provably stayed outside this
-        // merge's scope: added files disjoint from the churn's key
-        // intervals (round 17).
-        publishConfinedRetry(spark, fs, sink, (version, dataE, dvE),
-          touched.map(_.path).toSet, fullSchema,
-          added => splitByKeyIntervals(added, keyCol, churn)._2.isEmpty,
-          (v, carriedNow, dvNow) => {
-            val st = if (dvNow.isEmpty) staged0
-              else staged0.map(stampSeq(_, v + 1))
-            publish(fs, sink,
-              (carriedNow ++ dvNow ++ st).map(_.render), v + 1,
-              snapshotSchema = mergeStructs(fullSchema, merged.schema))
-          })
-      } catch { case e: Throwable =>
-        stagedEntries.headOption.foreach(e0 =>
-          fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-        throw e
-      }
+    // merged already unions any change-batch-only columns over the
+    // carried schema (allowMissingColumns), so this IS the new
+    // snapshot's merge-schema. A lost OCC race retries WITHOUT
+    // recomputation when the winner provably stayed outside this
+    // merge's scope: added files disjoint from the churn's key
+    // intervals (round 17).
+    val touchedPaths = touched.map(_.path).toSet
+    val (published, staged) = txn.commit(
+      carry = Txn.carryUntouched(touchedPaths),
+      schema = _ => mergeStructs(fullSchema, merged.schema),
+      retry = Some(Txn.confined(spark, sink, touchedPaths, fullSchema,
+        added => splitByKeyIntervals(added, keyCol, churn)._2.isEmpty)))(
+      txn.stage(merged, statsFields)).get
     MergeResult(published, carried.size, touched.size,
-      stagedEntries.size, upserts,
+      staged.size, upserts,
       oldTouched.join(churnDf, Seq(keyCol), "left_semi"))
   }
 
@@ -2927,18 +2679,9 @@ object AtomicIncrement {
     */
   def deleteWhereAtomic(spark: SparkSession, sink: String,
       cond: org.apache.spark.sql.Column,
-      mayMatch: ManifestEntry => Boolean = _ => true): DeleteResult =
-    deleteWhereHook(spark, sink, cond, mayMatch, () => ())
-
-  /** [[deleteWhereAtomic]] with a pre-publish hook — the OCC-race
-    * injection seam the spec drives.
-    */
-  private[graft] def deleteWhereHook(spark: SparkSession, sink: String,
-      cond: org.apache.spark.sql.Column,
-      mayMatch: ManifestEntry => Boolean,
-      beforePublish: () => Unit): DeleteResult = {
-    val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+      mayMatch: ManifestEntry => Boolean = _ => true): DeleteResult = {
+    val txn = Txn.begin(spark, sink)
+    val Txn.Snap(version, dataE, dvE) = txn.snap
     require(dataE.nonEmpty, s"nothing committed to delete from at $sink")
     val (touched, carried) = dataE.partition(mayMatch)
     if (touched.isEmpty) return DeleteResult(version, carried.size, 0, 0)
@@ -2950,35 +2693,9 @@ object AtomicIncrement {
       .filter(!org.apache.spark.sql.functions.coalesce(cond,
         org.apache.spark.sql.functions.lit(false)))
       .coalesce(math.max(1, touched.size))
-    val statsFields = coveredStatsFields(dataE, survivors.schema)
-    val staged0 = stageEntries(survivors, spark, fs, sink, statsFields)
-    // survivors were read dv-resolved; the rewrite must outrank every
-    // standing tombstone or a dv would re-mask them (same rule as the
-    // CoW merge)
-    val stagedEntries = if (dvE.isEmpty) staged0
-      else staged0.map(stampSeq(_, version + 1))
-    // lost OCC races retry recomputation-free when the winner's added
-    // files provably hold no row the predicate could touch (round 17)
-    val published =
-      try {
-        beforePublish()
-        publishConfinedRetry(spark, fs, sink, (version, dataE, dvE),
-          touched.map(_.path).toSet, fullSchema,
-          added => added.forall(e => !mayMatch(e)),
-          (v, carriedNow, dvNow) => {
-            val st = if (dvNow.isEmpty) staged0
-              else staged0.map(stampSeq(_, v + 1))
-            publish(fs, sink,
-              (carriedNow ++ dvNow ++ st).map(_.render), v + 1,
-              snapshotSchema = Some(fullSchema)) // DELETE never moves schema
-          })
-      } catch { case e: Throwable =>
-        stagedEntries.headOption.foreach(e0 =>
-          fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-        throw e
-      }
-    DeleteResult(published, carried.size, touched.size,
-      stagedEntries.size)
+    // DELETE never moves schema
+    rewriteConfined(txn, survivors, touched, carried.size, fullSchema,
+      mayMatch)
   }
 
   /** Copy-on-write predicate UPDATE — `UPDATE t SET … WHERE cond` for
@@ -3003,8 +2720,8 @@ object AtomicIncrement {
       sets: Map[String, org.apache.spark.sql.Column],
       mayMatch: ManifestEntry => Boolean = _ => true): DeleteResult = {
     require(sets.nonEmpty, "UPDATE needs at least one SET assignment")
-    val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+    val txn = Txn.begin(spark, sink)
+    val Txn.Snap(version, dataE, dvE) = txn.snap
     require(dataE.nonEmpty, s"nothing committed to update at $sink")
     val fullSchema = dataSchema(spark, sink, dataE)
     sets.keys.foreach(c => require(
@@ -3033,30 +2750,31 @@ object AtomicIncrement {
         when(matchC, value.cast(field.dataType)).otherwise(c(field.name)))
     for ((field, _, i) <- staged)
       df = df.withColumn(field.name, c(s"__set_$i")).drop(s"__set_$i")
-    val updated = df.coalesce(math.max(1, touched.size))
-    val statsFields = coveredStatsFields(dataE, updated.schema)
-    val staged0 = stageEntries(updated, spark, fs, sink, statsFields)
-    val stagedEntries = if (dvE.isEmpty) staged0
-      else staged0.map(stampSeq(_, version + 1))
-    // same recomputation-free OCC retry as the predicate DELETE
-    val published =
-      try publishConfinedRetry(spark, fs, sink, (version, dataE, dvE),
-        touched.map(_.path).toSet, fullSchema,
-        added => added.forall(e => !mayMatch(e)),
-        (v, carriedNow, dvNow) => {
-          val st = if (dvNow.isEmpty) staged0
-            else staged0.map(stampSeq(_, v + 1))
-          publish(fs, sink,
-            (carriedNow ++ dvNow ++ st).map(_.render), v + 1,
-            snapshotSchema = Some(fullSchema)) // SET casts pin the types
-        })
-      catch { case e: Throwable =>
-        stagedEntries.headOption.foreach(e0 =>
-          fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-        throw e
-      }
-    DeleteResult(published, carried.size, touched.size,
-      stagedEntries.size)
+    // SET casts pin the types: the snapshot schema never moves
+    rewriteConfined(txn, df.coalesce(math.max(1, touched.size)), touched,
+      carried.size, fullSchema, mayMatch)
+  }
+
+  /** The predicate DELETE/UPDATE commit: stage the rewrite of the
+    * may-match files (read dv-resolved, so the staged lines outrank
+    * every standing tombstone) and publish it over the untouched
+    * files. Lost OCC races retry recomputation-free when the winner's
+    * added files provably hold no row the predicate could touch
+    * (round 17).
+    */
+  private def rewriteConfined(txn: Txn, rewrite: DataFrame,
+      touched: Seq[ManifestEntry], carried: Int,
+      fullSchema: org.apache.spark.sql.types.StructType,
+      mayMatch: ManifestEntry => Boolean): DeleteResult = {
+    val touchedPaths = touched.map(_.path).toSet
+    val (published, staged) = txn.commit(
+      carry = Txn.carryUntouched(touchedPaths),
+      schema = _ => Some(fullSchema),
+      retry = Some(Txn.confined(txn.spark, txn.sink,
+        touchedPaths, fullSchema, _.forall(e => !mayMatch(e)))))(
+      txn.stage(rewrite, coveredStatsFields(txn.snap.data,
+        rewrite.schema))).get
+    DeleteResult(published, carried, touched.size, staged.size)
   }
 
   /** The table's own key column must sit in the churn's type family,
@@ -3120,8 +2838,8 @@ object AtomicIncrement {
       keyCol: String, deleteCol: String, maxChurnKeys: Int,
       churn: ChurnKeys): MergeResult = {
     val spark = changes.sparkSession
-    val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+    val txn = Txn.begin(spark, sink)
+    val Txn.Snap(_, dataE, dvE) = txn.snap
     require(dataE.nonEmpty, s"nothing committed to merge into at $sink")
     require(churn.size <= maxChurnKeys,
       s"precollected churn carries ${churn.size} keys (> $maxChurnKeys)")
@@ -3131,7 +2849,6 @@ object AtomicIncrement {
       dvKeyColOf(d).equalsIgnoreCase(keyCol),
       s"merge-on-read table at $sink already carries delete vectors " +
         s"keyed by '${dvKeyColOf(d)}' — one merge key per table"))
-    val seq = version + 1
     val upserts = changes.filter(!col(deleteCol)).drop(deleteCol)
     // before-images (the rollup retraction input) resolve BEFORE the
     // commit from the effective pre-merge churn locality — lazy over
@@ -3143,8 +2860,6 @@ object AtomicIncrement {
     val statsFields = ((keyCol +: coveredStatsFields(dataE,
         fullSchema).map(_.name)).distinct)
       .flatMap(c => upserts.schema.fields.find(_.name.equalsIgnoreCase(c)))
-    val stagedData = stageEntries(upserts, spark, fs, sink, statsFields)
-      .map(stampSeq(_, seq))
     val dvMark = FileColumnStats(DvCol, "string",
       java.util.Base64.getEncoder.encodeToString(
         keyCol.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
@@ -3156,19 +2871,15 @@ object AtomicIncrement {
     // read-debt pricing that keeps a localized deferred delete from
     // taxing every read of a 10⁵-file table
     val dvDf = churn.toDf(spark, keyCol)
-    val stagedDv = stageEntries(dvDf, spark, fs, sink,
-        dvDf.schema.fields.toSeq)
-      .map(e => stampSeq(e.copy(allStats = e.allStats :+ dvMark), seq))
-    try publish(fs, sink,
-      (dataE ++ dvE ++ stagedData ++ stagedDv).map(_.render), seq,
-      snapshotSchema = mergeStructs(fullSchema, upserts.schema))
-    catch { case e: Throwable =>
-      // two staged batch dirs (after-images, dv) — drop BOTH
-      for (group <- Seq(stagedData, stagedDv); e0 <- group.headOption)
-        fs.delete(new Path(s"$sink/${e0.path}").getParent, true)
-      throw e
-    }
-    MergeResult(seq, dataE.size, 0, stagedData.size, upserts,
+    // two staged batch dirs (after-images, dv); the staged dv lines
+    // make the commit stamp both at this commit's sequence
+    val (published, staged) = txn.commit(
+        schema = _ => mergeStructs(fullSchema, upserts.schema)) {
+      txn.stage(upserts, statsFields) ++
+        txn.stage(dvDf, dvDf.schema.fields.toSeq)
+          .map(e => e.copy(allStats = e.allStats :+ dvMark))
+    }.get
+    MergeResult(published, dataE.size, 0, staged.count(!isDv(_)), upserts,
       beforeImages)
   }
 
@@ -3204,8 +2915,8 @@ object AtomicIncrement {
     */
   def foldDvsTargeted(spark: SparkSession, sink: String,
       maxChurnKeys: Int = 10000000): (Int, Int) = {
-    val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+    val txn = Txn.begin(spark, sink)
+    val Txn.Snap(_, dataE, dvE) = txn.snap
     if (dvE.isEmpty) return (0, 0)
     val keyCols = dvE.map(dvKeyColOf).distinct
     require(keyCols.size == 1,
@@ -3249,29 +2960,21 @@ object AtomicIncrement {
     }
     val carried = parts.flatMap(_._1)
     val masked = parts.flatMap(_._2)
-    if (masked.isEmpty) {
-      // dvs stand but provably mask nothing: dropping their lines
-      // alone repays the read debt — a metadata-only commit (data
-      // files untouched, so the snapshot schema carries verbatim)
-      publish(fs, sink, carried.map(_.render), version + 1,
-        snapshotSchema = Some(fullSchema))
-      return (0, 0)
-    }
     // the masked files rewrite with the dvs APPLIED (readEffective
-    // runs the per-sequence-group anti-joins); staged files need no
-    // sequence stamp — no dv survives the fold
-    val folded = readEffective(spark, sink, masked, dvE, Some(fullSchema))
+    // runs the per-sequence-group anti-joins); no dv survives the
+    // fold, so the staged lines need no sequence stamp. When the dvs
+    // provably mask nothing, dropping their lines alone repays the
+    // read debt — a metadata-only commit. Data files never change
+    // schema here, so the snapshot schema carries verbatim
     val statsFields = ((keyCol +: coveredStatsFields(dataE,
         fullSchema).map(_.name)).distinct)
       .flatMap(c => fullSchema.fields.find(_.name.equalsIgnoreCase(c)))
-    val staged = stageEntries(folded, spark, fs, sink, statsFields)
-    try publish(fs, sink, (carried ++ staged).map(_.render), version + 1,
-      snapshotSchema = Some(fullSchema)) // dv fold never moves schema
-    catch { case e: Throwable =>
-      staged.headOption.foreach(e0 =>
-        fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-      throw e
-    }
+    val staged = txn.commit(carry = _ => carried,
+        schema = _ => Some(fullSchema)) {
+      if (masked.isEmpty) Nil
+      else txn.stage(readEffective(spark, sink, masked, dvE,
+        Some(fullSchema)), statsFields)
+    }.get._2
     (masked.size, staged.size)
   }
 
@@ -3319,8 +3022,8 @@ object AtomicIncrement {
       versionCol: String, deleteCol: String,
       maxChurnKeys: Int = 10000000): MergeResult = {
     val spark = changes.sparkSession
-    val fs = fsOf(spark, sink)
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+    val txn = Txn.begin(spark, sink)
+    val Txn.Snap(_, dataE, dvE) = txn.snap
     require(dataE.nonEmpty, s"nothing committed to merge into at $sink")
     val churn = collectChurn(changes, keyCol, maxChurnKeys)
     val (carried, touched) = splitByKeyIntervals(dataE, keyCol, churn)
@@ -3359,19 +3062,10 @@ object AtomicIncrement {
     val statsFields = ((keyCol +: coveredStatsFields(dataE,
         merged.schema).map(_.name)).distinct)
       .flatMap(c => merged.schema.fields.find(_.name.equalsIgnoreCase(c)))
-    val staged0 = stageEntries(merged, spark, fs, sink, statsFields)
-    val stagedEntries = if (dvE.isEmpty) staged0
-      else staged0.map(stampSeq(_, version + 1))
-    try publish(fs, sink,
-      (carried ++ dvE ++ stagedEntries).map(_.render), version + 1,
-      snapshotSchema = mergeStructs(fullSchema, merged.schema))
-    catch { case e: Throwable =>
-      stagedEntries.headOption.foreach(e0 =>
-        fs.delete(new Path(s"$sink/${e0.path}").getParent, true))
-      throw e
-    }
-    MergeResult(version + 1, carried.size, touched.size,
-      stagedEntries.size, newRows,
+    val (published, staged) = txn.commit(carry = _ => carried ++ dvE,
+      schema = _ => mergeStructs(fullSchema, merged.schema))(
+      txn.stage(merged, statsFields)).get
+    MergeResult(published, carried.size, touched.size, staged.size, newRows,
       churnedRows.filter(col("valid_to").isNull))
   }
 

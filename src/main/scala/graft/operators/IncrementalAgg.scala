@@ -31,12 +31,7 @@ object IncrementalAgg {
     * published).
     */
   def mergeBatch(batch: DataFrame, sink: String, keys: Seq[String],
-      sumCols: Seq[String], watermarkCol: String): Long =
-    mergeWithHook(batch, sink, keys, sumCols, watermarkCol, () => ())
-
-  private[graft] def mergeWithHook(batch: DataFrame, sink: String,
-      keys: Seq[String], sumCols: Seq[String], watermarkCol: String,
-      beforePublish: () => Unit): Long = {
+      sumCols: Seq[String], watermarkCol: String): Long = {
     val spark = batch.sparkSession
     val (version, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
     // stored-watermark read: manifest stats first (the state lines
@@ -60,7 +55,7 @@ object IncrementalAgg {
     // exactly once with no cache and no dedicated counting job (the
     // previous shape persisted the partial and paid a count action
     // before the write). A zero-fresh batch (replay) is discovered
-    // after staging — `publishIf` reclaims the staged files and no
+    // after staging — the gate reclaims the staged files and no
     // version is published, the same no-op the count-first shape
     // guaranteed; the replay pays a state-sized write-and-delete
     // where it used to pay a count, and the common path saves a
@@ -81,9 +76,8 @@ object IncrementalAgg {
       var n = 0L
       // stamp `__wm` stats into the state lines so the next fold's
       // stored-watermark read answers from the manifest (zero jobs)
-      AtomicIncrement.replaceWithHook(merged, sink, version,
-        beforePublish, statsFields = Seq(merged.schema("__wm")),
-        publishIf = () => {
+      AtomicIncrement.replaceGated(merged, sink, version,
+        statsFields = Seq(merged.schema("__wm")), gate = () => {
           n = gate.long()
           n > 0
         })
@@ -182,7 +176,7 @@ object IncrementalAgg {
     // rounding the fixtures already tolerate).
     val merged = mergedCdcState(prior, plus, minus, keys, sumCols,
       weightCol).withColumn("__b", lit(batchId))
-    AtomicIncrement.replaceWithHook(merged, sink, version, () => (),
+    AtomicIncrement.replaceGated(merged, sink, version,
       statsFields = Seq(merged.schema("__b")))
     true
   }
@@ -199,9 +193,18 @@ object IncrementalAgg {
       val n = weightCol
         .map(w => col(w).cast(LongType) * sign)
         .getOrElse(lit(sign.toLong))
+      // narrow integral sums widen to long BEFORE the sign: negating
+      // Int.MinValue at its native width overflows (ANSI throws, and
+      // non-ANSI wraps to a wrong sum)
+      def widened(c: String) = df.schema.fields
+        .find(_.name.equalsIgnoreCase(c)).map(_.dataType) match {
+          case Some(ByteType | ShortType | IntegerType) =>
+            col(c).cast(LongType)
+          case _ => col(c)
+        }
       df.select((keys.map(col) :+ n.as("__n")) ++
         sumCols.map(c =>
-          (if (sign >= 0) col(c) else -col(c)).as(s"sum_$c")): _*)
+          (if (sign >= 0) widened(c) else -widened(c)).as(s"sum_$c")): _*)
     }
     val all = (prior.map(_.drop("__b")).toSeq :+
       contrib(plus, 1) :+ contrib(minus, -1)).reduce(_ unionByName _)
@@ -304,7 +307,7 @@ object IncrementalAgg {
     // legitimately null, so coverage needs its own marker); the
     // under-coverage check is OBSERVED on the staging write instead
     // of paying a dedicated anti-join action (round 18, guide §1.2
-    // step 1) — an uncovered group fails the fold from `publishIf`
+    // step 1) — an uncovered group fails the fold from the gate
     // BEFORE any publish, the staged files are reclaimed, and the
     // committed state stays byte-identical, the same loudness the
     // count-first shape guaranteed
@@ -321,9 +324,8 @@ object IncrementalAgg {
         .select(kcols ++ (col("__n") +:
           (sumCols.map(c => col(s"sum_$c")) ++ mmNames.map(col))): _*)
         .withColumn("__b", lit(batchId))
-      AtomicIncrement.replaceWithHook(merged, sink, version, () => (),
-        statsFields = Seq(merged.schema("__b")),
-        publishIf = () => {
+      AtomicIncrement.replaceGated(merged, sink, version,
+        statsFields = Seq(merged.schema("__b")), gate = () => {
           require(gate.long() == 0L,
             "churnedRows under-covers the churn: a group alive by the " +
               "count algebra has no surviving rows to rescan extremes " +
@@ -545,9 +547,10 @@ object IncrementalAgg {
     * either applied and the retry no-ops whichever already landed,
     * exactly as under the old fixed order (neither leg ever read the
     * other's sink). Errors rethrow on the caller's thread; the other
-    * leg is joined first so no fold is ever abandoned mid-commit.
+    * leg is joined first so no fold is ever abandoned mid-commit. When
+    * both legs throw, leg A's error carries leg B's as suppressed.
     */
-  private[operators] def inParallel2[A, B](a: => A, b: => B): (A, B) = {
+  private[graft] def inParallel2[A, B](a: => A, b: => B): (A, B) = {
     var rb: Option[B] = None
     var eb: Option[Throwable] = None
     val tb = new Thread(() =>
@@ -555,7 +558,8 @@ object IncrementalAgg {
     tb.start()
     val ra =
       try a
-      catch { case e: Throwable => tb.join(); throw e }
+      catch { case e: Throwable =>
+        tb.join(); eb.foreach(e.addSuppressed); throw e }
     tb.join()
     eb.foreach(throw _)
     (ra, rb.get)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.AtomicIncrement
+import graft.operators.{AtomicIncrement, Txn}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -170,14 +170,6 @@ private[graft] object GraftRowLevelOperation {
     * DSv2 metadata column on every face.
     */
   val FileCol = "_graft_file"
-}
-
-/** Race-injection seam for the SQL DML commit — the spec swaps in a
-  * competing writer between staging and publish, exactly like the
-  * API paths' `beforePublish` hooks. Production value is a no-op.
-  */
-private[graft] object GraftCowTestSeam {
-  @volatile var beforePublish: () => Unit = () => ()
 }
 
 /** Filter push here is GROUP SELECTION, not row filtering: verdicts
@@ -509,74 +501,57 @@ private[graft] class GraftCowBatchWrite(op: GraftRowLevelOperation,
     new GraftCowWriterFactory(sink, batchRel, writeSchema, factory, conf)
   }
 
-  private def dropStaged(): Unit = {
-    val p = new Path(s"$sink/$batchRel")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-
+  /** The executors' parts land in `batchRel`; the driver-side commit
+    * adopts that dir into the sink's one commit protocol ([[Txn]]). */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val rels = messages.collect {
       case GraftCowCommitMessage(ps) => ps }.flatten.toSeq.sorted
     val (version, dataE, dvE, fullSchema) = op.snapshotForCommit
+    val txn = new Txn(spark, sink, Txn.Snap(version, dataE, dvE))
+    txn.own(batchRel)
     val touched = op.touchedSet
-    if (rels.isEmpty && touched.isEmpty) { dropStaged(); return }
-    val fs = new Path(sink).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val statsFields =
-      AtomicIncrement.coveredStatsFields(dataE, writeSchema)
-    val staged0 = rels.map(rel =>
-      AtomicIncrement.entryForStagedFile(spark, sink, rel, statsFields))
-    try {
-      GraftCowTestSeam.beforePublish()
-      if (op.scanCount <= 1) {
-        // group commit: untouched files ride verbatim, staged files
-        // outrank standing tombstones the scan already applied. A
-        // lost OCC race retries recomputation-free when the winner's
-        // added files provably cannot match the statement's pushed
-        // group filters (round 17 — the API paths' conflict
-        // narrowing, on the SQL face); a MERGE pushes no target-only
-        // filters, so it retries only against add-free winners.
-        val pushed = op.pushedFilters
-        AtomicIncrement.publishConfinedRetry(spark, fs, sink,
-          (version, dataE, dvE), touched, fullSchema,
-          added => added.forall(e => pushed.nonEmpty &&
-            !pushed.forall(f => ManifestPruning.mayMatch(e, f))),
-          (v, carriedNow, dvNow) => {
-            val staged = if (dvNow.isEmpty) staged0
-              else staged0.map(AtomicIncrement.stampSeq(_, v + 1))
-            AtomicIncrement.publish(fs, sink,
-              (carriedNow ++ dvNow ++ staged).map(_.render), v + 1,
-              snapshotSchema = AtomicIncrement
-                .mergeStructs(fullSchema, writeSchema))
-          })
-        ()
-      } else if (op.command() == Command.UPDATE &&
-          dataE.forall(e => touched.contains(e.path))) {
-        // the subquery-condition UNION shape: two scans read the
-        // whole table and the incoming rows ARE the whole table —
-        // a full snapshot replace (carrying anything would duplicate).
-        // STRUCTURAL guard, not just the scan count: in the genuine
-        // UNION plan the not-matching branch scans UNPRUNED, so the
-        // touched set must cover every standing data file. A
-        // double-built scan of a single-scan plan (plan reuse /
-        // re-analysis) would fail this cover check and refuse below
-        // instead of silently replacing the table with only the
-        // rewritten rows.
-        AtomicIncrement.publish(fs, sink, staged0.map(_.render),
-          version + 1, snapshotSchema = Some(writeSchema))
-      } else {
-        throw new IllegalStateException(
-          s"unexpected multi-scan ${op.command()} plan shape at " +
-            s"$sink (${op.scanCount} scans, ${touched.size} of " +
-            s"${dataE.size} files touched) — refusing to publish " +
-            "rather than guess the replace semantics")
-      }
-    } catch { case e: Throwable => dropStaged(); throw e }
+    if (rels.isEmpty && touched.isEmpty) { txn.reclaim(); return }
+    def staged = txn.entries(rels,
+      AtomicIncrement.coveredStatsFields(dataE, writeSchema))
+    if (op.scanCount <= 1) {
+      // group commit: untouched files ride verbatim, staged files
+      // outrank standing tombstones the scan already applied. A
+      // lost OCC race retries recomputation-free when the winner's
+      // added files provably cannot match the statement's pushed
+      // group filters (round 17 — the API paths' conflict
+      // narrowing, on the SQL face); a MERGE pushes no target-only
+      // filters, so it retries only against add-free winners.
+      val pushed = op.pushedFilters
+      txn.commit(carry = Txn.carryUntouched(touched),
+        schema = _ => AtomicIncrement.mergeStructs(fullSchema, writeSchema),
+        retry = Some(Txn.confined(spark, sink, touched, fullSchema,
+          _.forall(e => pushed.nonEmpty &&
+            !pushed.forall(f => ManifestPruning.mayMatch(e, f))))))(staged)
+    } else if (op.command() == Command.UPDATE &&
+        dataE.forall(e => touched.contains(e.path))) {
+      // the subquery-condition UNION shape: two scans read the
+      // whole table and the incoming rows ARE the whole table —
+      // a full snapshot replace (carrying anything would duplicate).
+      // STRUCTURAL guard, not just the scan count: in the genuine
+      // UNION plan the not-matching branch scans UNPRUNED, so the
+      // touched set must cover every standing data file. A
+      // double-built scan of a single-scan plan (plan reuse /
+      // re-analysis) would fail this cover check and refuse below
+      // instead of silently replacing the table with only the
+      // rewritten rows.
+      txn.commit(carry = _ => Nil, schema = _ => Some(writeSchema))(staged)
+    } else {
+      txn.reclaim()
+      throw new IllegalStateException(
+        s"unexpected multi-scan ${op.command()} plan shape at " +
+          s"$sink (${op.scanCount} scans, ${touched.size} of " +
+          s"${dataE.size} files touched) — refusing to publish " +
+          "rather than guess the replace semantics")
+    }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    dropStaged()
+    Txn.reclaim(spark, sink, Seq(batchRel))
 
   override def toString: String = s"GraftCowBatchWrite($sink)"
 }

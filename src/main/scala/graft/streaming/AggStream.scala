@@ -57,11 +57,11 @@ object AggStream {
       case None => -1L
     }
     if (batchId <= lastBatch) return 0L // redelivery after a crash
-    // ONE action for count + fold (round 18, the mergeWithHook shape):
+    // ONE action for count + fold (round 18, the mergeBatch shape):
     // the batch-row count is OBSERVED on the partial aggregate as the
     // staging write streams through it — no cache, no dedicated
     // counting job per micro-batch. An empty redelivered batch is
-    // discovered post-staging and `publishIf` reclaims the staged
+    // discovered post-staging and the gate reclaims the staged
     // files without publishing (the exactly-once no-op, unchanged).
     graft.operators.MetricGate.withGate(spark) { gate =>
       val partial = batch.groupBy(keys.map(col): _*).agg(
@@ -78,9 +78,8 @@ object AggStream {
               max("__lastBatch").as("__lastBatch"): _*)
       }
       var n = 0L
-      AtomicIncrement.replaceWithHook(merged, sink, version, () => (),
-        statsFields = Seq(merged.schema("__lastBatch")),
-        publishIf = () => {
+      AtomicIncrement.replaceGated(merged, sink, version,
+        statsFields = Seq(merged.schema("__lastBatch")), gate = () => {
           n = gate.long()
           n > 0
         })

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.AtomicIncrement
+import graft.operators.{AtomicIncrement, Txn}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -17,6 +17,11 @@ class AtomicIncrementSpec extends SparkSpec {
   private def fs(sink: String) =
     new org.apache.hadoop.fs.Path(sink)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A crashed writer: stage into a batch dir, never publish. */
+  private def stageOnly(df: org.apache.spark.sql.DataFrame,
+      sink: String): Seq[String] =
+    Txn.begin(spark, sink).stage(df, Nil).map(_.path)
 
   test("append commits atomically; replay appends 0; watermark filters") {
     val sink = tmp()
@@ -109,7 +114,7 @@ class AtomicIncrementSpec extends SparkSpec {
       Seq((1L, "a")).toDF("k", "v"), sink, "k")
     // crash-inject: stage the increment but never publish the manifest
     val fresh = Seq((2L, "b"), (3L, "c")).toDF("k", "v")
-    val staged = AtomicIncrement.stageBatch(fresh, spark, fs(sink), sink)
+    val staged = stageOnly(fresh, sink)
     assert(staged.nonEmpty)
     // a concurrent reader at this instant: exactly the old snapshot
     assert(AtomicIncrement.readCommitted(spark, sink)
@@ -134,11 +139,11 @@ class AtomicIncrementSpec extends SparkSpec {
     // publish (injected at the seam): it wins version 2 with rows of
     // its own, and our commit must lose — not silently overwrite
     intercept[java.util.ConcurrentModificationException] {
-      AtomicIncrement.appendWithHook(
-        Seq((2L, "b")).toDF("k", "v"), sink, "k",
-        beforePublish = () =>
-          AtomicIncrement.appendIncrementAtomic(
-            Seq((9L, "winner")).toDF("k", "v"), sink, "k"))
+      Txn.racing(AtomicIncrement.appendIncrementAtomic(
+          Seq((9L, "winner")).toDF("k", "v"), sink, "k")) {
+        AtomicIncrement.appendIncrementAtomic(
+          Seq((2L, "b")).toDF("k", "v"), sink, "k")
+      }
     }
     // loser's staged files are gone; the winner's snapshot is intact
     assert(AtomicIncrement.vacuumUncommitted(spark, sink) == 0)
@@ -240,10 +245,10 @@ class AtomicIncrementSpec extends SparkSpec {
     AtomicIncrement.appendIncrementAtomic(
       Seq((1L, "a")).toDF("k", "v"), sink, "k")
     intercept[java.util.ConcurrentModificationException] {
-      AtomicIncrement.compactWithHook(spark, sink, 1, () => {
-        AtomicIncrement.appendIncrementAtomic(
-          Seq((2L, "raced")).toDF("k", "v"), sink, "k"); ()
-      })
+      Txn.racing(AtomicIncrement.appendIncrementAtomic(
+          Seq((2L, "raced")).toDF("k", "v"), sink, "k")) {
+        AtomicIncrement.compact(spark, sink, 1)
+      }
     }
     // the interleaved append won; the loser's staged rewrite is gone
     val keys = AtomicIncrement.readCommitted(spark, sink)
@@ -336,13 +341,11 @@ class AtomicIncrementSpec extends SparkSpec {
     // a competing appender commits BETWEEN stage and publish; its
     // [31,31] interval is provably disjoint from the churn {25}, so
     // the merge must land ON TOP of it instead of throwing
-    val res = AtomicIncrement.mergeWithHook(changes, sink, "k", "del",
-      1000000, () => {
-        AtomicIncrement.appendIncrementAtomic(
-          Seq((31L, "w", 31.0)).toDF("k", "v", "x").repartition(1),
-          sink, "k")
-        ()
-      })
+    val res = Txn.racing(AtomicIncrement.appendIncrementAtomic(
+        Seq((31L, "w", 31.0)).toDF("k", "v", "x").repartition(1),
+        sink, "k")) {
+      AtomicIncrement.mergeAtomic(changes, sink, "k", "del", 1000000)
+    }
     assert(res.version == v0 + 2,
       s"append won v${v0 + 1}, merge must retry onto v${v0 + 2}: $res")
     val got = AtomicIncrement.readCommitted(spark, sink)
@@ -365,13 +368,11 @@ class AtomicIncrementSpec extends SparkSpec {
     // lives in the same [21,30] file) — the retry's intact check
     // must refuse
     val ex = intercept[java.util.ConcurrentModificationException] {
-      AtomicIncrement.mergeWithHook(changes, sink, "k", "del", 1000000,
-        () => {
-          AtomicIncrement.mergeAtomic(
-            Seq((26L, "RACE", 0.0, false)).toDF("k", "v", "x", "del"),
-            sink, "k", "del")
-          ()
-        })
+      Txn.racing(AtomicIncrement.mergeAtomic(
+          Seq((26L, "RACE", 0.0, false)).toDF("k", "v", "x", "del"),
+          sink, "k", "del")) {
+        AtomicIncrement.mergeAtomic(changes, sink, "k", "del", 1000000)
+      }
     }
     assert(ex.getMessage.contains("already committed"))
     // loser left nothing staged beyond the winner's files
@@ -390,15 +391,13 @@ class AtomicIncrementSpec extends SparkSpec {
     // a racing MERGE-ON-READ commit (new dv lines) must also lose:
     // the staged rewrite never saw the tombstones
     val ex2 = intercept[java.util.ConcurrentModificationException] {
-      AtomicIncrement.mergeWithHook(
-        Seq((27L, "UPD2", 0.0, false)).toDF("k", "v", "x", "del"),
-        sink, "k", "del", 1000000,
-        () => {
-          AtomicIncrement.mergeOnReadAtomic(
-            Seq((5L, "", 0.0, true)).toDF("k", "v", "x", "del"),
-            sink, "k", "del")
-          ()
-        })
+      Txn.racing(AtomicIncrement.mergeOnReadAtomic(
+          Seq((5L, "", 0.0, true)).toDF("k", "v", "x", "del"),
+          sink, "k", "del")) {
+        AtomicIncrement.mergeAtomic(
+          Seq((27L, "UPD2", 0.0, false)).toDF("k", "v", "x", "del"),
+          sink, "k", "del", 1000000)
+      }
     }
     assert(ex2.getMessage.contains("already committed"))
   }
@@ -412,15 +411,13 @@ class AtomicIncrementSpec extends SparkSpec {
     // winner: a confined CoW merge updating k=5's value — the gate
     // column's manifest max (30) is untouched, so the staged append
     // is still exactly the fresh set and must land on top
-    val n = AtomicIncrement.appendWithHook(
-      Seq((31L, "w", 31.0)).toDF("k", "v", "x").repartition(1),
-      sink, "k",
-      beforePublish = () => {
-        AtomicIncrement.mergeAtomic(
-          Seq((5L, "U", 0.0, false)).toDF("k", "v", "x", "del"),
-          sink, "k", "del")
-        ()
-      })
+    val n = Txn.racing(AtomicIncrement.mergeAtomic(
+        Seq((5L, "U", 0.0, false)).toDF("k", "v", "x", "del"),
+        sink, "k", "del")) {
+      AtomicIncrement.appendIncrementAtomic(
+        Seq((31L, "w", 31.0)).toDF("k", "v", "x").repartition(1),
+        sink, "k")
+    }
     assert(n == 1L)
     assert(AtomicIncrement.snapshot(spark, sink)._1 == v0 + 2,
       "merge won v+1, the append must retry onto v+2")
@@ -430,15 +427,13 @@ class AtomicIncrementSpec extends SparkSpec {
     // winner RAISING the max (a second appender — a single-writer
     // violation anyway): the fingerprint moves, the loser rethrows
     intercept[java.util.ConcurrentModificationException] {
-      AtomicIncrement.appendWithHook(
-        Seq((40L, "x40", 0.0)).toDF("k", "v", "x").repartition(1),
-        sink, "k",
-        beforePublish = () => {
-          AtomicIncrement.appendIncrementAtomic(
-            Seq((50L, "x50", 0.0)).toDF("k", "v", "x").repartition(1),
-            sink, "k")
-          ()
-        })
+      Txn.racing(AtomicIncrement.appendIncrementAtomic(
+          Seq((50L, "x50", 0.0)).toDF("k", "v", "x").repartition(1),
+          sink, "k")) {
+        AtomicIncrement.appendIncrementAtomic(
+          Seq((40L, "x40", 0.0)).toDF("k", "v", "x").repartition(1),
+          sink, "k")
+      }
     }
     assert(AtomicIncrement.vacuumUncommitted(spark, sink) <= 1)
   }
@@ -454,13 +449,11 @@ class AtomicIncrementSpec extends SparkSpec {
     val v0 = AtomicIncrement.snapshot(spark, sink)._1
     // winner appends k = -5 (interval [-5,-5], provably not > 20):
     // the delete's staged survivors stay exact — retry commits
-    val res = AtomicIncrement.deleteWhereHook(spark, sink,
-      $"k" > 20L, prune(GreaterThan("k", 20L)),
-      () => {
-        AtomicIncrement.appendBlindAtomic(
-          Seq((-5L, "w", 0.0)).toDF("k", "v", "x").repartition(1), sink)
-        ()
-      })
+    val res = Txn.racing(AtomicIncrement.appendBlindAtomic(
+        Seq((-5L, "w", 0.0)).toDF("k", "v", "x").repartition(1), sink)) {
+      AtomicIncrement.deleteWhereAtomic(spark, sink,
+        $"k" > 20L, prune(GreaterThan("k", 20L)))
+    }
     assert(res.version == v0 + 2, s"delete must retry onto the winner: $res")
     val keys = AtomicIncrement.readCommitted(spark, sink)
       .select("k").as[Long].collect().sorted.toSeq
@@ -469,14 +462,12 @@ class AtomicIncrementSpec extends SparkSpec {
     // would have to delete that row — the staged rewrite cannot, so
     // the race must throw
     val ex = intercept[java.util.ConcurrentModificationException] {
-      AtomicIncrement.deleteWhereHook(spark, sink,
-        $"k" > 15L, prune(GreaterThan("k", 15L)),
-        () => {
-          AtomicIncrement.appendBlindAtomic(
-            Seq((40L, "w2", 0.0)).toDF("k", "v", "x").repartition(1),
-            sink)
-          ()
-        })
+      Txn.racing(AtomicIncrement.appendBlindAtomic(
+          Seq((40L, "w2", 0.0)).toDF("k", "v", "x").repartition(1),
+          sink)) {
+        AtomicIncrement.deleteWhereAtomic(spark, sink,
+          $"k" > 15L, prune(GreaterThan("k", 15L)))
+      }
     }
     assert(ex.getMessage.contains("already committed"))
     // re-run applies the delete to the winner's row too — convergence
@@ -756,8 +747,7 @@ class AtomicIncrementSpec extends SparkSpec {
       "fixture must leave a superseded file + sidecar behind")
     // also leave a staging ORPHAN (a crashed writer): file-level GC
     // must not touch it — that is vacuumUncommitted's job
-    val orphan = AtomicIncrement.stageBatch(
-      Seq((99L, "orphan")).toDF("k", "v"), spark, f, sink)
+    val orphan = stageOnly(Seq((99L, "orphan")).toDF("k", "v"), sink)
     assert(AtomicIncrement.vacuumSuperseded(spark, sink) == 1)
     assert(!exists(superseded.head), "superseded file survived")
     assert(!exists(s"${superseded.head}.bloom-k"),
@@ -1279,8 +1269,7 @@ class AtomicIncrementSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(sink)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a concurrent writer's in-flight stage (or seconds-old crash debris)
-    AtomicIncrement.stageBatch(Seq((2L, "b")).toDF("k", "v"), spark,
-      fs, sink)
+    stageOnly(Seq((2L, "b")).toDF("k", "v"), sink)
     assert(AtomicIncrement.vacuumUncommitted(spark, sink,
       minAgeMillis = 3600000L) == 0,
       "age guard reclaimed a fresh staged dir")
@@ -1296,8 +1285,7 @@ class AtomicIncrementSpec extends SparkSpec {
     assert(AtomicIncrement.vacuumUncommitted(spark, sink,
       minAgeMillis = 3600000L) == 1)
     // strict default (0): immediate reclaim, the crash-matrix contract
-    AtomicIncrement.stageBatch(Seq((3L, "c")).toDF("k", "v"), spark,
-      fs, sink)
+    stageOnly(Seq((3L, "c")).toDF("k", "v"), sink)
     assert(AtomicIncrement.vacuumUncommitted(spark, sink) == 1)
   }
 

@@ -159,7 +159,8 @@ class BloomSkipSpec extends SparkSpec {
     // append produces one, but a foreign writer might) — stage an
     // empty frame and publish it alongside the prior snapshot
     val f = fs(sink)
-    val staged = AtomicIncrement.stageBatch(data.limit(0), spark, f, sink)
+    val staged = graft.operators.Txn.begin(spark, sink)
+      .stage(data.limit(0), Nil).map(_.path)
     assert(staged.nonEmpty, "fixture needs an empty part file")
     val (v, prior) = AtomicIncrement.snapshot(spark, sink)
     AtomicIncrement.publish(f, sink, prior ++ staged, v + 1)

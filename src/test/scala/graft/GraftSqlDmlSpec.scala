@@ -300,14 +300,11 @@ class GraftSqlDmlSpec extends SparkSpec {
       loadThree(sink)
       val v0 = AtomicIncrement.snapshot(spark, sink)._1
       // winner appends k in 201..240 — provably outside WHERE k <= 40
-      graft.sources.GraftCowTestSeam.beforePublish = () => {
-        AtomicIncrement.appendIncrementAtomic(
-          rows(201, 240).repartition(1), sink, "k")
-        ()
+      graft.operators.Txn.racing(AtomicIncrement.appendIncrementAtomic(
+          rows(201, 240).repartition(1), sink, "k")) {
+        spark.sql(s"UPDATE graft.`$sink` SET amt = amt + 1000 " +
+          "WHERE k <= 40")
       }
-      try spark.sql(s"UPDATE graft.`$sink` SET amt = amt + 1000 " +
-        "WHERE k <= 40")
-      finally graft.sources.GraftCowTestSeam.beforePublish = () => ()
       assert(AtomicIncrement.snapshot(spark, sink)._1 == v0 + 2,
         "append won v+1, the UPDATE must land on v+2 without rerun")
       val got = AtomicIncrement.readCommitted(spark, sink)
@@ -317,24 +314,18 @@ class GraftSqlDmlSpec extends SparkSpec {
       assert(got.filter($"k" === 210L).count() == 1L)
       // winner appends k = 30 — the UPDATE would have to rewrite it
       // to serialize after; the staged rewrite cannot, so it fails
-      graft.sources.GraftCowTestSeam.beforePublish = () => {
-        AtomicIncrement.appendBlindAtomic(
-          rows(30, 30).repartition(1), sink)
-        ()
-      }
       val ex = intercept[Exception] {
-        try spark.sql(s"UPDATE graft.`$sink` SET amt = 0 WHERE k <= 40")
-        finally graft.sources.GraftCowTestSeam.beforePublish = () => ()
+        graft.operators.Txn.racing(AtomicIncrement.appendBlindAtomic(
+            rows(30, 30).repartition(1), sink)) {
+          spark.sql(s"UPDATE graft.`$sink` SET amt = 0 WHERE k <= 40")
+        }
       }
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x =>
           Option(x.getMessage).toSeq ++ msgs(x.getCause))
       assert(msgs(ex).exists(_.contains("already committed")),
         msgs(ex).mkString(" | "))
-    } finally {
-      graft.sources.GraftCowTestSeam.beforePublish = () => ()
-      rm(sink)
-    }
+    } finally rm(sink)
   }
 
   test("ATOMIC CTAS: a failing query leaves NO table behind; REPLACE " +

@@ -52,8 +52,9 @@ class IncrementalAggSpec extends SparkSpec {
     val old = state(sink)
     val boom = new RuntimeException("crash before publish")
     val thrown = intercept[RuntimeException] {
-      IncrementalAgg.mergeWithHook(rows(31 to 60), sink, keys, sums, "ts",
-        () => throw boom)
+      graft.operators.Txn.racing(throw boom) {
+        IncrementalAgg.mergeBatch(rows(31 to 60), sink, keys, sums, "ts")
+      }
     }
     assert(thrown eq boom)
     // a reader at this instant sees exactly the pre-crash state
@@ -176,6 +177,62 @@ class IncrementalAggSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
     assert(got == direct, s"long CDC fold diverged: $got vs $direct")
+  }
+
+  test("CDC fold retracts Int.MinValue exactly: narrow sums widen to " +
+      "long before the sign, with ANSI on and off") {
+    import org.apache.spark.sql.types.IntegerType
+    def intRows(vs: Seq[Int]) = vs.map(v => ("g", v)).toDF("g", "v")
+      .select(col("g"), col("v").cast(IntegerType))
+    val ansi = "spark.sql.ansi.enabled"
+    val prior = spark.conf.get(ansi)
+    try for (mode <- Seq("true", "false")) {
+      spark.conf.set(ansi, mode)
+      val sink = tmp()
+      assert(IncrementalAgg.mergeCdcBatch(
+        intRows(Seq(Int.MinValue, 1, 2)), intRows(Seq(Int.MinValue)),
+        sink, Seq("g"), Seq("v"), 0L))
+      val got = IncrementalAgg.readState(spark, sink)
+        .select("__n", "sum_v").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got == Seq((2L, 3L)), s"ansi=$mode: $got")
+    } finally spark.conf.set(ansi, prior)
+  }
+
+  test("CDC fold retracting Long.MinValue fails before the manifest " +
+      "moves and leaves no staged batch behind") {
+    val sink = tmp()
+    def longRows(vs: Seq[Long]) = vs.map(v => ("g", v)).toDF("g", "v")
+    assert(IncrementalAgg.mergeCdcBatch(longRows(Seq(5L)),
+      longRows(Nil), sink, Seq("g"), Seq("v"), 0L))
+    val v0 = graft.operators.AtomicIncrement.snapshot(spark, sink)._1
+    val before = IncrementalAgg.readState(spark, sink).collect().toSeq
+    val ex = intercept[Exception] {
+      IncrementalAgg.mergeCdcBatch(longRows(Seq(Long.MinValue, 1L, 2L)),
+        longRows(Seq(Long.MinValue)), sink, Seq("g"), Seq("v"), 1L)
+    }
+    def chain(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+    assert(chain(ex).exists(_.isInstanceOf[ArithmeticException]), ex)
+    assert(graft.operators.AtomicIncrement.snapshot(spark, sink)._1 == v0)
+    assert(IncrementalAgg.readState(spark, sink).collect().toSeq == before)
+    val dataDir = new org.apache.hadoop.fs.Path(s"$sink/_data")
+    val dirs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dataDir).map(_.getPath.getName).toSet
+    val live = graft.operators.AtomicIncrement.committedFiles(spark, sink)
+      .map(_.split("/")(1)).toSet
+    assert(dirs == live, s"the failed fold left a staged batch: $dirs")
+  }
+
+  test("inParallel2: when both legs throw, the caller gets leg A's " +
+      "error with leg B's attached as suppressed") {
+    val ea = new RuntimeException("leg A")
+    val eb = new IllegalStateException("leg B")
+    val thrown = intercept[RuntimeException] {
+      IncrementalAgg.inParallel2[Unit, Unit](throw ea, throw eb)
+    }
+    assert(thrown eq ea)
+    assert(thrown.getSuppressed.toSeq == Seq(eb))
   }
 
   private def extState(sink: String) =

@@ -183,6 +183,60 @@ class LakehousePropertiesSpec extends SparkSpec {
     }
   }
 
+  test("CDC fold over integral extremes equals the BigInt reference " +
+      "model: Short/Int always exact, Long exact or fails before the " +
+      "manifest moves (3 seeded scenarios per type)") {
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+      ShortType}
+    def bounds(t: DataType): (Long, Long) = t match {
+      case ShortType => (Short.MinValue.toLong, Short.MaxValue.toLong)
+      case IntegerType => (Int.MinValue.toLong, Int.MaxValue.toLong)
+      case _ => (Long.MinValue, Long.MaxValue)
+    }
+    for (t <- Seq(ShortType, IntegerType, LongType); scenario <- 1 to 3) {
+      val rnd = new scala.util.Random(20261017L + 10 * scenario +
+        t.defaultSize)
+      val (mn, mx) = bounds(t)
+      def value(): Long =
+        Seq(mn, mx, mn + 1, mx - 1, -1L, 0L, 1L)(rnd.nextInt(7))
+      def frame(rows: Seq[(String, Long)]) =
+        rows.toDF("g", "v").select(col("g"), col("v").cast(t))
+      val sink = tmp()
+      var live = Vector.empty[(String, Long)]
+      for (b <- 0L to 5L) {
+        val plus = Vector.fill(1 + rnd.nextInt(4))(
+          (s"g${rnd.nextInt(2)}", value()))
+        // retract a random subset of the rows the state holds, always
+        // including an extreme (the minimum first) when one is live
+        val extreme = live.find(_._2 == mn)
+          .orElse(live.find(_._2 == mx)).toSeq
+        val minus = (extreme ++ rnd.shuffle(live)
+          .take(rnd.nextInt(live.size + 1))).distinct
+        val v0 = AtomicIncrement.snapshot(spark, sink)._1
+        val applied = scala.util.Try(IncrementalAgg.mergeCdcBatch(
+          frame(plus), frame(minus), sink, Seq("g"), Seq("v"), b))
+        if (applied.isSuccess) {
+          assert(applied.get, s"$t scenario $scenario batch $b no-op'd")
+          live = live.diff(minus) ++ plus
+        } else {
+          assert(t == LongType,
+            s"$t scenario $scenario batch $b failed: ${applied.failed.get}")
+          assert(AtomicIncrement.snapshot(spark, sink)._1 == v0,
+            s"the failed Long fold moved the manifest")
+        }
+        val model = live.groupBy(_._1).map { case (g, rs) =>
+          g -> (rs.size.toLong, rs.map(r => BigInt(r._2)).sum) }
+        val got = if (v0 == 0L && applied.isFailure) Map.empty
+          else IncrementalAgg.readState(spark, sink)
+            .select("g", "__n", "sum_v").collect()
+            .map(r => r.getString(0) -> (r.getLong(1), BigInt(r.getLong(2))))
+            .toMap
+        assert(got == model, s"$t scenario $scenario batch $b: " +
+          s"$got vs $model (plus $plus, minus $minus)")
+      }
+    }
+  }
+
   test("random predicate DELETE/UPDATE interleaved with keyed merges " +
       "and maintenance equals the reference model (4 seeded scenarios; " +
       "round 16 routes each DML step through the SQL catalog faces " +

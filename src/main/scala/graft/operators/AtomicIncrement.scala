@@ -1464,11 +1464,15 @@ object AtomicIncrement {
     * all-files-covered rule. Raw stats strings (base64 for the string
     * tag); `Some(None)` = provably all-null column; `None` = not
     * fully covered / foreign tag / unparseable — the caller must fall
-    * back to a scan. NOTE file stats ignore delete vectors: exact
-    * table bounds only on a dv-free snapshot (the caller's check).
+    * back to a scan. A string bound whose UTF-8 length reaches
+    * `truncateLen` (the `parquet.statistics.truncate.length` in effect)
+    * may be a cut-down prefix or a bumped upper bound, not the value,
+    * so it is refused the same way. NOTE file stats ignore delete
+    * vectors: exact table bounds only on a dv-free snapshot (the
+    * caller's check).
     */
   private[graft] def manifestMinMax(entries: Seq[ManifestEntry],
-      column: String, expectTag: String)
+      column: String, expectTag: String, truncateLen: Int)
       : Option[Option[(String, String)]] = {
     val sts = entries.map(_.statsFor(column))
     if (sts.isEmpty || sts.exists(_.isEmpty)) return None
@@ -1478,6 +1482,8 @@ object AtomicIncrement {
     try {
       if (expectTag == "string") {
         val dec = java.util.Base64.getDecoder
+        if (real.exists(s => dec.decode(s.min).length >= truncateLen ||
+            dec.decode(s.max).length >= truncateLen)) return None
         val mn = real.map(_.min).reduceLeft((a, b) =>
           if (java.util.Arrays.compareUnsigned(
             dec.decode(a), dec.decode(b)) <= 0) a else b)
@@ -2133,8 +2139,9 @@ object AtomicIncrement {
     // ordKey pass below) answer from MANIFEST STATS when the snapshot
     // carries no delete vectors and every dimension is fully covered
     // (round 18, guide §1.2/§6): file stats are exact over live rows
-    // on a dv-free snapshot, string bounds are untruncated by the
-    // staging contract, and ordKey is order-preserving per dimension —
+    // on a dv-free snapshot, string bounds shorter than the parquet
+    // stats truncate length are exact (longer ones are refused by
+    // manifestMinMax), and ordKey is order-preserving per dimension —
     // so min/max(ordKey(c)) = ordKey(min/max(c)), and evaluating the
     // SAME bounds expressions over a two-row local frame of the stats
     // bounds yields the identical grid with ZERO table scans. Any gap
@@ -2143,9 +2150,12 @@ object AtomicIncrement {
     val statsMinMax: Option[Map[String, Option[(Any, Any)]]] =
       if (dvE.nonEmpty) None
       else {
+        val truncateLen = spark.sessionState.newHadoopConf().getInt(
+          org.apache.parquet.hadoop.ParquetOutputFormat
+            .STATISTICS_TRUNCATE_LENGTH, Int.MaxValue)
         val per = zCols.map { c =>
           val tag = tagOf(fieldOf(c).dataType).get
-          manifestMinMax(dataE, c, tag).map { mm =>
+          manifestMinMax(dataE, c, tag, truncateLen).map { mm =>
             c -> mm.map { case (mn, mx) =>
               if (tag == "string") {
                 val dec = java.util.Base64.getDecoder

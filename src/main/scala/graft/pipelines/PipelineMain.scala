@@ -2,6 +2,7 @@ package graft.pipelines
 
 import graft.operators.Incremental
 import graft.sources.{SchemaGuard, Sinks}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,8 +15,11 @@ import org.apache.spark.sql.types._
   *
   * Orchestration discipline the reference gets for free from eager
   * pandas, made explicit under Spark's laziness:
-  *  - bronze schemas are inferred ONCE at ingest and checked against
-  *    the declared contract (SchemaGuard) before any pipeline plans;
+  *  - each bronze source is read, schema-inferred and checked against
+  *    the declared contract (SchemaGuard) once, in the first stage that
+  *    needs it; the one exception is `plugin_mapping`, read in scripts
+  *    (that frame also feeds the gitlab stage's unmapped-plugin check)
+  *    and read again after the K6 writeback changed it;
   *  - the K6 spreadsheet writeback is forced by an action BEFORE the
   *    mapping is re-read for the gitlab enrichment join, so the side
   *    effect cannot be reordered behind it;
@@ -116,9 +120,21 @@ object PipelineMain {
         s"pipeline stage '$name' failed — run aborted (fail-fast)", e)
     }
 
+  /** Overwrite `sinkDir/name` with `df` and return its row count,
+    * summed from the footers of the part files the write just produced
+    * (footer metadata only, no Spark job). If any footer cannot
+    * be read, the count falls back to a scan of the written parquet.
+    */
   private def sink(df: DataFrame, sinkDir: String, name: String): (String, Long) = {
-    df.write.mode("overwrite").parquet(s"$sinkDir/$name")
-    name -> df.sparkSession.read.parquet(s"$sinkDir/$name").count()
+    val spark = df.sparkSession
+    val dir = new Path(s"$sinkDir/$name")
+    df.write.mode("overwrite").parquet(dir.toString)
+    val parts = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+    val footerRows = parts.map(Incremental.footerStatsOfFileAll(spark, _, Nil)._2)
+    name -> (if (footerRows.forall(_.isDefined)) footerRows.flatten.sum
+      else spark.read.parquet(dir.toString).count())
   }
 
   /** The full run. Returns per-stage sink row counts, in execution
@@ -138,8 +154,9 @@ object PipelineMain {
         readBronze(spark, bronzeDir, "development_stage"))
     }
 
-    // 1. scripts — monitoring fact through the four-hop dim chain
-    val scriptsResult = stage("scripts") {
+    // 1. scripts — monitoring fact through the four-hop dim chain; the
+    // mapping read here also serves the gitlab stage's pre-writeback half
+    val (scriptsResult, mapping) = stage("scripts") {
       val monitoring = readBronze(spark, bronzeDir, "tim_export_monitoring")
       val mapping = readBronze(spark, bronzeDir, "plugin_mapping")
       val gitScan = spark.read.schema(gitlabScanSchema)
@@ -147,9 +164,9 @@ object PipelineMain {
       val out = Scripts.transform(monitoring, plugins, stages, mapping,
         gitScan, bimUsers)
       val (bim, designers) = Scripts.split(out)
-      StageResult("scripts", Map(
+      (StageResult("scripts", Map(
         sink(bim, sinkDir, "scripts_bim"),
-        sink(designers, sinkDir, "scripts_designers")))
+        sink(designers, sinkDir, "scripts_designers"))), mapping)
     }
 
     // 2. gitlab — K6 FIRST: the unmapped-plugin writeback is an action
@@ -158,7 +175,6 @@ object PipelineMain {
     // must not reorder this; forcing it here is the whole point.
     val gitlabResult = stage("gitlab") {
       val repos = readBronze(spark, bronzeDir, "gitlab_repos")
-      val mapping = readBronze(spark, bronzeDir, "plugin_mapping")
       // canonicalize the id to long ON the frame: bronze inference may
       // have sized it int or even double ("42.5" anywhere in the
       // column), and a driver-side .toString.toLong would crash the
@@ -217,8 +233,9 @@ object PipelineMain {
       // transform plan would execute the whole anti-join/explode chain
       // a third time and could diverge if bronze changed mid-run. CSV
       // can't carry arrays, so sticker ids flatten in the export only;
-      // the parquet sink keeps the typed column.
-      val snapshot = spark.read.parquet(s"$sinkDir/yougile_tasks")
+      // the parquet sink keeps the typed column. The written frame's
+      // schema is handed to the reader, so no footer is read to infer it.
+      val snapshot = spark.read.schema(out.schema).parquet(s"$sinkDir/yougile_tasks")
       Sinks.csvOverwriteWithBom(
         snapshot.withColumn("sticker_ids", concat_ws(",", col("sticker_ids"))),
         s"$sinkDir/yougile_tasks_csv")

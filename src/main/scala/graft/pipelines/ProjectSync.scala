@@ -54,8 +54,9 @@ object ProjectSync {
     fillByType(derived)
   }
 
-  /** P9: the bim/designers split — two filters over one cached plan
-    * (the reference writes each to its own table).
+  /** P9: the bim/designers split — two filters over the same lazy
+    * plan (the reference writes each to its own table). The split
+    * caches nothing: each sink runs the plan over its own scan.
     */
   def split(transformed: DataFrame): (DataFrame, DataFrame) = (
     transformed.filter(col("is_bim") && col("is_detached") === 0),

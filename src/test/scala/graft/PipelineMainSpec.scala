@@ -1,9 +1,12 @@
 package graft
 
 import graft.pipelines.{PipelineMain, ProjectSync}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The run.py-equivalent orchestrator end to end over a synthesized
   * bronze layer: reference stage order, K6-before-reread sequencing,
@@ -110,27 +113,134 @@ class PipelineMainSpec extends SparkSpec {
     assert(sync2("projectsync_designers") == 0L)
   }
 
-  test("fail-fast: breaking bronze drift aborts the first stage, no sinks written") {
-    val bronze = writeBronze()
-    val sinks = Files.createTempDirectory("graft_sinks_ff").toString
-    // retype a contract column of the FIRST stage's fact: monitoring
-    // plugin_id becomes numeric → SchemaGuard breaking drift
-    val bad = Seq((1L, "Анна", "X", "1.0", "u", "pn", "pv"))
-      .toDF("plugin_id", "user_display_name", "project_name",
-        "plugin_version", "username", "program_name", "program_version")
-    new scala.reflect.io.Directory(
-      new java.io.File(s"$bronze/tim_export_monitoring")).deleteRecursively()
-    bad.coalesce(1).write.option("header", "true")
-      .csv(s"$bronze/tim_export_monitoring")
-
-    val e = intercept[RuntimeException] {
-      PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg)
+  /** Every parquet sink of one run: its reported `sinkRows` against a
+    * scan of what landed. An incremental projectsync sink that appended
+    * nothing has no directory and must report 0.
+    */
+  private def assertSinkRowsMatchScan(results: Seq[PipelineMain.StageResult],
+      sinks: String): Unit = {
+    val csvOrSheet = Set("mapping_writeback", "yougile_tasks_csv")
+    val reported = results.filter(_.stage != "maintenance")
+      .flatMap(_.sinkRows).filterNot { case (k, _) => csvOrSheet(k) }
+    assert(reported.map(_._1).toSet == Set("scripts_bim",
+      "scripts_designers", "gitlab_enriched", "projectsync_bim",
+      "projectsync_designers", "yougile_tasks", "logs_bim",
+      "logs_designers"))
+    reported.foreach { case (name, rows) =>
+      val dir = new java.io.File(s"$sinks/$name")
+      val scanned =
+        if (dir.exists) spark.read.parquet(dir.toString).count() else 0L
+      assert(rows == scanned, s"$name: sinkRows $rows, scan $scanned")
     }
-    assert(e.getMessage.contains("'scripts'"))
-    assert(e.getCause.getMessage.contains("drift"))
-    // fail-fast: nothing downstream ran, the sink dir is untouched
-    assert(new java.io.File(sinks).listFiles().forall(f =>
-      f.getName.startsWith("_") || f.getName.startsWith(".")))
+  }
+
+  test("every parquet sink's sinkRows equals a scan of the sink, " +
+      "with and without BIM users") {
+    val bronze = writeBronze()
+    val sinks = Files.createTempDirectory("graft_sinks_rows").toString
+    assertSinkRowsMatchScan(
+      PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg), sinks)
+
+    // no BIM users: every *_bim sink is empty; the two written through
+    // the footer count still land (one empty part file each) and count 0
+    val bronze0 = writeBronze()
+    val sinks0 = Files.createTempDirectory("graft_sinks_rows0").toString
+    val results0 = PipelineMain.run(spark, bronze0, sinks0, Seq.empty,
+      cfg.copy(bimUsers = Seq.empty))
+    assertSinkRowsMatchScan(results0, sinks0)
+    val rows0 = results0.flatMap(_.sinkRows).toMap
+    for (s <- Seq("scripts_bim", "logs_bim")) {
+      assert(rows0(s) == 0L)
+      assert(new java.io.File(s"$sinks0/$s").exists, s"$s not written")
+    }
+    assert(rows0("projectsync_bim") == 0L)
+    assert(rows0("scripts_designers") == 2L)
+    assert(rows0("logs_designers") == 2L)
+  }
+
+  test("one run over the spec's bronze starts 57 Spark jobs: sinks are " +
+      "counted from their footers, each bronze schema is inferred once") {
+    // Per stage (each CSV bronze read is 2 jobs: header + inference):
+    //   bronze       4  plugin, development_stage reads
+    //   scripts     14  monitoring + plugin_mapping reads (4), two
+    //                   sink writes (5 each)
+    //   gitlab      10  gitlab_repos read (2), K6 unmapped collect (2),
+    //                   mapping append (1), post-K6 mapping re-read (2),
+    //                   gitlab_enriched write (3)
+    //   projectsync 14  sync + ad_users reads (4), per K5 sink a delta
+    //                   count (4) and its append (1)
+    //   yougile      9  yougile_users read (2), parquet write (6), BOM
+    //                   CSV export from the snapshot (1)
+    //   logs         6  log read (2), two sink writes (2 each)
+    //   maintenance  0
+    // Before footer counting a run took 78: every `sink` re-read its
+    // parquet to count it (footer-schema job + 2-job count, 6 sinks),
+    // plugin_mapping was inferred once more in gitlab (2) and the
+    // yougile snapshot inferred its schema from a footer (1).
+    val bronze = writeBronze()
+    val sinks = Files.createTempDirectory("graft_sinks_jobs").toString
+    val sc = spark.sparkContext
+    // counts the jobs between two marker jobs: the bus delivers in
+    // order, so once the end marker is seen every job of the run is in
+    val jobs = new AtomicInteger
+    val ended = new CountDownLatch(1)
+    @volatile var counting = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("pm-jobs-begin") => counting = true
+          case Some("pm-jobs-end") => counting = false; ended.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
+        }
+    }
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("pm-jobs-begin")
+      PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg)
+      marker("pm-jobs-end")
+      assert(ended.await(60, TimeUnit.SECONDS), "listener bus never drained")
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 57)
+  }
+
+  test("fail-fast: breaking bronze drift aborts the first stage, no sinks written") {
+    // each case replaces one source the FIRST stage reads with a
+    // drifted copy: (source, drifted frame, expected cause)
+    val cases = Seq(
+      // a contract column retyped: monitoring plugin_id becomes
+      // numeric → SchemaGuard breaking drift
+      ("tim_export_monitoring",
+        Seq((1L, "Анна", "X", "1.0", "u", "pn", "pv")).toDF("plugin_id",
+          "user_display_name", "project_name", "plugin_version",
+          "username", "program_name", "program_version"),
+        "drift"),
+      // a dereferenced column removed: gitlab_id, read by the scripts
+      // join and the K6 check; scripts is the one stage that infers the
+      // mapping before the writeback
+      ("plugin_mapping",
+        Seq(("StairTool", "p1", "yg-1")).toDF("gitlab_name", "tim_guid",
+          "yougile_guid"),
+        "plugin_mapping removed: gitlab_id"))
+    for ((source, bad, cause) <- cases) {
+      val bronze = writeBronze()
+      val sinks = Files.createTempDirectory("graft_sinks_ff").toString
+      new scala.reflect.io.Directory(
+        new java.io.File(s"$bronze/$source")).deleteRecursively()
+      bad.coalesce(1).write.option("header", "true").csv(s"$bronze/$source")
+
+      val e = intercept[RuntimeException] {
+        PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg)
+      }
+      assert(e.getMessage.contains("'scripts'"), source)
+      assert(e.getCause.getMessage.contains(cause), source)
+      // fail-fast: nothing downstream ran, the sink dir is untouched
+      assert(new java.io.File(sinks).listFiles().forall(f =>
+        f.getName.startsWith("_") || f.getName.startsWith(".")), source)
+    }
   }
 
   test("maintenance stage: a pipeline run evicts a stranded derived-cache key end-to-end") {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Incremental.{AllNullFile, BinaryStats, DoubleStats, LongStats}
 
 /** Manifest-committed incremental sink (SURVEY §7.5 #7's transactional
   * gap): `Incremental.appendIncrement` is idempotent on replay but a
@@ -594,29 +595,23 @@ object AtomicIncrement {
     }.reduce(_ unionByName _)
   }
 
-  /** True only when BOTH stats are present, same-family, parseable,
-    * and their [min, max] intervals provably do not intersect —
-    * every uncertainty answers false (may overlap), keeping all
-    * interval decisions conservative.
+  /** True only when BOTH stats are present, both integral or both
+    * string, decodable, and their [min, max] intervals provably do not
+    * intersect — every uncertainty answers false (may overlap), keeping
+    * all interval decisions conservative.
     */
   private def intervalsDisjoint(a: Option[FileColumnStats],
-      b: Option[FileColumnStats]): Boolean = (a, b) match {
-    case (Some(fa), Some(fb)) =>
-      try {
-        if (integralTags.contains(fa.tag) && integralTags.contains(fb.tag))
-          fa.max.toLong < fb.min.toLong || fa.min.toLong > fb.max.toLong
-        else if (fa.tag == "string" && fb.tag == "string") {
-          val dec = java.util.Base64.getDecoder
-          java.util.Arrays.compareUnsigned(
-            dec.decode(fa.max), dec.decode(fb.min)) < 0 ||
-          java.util.Arrays.compareUnsigned(
-            dec.decode(fa.min), dec.decode(fb.max)) > 0
-        } else false
-      } catch {
-        case _: NumberFormatException => false
-        case _: IllegalArgumentException => false
-      }
-    case _ => false
+      b: Option[FileColumnStats]): Boolean = {
+    def keyBounds(s: Option[FileColumnStats]) = s
+      .filter(fc => integralTags.contains(fc.tag) || fc.tag == "string")
+      .flatMap(ManifestStats.decode)
+    (keyBounds(a), keyBounds(b)) match {
+      case (Some(LongStats(amn, amx)), Some(LongStats(bmn, bmx))) =>
+        amx < bmn || amn > bmx
+      case (Some(BinaryStats(amn, amx)), Some(BinaryStats(bmn, bmx))) =>
+        ManifestStats.cmp(amx, bmn) < 0 || ManifestStats.cmp(amn, bmx) > 0
+      case _ => false
+    }
   }
 
   /** Time travel: the snapshot EXACTLY as manifest `version` committed
@@ -1370,29 +1365,15 @@ object AtomicIncrement {
     } finally { if (countBoth) df.unpersist(); () }
   }
 
-  /** The snapshot's raw (tag, max) for `column` from manifest stats
-    * alone — the COMPARABLE form of [[manifestMaxLiteral]]'s answer,
-    * under the same all-files-covered rule. Two snapshots with equal
-    * fingerprints provably gate an append identically; None (partial
-    * stats, tag drift, unparseable) disables fingerprint-based
-    * decisions.
+  /** The snapshot's exact max of `column` from manifest stats alone,
+    * as a floor-shaped group — the COMPARABLE form of
+    * [[manifestMaxLiteral]]'s answer. Two snapshots with equal
+    * fingerprints provably gate an append identically; None (no exact
+    * max) disables fingerprint-based decisions.
     */
   private def rawMaxFingerprint(entries: Seq[ManifestEntry],
-      column: String): Option[(String, String)] = {
-    val stats = entries.map(_.statsFor(column))
-      .filterNot(_.exists(_.tag == NullTag))
-    if (stats.isEmpty || stats.exists(_.isEmpty)) return None
-    val tags = stats.flatten.map(_.tag).distinct
-    if (tags.size != 1) return None
-    val tag = tags.head
-    stats.flatten.map(_.max).foldLeft(Option.empty[String]) {
-      case (None, b) => Some(b)
-      case (Some(a), b) => maxByTag(tag, a, b) match {
-        case Some(m) => Some(m)
-        case None => return None
-      }
-    }.map(tag -> _)
-  }
+      column: String): Option[FileColumnStats] =
+    exactMaxGroup(column, entries.map(_.statsFor(column)))
 
   /** The floor line's stats for ONE column at `version`'s manifest —
     * memo-served when warm, one small manifest read otherwise. Part
@@ -1403,102 +1384,50 @@ object AtomicIncrement {
     priorFloors(fs, sink, version)
       .filter(_.column.equalsIgnoreCase(column))
 
-  /** Integral-column max from manifest stats alone, under
-    * [[rawMaxFingerprint]]'s all-files-covered rule — the zero-job
-    * answer for the fold-metadata columns (`__b`, `__wm`) the CDC
-    * folds stamp into their state lines (round-17 optimization: the
-    * replay-shield read was one 1-task job per fold/sync call).
+  /** Integral-column max from manifest stats alone
+    * ([[ManifestStats.exactBounds]]) — the zero-job answer for the
+    * fold-metadata columns (`__b`, `__wm`) the CDC folds stamp into
+    * their state lines (round-17 optimization: the replay-shield read
+    * was one 1-task job per fold/sync call).
     */
   private[graft] def manifestMaxLong(entries: Seq[ManifestEntry],
       column: String): Option[Long] =
-    rawMaxFingerprint(entries, column).flatMap {
-      case (tag, mx) if integralTags.contains(tag) => mx.toLongOption
-      case _ => None
+    ManifestStats.exactBounds(entries.map(_.statsFor(column))).collect {
+      case (tag, LongStats(_, mx)) if integralTags.contains(tag) => mx
     }
 
   /** The committed snapshot's max of `column` from manifest stats
-    * alone — usable only when EVERY file carries matching stats (a
-    * path-only line might hold the true max, so a partial answer is
-    * no answer).
+    * alone, as a literal of `dt` — None unless the stats answer
+    * EXACTLY under `dt`'s own tag ([[ManifestStats.exactBounds]]).
+    * NullTag lines (provably zero non-null values — e.g. the empty
+    * after-image file a pure-delete merge-on-read stages) contribute
+    * nothing and do not disable the shortcut.
     */
   private[graft] def manifestMaxLiteral(entries: Seq[ManifestEntry],
       column: String, dt: org.apache.spark.sql.types.DataType)
-      : Option[org.apache.spark.sql.Column] = {
-    val expectTag = tagOf(dt).getOrElse(return None)
-    // NullTag lines (provably zero non-null values — e.g. the empty
-    // after-image file a pure-delete merge-on-read stages) contribute
-    // nothing to the max and must not disable the shortcut: before
-    // round 14's continuation ONE such line pushed every subsequent
-    // append to the O(files) footer sweep until a compaction
-    val stats = entries.map(_.statsFor(column))
-      .filterNot(_.exists(_.tag == NullTag))
-    if (stats.isEmpty || stats.exists(s => !s.exists(_.tag == expectTag)))
-      None
-    else try expectTag match {
-      // string max decodes from the byte-ordered bounds — exact for
-      // the files this sink staged (Spark writes untruncated binary
-      // chunk stats; >4 KB bounds are OMITTED by parquet-mr, which
-      // lands the conservative no-stats line, never a truncated one),
-      // and Spark's string `>` is the same UTF-8 binary order, so an
-      // ISO-string-keyed table watermarks from the manifest too
-      case "string" =>
-        val dec = java.util.Base64.getDecoder
-        val mx = stats.flatten.map(s => dec.decode(s.max)).reduceLeft(
-          (a, b) => if (java.util.Arrays.compareUnsigned(a, b) >= 0) a else b)
-        Some(lit(new String(mx, java.nio.charset.StandardCharsets.UTF_8)))
-      case "double" | "float" =>
-        Incremental.statsMaxLiteral(dt, None,
-          Some(stats.flatten.map(_.max.toDouble).max))
-      case _ =>
-        Incremental.statsMaxLiteral(dt,
-          Some(stats.flatten.map(_.max.toLong).max), None)
-    } catch {
-      // a hand-edited or damaged stats field (numeric or base64) must
-      // degrade to the footer sweep, not fail the append
-      case _: IllegalArgumentException => None
-    }
-  }
+      : Option[org.apache.spark.sql.Column] =
+    ManifestStats.exactBounds(entries.map(_.statsFor(column))).collect {
+      case (tag, st) if tagOf(dt).contains(tag) => st
+    }.flatMap(ManifestStats.maxLiteral(dt, _))
 
-  /** The committed snapshot's exact (min, max) of `column` from
-    * manifest stats alone, under [[manifestMaxLiteral]]'s
-    * all-files-covered rule. Raw stats strings (base64 for the string
-    * tag); `Some(None)` = provably all-null column; `None` = not
-    * fully covered / foreign tag / unparseable — the caller must fall
-    * back to a scan. A string bound whose UTF-8 length reaches
-    * `truncateLen` (the `parquet.statistics.truncate.length` in effect)
-    * may be a cut-down prefix or a bumped upper bound, not the value,
-    * so it is refused the same way. NOTE file stats ignore delete
-    * vectors: exact table bounds only on a dv-free snapshot (the
-    * caller's check).
+  /** The committed snapshot's exact (min, max) of an integral (as
+    * Long) or string (as String) `column` tagged `expectTag`, from
+    * manifest stats alone ([[ManifestStats.exactBounds]]). `Some(None)`
+    * = provably all-null column; `None` = no exact answer — the caller
+    * must fall back to a scan. NOTE file stats ignore delete vectors:
+    * exact table bounds only on a dv-free snapshot (the caller's
+    * check).
     */
   private[graft] def manifestMinMax(entries: Seq[ManifestEntry],
-      column: String, expectTag: String, truncateLen: Int)
-      : Option[Option[(String, String)]] = {
-    val sts = entries.map(_.statsFor(column))
-    if (sts.isEmpty || sts.exists(_.isEmpty)) return None
-    val real = sts.flatten.filterNot(_.tag == NullTag)
-    if (real.isEmpty) return Some(None)
-    if (real.exists(_.tag != expectTag)) return None
-    try {
-      if (expectTag == "string") {
-        val dec = java.util.Base64.getDecoder
-        if (real.exists(s => dec.decode(s.min).length >= truncateLen ||
-            dec.decode(s.max).length >= truncateLen)) return None
-        val mn = real.map(_.min).reduceLeft((a, b) =>
-          if (java.util.Arrays.compareUnsigned(
-            dec.decode(a), dec.decode(b)) <= 0) a else b)
-        val mx = real.map(_.max).reduceLeft((a, b) =>
-          if (java.util.Arrays.compareUnsigned(
-            dec.decode(a), dec.decode(b)) >= 0) a else b)
-        Some(Some((mn, mx)))
-      } else if (integralTags.contains(expectTag))
-        Some(Some((real.map(_.min.toLong).min.toString,
-          real.map(_.max.toLong).max.toString)))
-      else None
-    } catch {
-      case _: IllegalArgumentException | _: NumberFormatException => None
+      column: String, expectTag: String): Option[Option[(Any, Any)]] =
+    ManifestStats.exactBounds(entries.map(_.statsFor(column))).collect {
+      case (_, AllNullFile) => None
+      case (tag, LongStats(mn, mx))
+          if tag == expectTag && integralTags.contains(tag) =>
+        Some((mn, mx))
+      case ("string", BinaryStats(mn, mx)) if expectTag == "string" =>
+        Some((ManifestStats.utf8(mn), ManifestStats.utf8(mx)))
     }
-  }
 
   /** One manifest line for an ALREADY-WRITTEN staged file: footer
     * stats for each of `statsFields`, read from the just-written file
@@ -1517,26 +1446,11 @@ object AtomicIncrement {
     val (byCol, rowCount) = Incremental.footerStatsOfFileAll(spark,
       new Path(s"$sink/$rel"),
       statsFields.filter(f => tagOf(f.dataType).nonEmpty))
-    val stats = statsFields.flatMap { f =>
-      for {
-        tag <- tagOf(f.dataType)
-        st <- byCol.get(f.name)
-        fc <- st match {
-          case Incremental.LongStats(mn, mx) =>
-            Some(FileColumnStats(f.name, tag, mn.toString, mx.toString))
-          case Incremental.DoubleStats(mn, mx) =>
-            Some(FileColumnStats(f.name, tag, mn.toString, mx.toString))
-          case Incremental.BinaryStats(mn, mx) =>
-            val b64 = java.util.Base64.getEncoder
-            Some(FileColumnStats(f.name, tag,
-              b64.encodeToString(mn), b64.encodeToString(mx)))
-          // provably all-null: record it (see [[NullTag]]) — the
-          // column stays covered and aggregates exactly
-          case Incremental.AllNullFile =>
-            Some(FileColumnStats(f.name, NullTag, "", ""))
-        }
-      } yield fc
-    }
+    // a provably all-null column records the [[NullTag]] group: it
+    // stays covered and aggregates exactly
+    val stats = statsFields.flatMap(f =>
+      for (tag <- tagOf(f.dataType); st <- byCol.get(f.name))
+        yield ManifestStats.encode(f.name, tag, st))
     // the exact row count rides every staged line (see [[RowsCol]]);
     // an unreadable footer stages without it — the metadata count
     // degrades to the scan, never to a wrong number
@@ -1563,22 +1477,16 @@ object AtomicIncrement {
       column: String, lower: Long): DataFrame = {
     val (_, entries, _) = snapshotSplit(spark, sink)
     require(entries.nonEmpty, s"no committed snapshot at $sink")
-    val kept = entries.filter { e =>
-      e.statsFor(column) match {
-        case Some(fc) =>
-          // damaged or foreign stats (hand-edited manifests, a future
-          // tag whose bounds don't parse here) degrade to a full read
-          // of that file — the same may-contain fallback
-          // splitByKeyIntervals applies, never an exception
-          try fc.tag match {
-            case "string" => true // no numeric order: may contain
-            case NullTag => false // zero non-null values: cannot satisfy
-            case "double" | "float" => fc.max.toDouble > lower.toDouble
-            case _ => fc.max.toLong > lower
-          } catch { case _: NumberFormatException => true }
-        case _ => true // no usable stats: may contain
-      }
-    }
+    // damaged or foreign stats (hand-edited manifests, a future tag)
+    // do not decode and keep their file, like a string column (no
+    // numeric order) or a line without stats: may contain
+    val kept = entries.filter(e =>
+      e.statsFor(column).flatMap(ManifestStats.decode) match {
+        case Some(AllNullFile) => false // zero non-null values
+        case Some(LongStats(_, mx)) => mx > lower
+        case Some(DoubleStats(_, mx)) => mx > lower.toDouble
+        case _ => true
+      })
     // The schema comes from the FULL committed file list, not the
     // kept subset: the sink evolves schemas across batches, and if
     // every file carrying an evolved column is pruned, a
@@ -1604,19 +1512,9 @@ object AtomicIncrement {
       column: String, lower: String): DataFrame = {
     val (_, entries, _) = snapshotSplit(spark, sink)
     require(entries.nonEmpty, s"no committed snapshot at $sink")
-    val lowerB = lower.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val kept = entries.filter { e =>
-      e.statsFor(column) match {
-        case Some(fc) if fc.tag == "string" =>
-          try java.util.Arrays.compareUnsigned(
-            java.util.Base64.getDecoder.decode(fc.max), lowerB) > 0
-          catch { case _: IllegalArgumentException => true }
-        case Some(fc) if fc.tag == NullTag =>
-          false // zero non-null values: cannot satisfy col > lower
-        case _ => true // no usable string stats: may contain
-      }
-    }
-    readKept(spark, sink, kept)
+    val gt = org.apache.spark.sql.sources.GreaterThan(column, lower)
+    readKept(spark, sink,
+      entries.filter(graft.sources.ManifestPruning.mayMatch(_, gt)))
   }
 
   private def readKept(spark: SparkSession, sink: String,
@@ -1626,34 +1524,6 @@ object AtomicIncrement {
       Some(dataSchema(spark, sink, dataE)))
   }
 
-  /** METADATA-ONLY aggregate: one row of `count(*)` (`cnt`) and
-    * min/max of each of `minMaxCols` (`min_<c>`, `max_<c>`), answered
-    * from the MANIFEST ALONE — zero data-file opens, zero Spark jobs,
-    * however many files the snapshot holds. The Iceberg
-    * metadata-table / Delta stats-only-query move: at 100 TB,
-    * `SELECT count(*), max(event_time) FROM t` is a dashboard's
-    * heartbeat query, and a 10⁵-file table answers it here in one
-    * manifest read instead of a 10⁵-split scan stage. Per-file row
-    * counts ride the [[RowsCol]] group (stamped from each staged
-    * file's footer), min/max fold the same interval stats every
-    * pruned read trusts, and [[NullTag]] lines contribute nothing to
-    * min/max — exactly SQL's null-ignoring aggregate semantics, so a
-    * column that is all-null in SOME files still answers exactly. A
-    * column all-null in EVERY file answers NULL min/max (typed
-    * string, the manifest having erased the type — degenerate by
-    * construction).
-    *
-    * EXACT or ABSENT, never approximate: returns None — the caller
-    * falls back to the ordinary scan — when no snapshot is committed,
-    * when delete vectors stand (masked-row counts are not knowable
-    * from metadata), when any data line predates the row-count group,
-    * or when a requested column is uncovered on some line / covered
-    * under disagreeing stats families. Timestamps decode at micros,
-    * dates at days — the stats' primitive domains. Strings decode
-    * from the byte-ordered bounds, exact for files this sink staged
-    * (parquet-mr OMITS over-long binary bounds rather than truncating,
-    * which lands the no-stats line and routes to None).
-    */
   /** The EXACT committed row count from metadata alone: Σ of the
     * lines' [[RowsCol]] groups — None under standing dvs (masked
     * counts are unknowable) or any pre-stamp line. The single source
@@ -1667,70 +1537,57 @@ object AtomicIncrement {
     if (counts.contains(None)) None else Some(counts.flatten.sum)
   }
 
+  /** METADATA-ONLY aggregate: one row of `count(*)` (`cnt`) and
+    * min/max of each of `minMaxCols` (`min_<c>`, `max_<c>`), answered
+    * from the MANIFEST ALONE — zero data-file opens, zero Spark jobs,
+    * however many files the snapshot holds. The Iceberg
+    * metadata-table / Delta stats-only-query move: at 100 TB,
+    * `SELECT count(*), max(event_time) FROM t` is a dashboard's
+    * heartbeat query, and a 10⁵-file table answers it here in one
+    * manifest read instead of a 10⁵-split scan stage. Per-file row
+    * counts ride the [[RowsCol]] group (stamped from each staged
+    * file's footer), min/max are [[ManifestStats.exactBounds]], and
+    * [[NullTag]] lines contribute nothing to min/max — exactly SQL's
+    * null-ignoring aggregate semantics, so a column that is all-null
+    * in SOME files still answers exactly. A column all-null in EVERY
+    * file answers NULL min/max (typed string, the manifest having
+    * erased the type — degenerate by construction).
+    *
+    * EXACT or ABSENT, never approximate: returns None — the caller
+    * falls back to the ordinary scan — when no snapshot is committed,
+    * when delete vectors stand (masked-row counts are not knowable
+    * from metadata), when any data line predates the row-count group,
+    * or when a requested column has no exact bounds (uncovered on some
+    * line, disagreeing stats families, damaged bounds, or a string
+    * bound parquet may have cut). Timestamps decode at micros, dates
+    * at days — the stats' primitive domains.
+    */
   def statsAggregate(spark: SparkSession, sink: String,
       minMaxCols: Seq[String] = Nil): Option[DataFrame] = {
     import org.apache.spark.sql.types._
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils.{toJavaDate,
+      toJavaTimestamp}
     val (version, dataE, dvE) = snapshotSplit(spark, sink)
     if (version == 0L) return None
     val cnt = metadataRowCount(dataE, dvE).getOrElse(return None)
-    val dec = java.util.Base64.getDecoder
-    val colVals: Seq[Option[(DataType, Any, Any)]] = minMaxCols.map { c =>
-      val groups = dataE.map(_.statsFor(c))
-      if (groups.contains(None)) None
-      else {
-        val present = groups.flatten.filterNot(_.tag == NullTag)
-        present.map(_.tag).distinct match {
-          case Seq() => Some((StringType, null, null)) // all-null column
-          case Seq(tag) => try {
-            def foldL(f: (Long, Long) => Long, v: FileColumnStats => String) =
-              present.map(s => v(s).toLong).reduce(f)
-            def tsOf(us: Long) =
-              org.apache.spark.sql.catalyst.util.DateTimeUtils
-                .toJavaTimestamp(us)
-            def dateOf(d: Long) =
-              org.apache.spark.sql.catalyst.util.DateTimeUtils
-                .toJavaDate(d.toInt)
-            tag match {
-              case "long" => Some((LongType,
-                foldL(math.min, _.min), foldL(math.max, _.max)))
-              case "int" => Some((IntegerType,
-                foldL(math.min, _.min).toInt, foldL(math.max, _.max).toInt))
-              case "short" => Some((ShortType,
-                foldL(math.min, _.min).toShort,
-                foldL(math.max, _.max).toShort))
-              case "byte" => Some((ByteType,
-                foldL(math.min, _.min).toByte,
-                foldL(math.max, _.max).toByte))
-              case "ts" => Some((TimestampType,
-                tsOf(foldL(math.min, _.min)), tsOf(foldL(math.max, _.max))))
-              case "date" => Some((DateType,
-                dateOf(foldL(math.min, _.min)),
-                dateOf(foldL(math.max, _.max))))
-              case "double" => Some((DoubleType,
-                present.map(_.min.toDouble).min,
-                present.map(_.max.toDouble).max))
-              case "float" => Some((FloatType,
-                present.map(_.min.toDouble).min.toFloat,
-                present.map(_.max.toDouble).max.toFloat))
-              case "string" =>
-                def best(v: FileColumnStats => String, wantMax: Boolean) =
-                  new String(present.map(s => dec.decode(v(s))).reduce(
-                    (a, b) =>
-                      if ((java.util.Arrays.compareUnsigned(a, b) >= 0)
-                          == wantMax) a else b),
-                    java.nio.charset.StandardCharsets.UTF_8)
-                Some((StringType, best(_.min, wantMax = false),
-                  best(_.max, wantMax = true)))
-              case _ => None // a future tag this reader can't decode
-            }
-          } catch { // damaged bounds: fall back, never a wrong answer
-            case _: NumberFormatException => None
-            case _: IllegalArgumentException => None
-          }
-          case _ => None // disagreeing families (type evolution)
-        }
-      }
-    }
+    val colVals: Seq[Option[(DataType, Any, Any)]] = minMaxCols.map(c =>
+      ManifestStats.exactBounds(dataE.map(_.statsFor(c))).collect {
+        case (_, AllNullFile) => (StringType, null, null)
+        case ("long", LongStats(mn, mx)) => (LongType, mn, mx)
+        case ("int", LongStats(mn, mx)) => (IntegerType, mn.toInt, mx.toInt)
+        case ("short", LongStats(mn, mx)) =>
+          (ShortType, mn.toShort, mx.toShort)
+        case ("byte", LongStats(mn, mx)) => (ByteType, mn.toByte, mx.toByte)
+        case ("ts", LongStats(mn, mx)) =>
+          (TimestampType, toJavaTimestamp(mn), toJavaTimestamp(mx))
+        case ("date", LongStats(mn, mx)) =>
+          (DateType, toJavaDate(mn.toInt), toJavaDate(mx.toInt))
+        case ("double", DoubleStats(mn, mx)) => (DoubleType, mn, mx)
+        case ("float", DoubleStats(mn, mx)) =>
+          (FloatType, mn.toFloat, mx.toFloat)
+        case (_, BinaryStats(mn, mx)) => (StringType,
+          ManifestStats.utf8(mn), ManifestStats.utf8(mx))
+      })
     if (colVals.contains(None)) return None
     val fields = StructField("cnt", LongType, nullable = false) +:
       minMaxCols.zip(colVals.flatten).flatMap { case (c, (dt, _, _)) =>
@@ -1741,12 +1598,6 @@ object AtomicIncrement {
       StructType(fields)))
   }
 
-  /** Phase 2: atomically publish a manifest listing `files` at
-    * exactly `version` (the writer's snapshot version + 1 — ANY
-    * interleaved commit since the snapshot read collides here and
-    * loses). The temp file is fully written and closed before the
-    * rename, so no reader can observe a partial manifest.
-    */
   /** All-nullable normalization for the embedded schema — what a
     * parquet footer sweep reports (Spark marks every parquet-read
     * field nullable). Embedding a writer-declared non-null field
@@ -1805,57 +1656,40 @@ object AtomicIncrement {
     Some(org.apache.spark.sql.types.StructType(out.toSeq))
   }
 
-  /** Larger-of by the stats tag's comparison domain; None when the
-    * values don't parse in that domain (damaged stats → no floor).
+  /** The exact max of one column's stats groups
+    * ([[ManifestStats.exactBounds]]) as a floor-shaped group (min = max
+    * = the max); None when there is no exact non-null max.
     */
-  private def maxByTag(tag: String, a: String, b: String)
-      : Option[String] = try {
-    tag match {
-      case "double" | "float" =>
-        Some(if (a.toDouble >= b.toDouble) a else b)
-      case "string" =>
-        val dec = java.util.Base64.getDecoder
-        Some(if (java.util.Arrays.compareUnsigned(
-          dec.decode(a), dec.decode(b)) >= 0) a else b)
-      case _ => Some(if (a.toLong >= b.toLong) a else b)
+  private def exactMaxGroup(column: String,
+      groups: Seq[Option[FileColumnStats]]): Option[FileColumnStats] =
+    ManifestStats.exactBounds(groups).collect {
+      case (tag, LongStats(_, mx)) =>
+        ManifestStats.encode(column, tag, LongStats(mx, mx))
+      case (tag, DoubleStats(_, mx)) =>
+        ManifestStats.encode(column, tag, DoubleStats(mx, mx))
+      case (tag, BinaryStats(_, mx)) =>
+        ManifestStats.encode(column, tag, BinaryStats(mx, mx))
     }
-  } catch { case _: IllegalArgumentException => None }
 
   /** `max(prior floor, this version's recorded per-column maxes)` —
-    * the monotone fold [[FloorMetaPath]] documents. A column whose
-    * tags disagree (schema drift) or whose values don't parse drops
-    * out (floor absent = pre-round-16 behavior for that column).
+    * the monotone fold [[FloorMetaPath]] documents. A version's max
+    * folds only the lines that carry the column (conservative-LOW);
+    * a column whose tags disagree (schema drift) or whose bounds are
+    * not exact drops out of it, and then keeps its prior floor as-is.
     */
   private def foldFloors(prior: Seq[FileColumnStats],
       dataLines: Seq[ManifestEntry]): Seq[FileColumnStats] = {
-    val current = scala.collection.mutable.LinkedHashMap[String,
-      FileColumnStats]()
-    for (e <- dataLines; s <- e.allStats
-        if !ReservedStatsCols.contains(s.column) && s.tag != NullTag) {
-      current.get(s.column.toLowerCase) match {
-        case None => current(s.column.toLowerCase) = s
-        case Some(p) if p.tag == s.tag =>
-          maxByTag(s.tag, p.max, s.max) match {
-            case Some(m) => current(s.column.toLowerCase) =
-              FileColumnStats(p.column, p.tag, m, m)
-            case None => current.remove(s.column.toLowerCase); ()
-          }
-        case Some(_) => current.remove(s.column.toLowerCase); ()
-      }
-    }
-    // normalize current maxes to floor shape (min == max == the max)
-    val now = current.values.map(s =>
-      FileColumnStats(s.column, s.tag, s.max, s.max)).toSeq
     val byCol = scala.collection.mutable.LinkedHashMap[String,
       FileColumnStats]()
     for (f <- prior) byCol(f.column.toLowerCase) = f
-    for (n <- now) byCol.get(n.column.toLowerCase) match {
-      case None => byCol(n.column.toLowerCase) = n
-      case Some(p) if p.tag == n.tag =>
-        maxByTag(n.tag, p.max, n.max).foreach(m =>
-          byCol(n.column.toLowerCase) =
-            FileColumnStats(p.column, p.tag, m, m))
-      case Some(_) => () // tag drift: keep the prior floor as-is
+    val cols = dataLines.flatMap(_.allStats.map(_.column))
+      .filterNot(ReservedStatsCols.contains).distinctBy(_.toLowerCase)
+    for (c <- cols; now <- exactMaxGroup(c,
+        dataLines.flatMap(_.statsFor(c)).map(Some(_)))) {
+      val p = byCol.get(c.toLowerCase)
+      if (p.isEmpty) byCol(c.toLowerCase) = now
+      else exactMaxGroup(p.get.column, Seq(p, Some(now)))
+        .foreach(byCol(c.toLowerCase) = _)
     }
     byCol.values.toSeq
   }
@@ -1884,6 +1718,12 @@ object AtomicIncrement {
     }
   }
 
+  /** Phase 2: atomically publish a manifest listing `files` at
+    * exactly `version` (the writer's snapshot version + 1 — ANY
+    * interleaved commit since the snapshot read collides here and
+    * loses). The temp file is fully written and closed before the
+    * rename, so no reader can observe a partial manifest.
+    */
   private[graft] def publish(fs: FileSystem, sink: String,
       files: Seq[String], version: Long,
       commitMillis: Long = System.currentTimeMillis(),
@@ -2139,9 +1979,9 @@ object AtomicIncrement {
     // ordKey pass below) answer from MANIFEST STATS when the snapshot
     // carries no delete vectors and every dimension is fully covered
     // (round 18, guide §1.2/§6): file stats are exact over live rows
-    // on a dv-free snapshot, string bounds shorter than the parquet
-    // stats truncate length are exact (longer ones are refused by
-    // manifestMinMax), and ordKey is order-preserving per dimension —
+    // on a dv-free snapshot (string bounds parquet may have cut are
+    // refused by manifestMinMax), and ordKey is order-preserving per
+    // dimension —
     // so min/max(ordKey(c)) = ordKey(min/max(c)), and evaluating the
     // SAME bounds expressions over a two-row local frame of the stats
     // bounds yields the identical grid with ZERO table scans. Any gap
@@ -2150,22 +1990,8 @@ object AtomicIncrement {
     val statsMinMax: Option[Map[String, Option[(Any, Any)]]] =
       if (dvE.nonEmpty) None
       else {
-        val truncateLen = spark.sessionState.newHadoopConf().getInt(
-          org.apache.parquet.hadoop.ParquetOutputFormat
-            .STATISTICS_TRUNCATE_LENGTH, Int.MaxValue)
-        val per = zCols.map { c =>
-          val tag = tagOf(fieldOf(c).dataType).get
-          manifestMinMax(dataE, c, tag, truncateLen).map { mm =>
-            c -> mm.map { case (mn, mx) =>
-              if (tag == "string") {
-                val dec = java.util.Base64.getDecoder
-                val u8 = java.nio.charset.StandardCharsets.UTF_8
-                (new String(dec.decode(mn), u8): Any,
-                  new String(dec.decode(mx), u8): Any)
-              } else (mn.toLong: Any, mx.toLong: Any)
-            }
-          }
-        }
+        val per = zCols.map(c => manifestMinMax(dataE, c,
+          tagOf(fieldOf(c).dataType).get).map(c -> _))
         if (per.exists(_.isEmpty)) None else Some(per.flatten.toMap)
       }
     // string dims: each column's table-wide min/max, whose common
@@ -3107,31 +2933,26 @@ object AtomicIncrement {
       var hi = sorted.length
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (java.util.Arrays.compareUnsigned(sorted(mid), mn) < 0)
+        if (ManifestStats.cmp(sorted(mid), mn) < 0)
           lo = mid + 1
         else hi = mid
       }
       lo < sorted.length &&
-        java.util.Arrays.compareUnsigned(sorted(lo), mx) <= 0
+        ManifestStats.cmp(sorted(lo), mx) <= 0
     }
     entries.partition { e =>
-      e.statsFor(keyCol) match {
-        case Some(fc) => (churn, fc.tag) match {
-          case (LongChurn(sorted), t) if integralTags.contains(t) =>
-            try !longHas(sorted, fc.min.toLong, fc.max.toLong)
-            catch { case _: NumberFormatException => false }
-          case (sc: StringChurn, "string") =>
-            try {
-              val dec = java.util.Base64.getDecoder
-              !bytesHas(sc.sortedBytes,
-                dec.decode(fc.min), dec.decode(fc.max))
-            } catch { case _: IllegalArgumentException => false }
-          // all-null key file: churn keys are non-null by contract,
-          // so the file provably contains none of them
-          case (_, NullTag) => true
-          case _ => false // family mismatch / unusable stats: may contain
-        }
-        case _ => false // no key stats: may contain
+      val key = e.statsFor(keyCol)
+        .flatMap(fc => ManifestStats.decode(fc).map(fc.tag -> _))
+      (churn, key) match {
+        case (LongChurn(sorted), Some((t, LongStats(mn, mx))))
+            if integralTags.contains(t) => !longHas(sorted, mn, mx)
+        case (sc: StringChurn, Some((_, BinaryStats(mn, mx)))) =>
+          !bytesHas(sc.sortedBytes, mn, mx)
+        // all-null key file: churn keys are non-null by contract, so
+        // the file provably contains none of them
+        case (_, Some((_, AllNullFile))) => true
+        // family mismatch, no or damaged key stats: may contain
+        case _ => false
       }
     }
   }

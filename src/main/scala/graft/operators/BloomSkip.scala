@@ -343,29 +343,13 @@ object BloomSkip {
     // the literal's hash, computed by the same engine expression the
     // build used — one driver-local 1-row job, no replication risk
     val h = spark.range(1).select(xxhash64(value)).head().getLong(0)
-    val lit = spark.range(1).select(value).head().get(0)
-    val intervalKept = entries.filter { e =>
-      e.statsFor(column) match {
-        case Some(fc) =>
-          // damaged/foreign bounds degrade to may-contain, like every
-          // stats decision here — never an exception on a lookup
-          try (fc.tag, lit) match {
-            case (("long" | "int" | "short" | "byte"), v: Number) =>
-              fc.min.toLong <= v.longValue() &&
-                v.longValue() <= fc.max.toLong
-            case ("string", v: String) =>
-              val dec = java.util.Base64.getDecoder
-              val vb = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              java.util.Arrays.compareUnsigned(dec.decode(fc.min), vb) <= 0 &&
-                java.util.Arrays.compareUnsigned(vb, dec.decode(fc.max)) <= 0
-            case _ => true
-          } catch {
-            case _: NumberFormatException | _: IllegalArgumentException =>
-              true
-          }
-        case _ => true
-      }
-    }
+    // the interval stage is the SQL scan's: an `=` verdict over the
+    // manifest bounds (all-null files pruned, damaged or foreign
+    // bounds kept — never an exception on a lookup)
+    val eq = org.apache.spark.sql.sources.EqualTo(column,
+      spark.range(1).select(value).head().get(0))
+    val intervalKept =
+      entries.filter(graft.sources.ManifestPruning.mayMatch(_, eq))
     // sidecar probes: one small read per surviving file, driver-pooled
     // below the threshold and ONE distributed job above it — never a
     // serial loop, never minutes of driver-bound round trips at 10⁶

@@ -39,12 +39,12 @@ object Incremental {
     * metadata reads, never a data scan, which is what makes the
     * watermark read viable against a 100 TB sink. Returns the max as
     * a comparison Column, or None when footers can't answer exactly
-    * (no stats, a non-numeric/temporal type — string stats may be
-    * truncated upper bounds, INT96 stats are unreliable) and the
-    * caller must fall back to an aggregate scan. Files missing the
-    * column (schema evolution) contribute nothing, matching the
-    * mergeSchema read's null semantics; a chunk with no non-null
-    * values is skipped the same way.
+    * (no stats, an unsupported type — INT96 stats are unreliable — or
+    * a string bound parquet may have cut) and the caller must fall
+    * back to an aggregate scan. Files missing the column (schema
+    * evolution) contribute nothing, matching the mergeSchema read's
+    * null semantics; a chunk with no non-null values is skipped the
+    * same way.
     */
   private[graft] def footerMax(spark: SparkSession, path: String,
       column: String, dt: DataType): Option[org.apache.spark.sql.Column] = {
@@ -74,8 +74,8 @@ object Incremental {
   }
 
   /** Exact per-file footer statistics for one column, in the stats'
-    * PRIMITIVE domain (the manifest-serializable form
-    * [[AtomicIncrement]] records for data skipping).
+    * PRIMITIVE domain — also the decoded form of a manifest line's
+    * stats group ([[ManifestStats]] encodes and decodes it).
     */
   private[graft] sealed trait FooterStats
   /** Every chunk of the file is provably all-null: no min/max exists,
@@ -98,7 +98,8 @@ object Incremental {
     * bounds could carry the manifest's own tab/newline separators).
     * Parquet truncation (if a writer enables it) keeps min a lower
     * bound and max an upper bound, so the interval stays a may-contain
-    * superset — pruning on it is conservative either way.
+    * superset — pruning on it is conservative either way; exact reads
+    * refuse such bounds ([[ManifestStats.foldExact]]).
     */
   private[graft] final case class BinaryStats(min: Array[Byte],
       max: Array[Byte]) extends FooterStats
@@ -247,57 +248,20 @@ object Incremental {
     }
   }
 
-  /** Render a primitive-domain max as a typed literal of `dt` (micros
-    * → timestamp, unix days → date, the integral family by cast).
-    */
-  private[graft] def statsMaxLiteral(dt: DataType,
-      maxLong: Option[Long], maxDouble: Option[Double])
-      : Option[org.apache.spark.sql.Column] = dt match {
-    case TimestampType => maxLong.map(v => timestamp_micros(lit(v)))
-    case DateType => maxLong.map(v => date_from_unix_date(lit(v.toInt)))
-    case LongType | IntegerType | ShortType | ByteType =>
-      maxLong.map(v => lit(v).cast(dt))
-    case _ => maxDouble.map(v => lit(v).cast(dt))
-  }
-
   /** [[footerMax]] over an EXPLICIT file list — the entry point for
     * manifest-committed sinks ([[AtomicIncrement]]), whose data files
-    * live under hidden directories a recursive listing must skip.
-    * Folds [[footerStatsOfFile]]: ANY file that cannot answer exactly
-    * fails the whole fold (scan fallback); all-null files contribute
-    * nothing.
+    * live under hidden directories a recursive listing must skip. The
+    * files' footer stats go through [[ManifestStats.foldExact]], so any
+    * file that cannot answer exactly (or a string bound parquet may
+    * have cut) fails the whole fold (scan fallback), stopping at that
+    * file; all-null files contribute nothing.
     */
   private[graft] def footerMaxOfFiles(spark: SparkSession,
       files: Seq[org.apache.hadoop.fs.Path], column: String,
-      dt: DataType): Option[org.apache.spark.sql.Column] = {
-    var maxLong: Option[Long] = None
-    var maxDouble: Option[Double] = None
-    var maxBytes: Option[Array[Byte]] = None
-    val it = files.iterator
-    while (it.hasNext) {
-      footerStatsOfFile(spark, it.next(), column, dt) match {
-        case Some(LongStats(_, mx)) =>
-          maxLong = Some(maxLong.fold(mx)(math.max(_, mx)))
-        case Some(DoubleStats(_, mx)) =>
-          maxDouble = Some(maxDouble.fold(mx)(math.max(_, mx)))
-        case Some(AllNullFile) => ()
-        // string watermark: fold the byte-ordered max (exact for the
-        // files this engine writes — parquet-mr OMITS >4 KB binary
-        // bounds rather than truncating, and omission already routes
-        // through the scan fallback); Spark's string comparison is
-        // the same UTF-8 binary order the literal will filter under
-        case Some(BinaryStats(_, mx)) if dt == StringType =>
-          maxBytes = Some(maxBytes.fold(mx)(a =>
-            if (java.util.Arrays.compareUnsigned(a, mx) >= 0) a else mx))
-        case Some(BinaryStats(_, _)) => return None
-        case None => return None // any file short of exact → scan fallback
-      }
-    }
-    if (dt == StringType)
-      maxBytes.map(b =>
-        lit(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
-    else statsMaxLiteral(dt, maxLong, maxDouble)
-  }
+      dt: DataType): Option[org.apache.spark.sql.Column] =
+    ManifestStats.foldExact(
+      files.iterator.map(footerStatsOfFile(spark, _, column, dt)))
+      .flatMap(ManifestStats.maxLiteral(dt, _))
 
   /** Append only rows with watermarkCol strictly above the sink's
     * current max. Returns the number of appended rows. Idempotent:

@@ -1,6 +1,7 @@
 package graft.sources
 
-import graft.operators.AtomicIncrement
+import graft.operators.{AtomicIncrement, ManifestStats}
+import graft.operators.Incremental.AllNullFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Row, SQLContext}
@@ -397,17 +398,9 @@ private[graft] object ManifestPruning {
     case In(c, vs) => vs.exists(v => boundsAllow(e, c, v, Cmp.Eq))
     case IsNotNull(c) =>
       !e.statsFor(c).exists(_.tag == AtomicIncrement.NullTag)
-    case StringStartsWith(c, p) => e.statsFor(c) match {
-      case Some(fc) if fc.tag == "string" =>
-        // any string with prefix p is >= p in byte order, so a file
-        // whose max < p cannot hold one (lower bound left conservative)
-        try java.util.Arrays.compareUnsigned(
-          java.util.Base64.getDecoder.decode(fc.max),
-          p.getBytes(java.nio.charset.StandardCharsets.UTF_8)) >= 0
-        catch { case _: IllegalArgumentException => true }
-      case Some(fc) if fc.tag == AtomicIncrement.NullTag => false
-      case _ => true
-    }
+    // any string with prefix p is >= p in byte order, so a file whose
+    // max < p cannot hold one (lower bound left conservative)
+    case StringStartsWith(c, p) => boundsAllow(e, c, p, Cmp.Ge)
     // WHERE folded to false (translate maps it to lit(false)):
     // provably no row matches, so no file is touched — a predicate
     // DELETE with such a WHERE carries everything and publishes
@@ -435,75 +428,19 @@ private[graft] object ManifestPruning {
       case Cmp.Le => cmpLo <= 0
     }
 
-  private def boundsAllow(e: AtomicIncrement.ManifestEntry, c: String,
-      v: Any, op: Cmp.Value): Boolean = e.statsFor(c) match {
-    case Some(fc) if fc.tag == AtomicIncrement.NullTag =>
-      false // zero non-null values match no comparison
-    case Some(fc) => try {
-      primitive(v, fc.tag) match {
-        case Some(Left(x)) =>
-          verdict(fc.min.toLong.compareTo(x), fc.max.toLong.compareTo(x),
-            op)
-        case Some(Right(bs)) =>
-          val dec = java.util.Base64.getDecoder
-          verdict(
-            java.util.Arrays.compareUnsigned(dec.decode(fc.min), bs),
-            java.util.Arrays.compareUnsigned(dec.decode(fc.max), bs), op)
-        case None => (fc.tag, v) match {
-          case ("double" | "float", n: Number) =>
-            val x = n.doubleValue()
-            verdict(fc.min.toDouble.compareTo(x),
-              fc.max.toDouble.compareTo(x), op)
-          case (t, n: Number)
-              if AtomicIncrement.integralTags.contains(t) =>
-            // fractional (or arbitrary-precision) filter value against
-            // integral file bounds — compare EXACTLY in BigDecimal so
-            // the may-match verdict is conservative by construction
-            // (round 15, ADVICE: n.longValue() truncation would turn
-            // `k > -20.5` into `k > -20` and wrongly prune a file whose
-            // max is -20). NaN/Infinity render unparseable → the outer
-            // catch keeps the file.
-            val x = new java.math.BigDecimal(n.toString)
-            verdict(new java.math.BigDecimal(fc.min).compareTo(x),
-              new java.math.BigDecimal(fc.max).compareTo(x), op)
-          case _ => true // family this reader can't compare exactly
-        }
-      }
-    } catch {
-      case _: NumberFormatException => true
-      case _: IllegalArgumentException => true
-    }
-    case _ => true // no stats recorded: may contain
-  }
-
-  /** The filter value in the stats' primitive domain, when the stats
-    * family can compare it exactly: Left(long) for the integral/
-    * timestamp/date families, Right(utf8 bytes) for strings. None →
-    * the caller falls to the double path or keeps the file.
+  /** The verdict from the file's decoded bounds for `c`
+    * ([[ManifestStats.signs]]): an all-null file matches no comparison;
+    * no stats, damaged stats or a value the family cannot compare
+    * exactly keep the file.
     */
-  private def primitive(v: Any, tag: String)
-      : Option[Either[Long, Array[Byte]]] = (tag, v) match {
-    // only GENUINELY integral value types ride the exact long path;
-    // a fractional Double/Float/BigDecimal falls to boundsAllow's
-    // BigDecimal branch instead of truncating through longValue()
-    case (t, n @ (_: java.lang.Byte | _: java.lang.Short |
-        _: java.lang.Integer | _: java.lang.Long))
-        if AtomicIncrement.integralTags.contains(t) =>
-      Some(Left(n.asInstanceOf[Number].longValue()))
-    case ("ts", t: java.sql.Timestamp) =>
-      Some(Left(org.apache.spark.sql.catalyst.util.DateTimeUtils
-        .fromJavaTimestamp(t)))
-    case ("ts", i: java.time.Instant) =>
-      Some(Left(Math.addExact(
-        Math.multiplyExact(i.getEpochSecond, 1000000L),
-        i.getNano / 1000L)))
-    case ("date", d: java.sql.Date) =>
-      Some(Left(d.toLocalDate.toEpochDay))
-    case ("date", d: java.time.LocalDate) => Some(Left(d.toEpochDay))
-    case ("string", s: String) =>
-      Some(Right(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    case _ => None
-  }
+  private def boundsAllow(e: AtomicIncrement.ManifestEntry, c: String,
+      v: Any, op: Cmp.Value): Boolean =
+    e.statsFor(c).forall(fc => ManifestStats.decode(fc) match {
+      case Some(AllNullFile) => false
+      case Some(st) => ManifestStats.signs(fc.tag, st, v)
+        .forall { case (lo, hi) => verdict(lo, hi, op) }
+      case None => true
+    })
 
   // ---- Filter → Column, for parquet row-group pushdown inside the
   // surviving files (Spark still re-applies everything on top) and

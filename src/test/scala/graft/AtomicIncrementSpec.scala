@@ -1249,6 +1249,60 @@ class AtomicIncrementSpec extends SparkSpec {
     } finally spark.conf.unset(truncKey)
   }
 
+  test("string watermarks under a set parquet.statistics.truncate.length " +
+      "refuse the cut bounds: each append and fold takes the next batch, " +
+      "and statsAggregate answers None or the exact bounds") {
+    import graft.operators.{Incremental, IncrementalAgg}
+    val truncKey = "parquet.statistics.truncate.length"
+    def batch(ts: String) = Seq((ts, 1L)).toDF("ts", "x")
+    def tsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("ts").as[String].collect().sorted.toSeq
+    // (writer, one batch into the sink → rows taken, the sink's ts
+    // values as a scan reads them)
+    val cases = Seq[(String, (org.apache.spark.sql.DataFrame, String) => Long,
+        String => Seq[String])](
+      ("appendIncrementAtomic",
+        (df, sink) => AtomicIncrement.appendIncrementAtomic(df, sink, "ts"),
+        sink => tsOf(AtomicIncrement.readCommitted(spark, sink))),
+      ("Incremental.appendIncrement",
+        (df, sink) => Incremental.appendIncrement(df, sink, "ts"),
+        sink => tsOf(spark.read.parquet(sink))),
+      ("IncrementalAgg.mergeBatch (string __wm)",
+        (df, sink) => IncrementalAgg.mergeBatch(df, sink, Seq("ts"),
+          Seq("x"), "ts"),
+        sink => tsOf(IncrementalAgg.readState(spark, sink))))
+    // (first, second batch, byte length of the recorded cut bounds):
+    // 13-byte ASCII values cut at 8 bytes, and values whose cut lands
+    // inside the 2-byte "é", which parquet backs off to 7 bytes
+    val pairs = Seq(("2024-01-01T10", "2024-01-02T00", 8),
+      ("2024-01\u00e91", "2024-01\u00e92", 7))
+    spark.conf.set(truncKey, "8")
+    try for ((first, second, cutLen) <- pairs) {
+      // rows taken by: the first batch, the second, a replay of it
+      val results = for ((name, write, scan) <- cases) yield {
+        val sink = tmp()
+        val taken = Seq(first, second, second).map(ts => write(batch(ts), sink))
+        (name, taken, scan(sink))
+      }
+      // statsAggregate over one batch: its min and max are both `first`
+      val sink = tmp()
+      AtomicIncrement.appendIncrementAtomic(batch(first), sink, "ts")
+      // fixture guard: the manifest really carries cut bounds
+      val (_, entries) = AtomicIncrement.snapshotEntries(spark, sink)
+      assert(entries.flatMap(_.statsFor("ts")).map(s =>
+        java.util.Base64.getDecoder.decode(s.max).length) == Seq(cutLen))
+      val bounds = AtomicIncrement.statsAggregate(spark, sink, Seq("ts"))
+        .map(_.head()).map(r => (r.getAs[String]("min_ts"),
+          r.getAs[String]("max_ts")))
+      val all = s"appends/folds: $results; statsAggregate: $bounds"
+      for ((name, taken, rows) <- results) {
+        assert(taken == Seq(1L, 1L, 0L), s"$name took $taken; $all")
+        assert(rows == Seq(first, second), name)
+      }
+      assert(bounds.forall(_ == ((first, first))), all)
+    } finally spark.conf.unset(truncKey)
+  }
+
   test("readVersionAsOf prefers the manifest-embedded commit stamp " +
       "(round 14): a restore that scrambles every mtime leaves the " +
       "mapping intact; pre-stamp manifests fall back to mtime") {

@@ -38,6 +38,29 @@ class BloomSkipSpec extends SparkSpec {
       .filter(col("id") === id)
       .select("ts", "v").as[(Long, String)].collect().sorted.toSeq
 
+  test("the interval stage is ManifestPruning.mayMatch: with no sidecars " +
+      "built, a file whose key is all-null is not opened, and the lookup " +
+      "≡ full scan + filter") {
+    val sink = tmp()
+    for ((ids, w) <- Seq((Seq(Some(1L), Some(2L)), 1L),
+        (Seq(Some(11L), Some(12L)), 2L), (Seq(None, None), 3L)))
+      AtomicIncrement.appendIncrementAtomic(
+        ids.map(i => (w, i, s"v$w")).toDF("w", "id", "v").repartition(1),
+        sink, "w", extraStatsCols = Seq("id"))
+    // fixture guard: the third file records the all-null (NullTag) group
+    val (_, entries) = AtomicIncrement.snapshotEntries(spark, sink)
+    assert(entries.flatMap(_.statsFor("id")).map(_.tag) ==
+      Seq("long", "long", AtomicIncrement.NullTag))
+    val hit = BloomSkip.pointLookup(spark, sink, "id", lit(1L))
+    assert(hit.inputFiles.length == 1,
+      s"opened ${hit.inputFiles.length} files: the all-null file was kept")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("id") === 1L).select("w", "v").as[(Long, String)]
+        .collect().toSeq
+    assert(rows(hit) == Seq((1L, "v1")))
+    assert(rows(hit) == rows(AtomicIncrement.readCommitted(spark, sink)))
+  }
+
   test("no false negatives over the whole key domain; lookups prune to " +
       "fewer files; absent keys read zero files but keep the schema") {
     val sink = tmp()

@@ -320,6 +320,29 @@ object BloomSkip {
   private[graft] val distributedProbes =
     new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** `value`'s xxhash64, computed by the same engine expression the
+    * build used, and `value` itself as an external Scala value (what a
+    * row's `get` returns). A foldable value — any literal — is folded by
+    * the optimizer and read off the optimized plan's `Literal`s: no
+    * Spark job and no generated class (a job's source inlines a long
+    * key, so every key compiled a new class). Anything else runs one
+    * 1-row job.
+    */
+  private[graft] def probeOf(spark: SparkSession,
+      value: org.apache.spark.sql.Column): (Long, Any) = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val probe = spark.range(1).select(xxhash64(value), value)
+    probe.queryExecution.optimizedPlan match {
+      case Project(Seq(Alias(Literal(h: Long, _), _), Alias(v: Literal, _)), _) =>
+        (h, CatalystTypeConverters.convertToScala(v.value, v.dataType))
+      case _ =>
+        val r = probe.head()
+        (r.getLong(0), r.get(1))
+    }
+  }
+
   /** Point-lookup read: the committed snapshot restricted to files
     * that MAY contain `column = value`. Two skipping layers compose:
     * the manifest's interval stats (when they happen to describe this
@@ -340,14 +363,11 @@ object BloomSkip {
     requireNoTagCollision(
       AtomicIncrement.dataSchema(spark, sink, entries).fieldNames
         .toIndexedSeq, column, token = false)
-    // the literal's hash, computed by the same engine expression the
-    // build used — one driver-local 1-row job, no replication risk
-    val h = spark.range(1).select(xxhash64(value)).head().getLong(0)
+    val (h, v) = probeOf(spark, value)
     // the interval stage is the SQL scan's: an `=` verdict over the
     // manifest bounds (all-null files pruned, damaged or foreign
     // bounds kept — never an exception on a lookup)
-    val eq = org.apache.spark.sql.sources.EqualTo(column,
-      spark.range(1).select(value).head().get(0))
+    val eq = org.apache.spark.sql.sources.EqualTo(column, v)
     val intervalKept =
       entries.filter(graft.sources.ManifestPruning.mayMatch(_, eq))
     // sidecar probes: one small read per surviving file, driver-pooled

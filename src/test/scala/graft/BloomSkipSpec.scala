@@ -1,8 +1,11 @@
 package graft
 
 import graft.operators.{AtomicIncrement, BloomSkip}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Bloom sidecar file skipping: no false negatives ever, lookups
   * ≡ full scan + filter in every sidecar state (covered, partially
@@ -59,6 +62,74 @@ class BloomSkipSpec extends SparkSpec {
         .collect().toSeq
     assert(rows(hit) == Seq((1L, "v1")))
     assert(rows(hit) == rows(AtomicIncrement.readCommitted(spark, sink)))
+  }
+
+  /** Spark jobs `body` starts, counted between two marker jobs by a
+    * listener registered for this call only: the bus delivers in
+    * order, so once the end marker is seen every job of `body` is in.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val ended = new CountDownLatch(1)
+    @volatile var counting = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("bloom-jobs-begin") => counting = true
+          case Some("bloom-jobs-end") => counting = false; ended.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
+        }
+    }
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("bloom-jobs-begin")
+      body
+      marker("bloom-jobs-end")
+      assert(ended.await(60, TimeUnit.SECONDS), "listener bus never drained")
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("a literal key's probe folds on the driver: a lookup starts one " +
+      "Spark job (its read), the folded hash and value equal the 1-row " +
+      "job's for long, string and date keys, and lookup ≡ full scan + " +
+      "filter") {
+    val sink = tmp()
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    for (w <- 1L to 3L)
+      AtomicIncrement.appendIncrementAtomic(
+        (1L to 200L).map { i =>
+          val k = w * 1000 + i
+          (w, k, s"s$k", java.sql.Date.valueOf(day0.plusDays(k)))
+        }.toDF("w", "k", "s", "d").repartition(1), sink, "w")
+    for (c <- Seq("k", "s", "d"))
+      assert(BloomSkip.ensureSidecars(spark, sink, c) == 3)
+    val keys = Seq("k" -> lit(2042L), "s" -> lit("s2042"),
+      "d" -> lit(java.sql.Date.valueOf(day0.plusDays(2042))))
+    for ((c, v) <- keys) {
+      // what the probe computed as two 1-row jobs before it folded
+      val hash = spark.range(1).select(xxhash64(v)).head().getLong(0)
+      val value = spark.range(1).select(v).head().get(0)
+      assert(BloomSkip.probeOf(spark, v) == ((hash, value)), s"key $c")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.filter(col(c) === v).collect().map(_.toString).sorted.toSeq
+      var got = Seq.empty[String]
+      val jobs = jobsOf {
+        got = rows(BloomSkip.pointLookup(spark, sink, c, v))
+      }
+      assert(jobs == 1, s"key $c: the lookup started $jobs jobs")
+      assert(got.size == 1 && got ==
+        rows(AtomicIncrement.readCommitted(spark, sink)), s"key $c")
+    }
+    // a value that does not fold (it reads the 1-row frame's `id`, 0)
+    // still answers, through the job
+    assert(BloomSkip.probeOf(spark, col("id") + 2042L) ==
+      BloomSkip.probeOf(spark, lit(2042L)))
   }
 
   test("no false negatives over the whole key domain; lookups prune to " +

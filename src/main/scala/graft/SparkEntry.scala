@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
@@ -36,84 +38,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     registry("q_join_snowflake").fn(spark, "/root/testdata/sf0.001")
 
-  /** The driver's correctness artifact caps at ~100 rows while the
-    * registry declares 160+ oracles — whatever the driver truncates
-    * rides unchecked that round. Surface the maps in a deliberate
-    * order: the events-backed queries first (they went unchecked for a
-    * whole round when the r7 testdata regeneration broke their ingest),
-    * then everything else alphabetically (stable and diffable). The
-    * full 119-query sweep still runs locally each round via
-    * tools/check_oracle.py and is recorded in the round notes.
-    */
-  private val checkFirst: Seq[String] = Seq(
-    // round-17 additions, never driver-checked yet
-    "q_sql_evolve", "q_sql_history", "q_incr_agg_topk_str",
-    "q_sql_rtas",
-    // round-16 additions, driver-checked once (r16)
-    "q_sql_update", "q_sql_merge", "q_incr_agg_topk_dyadic",
-    // round-15 additions, driver-checked once (r15)
-    "q_stream_source", "q_sql_delete", "q_incr_agg_topk_approx",
-    "q_read_grep_indexed", "q_stream_replicate", "q_update_where",
-    // the round-13 additions: string/UUID-keyed merge + the composed
-    // maintenance loop, never driver-checked yet
-    "q_merge_upsert_str", "q_maintain_cdc", "q_read_pruned_str",
-    "q_merge_scd2",
-    // the round-12 additions: newest first
-    "q_merge_upsert", "q_incr_agg_cdc", "q_read_bloom",
-    "q_optimize_cluster",
-    // never driver-checked at all: the round-8 additions
-    "q_pmi_pairs", "q_phrase_hits", "q_triangle_count", "q_kcore",
-    "q_zorder_layout", "q_dedup_incremental", "q_containment",
-    "q_join_estimate", "q_hard_negatives_ivf", "q_split_leakage",
-    "q_distinct_ngrams", "q_quality_calibration", "q_corpus_map",
-    "q_shard_manifest", "q_psi_drift", "q_sessionize_window",
-    "q_components", "q_langid_eval", "q_minhash_recall", "q_embedding_expectations",
-    "q_corpus_expectations", "q_dedup_tfidf", "q_image_phash",
-    "q_audio_features", "q_c4_lines", "q_line_dedup",
-    "q_frame_sample", "q_embed_ann", "q_scene_cuts", "q_multimodal_meta",
-    "q_ann_ivf_incremental", "q_ann_ivf_delete", "q_ann_pq_delete",
-    "q_ann_ivf_upsert", "q_ann_pq_incremental", "q_ann_pq_upsert",
-    "q_decontaminate_semantic", "q_index_stats", "q_recall_churn",
-    "q_recall_pq",
-    "q_url_dedup", "q_domain_stats", "q_html_extract", "q_read_pruned",
-    "q_centroid_drift",
-    "q_recall_at_k", "q_bitext_margin", "q_pagerank",
-    "q_bm25", "q_rrf_fuse",
-    "q_dsir_weights", "q_ppl_buckets", "q_mixture_alpha",
-    "q_hard_negatives", "q_select_corpus", "q_dsir_weights_indexed",
-    "q_curriculum", "q_mmr_select",
-    "q_semdedup", "q_dedup_winnow",
-    // unchecked for the whole of round 7 (events ingest break)
-    "q_asof_join", "q_cohort_retention", "q_collect_set",
-    "q_filter_rlike_ci", "q_funnel", "q_funnel_windowed",
-    "q_join_trycast", "q_json_parse", "q_map_lookup", "q_outliers",
-    "q_pivot", "q_range_attrib", "q_sessionize_batch",
-    "q_timestamp_kit", "q_try_cast", "q_tz_convert",
-    "q_window_running", "q_window_trailing", "q_window_tumbling")
-
-  private def orderedNames: Seq[String] = {
-    val all = registry.keySet
-    // a silently-dropped stale entry would put its renamed query back
-    // in the truncation zone — the exact failure this ordering exists
-    // to prevent, so a mismatch fails loudly instead
-    val missing = checkFirst.filterNot(all.contains)
-    require(missing.isEmpty,
-      s"checkFirst names not in the registry (renamed?): ${missing.mkString(", ")}")
-    checkFirst ++ (all -- checkFirst).toSeq.sorted
-  }
+  /** The registry in sorted key order: stable and diffable. */
+  private def sorted: Seq[(String, QueryDef)] = registry.toSeq.sortBy(_._1)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val reg = registry
-    scala.collection.immutable.ListMap(
-      orderedNames.map(k => k -> reg(k).fn): _*)
-  }
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    ListMap(sorted.map { case (k, q) => k -> q.fn }: _*)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = {
-    val reg = registry
-    scala.collection.immutable.ListMap(
-      orderedNames.flatMap(k => reg(k).oracle.map(k -> _)): _*)
-  }
+  def oracleSql: Map[String, String] =
+    ListMap(sorted.flatMap { case (k, q) => q.oracle.map(k -> _) }: _*)
 }

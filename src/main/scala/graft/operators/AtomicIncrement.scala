@@ -18,18 +18,19 @@ import Incremental.{AllNullFile, BinaryStats, DoubleStats, LongStats}
   *     staged files are invisible everywhere until committed.
   *  2. PUBLISH: a new manifest version — the COMPLETE data-file list,
   *     prior snapshot plus the staged files, one relative path per
-  *     line — is written to a temp name and RENAMEd to
-  *     `_graft_manifest/<version>`. The rename is the commit point:
+  *     line — is written to a temp name and moved to
+  *     `_graft_manifest/<version>`. The move is the commit point:
   *     readers resolve the highest version and read exactly its file
   *     list, so they see the old snapshot or the new one, never a
-  *     partial append. (HDFS rename is atomic and fails on an
-  *     existing destination; object stores need their atomic-commit
-  *     primitive behind the same seam.)
+  *     partial append. (The move refuses an existing version
+  *     atomically: a hard link on `file:`, a no-overwrite rename on
+  *     HDFS; object stores need their atomic-commit primitive behind
+  *     the same seam.)
   *
-  * Crash anywhere before the rename → orphaned staged files the next
+  * Crash anywhere before the move → orphaned staged files the next
   * run ignores (its watermark comes from the committed snapshot, so
   * the delta is recomputed in full) and [[vacuumUncommitted]] GCs.
-  * Concurrent writers: the loser's rename hits an existing version,
+  * Concurrent writers: the loser's move hits an existing version,
   * its staged batch is deleted, and it throws — re-run converges on
   * the winner's snapshot (optimistic concurrency, one winner per
   * version).
@@ -37,7 +38,7 @@ import Incremental.{AllNullFile, BinaryStats, DoubleStats, LongStats}
   * At 100 TB: the manifest is O(files) lines of text, the watermark
   * stays a footer-stats read over the committed list, and data files
   * are never moved or rewritten — commit cost is one small-file write
-  * + one rename regardless of data size.
+  * + one move regardless of data size.
   */
 object AtomicIncrement {
 
@@ -1722,7 +1723,7 @@ object AtomicIncrement {
     * exactly `version` (the writer's snapshot version + 1 — ANY
     * interleaved commit since the snapshot read collides here and
     * loses). The temp file is fully written and closed before the
-    * rename, so no reader can observe a partial manifest.
+    * move, so no reader can observe a partial manifest.
     */
   private[graft] def publish(fs: FileSystem, sink: String,
       files: Seq[String], version: Long,
@@ -1746,14 +1747,24 @@ object AtomicIncrement {
     val out = fs.create(tmp, false)
     try out.write((metaLines ++ files)
       .mkString("\n").getBytes("UTF-8")) finally out.close()
-    // HDFS rename is atomic and refuses an existing destination; the
-    // local FS overwrites, so guard with an exists probe for the test
-    // environment (the race window is the object-store caveat above)
-    if (fs.exists(target) || !fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"manifest version $version already committed at $sink")
-    }
+    // The commit point refuses an existing version in one atomic step:
+    // a local rename would replace it, so `file:` publishes by hard
+    // link; elsewhere a no-overwrite rename (atomic on HDFS).
+    val won =
+      try {
+        if (fs.getUri.getScheme == "file") {
+          def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+          java.nio.file.Files.createLink(local(target), local(tmp))
+        } else
+          org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+            .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.NONE)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException |
+            _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      } finally fs.delete(tmp, false)
+    if (!won) throw new java.util.ConcurrentModificationException(
+      s"manifest version $version already committed at $sink")
     // the committing process itself never re-derives what it just
     // declared: seed the memos under the NEW version's state
     embedded.foreach { s =>

@@ -315,7 +315,8 @@ object BloomSkip {
   }
 
   /** Probe-shape test counter: how many probes ran as a distributed
-    * job rather than the driver pool (the ScaleCheck pin).
+    * job rather than the driver pool (BloomSkipSpec "distributed probe
+    * path…" pins it).
     */
   private[graft] val distributedProbes =
     new java.util.concurrent.atomic.AtomicLong(0)

@@ -773,8 +773,9 @@ object Dedup {
         |ORDER BY dist, id_a, id_b LIMIT 20""".stripMargin),
 
     // Edit-distance ranking over LSH-BANDED candidates — the scale
-    // path for edit-similar search (ScaleCheck measured the banded
-    // variant above at 122x for 10x data when lengths concentrate:
+    // path for edit-similar search (the round-7 10x checkpoint in
+    // SCALING.md measured the banded variant above at 122x for 10x
+    // data when lengths concentrate:
     // exhaustive top-k inside a length band is quadratic in band
     // occupancy BY CONTRACT; MinHash banding bounds candidates by
     // shingle similarity instead — this query re-measured at 3.9x for

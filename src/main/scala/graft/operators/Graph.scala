@@ -381,11 +381,11 @@ object Graph {
       // join, and a broadcast is an eager evaluation — with a 5-round
       // checkpoint gap iteration i re-executed the whole i-deep chain
       // (quadratic total work, measured 16 s at sf0.1). Cadence
-      // measured by graft.PageRankTune (r10, sf0.1, best-of-3,
-      // interleaved): every=1 cold 4.93 s / warm 2.14 s; every=2 cold
-      // 5.61 s / warm 2.11 s — the 16 k-row rank frame materializes
-      // for pennies, so capping re-execution at depth 1 wins the cold
-      // leg and ties the warm one.
+      // measured at round 10 (sf0.1, best-of-3, interleaved; SCALING.md
+      // "PageRank checkpoint cadence", now historical): every=1 cold
+      // 4.93 s / warm 2.14 s; every=2 cold 5.61 s / warm 2.11 s — the
+      // 16 k-row rank frame materializes for pennies, so capping
+      // re-execution at depth 1 wins the cold leg and ties the warm one.
       (s, dir) => {
         val (adj, nodes) = memoTradeGraph(s, dir)
         pageRankPrepared(adj, nodes, iters = 10, checkpointEvery = 1)

@@ -108,15 +108,6 @@ object DerivedCache {
       .map { st => fs.delete(st.getPath, true); st.getPath.toString }
   }
 
-  /** Evict only the cache dirs of the given `kinds` (every key, all
-    * sources) — the scoped eviction a cold-timing harness needs:
-    * ScaleCheck must delete exactly the artifact family the query
-    * under test builds (so its "cold" run is honestly cold) WITHOUT
-    * wiping unrelated kinds that other queries in the same pass, or
-    * another process on the host, still read. Dir names are
-    * `kind-<32-hex>`; the hex anchor keeps a kind from prefix-matching
-    * a longer kind name (`trade-edges` vs a hypothetical `trade`).
-    */
   /** The OPERATIONAL sweep (run by PipelineMain's maintenance stage):
     * evict every artifact whose derivation this process knows
     * (same kind as a cataloged tuple) but whose key is no longer
@@ -151,6 +142,15 @@ object DerivedCache {
       .map { st => fs.delete(st.getPath, true); st.getPath.toString }
   }
 
+  /** Evict only the cache dirs of the given `kinds` (every key, all
+    * sources) — the scoped eviction a cold rebuild needs: a caller
+    * (MultimodalSpec, SimilaritySpec) deletes exactly the artifact
+    * family it must rebuild WITHOUT wiping unrelated kinds that other
+    * suites in the same JVM, or another process on the host, still
+    * read (DerivedCacheSpec pins the scoping). Dir names are
+    * `kind-<32-hex>`; the hex anchor keeps a kind from prefix-matching
+    * a longer kind name (`trade-edges` vs a hypothetical `trade`).
+    */
   def vacuumKinds(spark: SparkSession, kinds: Set[String]): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(
       s"${sys.props("java.io.tmpdir")}/graft_cache")

@@ -315,11 +315,8 @@ private[graft] class GraftCowScan(op: GraftRowLevelOperation,
     // being flattened to row views. Spark requires the choice be
     // UNIFORM across a scan's partitions, and dv application is a
     // per-file row filter, so any standing tombstone keeps the whole
-    // scan row-shaped. `-Dgraft.cow.columnar=false` is the
-    // measurement/escape toggle.
-    val columnar = dvE.isEmpty &&
-      sys.props.getOrElse("graft.cow.columnar", "true") == "true" &&
-      ParquetIoBridge.supportsBatch(spark, physical)
+    // scan row-shaped.
+    val columnar = dvE.isEmpty && ParquetIoBridge.supportsBatch(spark, physical)
     val dataReader = ParquetIoBridge.parquetReader(spark, fullSchema,
       physical, returningBatch = columnar)
     val dvReader = keyField.map(kf => ParquetIoBridge.parquetReader(

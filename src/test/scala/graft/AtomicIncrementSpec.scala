@@ -1791,4 +1791,66 @@ class AtomicIncrementSpec extends SparkSpec {
     finally outS.close()
     assert(AtomicIncrement.statsAggregate(spark, sink).isEmpty)
   }
+
+  /** Runs `body(thread, round)` on `threads` threads for `rounds`
+    * rounds, every round released together by a barrier; per thread,
+    * the rounds whose body returned (a lost commit race throws). */
+  private def raceRounds(threads: Int, rounds: Int)(
+      body: (Int, Int) => Unit): Seq[Seq[Int]] = {
+    import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
+    val barrier = new CyclicBarrier(threads)
+    val pool = Executors.newFixedThreadPool(threads)
+    try {
+      val wins = (0 until threads).map(t => pool.submit(
+        new java.util.concurrent.Callable[Seq[Int]] {
+          def call(): Seq[Int] = (1 to rounds).filter { r =>
+            barrier.await(60, TimeUnit.SECONDS)
+            try { body(t, r); true }
+            catch { case _: java.util.ConcurrentModificationException => false }
+          }
+        }))
+      wins.map(_.get(600, TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+  }
+
+  test("concurrent publishes of one manifest version: exactly one " +
+      "publisher wins each version, the others throw, and the version " +
+      "lists the winner's file") {
+    val sink = tmp()
+    val f = fs(sink)
+    def line(t: Int, v: Int) = s"_data/batch-t$t/part-$v.parquet"
+    val wins = raceRounds(threads = 4, rounds = 300) { (t, v) =>
+      AtomicIncrement.publish(f, sink, Seq(line(t, v)), v.toLong)
+    }
+    val winners = wins.zipWithIndex
+      .flatMap { case (vs, t) => vs.map(_ -> t) }.groupBy(_._1)
+    val contested = (1 to 300).filterNot(v => winners.get(v).exists(_.size == 1))
+    assert(contested.isEmpty, s"versions without exactly one winner: " +
+      contested.take(10).map(v => v -> winners.get(v).map(_.map(_._2))))
+    for ((v, Seq((_, t))) <- winners) {
+      val in = f.open(new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(sink, "_graft_manifest"), f"$v%020d"))
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().toList finally in.close()
+      assert(lines.contains(line(t, v)), s"version $v lost its winner's line")
+    }
+  }
+
+  test("racing blind appends lose no acknowledged row: every append that " +
+      "returned is in the table, none that threw is, and each returned " +
+      "append published one version and kept one batch dir") {
+    val sink = tmp()
+    def keysOf(t: Int, r: Int) = (0 until 10).map(i => t * 10000L + r * 10L + i)
+    val wins = raceRounds(threads = 3, rounds = 20) { (t, r) =>
+      AtomicIncrement.appendBlindAtomic(
+        keysOf(t, r).map(k => (k, s"t$t")).toDF("k", "v"), sink)
+    }
+    val acked = wins.zipWithIndex.flatMap { case (rs, t) => rs.map(keysOf(t, _)) }
+    assert(acked.size >= 20, s"fewer acknowledged appends than rounds: ${acked.size}")
+    assert(AtomicIncrement.readCommitted(spark, sink).select("k").as[Long]
+      .collect().sorted.toSeq == acked.flatten.sorted)
+    assert(AtomicIncrement.snapshot(spark, sink)._1 == acked.size)
+    assert(fs(sink).listStatus(new org.apache.hadoop.fs.Path(sink, "_data"))
+      .length == acked.size, "a lost race left its staged batch behind")
+  }
 }

@@ -71,7 +71,8 @@ class DerivedCacheSpec extends SparkSpec {
     val deleted = DerivedCache.vacuumKinds(spark, Set("vk"))
     // both vk keys go (cold-run semantics: the kind's EVERY key is
     // evicted), the prefix-sharing longer kind and the unrelated kind
-    // survive — the scoped behavior ScaleCheck's warm harness relies on
+    // survive — the scoped behavior MultimodalSpec's and
+    // SimilaritySpec's cold rebuilds rely on
     assert(!Files.exists(Paths.get(k1)) && !Files.exists(Paths.get(k2)))
     assert(DerivedCache.isComplete(spark, longer))
     assert(DerivedCache.isComplete(spark, other))

@@ -149,6 +149,78 @@ class IncrementalAggSpec extends SparkSpec {
         s"${state(stateSink)} vs $direct")
   }
 
+  /** Names of the data files the queries `body` runs read, from a
+    * listener registered for this call only; a marker query drains the
+    * bus, which delivers in order. */
+  private def filesReadBy(body: => Unit): Set[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val files = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("files_read_marker"))
+          drained.countDown()
+        else qe.analyzed.foreach {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => h.location.inputFiles
+              .foreach(f => files.add(new org.apache.hadoop.fs.Path(f).getName))
+            case _ => ()
+          }
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("files_read_marker").collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never drained")
+    } finally spark.listenerManager.unregister(listener)
+    files.toArray(Array.empty[String]).toSet
+  }
+
+  test("the retractable rollup fold is state-sized: folding a merge's " +
+      "delta frames opens none of the files the merge carried, and " +
+      "stages |groups| rows whether the table holds 1x or 4x the rows " +
+      "at the same churn") {
+    import graft.operators.AtomicIncrement
+    def foldAt(scale: Int): (Int, Long) = {
+      val tableSink = tmp()
+      val stateSink = tmp()
+      val n = 30 * scale
+      (1 to n by 15).foreach(lo => AtomicIncrement.appendIncrementAtomic(
+        rows(lo until lo + 15).repartition(1), tableSink, "ts"))
+      IncrementalAgg.mergeCdcBatch(rows(1 to n), rows(1 to 0),
+        stateSink, keys, sums, 0L)
+      def names(sink: String) = AtomicIncrement.committedFiles(spark, sink)
+        .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
+      val before = names(tableSink)
+      // the same churn at every scale: update 20, delete 25
+      val changes = Seq((20L, "gX", 999.0, false), (25L, "", 0.0, true))
+        .toDF("ts", "g", "x", "del")
+      val res = AtomicIncrement.mergeAtomic(changes, tableSink, "ts", "del")
+      val carried = before.intersect(names(tableSink))
+      assert(carried.size == 2 * scale - 1, s"pruning broke: $res")
+      val opened = filesReadBy(IncrementalAgg.mergeCdcBatch(res.upserts,
+        res.beforeImages, stateSink, keys, sums, 1L))
+      assert(opened.intersect(carried).isEmpty,
+        s"the fold rescanned carried table files: ${opened.intersect(carried)}")
+      val stagedRows = AtomicIncrement.snapshotSplit(spark, stateSink)._2
+        .flatMap(_.statsFor(AtomicIncrement.RowsCol)).map(_.min.toLong).sum
+      assert(stagedRows == IncrementalAgg.readState(spark, stateSink).count())
+      (opened.size, stagedRows)
+    }
+    val (opened1, staged1) = foldAt(1)
+    val (opened4, staged4) = foldAt(4)
+    // the churn-touched files only: the before-image file and the
+    // after-images the merge staged, at either scale
+    assert(opened1 == opened4 && opened1 >= 2, s"$opened1 vs $opened4")
+    // g0, g1, g2 and the update's gX
+    assert(staged1 == 4 && staged4 == 4, s"$staged1 vs $staged4")
+  }
+
   test("CDC fold keeps integer sums INTEGRAL (LongType, exact) — " +
       "parity with mergeBatch's native long sums, no float drift") {
     val sink = tmp()

@@ -492,10 +492,11 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("AQE skew split fires on a hot-key sort-merge join") {
-    // the SkewCheck contract in miniature: one key holds ~50% of the
+    // the round-10 skew stress (SCALING.md "Skew stress") in
+    // miniature: one key holds ~50% of the
     // probe side, broadcast is fenced off (at 100 TB the build side
     // isn't small), and the skew thresholds are scaled to the fixture
-    // volume the way SkewCheck scales them to the corpus. The lock is
+    // volume the way that stress scaled them to the corpus. The lock is
     // that the FINAL adaptive plan carries the skew-split marker —
     // proof the runtime mitigation actually engages on skewed input,
     // not just that the config is set.

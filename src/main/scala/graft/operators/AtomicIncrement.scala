@@ -175,11 +175,11 @@ object AtomicIncrement {
     * first-touch mergeSchema FOOTER SWEEP over all committed files
     * (O(files) small reads — measured as the dominant 32× residual
     * in `sqldelete` 3.01 / `streamwin` 1.88); with the schema in the
-    * manifest, [[dataSchema]] resolves O(manifest) even in a fresh
-    * process or on a fresh table. Back-compat READ-side only: a
+    * manifest, [[Snapshot.schema]] resolves O(manifest) even in a
+    * fresh process or on a fresh table. Back-compat READ-side only: a
     * manifest without the line falls back to the footer sweep exactly
-    * as before (and upgrades on its next commit, since the sweep
-    * seeds the memo the next publish embeds from). The REVERSE
+    * as before (and upgrades on its next commit, since the writer's
+    * snapshot sweeps once and the publish embeds the result). The REVERSE
     * direction is a declared break: a pre-round-16 binary filters
     * only `__graft_commit` and would parse this line (and any later
     * reserved line) as a data file, then fail every read trying to
@@ -214,24 +214,6 @@ object AtomicIncrement {
     * exactly as before until their next commit writes one.
     */
   private val FloorMetaPath = "__graft_wmfloor"
-
-  /** (version, floors) of the latest manifest parsed per sink — the
-    * publish that follows a snapshot read never re-reads the manifest
-    * just to carry the floor forward. Bounded like [[schemaMemo]]:
-    * clears wholesale past 512 sinks (a long-lived driver touching
-    * many sinks must not accumulate floor state indefinitely; a miss
-    * only costs [[priorFloors]] one small manifest re-read).
-    */
-  private val floorMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Seq[FileColumnStats])]()
-
-  private def seedFloorMemo(sink: String, version: Long,
-      floors: Seq[FileColumnStats]): Unit = {
-    if (floorMemo.size >= 512) floorMemo.clear()
-    floorMemo.merge(sink, (version, floors),
-      (old, now) => if (now._1 >= old._1) now else old)
-    ()
-  }
 
   private def commitMetaLine(ms: Long): String =
     ManifestEntry(CommitMetaPath,
@@ -314,68 +296,104 @@ object AtomicIncrement {
       .sortBy(_._1).lastOption
   }
 
+  /** ONE parsed manifest: its version, data lines, delete-vector
+    * lines, the embedded `__graft_schema` line and the watermark
+    * floors ([[FloorMetaPath]]). Every reader and writer works from
+    * one of these, so nothing about a snapshot is re-read or kept
+    * beside it. Immutable like the manifest it came from.
+    */
+  private[graft] final case class Snapshot(version: Long,
+      data: Seq[ManifestEntry], dvs: Seq[ManifestEntry],
+      embeddedSchema: Option[org.apache.spark.sql.types.StructType],
+      floors: Seq[FileColumnStats])(spark: SparkSession, sink: String) {
+
+    /** Whether anything can answer the schema: the embedded line, or
+      * data files to sweep. A legacy schema-only manifest has neither.
+      */
+    def hasSchema: Boolean = embeddedSchema.nonEmpty || data.nonEmpty
+
+    /** The merged data schema (dv files hold keys, not rows): the
+      * embedded line, or — for a manifest written before the line
+      * existed — one mergeSchema footer sweep over the data files,
+      * paid at most once per Snapshot.
+      */
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      embeddedSchema.getOrElse {
+        if (data.isEmpty) throw new IllegalStateException(
+          s"schema-only snapshot at $sink has no __graft_schema line " +
+            "(pre-round-16 manifest?) — nothing can answer its schema")
+        spark.read.option("mergeSchema", "true")
+          .parquet(data.map(e => s"$sink/${e.path}"): _*).schema
+      }
+  }
+
+  private def manifestPath(sink: String, version: Long): Path =
+    new Path(new Path(sink, ManifestDir), f"$version%020d")
+
+  /** The one manifest parse. Meta lines never reach the entry lists. */
+  private def parseSnapshot(spark: SparkSession, sink: String,
+      fs: FileSystem, version: Long, mf: Path): Snapshot = {
+    val in = fs.open(mf)
+    val all = try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().filter(_.nonEmpty).map(parseLine).toList
+      finally in.close()
+    val (meta, entries) = all.partition(isMeta)
+    val (dvs, data) = entries.partition(isDv)
+    Snapshot(version, data, dvs,
+      meta.find(_.path == SchemaMetaPath).flatMap(decodeSchemaMeta),
+      meta.find(_.path == FloorMetaPath).map(_.allStats).getOrElse(Nil))(
+      spark, sink)
+  }
+
+  /** The latest committed snapshot — version 0 with nothing in it
+    * before the first commit. The version is the writer's
+    * optimistic-concurrency token: a commit publishes at version+1
+    * and fails if that version exists.
+    */
+  private[graft] def latestSnapshot(spark: SparkSession,
+      sink: String): Snapshot = {
+    val fs = fsOf(spark, sink)
+    latestManifest(fs, sink) match {
+      case None => Snapshot(0L, Nil, Nil, None, Nil)(spark, sink)
+      case Some((v, mf)) => parseSnapshot(spark, sink, fs, v, mf)
+    }
+  }
+
+  /** The snapshot manifest `version` committed. Version 0 is the
+    * empty pre-first-commit snapshot (no manifest file exists for it,
+    * by construction).
+    */
+  private[graft] def snapshotAt(spark: SparkSession, sink: String,
+      version: Long): Snapshot = {
+    if (version == 0L) return Snapshot(0L, Nil, Nil, None, Nil)(spark, sink)
+    val fs = fsOf(spark, sink)
+    val mf = manifestPath(sink, version)
+    require(fs.exists(mf), s"no manifest version $version at $sink")
+    parseSnapshot(spark, sink, fs, version, mf)
+  }
+
   /** (version, data-file paths relative to the sink root) of the
-    * committed snapshot — (0, empty) before the first commit. The
-    * version is the writer's optimistic-concurrency token: a commit
-    * publishes at version+1 and fails if that version exists.
+    * committed snapshot — (0, empty) before the first commit.
     * Delete-vector lines are NOT data files and are excluded (their
     * lifecycle is [[committedLivePaths]]').
     */
   def snapshot(spark: SparkSession, sink: String): (Long, Seq[String]) = {
-    val (v, dataE, _) = snapshotSplit(spark, sink)
-    (v, dataE.map(_.path))
+    val s = latestSnapshot(spark, sink)
+    (s.version, s.data.map(_.path))
   }
 
-  /** [[snapshotEntries]] split into (version, data lines, delete-vector
-    * lines) — every read/stats/merge path consumes the data side and
-    * applies the dv side through [[readEffective]].
-    */
+  /** [[latestSnapshot]] as (version, data lines, delete-vector lines). */
   private[graft] def snapshotSplit(spark: SparkSession, sink: String)
       : (Long, Seq[ManifestEntry], Seq[ManifestEntry]) = {
-    val (v, entries) = snapshotEntries(spark, sink)
-    val (dv, data) = entries.partition(isDv)
-    (v, data, dv)
+    val s = latestSnapshot(spark, sink)
+    (s.version, s.data, s.dvs)
   }
 
-  /** Parse one manifest's lines into entries, SEEDING the schema memo
-    * from the embedded schema line when present — so the very first
-    * [[dataSchema]] call after any snapshot read is O(1) even in a
-    * fresh process (the O(files) footer sweep becomes the legacy
-    * fallback for manifests written before round 16). Meta lines
-    * never reach callers.
-    */
-  private def parseManifestStream(sink: String, version: Long,
-      in: java.io.InputStream): Seq[ManifestEntry] = {
-    val all = scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).map(parseLine).toList
-    val (meta, entries) = all.partition(isMeta)
-    for {
-      se <- meta.find(_.path == SchemaMetaPath)
-      schema <- decodeSchemaMeta(se)
-    } {
-      if (schemaMemo.size >= 512) schemaMemo.clear()
-      schemaMemo.put(schemaKey(sink, entries.filterNot(isDv)), schema)
-    }
-    // remember the floor line only for the sink's LATEST parse — the
-    // memo serves the publish that follows this read (floors at older
-    // pinned versions are history, not the append gate's concern)
-    val floors = meta.find(_.path == FloorMetaPath)
-      .map(_.allStats).getOrElse(Nil)
-    seedFloorMemo(sink, version, floors)
-    entries
-  }
-
-  /** [[snapshot]] with the per-file stats preserved. */
+  /** [[latestSnapshot]] as (version, data lines ++ delete-vector lines). */
   private[graft] def snapshotEntries(spark: SparkSession,
       sink: String): (Long, Seq[ManifestEntry]) = {
-    val fs = fsOf(spark, sink)
-    latestManifest(fs, sink) match {
-      case None => (0L, Seq.empty)
-      case Some((v, mf)) =>
-        val in = fs.open(mf)
-        try (v, parseManifestStream(sink, v, in))
-        finally in.close()
-    }
+    val s = latestSnapshot(spark, sink)
+    (s.version, s.data ++ s.dvs)
   }
 
   /** Data-file paths (relative to the sink root) of the committed
@@ -395,130 +413,72 @@ object AtomicIncrement {
     */
   private def committedLivePaths(spark: SparkSession,
       sink: String): Seq[String] = {
-    val latest = snapshotEntries(spark, sink)._2.map(_.path)
+    def paths(s: Snapshot) = (s.data ++ s.dvs).map(_.path)
+    val latest = paths(latestSnapshot(spark, sink))
     val pinned = pinnedVersionsStrict(spark, sink)
     if (pinned.isEmpty) latest
-    else {
-      val fs = fsOf(spark, sink)
-      (latest ++ pinned.flatMap(v =>
-        entriesAtVersion(fs, sink, v).map(_.path))).distinct
-    }
+    else (latest ++ pinned.flatMap(v =>
+      paths(snapshotAt(spark, sink, v)))).distinct
   }
 
-  /** The committed snapshot as a DataFrame (mergeSchema over the
-    * manifest's data-file list — schema evolution reads like
+  /** The committed snapshot as a DataFrame (under the snapshot's
+    * merged schema — schema evolution reads like
     * `Incremental.readEvolved`), with any delete vectors APPLIED:
     * a table carrying merge-on-read tombstones reads its effective
     * rows here, exactly what the copy-on-write result would hold.
     * Throws before the first commit.
     */
-  def readCommitted(spark: SparkSession, sink: String): DataFrame = {
-    val (_, dataE, dvE) = snapshotSplit(spark, sink)
-    require(dataE.nonEmpty, s"no committed snapshot at $sink")
-    readEffective(spark, sink, dataE, dvE, None)
+  def readCommitted(spark: SparkSession, sink: String): DataFrame =
+    readSnapshot(spark, sink, latestSnapshot(spark, sink))
+
+  /** [[readCommitted]] of a snapshot already in hand. */
+  private[graft] def readSnapshot(spark: SparkSession, sink: String,
+      snap: Snapshot): DataFrame = {
+    require(snap.data.nonEmpty, s"no committed snapshot at $sink")
+    readEffective(spark, sink, snap.data, snap.dvs, snap.schema)
   }
 
-  /** CONTENT-ADDRESSED schema memo (round 15): the merge-schema
-    * resolution below pays one footer open per data file — an
-    * O(files) driver pass that every schema-needing face repeats
-    * (stream start ×2, predicate delete, pruned reads, feed windows).
-    * Data files are IMMUTABLE once committed (copy-on-write
-    * everywhere), so the schema of a given file SET is a pure
-    * function of its path list — cache it keyed by (sink, digest of
-    * the sorted path list). Bounded: the map clears wholesale past
-    * 512 entries (schemas are a few KB; correctness never depends on
-    * a hit). Measured: the 32× streaming-window and SQL-delete ratios
-    * were footer-pass-dominated before this memo.
+  /** The one-column schema [[ChurnKeys.toDf]] writes every delete-
+    * vector file under (merge-on-read is the only dv writer): the key
+    * as a long for an integral table key, as a string for a string
+    * one. Reading dv files under it opens no footer to learn it.
     */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def schemaKey(sink: String, dataE: Seq[ManifestEntry]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    // '\n' delimiter makes the encoding injective over path LISTS —
-    // raw concatenation would let ["a/b","c"] and ["a/bc"] collide
-    // (paths never contain newlines; the manifest is line-oriented)
-    dataE.map(_.path).sorted.foreach { p =>
-      md.update(p.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      md.update('\n'.toByte)
-    }
-    sink + "#" + java.util.Base64.getEncoder.encodeToString(md.digest())
+  private[graft] def dvSchema(keyCol: String,
+      tableSchema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    val isString = tableSchema.fields.find(_.name.equalsIgnoreCase(keyCol))
+      .exists(_.dataType == StringType)
+    StructType(Seq(StructField(keyCol,
+      if (isString) StringType else LongType)))
   }
 
-  /** Specs simulate a FRESH PROCESS (cold memo) with this — the
-    * manifest-embedded schema line must be able to answer on its own.
-    */
-  private[graft] def clearSchemaMemoForTest(): Unit = schemaMemo.clear()
+  /** The keys the dv files `dvs` tombstone, one column `keyCol`. */
+  private def readDvKeys(spark: SparkSession, sink: String,
+      dvs: Seq[ManifestEntry], keyCol: String,
+      tableSchema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(dvSchema(keyCol, tableSchema))
+      .parquet(dvs.map(e => s"$sink/${e.path}"): _*)
+      .select(col(keyCol))
 
-  /** Cold-process simulation for the floor: the next snapshot parse
-    * must re-seed it from the manifest line alone.
-    */
-  private[graft] def clearFloorMemoForTest(): Unit = floorMemo.clear()
-
-  /** Merge-schema over data files only (dv files hold keys, not rows).
-    * An EMPTY data list (a schema-only snapshot: `CREATE TABLE` before
-    * its first INSERT, or a table a DELETE emptied) resolves from the
-    * latest manifest's embedded schema line — there is no footer to
-    * sweep, so the line is the only authority.
-    */
-  private[graft] def dataSchema(spark: SparkSession, sink: String,
-      dataE: Seq[ManifestEntry]): org.apache.spark.sql.types.StructType = {
-    val key = schemaKey(sink, dataE)
-    val hit = schemaMemo.get(key)
-    if (hit != null) return hit
-    val schema =
-      if (dataE.isEmpty)
-        embeddedSchemaAt(spark, sink).getOrElse(
-          throw new IllegalStateException(
-            s"schema-only snapshot at $sink has no __graft_schema " +
-              "line (pre-round-16 manifest?) — nothing can answer " +
-              "its schema"))
-      else spark.read.option("mergeSchema", "true")
-        .parquet(dataE.map(e => s"$sink/${e.path}"): _*).schema
-    if (schemaMemo.size >= 512) schemaMemo.clear()
-    schemaMemo.put(key, schema)
-    schema
-  }
-
-  /** The embedded `__graft_schema` line of `version`'s manifest (the
-    * LATEST when None), decoded — the schema authority for snapshots
-    * with no data file to sweep. None when nothing is committed or
-    * the manifest predates the line.
-    */
-  private[graft] def embeddedSchemaAt(spark: SparkSession, sink: String,
-      version: Option[Long] = None)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val fs = fsOf(spark, sink)
-    val mfOpt = version match {
-      case Some(v) if v > 0L =>
-        Some(new Path(new Path(sink, ManifestDir), f"$v%020d"))
-          .filter(fs.exists(_))
-      case Some(_) => None
-      case None => latestManifest(fs, sink).map(_._2)
-    }
-    mfOpt.flatMap { mf =>
-      val in = fs.open(mf)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(parseLine)
-        .find(_.path == SchemaMetaPath).flatMap(decodeSchemaMeta)
-      finally in.close()
-    }
-  }
-
-  /** Read `dataSubset` under `schema` (or the full merged data schema
-    * when None) with the snapshot's delete vectors applied — the
-    * Iceberg equality-delete rule: a dv masks exactly the data files
-    * whose sequence is STRICTLY below its own, so a key deleted at
-    * sequence s and re-upserted at s' > s keeps its new row. The
+  /** Read `dataSubset` under `schema` with the snapshot's delete
+    * vectors applied — the Iceberg equality-delete rule: a dv masks
+    * exactly the data files whose sequence is STRICTLY below its own,
+    * so a key deleted at sequence s and re-upserted at s' > s keeps
+    * its new row. The
     * subset's files group by sequence (one group per distinct commit
     * sequence still standing — bounded by the commits since the last
     * compaction, which folds every dv away), each group anti-joins the
     * union of the dvs above it, and the groups union back. With no dvs
     * this is exactly the plain schema-pinned read.
+    *
+    * `schema` is the FULL snapshot's ([[Snapshot.schema]]), so a read
+    * plans with ZERO jobs and a pruned subset never loses an evolved
+    * column only its pruned files carry.
     */
   private[graft] def readEffective(spark: SparkSession, sink: String,
       dataSubset: Seq[ManifestEntry], dvE: Seq[ManifestEntry],
-      schemaOpt: Option[org.apache.spark.sql.types.StructType],
+      schema: org.apache.spark.sql.types.StructType,
       tagFileCol: Option[String] = None): DataFrame = {
     // `tagFileCol`: attach `input_file_name()` under that name
     // DIRECTLY ABOVE EACH parquet leaf (round 16, the `_graft_file`
@@ -529,25 +489,6 @@ object AtomicIncrement {
     def tag(df: DataFrame): DataFrame = tagFileCol match {
       case Some(c) => df.withColumn(c, input_file_name())
       case None => df
-    }
-    // the hot path — no dvs, no pinned schema (the caller reads the
-    // whole snapshot, so subset schema == full schema): ONE relation
-    // pinned to the memoized merged schema of exactly this file list
-    // (dataSchema pays the mergeSchema footer job ONCE per list and
-    // every later read of the same immutable set plans with ZERO jobs
-    // — the bench's lakehouse fixtures re-read each sink many times,
-    // and the per-read schema-inference job was pure fixed cost).
-    // Callers reading a PRUNED subset must pin the full schema
-    // themselves or an evolved column carried only by pruned files
-    // would vanish.
-    if (dvE.isEmpty && schemaOpt.isEmpty && dataSubset.nonEmpty)
-      return tag(spark.read.schema(dataSchema(spark, sink, dataSubset))
-        .parquet(dataSubset.map(e => s"$sink/${e.path}"): _*))
-    val schema = schemaOpt.getOrElse {
-      // the schema comes from the FULL committed data list so a pruned
-      // subset never loses an evolved column
-      val (_, dataAll, _) = snapshotSplit(spark, sink)
-      dataSchema(spark, sink, dataAll)
     }
     def plain(files: Seq[ManifestEntry]): DataFrame =
       if (files.isEmpty) tagFileCol.foldLeft(spark.createDataFrame(
@@ -560,12 +501,6 @@ object AtomicIncrement {
     require(keyCols.size == 1,
       s"delete vectors disagree on the merge key at $sink: $keyCols")
     val keyCol = keyCols.head
-    def dvKeys(entries: Seq[ManifestEntry]): DataFrame =
-      // dv files are engine-written and immutable — pin their memoized
-      // merged schema so the read plans without a schema-inference job
-      spark.read.schema(dataSchema(spark, sink, entries))
-        .parquet(entries.map(e => s"$sink/${e.path}"): _*)
-        .select(col(keyCol))
     dataSubset.groupBy(seqOf).toSeq.sortBy(_._1).map { case (s, group) =>
       val masks = dvE.filter(d => seqOf(d) > s)
       if (masks.isEmpty) plain(group)
@@ -585,7 +520,8 @@ object AtomicIncrement {
         val maskedSide =
           if (maybe.isEmpty) None
           else Some(plain(maybe).join(
-            dvKeys(masks).distinct().withColumnRenamed(keyCol, "__dvk"),
+            readDvKeys(spark, sink, masks, keyCol, schema).distinct()
+              .withColumnRenamed(keyCol, "__dvk"),
             col(keyCol) === col("__dvk"), "left_anti"))
         (clean, maskedSide) match {
           case (Nil, Some(m)) => m
@@ -623,11 +559,9 @@ object AtomicIncrement {
     */
   def readVersion(spark: SparkSession, sink: String,
       version: Long): DataFrame = {
-    val (dvE, dataE) = entriesAtVersion(fsOf(spark, sink), sink, version)
-      .partition(isDv)
-    require(dataE.nonEmpty, s"no manifest version $version at $sink")
-    readEffective(spark, sink, dataE, dvE,
-      Some(dataSchema(spark, sink, dataE)))
+    val snap = snapshotAt(spark, sink, version)
+    require(snap.data.nonEmpty, s"no manifest version $version at $sink")
+    readEffective(spark, sink, snap.data, snap.dvs, snap.schema)
   }
 
   /** Time travel by TIMESTAMP: the snapshot of the latest version
@@ -709,9 +643,10 @@ object AtomicIncrement {
     *    unlike raw version-number time travel, whose horizon is
     *    "whenever vacuum last ran".
     *
-    * Tags are immutable by default (re-tagging a name throws;
-    * `replace = true` moves it deliberately), written
-    * temp-file-then-rename like every commit artifact here. The cost
+    * Tags are immutable by default (re-tagging a name throws, and of
+    * two racing creates of one name exactly one wins — the ref moves
+    * into place by the same no-replace step as a manifest publish;
+    * `replace = true` moves it deliberately). The cost
     * of a standing tag is retained storage: superseded files it pins
     * are not reclaimed until [[dropTag]] releases them — exactly the
     * trade a pinned snapshot asks for.
@@ -733,8 +668,7 @@ object AtomicIncrement {
         "it as a manifest version, never the tag; pick a name with " +
         "at least one non-digit")
     val fs = fsOf(spark, sink)
-    require(fs.exists(new Path(new Path(sink, ManifestDir),
-        f"$version%020d")),
+    require(fs.exists(manifestPath(sink, version)),
       s"cannot tag $sink@$version: no such manifest version")
     val p = refPath(sink, name)
     require(replace || !fs.exists(p),
@@ -747,11 +681,9 @@ object AtomicIncrement {
       val out = fs.create(tmp, true)
       try out.write(version.toString.getBytes("UTF-8"))
       finally out.close()
-      if (!fs.rename(tmp, target)) {
-        fs.delete(tmp, false)
+      if (!moveNoReplace(fs, tmp, target))
         throw new java.util.ConcurrentModificationException(
           s"tag '${target.getName}' appeared concurrently at $sink")
-      }
     }
     if (!replace) writeRef(p)
     else {
@@ -940,22 +872,6 @@ object AtomicIncrement {
             .toJavaTimestamp(t * 1000L), d, k) }: _*), schemaOut)
   }
 
-  /** The exact manifest lines `version` committed. Version 0 is the
-    * empty pre-first-commit snapshot (no manifest file exists for it,
-    * by construction).
-    */
-  private[graft] def entriesAtVersion(fs: FileSystem, sink: String,
-      version: Long): Seq[ManifestEntry] = {
-    if (version == 0L) return Nil
-    val mf = new Path(new Path(sink, ManifestDir), f"$version%020d")
-    require(fs.exists(mf), s"no manifest version $version at $sink")
-    val in = fs.open(mf)
-    // seeds the memo under THIS version's file list — a time-travel
-    // read resolves the pinned snapshot's schema O(manifest) too
-    try parseManifestStream(sink, version, in)
-    finally in.close()
-  }
-
   /** CHANGE DATA FEED between two committed versions, derived from the
     * manifest diff alone — no per-row change tracking is ever written:
     * `plus` reads the data files version `to` lists that `from` did
@@ -987,35 +903,38 @@ object AtomicIncrement {
       from: Long, to: Long, maxPruneKeys: Int = 10000000)
       : (DataFrame, DataFrame) = {
     require(from <= to, s"change feed runs forward: $from > $to")
-    val fs = fsOf(spark, sink)
-    val (fromDv, fromData) = entriesAtVersion(fs, sink, from).partition(isDv)
-    val (toDv, toData) = entriesAtVersion(fs, sink, to).partition(isDv)
+    val fromSnap = snapshotAt(spark, sink, from)
+    val toSnap = snapshotAt(spark, sink, to)
+    val (fromDv, fromData) = (fromSnap.dvs, fromSnap.data)
+    val (toDv, toData) = (toSnap.dvs, toSnap.data)
     val fromPaths = fromData.map(_.path).toSet
     val toPaths = toData.map(_.path).toSet
     val added = toData.filterNot(e => fromPaths.contains(e.path))
     val removed = fromData.filterNot(e => toPaths.contains(e.path))
     val common = toData.filter(e => fromPaths.contains(e.path))
-    val allFiles = (added ++ removed).map(e => s"$sink/${e.path}")
-    if (allFiles.isEmpty && fromDv.map(_.path) == toDv.map(_.path)) {
+    if (added.isEmpty && removed.isEmpty &&
+        fromDv.map(_.path) == toDv.map(_.path)) {
       // nothing moved between the versions (e.g. from == to): both
       // sides are the empty delta under the target snapshot's schema
       val empty = readVersion(spark, sink, to).limit(0)
       return (empty, empty)
     }
-    // one memoized footer pass resolves the union schema both sides
-    // read under (content-addressed by the immutable file list — a
-    // repeated feed window re-plans with zero jobs; StructType.merge
-    // is order-insensitive under the append-only evolution the
-    // catalog allows, so the sorted memo key is safe)
-    val schema = dataSchema(spark, sink,
-      if (allFiles.nonEmpty) added ++ removed else common)
+    // both sides read under the union of the two snapshots' schemas
+    // (the bootstrap side, version 0, has none) — the manifests
+    // answer it, no footer is opened. A window across a replace that
+    // retyped a column has no union to read under and is refused
+    val schema =
+      if (from == 0L) toSnap.schema
+      else mergeStructs(fromSnap.schema, toSnap.schema).getOrElse(
+        throw new IllegalStateException(s"the schemas of versions " +
+          s"$from and $to at $sink do not merge: ${fromSnap.schema
+            .simpleString} vs ${toSnap.schema.simpleString}"))
     // file-level halves, each under the dvs of ITS OWN version: plus =
     // added files' rows still live at `to`; minus = removed files'
     // rows that were live at `from` (rewritten survivors ride both
     // sides and telescope in any abelian consumer)
-    val plusFiles = readEffective(spark, sink, added, toDv, Some(schema))
-    val minusFiles = readEffective(spark, sink, removed, fromDv,
-      Some(schema))
+    val plusFiles = readEffective(spark, sink, added, toDv, schema)
+    val minusFiles = readEffective(spark, sink, removed, fromDv, schema)
     if (fromDv.isEmpty && toDv.isEmpty) return (plusFiles, minusFiles)
     // merge-on-read half: rows of files PRESENT AT BOTH versions that
     // a dv published inside the window newly masks — for a common file
@@ -1031,11 +950,8 @@ object AtomicIncrement {
       val hit = dvs.filter(d => seqOf(d) > s)
       if (hit.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          schema.apply(schema.fieldIndex(keyCol)))))
-      else spark.read.schema(dataSchema(spark, sink, hit))
-        .parquet(hit.map(e => s"$sink/${e.path}"): _*)
-        .select(col(keyCol))
+        dvSchema(keyCol, schema))
+      else readDvKeys(spark, sink, hit, keyCol, schema)
     }
     // the common files a newly-masked row can live in are PRUNED by
     // the window's new tombstone keys before anything is read: each dv
@@ -1063,10 +979,7 @@ object AtomicIncrement {
       if (!newDv.exists(d => seqOf(d) > minCommonSeq)) None
       else {
         pruneChurnCollects.incrementAndGet()
-        val vals = spark.read
-          .schema(dataSchema(spark, sink, newDv))
-          .parquet(newDv.map(e => s"$sink/${e.path}"): _*)
-          .select(col(keyCol)).distinct()
+        val vals = readDvKeys(spark, sink, newDv, keyCol, schema).distinct()
           .limit(maxPruneKeys + 1).collect()
         import org.apache.spark.sql.types._
         if (vals.length > maxPruneKeys) {
@@ -1232,7 +1145,6 @@ object AtomicIncrement {
       failOnDropped: Boolean = false)(
       audit: DataFrame => Boolean): Option[(Long, Long)] = {
     val spark = df.sparkSession
-    val fs = fsOf(spark, sink)
     val resolved = df.schema.fields
       .find(_.name.equalsIgnoreCase(watermarkCol))
       .getOrElse(throw new IllegalArgumentException(
@@ -1242,7 +1154,7 @@ object AtomicIncrement {
       .getOrElse(throw new IllegalArgumentException(
         s"stats column '$c' not in ${df.columns.mkString(",")}")))
     val txn = Txn.begin(spark, sink)
-    val Txn.Snap(version, dataEntries, _) = txn.snap
+    val dataEntries = txn.snap.data
     val prior = dataEntries.map(_.path)
     // watermark resolution, cheapest exact answer first: the manifest's
     // recorded stats (zero I/O beyond the manifest itself), then the
@@ -1260,11 +1172,10 @@ object AtomicIncrement {
     // hazard: a predicate DELETE of the newest rows lowers the live
     // max, but the floor (never lowered by rewrites) still remembers
     // the highest watermark ever committed — gate on the larger of
-    // the two. The snapshotSplit above parsed the manifest, so the
-    // memo is warm; decode reuses the manifest-max machinery over a
-    // synthetic one-line entry.
-    val floorLit = Option(floorMemo.get(sink))
-      .filter(_._1 == version).map(_._2).filter(_.nonEmpty)
+    // the two. The floors are the transaction's own snapshot's;
+    // decode reuses the manifest-max machinery over a synthetic
+    // one-line entry.
+    val floorLit = Some(txn.snap.floors).filter(_.nonEmpty)
       .flatMap(fl => manifestMaxLiteral(Seq(ManifestEntry("f", fl)),
         resolved.name, resolved.dataType))
     val wmExpr = (liveMax, floorLit) match {
@@ -1313,18 +1224,6 @@ object AtomicIncrement {
             "out-of-order event times (the append contract requires " +
             "cross-batch watermark monotonicity)")
       if (preN == 0) return Some((0L, dropped))
-      // snapshot schema to embed: a fresh table declares the
-      // increment's own schema; a standing one merges the embedded
-      // prior (memo — seeded by the snapshot parse above when the
-      // last commit embedded one) with the increment's. A memo miss
-      // or merge conflict embeds nothing — the legacy footer sweep
-      // stays the adjudicator and the NEXT commit upgrades (any
-      // dataSchema sweep seeds the memo).
-      def snapSchemaOver(dataNow: Seq[ManifestEntry])
-          : Option[org.apache.spark.sql.types.StructType] =
-        if (dataNow.isEmpty) Some(fresh.schema)
-        else Option(schemaMemo.get(schemaKey(sink, dataNow)))
-          .flatMap(mergeStructs(_, fresh.schema))
       // APPEND-SIDE OCC RETRY (round 17): a lost race re-publishes
       // the already-staged batch on top of the winner when the
       // EFFECTIVE WATERMARK BOUND provably did not move — the raw
@@ -1338,7 +1237,8 @@ object AtomicIncrement {
       // that resolved their bound OUTSIDE manifest stats (footer
       // sweep / scan) have no comparable fingerprint and never retry.
       val wmFp0 = rawMaxFingerprint(dataEntries, resolved.name)
-      val floorFp0 = floorStatsFor(fs, sink, version, resolved.name)
+      def floorOf(s: Snapshot) =
+        s.floors.filter(_.column.equalsIgnoreCase(resolved.name))
       var n = 0L
       // the gate: an all-filtered replay (zero staged rows) and a WAP
       // audit rejection both reclaim the batch before any manifest
@@ -1356,15 +1256,25 @@ object AtomicIncrement {
           n > 0 && audit(spark.read.schema(fresh.schema)
             .parquet(staged.map(e => s"$sink/${e.path}"): _*))
         },
-        schema = s => snapSchemaOver(s.data),
+        schema = s => appendSchema(s, fresh.schema),
         retry = wmFp0.map(_ => (_, winner) =>
           rawMaxFingerprint(winner.data, resolved.name) == wmFp0 &&
-            floorStatsFor(fs, sink, winner.version, resolved.name) ==
-              floorFp0))(
+            floorOf(winner) == floorOf(txn.snap)))(
         txn.stage(fresh, resolved +: extraFields))
       if (published.isEmpty && n > 0) None else Some((n, dropped))
     } finally { if (countBoth) df.unpersist(); () }
   }
+
+  /** The schema an append embeds over snapshot `s`: the increment's
+    * own on a table without data files, else the snapshot's merged
+    * with it (a legacy manifest's schema is swept once, so the commit
+    * upgrades it) — None on a merge conflict, and the footer sweep
+    * then adjudicates at read time.
+    */
+  private def appendSchema(s: Snapshot,
+      incoming: org.apache.spark.sql.types.StructType)
+      : Option[org.apache.spark.sql.types.StructType] =
+    if (s.data.isEmpty) Some(incoming) else mergeStructs(s.schema, incoming)
 
   /** The snapshot's exact max of `column` from manifest stats alone,
     * as a floor-shaped group — the COMPARABLE form of
@@ -1375,15 +1285,6 @@ object AtomicIncrement {
   private def rawMaxFingerprint(entries: Seq[ManifestEntry],
       column: String): Option[FileColumnStats] =
     exactMaxGroup(column, entries.map(_.statsFor(column)))
-
-  /** The floor line's stats for ONE column at `version`'s manifest —
-    * memo-served when warm, one small manifest read otherwise. Part
-    * of the append gate's bound fingerprint.
-    */
-  private def floorStatsFor(fs: FileSystem, sink: String,
-      version: Long, column: String): Seq[FileColumnStats] =
-    priorFloors(fs, sink, version)
-      .filter(_.column.equalsIgnoreCase(column))
 
   /** Integral-column max from manifest stats alone
     * ([[ManifestStats.exactBounds]]) — the zero-job answer for the
@@ -1475,30 +1376,17 @@ object AtomicIncrement {
     * row-level filtering remains the caller's job.
     */
   def readCommittedAbove(spark: SparkSession, sink: String,
-      column: String, lower: Long): DataFrame = {
-    val (_, entries, _) = snapshotSplit(spark, sink)
-    require(entries.nonEmpty, s"no committed snapshot at $sink")
+      column: String, lower: Long): DataFrame =
     // damaged or foreign stats (hand-edited manifests, a future tag)
     // do not decode and keep their file, like a string column (no
     // numeric order) or a line without stats: may contain
-    val kept = entries.filter(e =>
+    readKept(spark, sink, e =>
       e.statsFor(column).flatMap(ManifestStats.decode) match {
         case Some(AllNullFile) => false // zero non-null values
         case Some(LongStats(_, mx)) => mx > lower
         case Some(DoubleStats(_, mx)) => mx > lower.toDouble
         case _ => true
       })
-    // The schema comes from the FULL committed file list, not the
-    // kept subset: the sink evolves schemas across batches, and if
-    // every file carrying an evolved column is pruned, a
-    // subset-merged schema would lack that column — breaking the
-    // pinned equivalence with readCommitted(...).filter via an
-    // AnalysisException instead of yielding the identical (possibly
-    // empty) projection. One extra footer pass over the snapshot's
-    // files resolves it; the pruned read itself still opens only
-    // `kept`.
-    readKept(spark, sink, kept)
-  }
 
   /** [[readCommittedAbove]] for a STRING consumer predicate
     * `column > lower` — intervals compare in UTF-8 byte space (the
@@ -1511,18 +1399,24 @@ object AtomicIncrement {
     */
   def readCommittedAboveStr(spark: SparkSession, sink: String,
       column: String, lower: String): DataFrame = {
-    val (_, entries, _) = snapshotSplit(spark, sink)
-    require(entries.nonEmpty, s"no committed snapshot at $sink")
     val gt = org.apache.spark.sql.sources.GreaterThan(column, lower)
-    readKept(spark, sink,
-      entries.filter(graft.sources.ManifestPruning.mayMatch(_, gt)))
+    readKept(spark, sink, graft.sources.ManifestPruning.mayMatch(_, gt))
   }
 
+  /** The latest snapshot's data files that `keep` admits. The schema
+    * is the FULL snapshot's, not the kept subset's: the sink evolves
+    * schemas across batches, and if every file carrying an evolved
+    * column is pruned, a subset-merged schema would lack that column
+    * — breaking the pinned equivalence with readCommitted(...).filter
+    * via an AnalysisException instead of yielding the identical
+    * (possibly empty) projection. The pruned read opens only the kept
+    * files.
+    */
   private def readKept(spark: SparkSession, sink: String,
-      kept: Seq[ManifestEntry]): DataFrame = {
-    val (_, dataE, dvE) = snapshotSplit(spark, sink)
-    readEffective(spark, sink, kept, dvE,
-      Some(dataSchema(spark, sink, dataE)))
+      keep: ManifestEntry => Boolean): DataFrame = {
+    val snap = latestSnapshot(spark, sink)
+    require(snap.data.nonEmpty, s"no committed snapshot at $sink")
+    readEffective(spark, sink, snap.data.filter(keep), snap.dvs, snap.schema)
   }
 
   /** The EXACT committed row count from metadata alone: Σ of the
@@ -1695,85 +1589,58 @@ object AtomicIncrement {
     byCol.values.toSeq
   }
 
-  /** The floors the NEXT version must fold over — memo when warm (the
-    * writer just parsed the snapshot), else one small re-read of the
-    * prior manifest.
-    */
-  private def priorFloors(fs: FileSystem, sink: String,
-      priorVersion: Long): Seq[FileColumnStats] = {
-    if (priorVersion <= 0L) return Nil
-    Option(floorMemo.get(sink)) match {
-      case Some((v, f)) if v == priorVersion => f
-      case _ =>
-        val mf = new Path(new Path(sink, ManifestDir),
-          f"$priorVersion%020d")
-        if (!fs.exists(mf)) Nil
-        else {
-          val in = fs.open(mf)
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().filter(_.nonEmpty).map(parseLine)
-            .find(_.path == FloorMetaPath)
-            .map(_.allStats).getOrElse(Nil)
-          finally in.close()
-        }
-    }
-  }
-
   /** Phase 2: atomically publish a manifest listing `files` at
     * exactly `version` (the writer's snapshot version + 1 — ANY
     * interleaved commit since the snapshot read collides here and
-    * loses). The temp file is fully written and closed before the
-    * move, so no reader can observe a partial manifest.
+    * loses). `snapshotSchema` becomes the `__graft_schema` line (None
+    * writes none); the new floor line folds this version's maxes over
+    * `baseFloors` — the writer's snapshot's floors, or Nil for a
+    * deliberate reset. The temp file is fully written and closed
+    * before the move, so no reader can observe a partial manifest.
     */
   private[graft] def publish(fs: FileSystem, sink: String,
       files: Seq[String], version: Long,
-      commitMillis: Long = System.currentTimeMillis(),
-      snapshotSchema: Option[org.apache.spark.sql.types.StructType] =
-        None, resetFloors: Boolean = false): Unit = {
+      snapshotSchema: Option[org.apache.spark.sql.types.StructType],
+      baseFloors: Seq[FileColumnStats]): Unit = {
     val dir = new Path(sink, ManifestDir)
     fs.mkdirs(dir)
-    val target = new Path(dir, f"$version%020d")
     val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    val embedded = snapshotSchema.map(asNullableStruct)
     val parsed = files.map(parseLine)
-    val dataLines = parsed.filterNot(e => isMeta(e) || isDv(e))
-    val floors = foldFloors(
-      if (resetFloors) Nil else priorFloors(fs, sink, version - 1),
-      dataLines)
+    val floors = foldFloors(baseFloors,
+      parsed.filterNot(e => isMeta(e) || isDv(e)))
     val floorLine = if (floors.isEmpty) Nil
       else Seq(ManifestEntry(FloorMetaPath, floors).render)
-    val metaLines = (commitMetaLine(commitMillis) +:
-      embedded.map(schemaMetaLine).toSeq) ++ floorLine
+    val metaLines = (commitMetaLine(System.currentTimeMillis()) +:
+      snapshotSchema.map(s => schemaMetaLine(asNullableStruct(s))).toSeq) ++
+      floorLine
     val out = fs.create(tmp, false)
     try out.write((metaLines ++ files)
       .mkString("\n").getBytes("UTF-8")) finally out.close()
-    // The commit point refuses an existing version in one atomic step:
-    // a local rename would replace it, so `file:` publishes by hard
-    // link; elsewhere a no-overwrite rename (atomic on HDFS).
-    val won =
-      try {
-        if (fs.getUri.getScheme == "file") {
-          def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
-          java.nio.file.Files.createLink(local(target), local(tmp))
-        } else
-          org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-            .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.NONE)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException |
-            _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-      } finally fs.delete(tmp, false)
-    if (!won) throw new java.util.ConcurrentModificationException(
-      s"manifest version $version already committed at $sink")
-    // the committing process itself never re-derives what it just
-    // declared: seed the memos under the NEW version's state
-    embedded.foreach { s =>
-      if (schemaMemo.size >= 512) schemaMemo.clear()
-      schemaMemo.put(schemaKey(sink, dataLines), s)
-    }
-    seedFloorMemo(sink, version, floors)
-    ()
+    if (!moveNoReplace(fs, tmp, manifestPath(sink, version)))
+      throw new java.util.ConcurrentModificationException(
+        s"manifest version $version already committed at $sink")
   }
+
+  /** Move the fully written `tmp` to `target` in one atomic step that
+    * refuses an existing `target`: a local rename would replace it, so
+    * `file:` moves by hard link; elsewhere a no-overwrite rename
+    * (atomic on HDFS). The temp file is deleted either way. False when
+    * `target` already existed — the caller lost a race.
+    */
+  private def moveNoReplace(fs: FileSystem, tmp: Path,
+      target: Path): Boolean =
+    try {
+      if (fs.getUri.getScheme == "file") {
+        def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+        java.nio.file.Files.createLink(local(target), local(tmp))
+      } else
+        org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+          .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.NONE)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException |
+          _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+    } finally { fs.delete(tmp, false); () }
 
   /** Maintenance compaction: rewrite the committed snapshot into
     * `numFiles` coalesced data files and publish THAT list as the next
@@ -1803,13 +1670,14 @@ object AtomicIncrement {
     */
   def compact(spark: SparkSession, sink: String,
       numFiles: Int = 1, bloomCols: Seq[String] = Nil): (Int, Int) = {
-    val (version, dataE, _) = snapshotSplit(spark, sink)
+    val base = latestSnapshot(spark, sink)
+    val dataE = base.data
     require(dataE.nonEmpty, s"nothing committed to compact at $sink")
-    // readCommitted applies any delete vectors, so the rewrite FOLDS
+    // the read applies any delete vectors, so the rewrite FOLDS
     // merge-on-read tombstones away (the staged-only publish drops
     // their manifest lines) — compaction is where the read-side debt
     // of deferred merges is repaid
-    val snap = readCommitted(spark, sink)
+    val snap = readSnapshot(spark, sink, base)
     // preserve data skipping across compaction: recompute stats for
     // every column the prior manifest covers on ALL its data files (a
     // partially-covered column never pruned anyway)
@@ -1817,7 +1685,7 @@ object AtomicIncrement {
     // row-preserving maintenance must CARRY the watermark floor —
     // only a deliberate snapshot replace may reset it
     val staged = replaceGated(snap.repartition(numFiles),
-      sink, version, statsFields, resetFloors = false)
+      sink, base.version, statsFields, carriedFloors = base.floors)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -1854,17 +1722,18 @@ object AtomicIncrement {
       byCols: Seq[String], numFiles: Int = 8,
       bloomCols: Seq[String] = Nil): (Int, Int) = {
     require(byCols.nonEmpty, "cluster columns required")
-    val (version, dataE, _) = snapshotSplit(spark, sink)
+    val base = latestSnapshot(spark, sink)
+    val dataE = base.data
     require(dataE.nonEmpty, s"nothing committed to cluster at $sink")
-    val snap = readCommitted(spark, sink)
+    val snap = readSnapshot(spark, sink, base)
     val statsFields = (byCols
         .flatMap(c => snap.schema.fields.find(_.name.equalsIgnoreCase(c)))
       ++ coveredStatsFields(dataE, snap.schema)).distinct
     val clustered = snap
       .repartitionByRange(numFiles, byCols.map(col): _*)
       .sortWithinPartitions(byCols.map(col): _*)
-    val staged = replaceGated(clustered, sink, version, statsFields,
-      resetFloors = false)
+    val staged = replaceGated(clustered, sink, base.version, statsFields,
+      carriedFloors = base.floors)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -1899,15 +1768,15 @@ object AtomicIncrement {
     require(targetFiles >= 1, s"targetFiles must be >= 1: $targetFiles")
     val fs = fsOf(spark, sink)
     val txn = Txn.begin(spark, sink)
-    val Txn.Snap(_, dataE, dvE) = txn.snap
+    val (dataE, dvE) = (txn.snap.data, txn.snap.dvs)
     require(dataE.nonEmpty, s"nothing committed to compact at $sink")
     val sizes = inParallel(dataE)(e =>
       e.path -> fs.getFileStatus(new Path(s"$sink/${e.path}")).getLen)
       .toMap
     val (small, large) = dataE.partition(e => sizes(e.path) < smallBytes)
     if (small.size < 2) return (0, 0)
-    val fullSchema = dataSchema(spark, sink, dataE)
-    val rowsDf = readEffective(spark, sink, small, dvE, Some(fullSchema))
+    val fullSchema = txn.snap.schema
+    val rowsDf = readEffective(spark, sink, small, dvE, fullSchema)
     val packed = keyCol match {
       case Some(k) if small.forall(_.statsFor(k).nonEmpty) =>
         rowsDf.repartitionByRange(targetFiles, col(k))
@@ -1972,9 +1841,10 @@ object AtomicIncrement {
     require(bits >= 1 && bits <= 16, s"bits out of range: $bits")
     require(bits * zCols.size <= 62,
       s"$bits bits x ${zCols.size} dims exceeds the 62-bit z-key")
-    val (version, dataE, dvE) = snapshotSplit(spark, sink)
+    val base = latestSnapshot(spark, sink)
+    val (dataE, dvE) = (base.data, base.dvs)
     require(dataE.nonEmpty, s"nothing committed to z-order at $sink")
-    val snap = readCommitted(spark, sink)
+    val snap = readSnapshot(spark, sink, base)
     def fieldOf(c: String) = snap.schema.fields
       .find(_.name.equalsIgnoreCase(c))
       .getOrElse(throw new IllegalArgumentException(
@@ -2107,8 +1977,8 @@ object AtomicIncrement {
     val statsFields = (zCols
         .flatMap(c => snap.schema.fields.find(_.name.equalsIgnoreCase(c)))
       ++ coveredStatsFields(dataE, snap.schema)).distinct
-    val staged = replaceGated(clustered, sink, version, statsFields,
-      resetFloors = false)
+    val staged = replaceGated(clustered, sink, base.version, statsFields,
+      carriedFloors = base.floors)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -2168,10 +2038,7 @@ object AtomicIncrement {
     // that as empty would silently drop real rows
     txn.commit(
       gate = st => dataE.isEmpty || !counts(st).forall(_.contains(0L)),
-      schema = _ =>
-        if (dataE.isEmpty) Some(df.schema)
-        else Option(schemaMemo.get(schemaKey(sink, dataE)))
-          .flatMap(mergeStructs(_, df.schema)))(
+      schema = appendSchema(_, df.schema))(
       txn.stage(df, statsFields))
       .fold(0L)(p => counts(p._2).flatten.sum)
   }
@@ -2186,27 +2053,24 @@ object AtomicIncrement {
     */
   def createEmptyTable(spark: SparkSession, sink: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    val fs = fsOf(spark, sink)
-    val (version, _) = snapshotEntries(spark, sink)
+    val version = latestSnapshot(spark, sink).version
     require(version == 0L,
       s"table already committed at $sink (version $version)")
-    publish(fs, sink, Seq.empty, 1L, snapshotSchema = Some(schema))
+    publish(fsOf(spark, sink), sink, Seq.empty, 1L, Some(schema), Nil)
   }
 
   /** `ALTER TABLE … ADD COLUMN` as a DEGENERATE APPEND (round 17):
     * the evolution commit stages ONE zero-row parquet file carrying
     * the evolved schema and publishes `prior ++ that file` at
     * version+1 with the evolved schema embedded. Why a real file and
-    * not just a rewritten `__graft_schema` line: the content-addressed
-    * [[schemaMemo]] keys by FILE LIST, so a schema change over an
-    * unchanged file set could serve the pre-evolution schema for the
-    * post-evolution snapshot (and vice versa through time-travel
-    * parses). With the zero-row file the list itself changes — no memo
-    * entry can cross versions — and every mergeSchema face (footer
-    * sweeps, pinned readers, legacy paths) sees the new column exactly
-    * as an evolving append would surface it. The file's manifest line
-    * stamps [[NullTag]] stats for every taggable column (zero rows =
-    * provably zero non-null values), so stats coverage — the manifest
+    * not just a rewritten `__graft_schema` line: the faces that
+    * answer a schema from the FILES rather than the line — the legacy
+    * footer sweep, a mergeSchema read of the data directory — see the
+    * new column exactly as an evolving append would surface it, and
+    * the version's file list differs from its predecessor's like any
+    * commit's. The file's manifest line stamps [[NullTag]] stats for
+    * every taggable column (zero rows = provably zero non-null
+    * values), so stats coverage — the manifest
     * watermark shortcut and [[coveredStatsFields]] — survives the
     * evolution instead of degrading to the footer sweep, and no
     * pruning verdict can ever touch the file. Same OCC/crash contract
@@ -2240,16 +2104,19 @@ object AtomicIncrement {
     * schema IS the replacing frame's; floors RESET by default — a
     * replace is a deliberate new history (the Complete-mode sink
     * rewrites its rollup every batch), not a destructive edit the
-    * replay shield must remember.
+    * replay shield must remember. A row-preserving rewrite passes its
+    * snapshot's floors as `carriedFloors` instead.
     */
   private[graft] def replaceGated(df: DataFrame, sink: String,
       expectVersion: Long,
       statsFields: Seq[org.apache.spark.sql.types.StructField] = Nil,
-      resetFloors: Boolean = true,
+      carriedFloors: Seq[FileColumnStats] = Nil,
       gate: () => Boolean = () => true): Seq[ManifestEntry] = {
-    val txn = new Txn(df.sparkSession, sink, Txn.Snap(expectVersion, Nil, Nil))
+    val spark = df.sparkSession
+    val txn = new Txn(spark, sink,
+      Snapshot(expectVersion, Nil, Nil, None, carriedFloors)(spark, sink))
     txn.commit(gate = _ => gate(), carry = _ => Nil,
-      schema = _ => Some(df.schema), resetFloors = resetFloors)(
+      schema = _ => Some(df.schema))(
       txn.stage(df, statsFields)).fold(Seq.empty[ManifestEntry])(_._2)
   }
 
@@ -2431,7 +2298,7 @@ object AtomicIncrement {
       churn: ChurnKeys): MergeResult = {
     val spark = changes.sparkSession
     val txn = Txn.begin(spark, sink)
-    val Txn.Snap(_, dataE, dvE) = txn.snap
+    val (dataE, dvE) = (txn.snap.data, txn.snap.dvs)
     require(dataE.nonEmpty, s"nothing committed to merge into at $sink")
     // key-contract enforcement (type family, nulls, churn fence) lives
     // in collectChurn — LOUD, because a silently nulled cast would
@@ -2442,12 +2309,11 @@ object AtomicIncrement {
     val (carried, touched) = splitByKeyIntervals(dataE, keyCol, churn)
     // full-snapshot schema (the readCommittedAbove evolution guard):
     // a touched subset must not lose columns only carried files have
-    val fullSchema = dataSchema(spark, sink, dataE)
+    val fullSchema = txn.snap.schema
     requireKeyFamily(fullSchema, keyCol, churn, changes)
     // EFFECTIVE old rows: standing delete vectors apply, so a
     // dv-masked row can never be resurrected into the rewrite
-    val oldTouched = readEffective(spark, sink, touched, dvE,
-      Some(fullSchema))
+    val oldTouched = readEffective(spark, sink, touched, dvE, fullSchema)
     val churnDf = broadcast(churn.toDf(spark, keyCol))
     val survivors = oldTouched.join(churnDf, Seq(keyCol), "left_anti")
     val upserts = changes.filter(!col(deleteCol)).drop(deleteCol)
@@ -2489,7 +2355,7 @@ object AtomicIncrement {
     val (published, staged) = txn.commit(
       carry = Txn.carryUntouched(touchedPaths),
       schema = _ => mergeStructs(fullSchema, merged.schema),
-      retry = Some(Txn.confined(spark, sink, touchedPaths, fullSchema,
+      retry = Some(Txn.confined(touchedPaths, fullSchema,
         added => splitByKeyIntervals(added, keyCol, churn)._2.isEmpty)))(
       txn.stage(merged, statsFields)).get
     MergeResult(published, carried.size, touched.size,
@@ -2528,13 +2394,12 @@ object AtomicIncrement {
       cond: org.apache.spark.sql.Column,
       mayMatch: ManifestEntry => Boolean = _ => true): DeleteResult = {
     val txn = Txn.begin(spark, sink)
-    val Txn.Snap(version, dataE, dvE) = txn.snap
+    val (version, dataE, dvE) = (txn.snap.version, txn.snap.data, txn.snap.dvs)
     require(dataE.nonEmpty, s"nothing committed to delete from at $sink")
     val (touched, carried) = dataE.partition(mayMatch)
     if (touched.isEmpty) return DeleteResult(version, carried.size, 0, 0)
-    val fullSchema = dataSchema(spark, sink, dataE)
-    val oldTouched = readEffective(spark, sink, touched, dvE,
-      Some(fullSchema))
+    val fullSchema = txn.snap.schema
+    val oldTouched = readEffective(spark, sink, touched, dvE, fullSchema)
     // delete iff cond IS TRUE: null-cond rows survive
     val survivors = oldTouched
       .filter(!org.apache.spark.sql.functions.coalesce(cond,
@@ -2568,16 +2433,15 @@ object AtomicIncrement {
       mayMatch: ManifestEntry => Boolean = _ => true): DeleteResult = {
     require(sets.nonEmpty, "UPDATE needs at least one SET assignment")
     val txn = Txn.begin(spark, sink)
-    val Txn.Snap(version, dataE, dvE) = txn.snap
+    val (version, dataE, dvE) = (txn.snap.version, txn.snap.data, txn.snap.dvs)
     require(dataE.nonEmpty, s"nothing committed to update at $sink")
-    val fullSchema = dataSchema(spark, sink, dataE)
+    val fullSchema = txn.snap.schema
     sets.keys.foreach(c => require(
       fullSchema.fields.exists(_.name.equalsIgnoreCase(c)),
       s"SET column '$c' not in the committed schema"))
     val (touched, carried) = dataE.partition(mayMatch)
     if (touched.isEmpty) return DeleteResult(version, carried.size, 0, 0)
-    val oldTouched = readEffective(spark, sink, touched, dvE,
-      Some(fullSchema))
+    val oldTouched = readEffective(spark, sink, touched, dvE, fullSchema)
     import org.apache.spark.sql.functions.{coalesce, lit, when, col => c}
     val matchC = coalesce(cond, lit(false))
     // all new values compute against the OLD row first; the write-back
@@ -2617,8 +2481,8 @@ object AtomicIncrement {
     val (published, staged) = txn.commit(
       carry = Txn.carryUntouched(touchedPaths),
       schema = _ => Some(fullSchema),
-      retry = Some(Txn.confined(txn.spark, txn.sink,
-        touchedPaths, fullSchema, _.forall(e => !mayMatch(e)))))(
+      retry = Some(Txn.confined(touchedPaths, fullSchema,
+        _.forall(e => !mayMatch(e)))))(
       txn.stage(rewrite, coveredStatsFields(txn.snap.data,
         rewrite.schema))).get
     DeleteResult(published, carried, touched.size, staged.size)
@@ -2686,11 +2550,11 @@ object AtomicIncrement {
       churn: ChurnKeys): MergeResult = {
     val spark = changes.sparkSession
     val txn = Txn.begin(spark, sink)
-    val Txn.Snap(_, dataE, dvE) = txn.snap
+    val (dataE, dvE) = (txn.snap.data, txn.snap.dvs)
     require(dataE.nonEmpty, s"nothing committed to merge into at $sink")
     require(churn.size <= maxChurnKeys,
       s"precollected churn carries ${churn.size} keys (> $maxChurnKeys)")
-    val fullSchema = dataSchema(spark, sink, dataE)
+    val fullSchema = txn.snap.schema
     requireKeyFamily(fullSchema, keyCol, churn, changes)
     dvE.headOption.foreach(d => require(
       dvKeyColOf(d).equalsIgnoreCase(keyCol),
@@ -2701,8 +2565,7 @@ object AtomicIncrement {
     // commit from the effective pre-merge churn locality — lazy over
     // immutable files, so still valid after the publish
     val (_, touched) = splitByKeyIntervals(dataE, keyCol, churn)
-    val beforeImages = readEffective(spark, sink, touched, dvE,
-        Some(fullSchema))
+    val beforeImages = readEffective(spark, sink, touched, dvE, fullSchema)
       .join(broadcast(churn.toDf(spark, keyCol)), Seq(keyCol), "left_semi")
     val statsFields = ((keyCol +: coveredStatsFields(dataE,
         fullSchema).map(_.name)).distinct)
@@ -2716,7 +2579,8 @@ object AtomicIncrement {
     // (round 14): readEffective's dv-locality split uses them to skip
     // the anti-join for data files provably outside the churn — the
     // read-debt pricing that keeps a localized deferred delete from
-    // taxing every read of a 10⁵-file table
+    // taxing every read of a 10⁵-file table. Its one-column schema is
+    // the one [[dvSchema]] reads every dv file under
     val dvDf = churn.toDf(spark, keyCol)
     // two staged batch dirs (after-images, dv); the staged dv lines
     // make the commit stamp both at this commit's sequence
@@ -2763,13 +2627,13 @@ object AtomicIncrement {
   def foldDvsTargeted(spark: SparkSession, sink: String,
       maxChurnKeys: Int = 10000000): (Int, Int) = {
     val txn = Txn.begin(spark, sink)
-    val Txn.Snap(_, dataE, dvE) = txn.snap
+    val (dataE, dvE) = (txn.snap.data, txn.snap.dvs)
     if (dvE.isEmpty) return (0, 0)
     val keyCols = dvE.map(dvKeyColOf).distinct
     require(keyCols.size == 1,
       s"delete vectors disagree on the merge key at $sink: $keyCols")
     val keyCol = keyCols.head
-    val fullSchema = dataSchema(spark, sink, dataE)
+    val fullSchema = txn.snap.schema
     val isString = fullSchema.fields
       .find(_.name.equalsIgnoreCase(keyCol))
       .flatMap(f => tagOf(f.dataType)).contains("string")
@@ -2779,9 +2643,7 @@ object AtomicIncrement {
     var pooled = 0
     val keysBySeq: Map[Long, Array[org.apache.spark.sql.Row]] =
       dvE.groupBy(seqOf).map { case (s, es) =>
-        val r = spark.read.schema(dataSchema(spark, sink, es))
-          .parquet(es.map(e => s"$sink/${e.path}"): _*)
-          .select(col(keyCol)).distinct()
+        val r = readDvKeys(spark, sink, es, keyCol, fullSchema).distinct()
           .limit(maxChurnKeys + 1 - pooled).collect()
         pooled += r.length
         require(pooled <= maxChurnKeys,
@@ -2819,8 +2681,8 @@ object AtomicIncrement {
     val staged = txn.commit(carry = _ => carried,
         schema = _ => Some(fullSchema)) {
       if (masked.isEmpty) Nil
-      else txn.stage(readEffective(spark, sink, masked, dvE,
-        Some(fullSchema)), statsFields)
+      else txn.stage(readEffective(spark, sink, masked, dvE, fullSchema),
+        statsFields)
     }.get._2
     (masked.size, staged.size)
   }
@@ -2870,17 +2732,16 @@ object AtomicIncrement {
       maxChurnKeys: Int = 10000000): MergeResult = {
     val spark = changes.sparkSession
     val txn = Txn.begin(spark, sink)
-    val Txn.Snap(_, dataE, dvE) = txn.snap
+    val (dataE, dvE) = (txn.snap.data, txn.snap.dvs)
     require(dataE.nonEmpty, s"nothing committed to merge into at $sink")
     val churn = collectChurn(changes, keyCol, maxChurnKeys)
     val (carried, touched) = splitByKeyIntervals(dataE, keyCol, churn)
-    val fullSchema = dataSchema(spark, sink, dataE)
+    val fullSchema = txn.snap.schema
     requireKeyFamily(fullSchema, keyCol, churn, changes)
     require(fullSchema.fieldNames.exists(_.equalsIgnoreCase("valid_from")) &&
       fullSchema.fieldNames.exists(_.equalsIgnoreCase("valid_to")),
       s"SCD2 table at $sink must carry valid_from/valid_to columns")
-    val oldTouched = readEffective(spark, sink, touched, dvE,
-      Some(fullSchema))
+    val oldTouched = readEffective(spark, sink, touched, dvE, fullSchema)
     val churnDf = broadcast(churn.toDf(spark, keyCol))
     val untouchedRows = oldTouched.join(churnDf, Seq(keyCol), "left_anti")
     val churnedRows = oldTouched.join(churnDf, Seq(keyCol), "left_semi")
@@ -2991,11 +2852,10 @@ object AtomicIncrement {
 
   private[graft] def readKeyedChurn(spark: SparkSession, sink: String,
       keyCol: String, churn: ChurnKeys): DataFrame = {
-    val (_, dataE, dvE) = snapshotSplit(spark, sink)
-    require(dataE.nonEmpty, s"no committed snapshot at $sink")
-    val (_, touched) = splitByKeyIntervals(dataE, keyCol, churn)
-    readEffective(spark, sink, touched, dvE,
-      Some(dataSchema(spark, sink, dataE)))
+    val snap = latestSnapshot(spark, sink)
+    require(snap.data.nonEmpty, s"no committed snapshot at $sink")
+    val (_, touched) = splitByKeyIntervals(snap.data, keyCol, churn)
+    readEffective(spark, sink, touched, snap.dvs, snap.schema)
   }
 
   /** MULTI-COLUMN may-contain locality read (round 14): the committed
@@ -3013,12 +2873,11 @@ object AtomicIncrement {
   private[graft] def readKeyedChurnMulti(spark: SparkSession,
       sink: String, churns: Seq[(String, ChurnKeys)]): DataFrame = {
     require(churns.nonEmpty, "at least one churn column required")
-    val (_, dataE, dvE) = snapshotSplit(spark, sink)
-    require(dataE.nonEmpty, s"no committed snapshot at $sink")
-    val touched = churns.foldLeft(dataE) { case (remaining, (c, ch)) =>
+    val snap = latestSnapshot(spark, sink)
+    require(snap.data.nonEmpty, s"no committed snapshot at $sink")
+    val touched = churns.foldLeft(snap.data) { case (remaining, (c, ch)) =>
       splitByKeyIntervals(remaining, c, ch)._2 }
-    readEffective(spark, sink, touched, dvE,
-      Some(dataSchema(spark, sink, dataE)))
+    readEffective(spark, sink, touched, snap.dvs, snap.schema)
   }
 
   /** The churned GROUPS' committed rows for an extremes rescan — the

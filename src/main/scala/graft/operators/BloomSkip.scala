@@ -359,11 +359,11 @@ object BloomSkip {
     */
   def pointLookup(spark: SparkSession, sink: String, column: String,
       value: org.apache.spark.sql.Column): DataFrame = {
-    val (_, entries, dvE) = AtomicIncrement.snapshotSplit(spark, sink)
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    val entries = snap.data
     require(entries.nonEmpty, s"no committed snapshot at $sink")
-    requireNoTagCollision(
-      AtomicIncrement.dataSchema(spark, sink, entries).fieldNames
-        .toIndexedSeq, column, token = false)
+    requireNoTagCollision(snap.schema.fieldNames.toIndexedSeq, column,
+      token = false)
     val (h, v) = probeOf(spark, value)
     // the interval stage is the SQL scan's: an `=` verdict over the
     // manifest bounds (all-null files pruned, damaged or foreign
@@ -380,10 +380,9 @@ object BloomSkip {
       .filter(_._2).map(_._1)
     // standing delete vectors apply (merge-on-read tables): the lookup
     // must never surface a tombstoned row the full read hides. The
-    // schema pins to the FULL data list (evolution guard — `kept` is a
+    // schema pins to the FULL snapshot (evolution guard — `kept` is a
     // pruned subset).
-    AtomicIncrement.readEffective(spark, sink, kept, dvE,
-      Some(AtomicIncrement.dataSchema(spark, sink, entries)))
+    AtomicIncrement.readEffective(spark, sink, kept, snap.dvs, snap.schema)
   }
 
   /** TEXT-SEARCH read (round 14): the committed snapshot restricted to
@@ -408,9 +407,10 @@ object BloomSkip {
     tokens.foreach(t => require(t.matches("[a-z0-9]+"),
       s"probe token '$t' is not in token normal form " +
         "(lowercase alphanumeric, no separators)"))
-    val (_, entries, dvE) = AtomicIncrement.snapshotSplit(spark, sink)
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    val (entries, dvE) = (snap.data, snap.dvs)
     require(entries.nonEmpty, s"no committed snapshot at $sink")
-    val schema = AtomicIncrement.dataSchema(spark, sink, entries)
+    val schema = snap.schema
     requireNoTagCollision(schema.fieldNames.toIndexedSeq, column,
       token = true)
     // the probes' hashes, computed by the same engine expression the
@@ -422,7 +422,7 @@ object BloomSkip {
     val kept = entries.zip(mayContainAllBitmap(spark, sink,
         entries.map(_.path), tag, hs))
       .filter(_._2).map(_._1)
-    AtomicIncrement.readEffective(spark, sink, kept, dvE, Some(schema))
+    AtomicIncrement.readEffective(spark, sink, kept, dvE, schema)
   }
 
   // ---- manifest-level INVERTED TOKEN INDEX (round 15, verdict #7):
@@ -567,9 +567,10 @@ object BloomSkip {
           "ensureTokenIndex (the maintenance pass builds it)"))
     require(meta.trim == s"buckets=$buckets",
       s"index built with '$meta', probed with buckets=$buckets")
-    val (_, entries, dvE) = AtomicIncrement.snapshotSplit(spark, sink)
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    val (entries, dvE) = (snap.data, snap.dvs)
     require(entries.nonEmpty, s"no committed snapshot at $sink")
-    val schema = AtomicIncrement.dataSchema(spark, sink, entries)
+    val schema = snap.schema
     val covered = readSmallText(fs, new Path(root, "_covered.txt"))
       .map(_.split("\n").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
     // the probes' buckets, by the build's own engine expression
@@ -587,7 +588,7 @@ object BloomSkip {
       val r = rel2(e.path)
       !covered.contains(r) || cand.contains(r)
     }
-    AtomicIncrement.readEffective(spark, sink, kept, dvE, Some(schema))
+    AtomicIncrement.readEffective(spark, sink, kept, dvE, schema)
   }
 
   /** What [[readGrep]] decided last, for the planner spec's pins. */

@@ -33,14 +33,17 @@ object IncrementalAgg {
   def mergeBatch(batch: DataFrame, sink: String, keys: Seq[String],
       sumCols: Seq[String], watermarkCol: String): Long = {
     val spark = batch.sparkSession
-    val (version, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
+    // ONE snapshot serves the watermark gate, the state read and the
+    // replace's OCC token
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    val (version, dataE) = (snap.version, snap.data)
     // stored-watermark read: manifest stats first (the state lines
     // stamp `__wm` bounds since the round-17 optimization — zero
     // jobs), else the one-job max over the state (legacy sinks)
     val wm: Option[org.apache.spark.sql.Column] =
       if (dataE.isEmpty) None
       else {
-        val st = readState(spark, sink)
+        val st = AtomicIncrement.readSnapshot(spark, sink, snap)
         AtomicIncrement.manifestMaxLiteral(dataE, "__wm",
             st.schema("__wm").dataType)
           .orElse(Option(st.agg(max("__wm")).head().get(0)).map(lit))
@@ -68,7 +71,8 @@ object IncrementalAgg {
         .observe(gate.name, coalesce(sum("__n"), lit(0L)).as("__fresh"))
       val merged =
         if (dataE.isEmpty) partial
-        else readState(spark, sink).unionByName(partial)
+        else AtomicIncrement.readSnapshot(spark, sink, snap)
+          .unionByName(partial)
           .groupBy(keys.map(col): _*).agg(
             sum("__n").as("__n"),
             sumCols.map(c => sum(s"sum_$c").as(s"sum_$c")) :+
@@ -149,9 +153,11 @@ object IncrementalAgg {
       sink: String, keys: Seq[String], sumCols: Seq[String],
       batchId: Long, weightCol: Option[String]): Boolean = {
     val spark = plus.sparkSession
-    val (version, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    val (version, dataE) = (snap.version, snap.data)
     val prior =
-      if (dataE.isEmpty) None else Some(readState(spark, sink))
+      if (dataE.isEmpty) None
+      else Some(AtomicIncrement.readSnapshot(spark, sink, snap))
     // the bootstrap fold (no committed state yet) always applies — a
     // bootstrap conventionally sits at batchId −1 so the stream's own
     // ids can start at 0 without colliding with it. The replay-shield
@@ -268,9 +274,11 @@ object IncrementalAgg {
     require(minMaxCols.nonEmpty,
       "no min/max columns: use mergeCdcBatch, which needs no rescan")
     val spark = plus.sparkSession
-    val (version, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    val (version, dataE) = (snap.version, snap.data)
     val prior =
-      if (dataE.isEmpty) None else Some(readState(spark, sink))
+      if (dataE.isEmpty) None
+      else Some(AtomicIncrement.readSnapshot(spark, sink, snap))
     val last = prior.map(st =>
       AtomicIncrement.manifestMaxLong(dataE, "__b").getOrElse(
         st.agg(max("__b")).head().getLong(0))).getOrElse(Long.MinValue)
@@ -1023,10 +1031,11 @@ object IncrementalAgg {
     */
   private def lastSyncedBatch(spark: org.apache.spark.sql.SparkSession,
       stateSink: String): Long = {
-    val (_, dataE, _) = AtomicIncrement.snapshotSplit(spark, stateSink)
-    if (dataE.isEmpty) 0L
-    else AtomicIncrement.manifestMaxLong(dataE, "__b").getOrElse(
-      readState(spark, stateSink).agg(max("__b")).head().getLong(0))
+    val snap = AtomicIncrement.latestSnapshot(spark, stateSink)
+    if (snap.data.isEmpty) 0L
+    else AtomicIncrement.manifestMaxLong(snap.data, "__b").getOrElse(
+      AtomicIncrement.readSnapshot(spark, stateSink, snap)
+        .agg(max("__b")).head().getLong(0))
   }
 
   /** Run a query whose plumbing needs a scratch atomic sink, then

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.AtomicIncrement.ManifestEntry
+import graft.operators.AtomicIncrement.{ManifestEntry, Snapshot}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
 /** The graft sink's one commit protocol. Every writer is a stage plus
   * an optional gate over one snapshot:
   *
-  *  1. SNAPSHOT: the (version, data lines, dv lines) the writer read.
+  *  1. SNAPSHOT: the parsed manifest the writer read — its lines,
+  *     schema and watermark floors ([[AtomicIncrement.Snapshot]]).
   *  2. STAGE: parquet written under `_data/batch-<uuid>` dirs the
   *     transaction owns — [[stage]] writes a frame, [[own]] adopts a
   *     dir DSv2 executors already wrote.
@@ -21,13 +22,16 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *  5. RECLAIM: every exit that does not publish (a throwing stage, a
   *     closed gate, a lost race) deletes the owned dirs.
   *
+  * The publish folds the floors of the snapshot it lands on, so a
+  * writer never re-reads the manifest it already holds.
+  *
   * Staged lines outrank standing tombstones: when the published
   * manifest carries delete vectors (standing or staged), every staged
   * line is stamped at the version it publishes — a dv masks only
   * lines with a strictly smaller sequence.
   */
 private[graft] final class Txn(val spark: SparkSession, val sink: String,
-    val snap: Txn.Snap) {
+    val snap: Snapshot) {
   import Txn._
 
   private val owned = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -63,10 +67,9 @@ private[graft] final class Txn(val spark: SparkSession, val sink: String,
   /** Stage `work`, gate it, publish it. Some((version, staged lines))
     * on publish, None when the gate closed. */
   def commit(gate: Seq[ManifestEntry] => Boolean = _ => true,
-      carry: Snap => Seq[ManifestEntry] = s => s.data ++ s.dvs,
-      schema: Snap => Option[StructType] = _ => None,
-      retry: Option[(Snap, Snap) => Boolean] = None,
-      resetFloors: Boolean = false)(
+      carry: Snapshot => Seq[ManifestEntry] = s => s.data ++ s.dvs,
+      schema: Snapshot => Option[StructType],
+      retry: Option[(Snapshot, Snapshot) => Boolean] = None)(
       work: => Seq[ManifestEntry]): Option[(Long, Seq[ManifestEntry])] =
     try {
       val staged = work
@@ -85,13 +88,13 @@ private[graft] final class Txn(val spark: SparkSession, val sink: String,
           try {
             AtomicIncrement.publish(fs, sink,
               (carried ++ lines).map(_.render), now.version + 1,
-              snapshotSchema = schema(now), resetFloors = resetFloors)
+              schema(now), now.floors)
             done = true
           } catch {
             case cme: java.util.ConcurrentModificationException =>
               if (attempt >= Retries || retry.isEmpty) throw cme
               attempt += 1
-              val winner = Txn.snapshot(spark, sink)
+              val winner = AtomicIncrement.latestSnapshot(spark, sink)
               if (!retry.get(now, winner)) throw cme
               now = winner
           }
@@ -103,19 +106,11 @@ private[graft] final class Txn(val spark: SparkSession, val sink: String,
 
 private[graft] object Txn {
 
-  final case class Snap(version: Long, data: Seq[ManifestEntry],
-      dvs: Seq[ManifestEntry])
-
   private val Retries = 2
-
-  def snapshot(spark: SparkSession, sink: String): Snap = {
-    val (v, data, dvs) = AtomicIncrement.snapshotSplit(spark, sink)
-    Snap(v, data, dvs)
-  }
 
   /** Open a transaction on the sink's latest snapshot. */
   def begin(spark: SparkSession, sink: String): Txn =
-    new Txn(spark, sink, snapshot(spark, sink))
+    new Txn(spark, sink, AtomicIncrement.latestSnapshot(spark, sink))
 
   private def fsOf(spark: SparkSession, sink: String) =
     new Path(sink).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -136,22 +131,21 @@ private[graft] object Txn {
     *     scope (`addedSafe`) — the commit serializes after the winner;
     *  4. the snapshot schema is unchanged.
     */
-  def confined(spark: SparkSession, sink: String, touched: Set[String],
-      schemaAtRead: StructType,
-      addedSafe: Seq[ManifestEntry] => Boolean): (Snap, Snap) => Boolean =
+  def confined(touched: Set[String], schemaAtRead: StructType,
+      addedSafe: Seq[ManifestEntry] => Boolean)
+      : (Snapshot, Snapshot) => Boolean =
     (prev, now) => {
       val line = prev.data.map(e => e.path -> e.render).toMap
       val line2 = now.data.map(e => e.path -> e.render).toMap
       touched.forall(p => line.get(p).exists(r => line2.get(p).contains(r))) &&
         now.dvs.map(_.path).toSet == prev.dvs.map(_.path).toSet &&
         addedSafe(now.data.filterNot(e => line.contains(e.path))) &&
-        AtomicIncrement.asNullableStruct(
-          AtomicIncrement.dataSchema(spark, sink, now.data)) ==
+        AtomicIncrement.asNullableStruct(now.schema) ==
           AtomicIncrement.asNullableStruct(schemaAtRead)
     }
 
   /** What a confined commit carries: the snapshot minus what it rewrote. */
-  def carryUntouched(touched: Set[String]): Snap => Seq[ManifestEntry] =
+  def carryUntouched(touched: Set[String]): Snapshot => Seq[ManifestEntry] =
     s => s.data.filterNot(e => touched.contains(e.path)) ++ s.dvs
 
   private val noop: () => Unit = () => ()

@@ -295,34 +295,20 @@ private[graft] class GraftAtomicRelation(override val sqlContext: SQLContext,
 
   private def spark = sqlContext.sparkSession
 
-  /** The pinned (or latest) snapshot's (data, dv) manifest entries —
-    * re-resolved at every call, so a standing view follows the table
-    * (or a moved tag).
+  /** The pinned (or latest) snapshot — re-resolved at every call, so
+    * a standing view follows the table (or a moved tag).
     */
-  private def resolveEntries(): (Seq[AtomicIncrement.ManifestEntry],
-      Seq[AtomicIncrement.ManifestEntry]) = {
-    val fs = new Path(sink).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val version = GraftAtomicRelation.resolveVersion(spark, sink, pin)
-    val (dv, data) = AtomicIncrement.entriesAtVersion(fs, sink, version)
-      .partition(AtomicIncrement.isDv)
+  private def resolveSnapshot(): AtomicIncrement.Snapshot = {
+    val snap = AtomicIncrement.snapshotAt(spark, sink,
+      GraftAtomicRelation.resolveVersion(spark, sink, pin))
     // a SCHEMA-ONLY snapshot (CREATE TABLE before its first INSERT,
     // or a DELETE that emptied the table) reads as an empty frame —
     // the embedded schema line answers the shape
-    require(data.nonEmpty || AtomicIncrement
-        .embeddedSchemaAt(spark, sink, Some(version)).nonEmpty,
-      s"no committed snapshot at $sink")
-    (data, dv)
+    require(snap.hasSchema, s"no committed snapshot at $sink")
+    snap
   }
 
-  override val schema: StructType = {
-    val (data, _) = resolveEntries()
-    if (data.nonEmpty) AtomicIncrement.dataSchema(spark, sink, data)
-    else {
-      val version = GraftAtomicRelation.resolveVersion(spark, sink, pin)
-      AtomicIncrement.embeddedSchemaAt(spark, sink, Some(version)).get
-    }
-  }
+  override val schema: StructType = resolveSnapshot().schema
 
   /** Real table size from the manifest's file list (one status call
     * per file, fanned out, computed once per relation) — without this
@@ -334,7 +320,7 @@ private[graft] class GraftAtomicRelation(override val sqlContext: SQLContext,
     * never a wrong answer.
     */
   override lazy val sizeInBytes: Long = {
-    val (data, _) = resolveEntries()
+    val data = resolveSnapshot().data
     val fs = new Path(sink).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     AtomicIncrement.inParallel(data) { e =>
@@ -350,7 +336,8 @@ private[graft] class GraftAtomicRelation(override val sqlContext: SQLContext,
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val (data, dv) = resolveEntries()
+    val snap = resolveSnapshot()
+    val data = snap.data
     val kept = data.filter(e => filters.forall(f => mayMatch(e, f)))
     GraftAtomicRelation.recordScan(sink, kept.size, data.size)
     // the file-identity metadata column (catalog face) is served from
@@ -358,8 +345,8 @@ private[graft] class GraftAtomicRelation(override val sqlContext: SQLContext,
     // readEffective, per parquet leaf (input_file_name() refuses to
     // sit above the dv algebra's unions/joins)
     val fileCol = GraftRowLevelOperation.FileCol
-    val base = AtomicIncrement.readEffective(spark, sink, kept, dv,
-      Some(schema),
+    val base = AtomicIncrement.readEffective(spark, sink, kept, snap.dvs,
+      schema,
       tagFileCol = if (requiredColumns.contains(fileCol))
         Some(fileCol) else None)
     val pushed = filters.flatMap(translate)

@@ -99,11 +99,11 @@ class GraftCatalog extends TableCatalog
     * A legacy pre-round-16 manifest that lists zero files has neither
     * and stays invisible — nothing could answer its schema.
     */
-  private def isLoadable(sink: String): Boolean = {
-    val (v, files) = AtomicIncrement.snapshot(spark, sink)
-    v > 0L && (files.nonEmpty ||
-      AtomicIncrement.embeddedSchemaAt(spark, sink).nonEmpty)
-  }
+  private def isLoadable(sink: String): Boolean =
+    isLoadable(AtomicIncrement.latestSnapshot(spark, sink))
+
+  private def isLoadable(snap: AtomicIncrement.Snapshot): Boolean =
+    snap.version > 0L && snap.hasSchema
 
   /** A maintenance CALL's table argument: an absolute path is the
     * sink; a dot-separated name resolves against the warehouse.
@@ -318,10 +318,9 @@ class GraftCatalog extends TableCatalog
     import org.apache.spark.sql.types.StructField
     val sink = sinkPath(ident)
     val s = spark
-    val (version, dataE, _) = AtomicIncrement.snapshotSplit(s, sink)
-    if (version == 0L || !isLoadable(sink))
-      throw new NoSuchTableException(ident)
-    val current = AtomicIncrement.dataSchema(s, sink, dataE)
+    val snap = AtomicIncrement.latestSnapshot(s, sink)
+    if (!isLoadable(snap)) throw new NoSuchTableException(ident)
+    val current = snap.schema
     var evolved = current
     var mutated = false
     changes.foreach {
@@ -447,15 +446,11 @@ private[graft] class GraftSqlTable(sink: String,
     pin.map { case (k, v) => s" ($k $v)" }.getOrElse("")
 
   override val schema: StructType = declaredSchema.getOrElse {
-    val version = GraftAtomicRelation.resolveVersion(spark, sink, pin)
-    val fs = new Path(sink).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val dataE = AtomicIncrement.entriesAtVersion(fs, sink, version)
-      .filterNot(AtomicIncrement.isDv)
-    if (dataE.nonEmpty) AtomicIncrement.dataSchema(spark, sink, dataE)
-    else AtomicIncrement.embeddedSchemaAt(spark, sink, Some(version))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed snapshot at $sink ($pin)"))
+    val snap = AtomicIncrement.snapshotAt(spark, sink,
+      GraftAtomicRelation.resolveVersion(spark, sink, pin))
+    if (!snap.hasSchema) throw new IllegalArgumentException(
+      s"no committed snapshot at $sink ($pin)")
+    snap.schema
   }
 
   override def capabilities(): java.util.Set[TableCapability] =
@@ -531,11 +526,10 @@ private[graft] class GraftSqlTable(sink: String,
     * Missing files (pinned reader racing a vacuum) count 0.
     */
   private[graft] def manifestSizeInBytes: Long = {
-    val version = GraftAtomicRelation.resolveVersion(spark, sink, pin)
     val fs = new Path(sink).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val dataE = AtomicIncrement.entriesAtVersion(fs, sink, version)
-      .filterNot(AtomicIncrement.isDv)
+    val dataE = AtomicIncrement.snapshotAt(spark, sink,
+      GraftAtomicRelation.resolveVersion(spark, sink, pin)).data
     // the caller asks "is this table broadcast-small?" during QUERY
     // COMPILE — never pay 10⁵ fanned status round trips to learn the
     // answer is no. Past a file-count ceiling the table cannot be
@@ -693,11 +687,10 @@ private[graft] class GraftScanBuilder(sink: String,
     override def estimateStatistics()
         : org.apache.spark.sql.connector.read.Statistics = {
       val spark = SparkSession.active
-      val version = GraftAtomicRelation.resolveVersion(spark, sink, pin)
       val fs = new Path(sink).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
-      val dataE = AtomicIncrement.entriesAtVersion(fs, sink, version)
-        .filterNot(AtomicIncrement.isDv)
+      val dataE = AtomicIncrement.snapshotAt(spark, sink,
+        GraftAtomicRelation.resolveVersion(spark, sink, pin)).data
       val kept = dataE.filter(e =>
         filters.forall(f => ManifestPruning.mayMatch(e, f)))
       val bytes = AtomicIncrement.inParallel(kept) { e =>

@@ -75,17 +75,12 @@ private[graft] class GraftRowLevelOperation(sink: String,
   // ---- the statement's snapshot, resolved ONCE (scan and write must
   // agree on version/files or the commit could carry a file another
   // writer already rewrote — OCC still backstops at publish) ----
-  private case class Snap(version: Long,
-      dataE: Seq[AtomicIncrement.ManifestEntry],
-      dvE: Seq[AtomicIncrement.ManifestEntry],
-      fullSchema: StructType)
-  @volatile private var snapState: Snap = null
-  private def snap: Snap = synchronized {
+  @volatile private var snapState: AtomicIncrement.Snapshot = null
+  private def snap: AtomicIncrement.Snapshot = synchronized {
     if (snapState == null) {
-      val (version, dataE, dvE) = AtomicIncrement.snapshotSplit(spark, sink)
-      require(dataE.nonEmpty, s"nothing committed to $cmd at $sink")
-      snapState = Snap(version, dataE, dvE,
-        AtomicIncrement.dataSchema(spark, sink, dataE))
+      val s = AtomicIncrement.latestSnapshot(spark, sink)
+      require(s.data.nonEmpty, s"nothing committed to $cmd at $sink")
+      snapState = s
     }
     snapState
   }
@@ -121,7 +116,7 @@ private[graft] class GraftRowLevelOperation(sink: String,
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
       : ScanBuilder = {
     scanBuilds.incrementAndGet()
-    new GraftCowScanBuilder(this, sink, snap.fullSchema)
+    new GraftCowScanBuilder(this, sink, snap.schema)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -150,10 +145,7 @@ private[graft] class GraftRowLevelOperation(sink: String,
       .column(GraftRowLevelOperation.FileCol))
 
   // ---- state the write's driver-side commit reads ----
-  private[sources] def snapshotForCommit: (Long,
-      Seq[AtomicIncrement.ManifestEntry],
-      Seq[AtomicIncrement.ManifestEntry], StructType) =
-    (snap.version, snap.dataE, snap.dvE, snap.fullSchema)
+  private[sources] def snapshotForCommit: AtomicIncrement.Snapshot = snap
 
   private[sources] def scanCount: Int = scanBuilds.get()
 
@@ -197,12 +189,12 @@ private[graft] class GraftCowScanBuilder(op: GraftRowLevelOperation,
   }
 
   override def build(): Scan = {
-    val (_, dataE, dvE, _) = op.snapshotForCommit
-    val touched = dataE.filter(e =>
+    val base = op.snapshotForCommit
+    val touched = base.data.filter(e =>
       filters.forall(f => ManifestPruning.mayMatch(e, f)))
     op.recordTouched(touched.map(_.path))
     op.recordPushed(filters)
-    new GraftCowScan(op, sink, fullSchema, required, touched, dvE)
+    new GraftCowScan(op, sink, fullSchema, required, touched, base.dvs)
   }
 }
 
@@ -319,10 +311,14 @@ private[graft] class GraftCowScan(op: GraftRowLevelOperation,
     val columnar = dvE.isEmpty && ParquetIoBridge.supportsBatch(spark, physical)
     val dataReader = ParquetIoBridge.parquetReader(spark, fullSchema,
       physical, returningBatch = columnar)
-    val dvReader = keyField.map(kf => ParquetIoBridge.parquetReader(
-      spark, StructType(Seq(kf)), StructType(Seq(kf))))
-    new GraftCowReaderFactory(dataReader, dvReader, keyField, physical,
-      required, columnar)
+    // dv files carry the churn's own one-column schema — a LONG key
+    // for any integral table key — whatever the table's key type
+    val dvKey = keyField.map(_ => AtomicIncrement.dvSchema(
+      AtomicIncrement.dvKeyColOf(dvE.head), fullSchema).head)
+    val dvReader = dvKey.map(f => ParquetIoBridge.parquetReader(
+      spark, StructType(Seq(f)), StructType(Seq(f))))
+    new GraftCowReaderFactory(dataReader, dvReader, keyField, dvKey,
+      physical, required, columnar)
   }
 }
 
@@ -331,14 +327,14 @@ private[graft] class GraftCowReaderFactory(
       => Iterator[InternalRow],
     dvReader: Option[org.apache.spark.sql.execution.datasources.PartitionedFile
       => Iterator[InternalRow]],
-    keyField: Option[StructField], physical: StructType,
-    required: StructType,
+    keyField: Option[StructField], dvKey: Option[StructField],
+    physical: StructType, required: StructType,
     columnar: Boolean = false) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftCowInputPartition]
-    new GraftCowPartitionReader(p, dataReader, dvReader, keyField,
+    new GraftCowPartitionReader(p, dataReader, dvReader, keyField, dvKey,
       physical, required)
   }
 
@@ -414,8 +410,9 @@ private[graft] class GraftCowPartitionReader(p: GraftCowInputPartition,
       => Iterator[InternalRow],
     dvReader: Option[org.apache.spark.sql.execution.datasources.PartitionedFile
       => Iterator[InternalRow]],
-    keyField: Option[StructField], physical: StructType,
-    required: StructType) extends PartitionReader[InternalRow] {
+    keyField: Option[StructField], dvKey: Option[StructField],
+    physical: StructType, required: StructType)
+    extends PartitionReader[InternalRow] {
 
   // dv key set for THIS file — churn-fenced by the merge-on-read
   // contract, so driver-collected-scale, never table-scale
@@ -425,16 +422,18 @@ private[graft] class GraftCowPartitionReader(p: GraftCowInputPartition,
       val it = ParquetIoBridge.rows(
         r(ParquetIoBridge.wholeFile(dvPath, Long.MaxValue)))
       while (it.hasNext) {
-        val key = keyOf(it.next(), 0)
+        val key = keyOf(it.next(), 0, dvKey.get)
         if (key != null) { s.add(key); () }
       }
     }
     s
   }
 
-  private def keyOf(row: InternalRow, i: Int): Any = {
+  /** The key at `i` as a Long (any integral family) or a String, so
+    * data and dv keys compare across their two physical types. */
+  private def keyOf(row: InternalRow, i: Int, f: StructField): Any = {
     if (row.isNullAt(i)) return null
-    keyField.get.dataType match {
+    f.dataType match {
       case org.apache.spark.sql.types.LongType =>
         java.lang.Long.valueOf(row.getLong(i))
       case org.apache.spark.sql.types.IntegerType =>
@@ -466,7 +465,7 @@ private[graft] class GraftCowPartitionReader(p: GraftCowInputPartition,
   private val it: Iterator[InternalRow] = {
     val filtered = keyIdx match {
       case Some(i) if p.dvAbsPaths.nonEmpty =>
-        base.filter(r => !masked.contains(keyOf(r, i)))
+        base.filter(r => !masked.contains(keyOf(r, i, keyField.get)))
       case _ => base
     }
     if (needProject) filtered.map(project) else filtered
@@ -503,8 +502,9 @@ private[graft] class GraftCowBatchWrite(op: GraftRowLevelOperation,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val rels = messages.collect {
       case GraftCowCommitMessage(ps) => ps }.flatten.toSeq.sorted
-    val (version, dataE, dvE, fullSchema) = op.snapshotForCommit
-    val txn = new Txn(spark, sink, Txn.Snap(version, dataE, dvE))
+    val base = op.snapshotForCommit
+    val (dataE, fullSchema) = (base.data, base.schema)
+    val txn = new Txn(spark, sink, base)
     txn.own(batchRel)
     val touched = op.touchedSet
     if (rels.isEmpty && touched.isEmpty) { txn.reclaim(); return }
@@ -521,7 +521,7 @@ private[graft] class GraftCowBatchWrite(op: GraftRowLevelOperation,
       val pushed = op.pushedFilters
       txn.commit(carry = Txn.carryUntouched(touched),
         schema = _ => AtomicIncrement.mergeStructs(fullSchema, writeSchema),
-        retry = Some(Txn.confined(spark, sink, touched, fullSchema,
+        retry = Some(Txn.confined(touched, fullSchema,
           _.forall(e => pushed.nonEmpty &&
             !pushed.forall(f => ManifestPruning.mayMatch(e, f))))))(staged)
     } else if (op.command() == Command.UPDATE &&

@@ -38,7 +38,8 @@ object AggStream {
   private[graft] def foldBatch(batch: DataFrame, batchId: Long,
       sink: String, keys: Seq[String], sumCols: Seq[String]): Long = {
     val spark = batch.sparkSession
-    val (version, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    val (version, dataE) = (snap.version, snap.data)
     // ONE committed read serves both the replay gate and the merge:
     // a second readCommitted for the union could straddle an external
     // writer's publish and merge against a state the `__lastBatch`
@@ -49,7 +50,7 @@ object AggStream {
     // the round-17 optimization), one small max job on legacy sinks.
     val state =
       if (dataE.isEmpty) None
-      else Some(AtomicIncrement.readCommitted(spark, sink))
+      else Some(AtomicIncrement.readSnapshot(spark, sink, snap))
     val lastBatch = state match {
       case Some(st) =>
         AtomicIncrement.manifestMaxLong(dataE, "__lastBatch").getOrElse(

@@ -91,12 +91,12 @@ object GraftAtomicStreamSource {
 
   private[graft] def dataSchemaOf(spark: SparkSession,
       sink: String): StructType = {
-    val (_, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
-    require(dataE.nonEmpty,
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    require(snap.data.nonEmpty,
       s"graft-atomic stream subscribes to an EXISTING table — no " +
         s"committed snapshot at $sink (commit one first; the " +
         "bootstrap batch then replays it as inserts)")
-    AtomicIncrement.dataSchema(spark, sink, dataE)
+    snap.schema
   }
 
   private[graft] def fullSchema(data: StructType): StructType =
@@ -180,16 +180,16 @@ class GraftAtomicStreamSource(sqlContext: SQLContext, sink: String,
     if (limitV <= base) return base
     val fs = new org.apache.hadoop.fs.Path(sink)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var prev = AtomicIncrement.entriesAtVersion(fs, sink, base)
-      .filterNot(AtomicIncrement.isDv).map(_.path).toSet
+    def dataPaths(v: Long) =
+      AtomicIncrement.snapshotAt(spark, sink, v).data.map(_.path).toSet
+    var prev = dataPaths(base)
     var admitted = base
     var files = 0L
     var bytes = 0L
     var full = false
     while (!full && admitted < limitV) {
       val v = admitted + 1
-      val cur = AtomicIncrement.entriesAtVersion(fs, sink, v)
-        .filterNot(AtomicIncrement.isDv).map(_.path).toSet
+      val cur = dataPaths(v)
       val added = cur.diff(prev)
       val removed = prev.diff(cur)
       val vFiles = added.size.toLong + removed.size.toLong
@@ -281,12 +281,10 @@ class GraftAtomicStreamSource(sqlContext: SQLContext, sink: String,
     * silently dropping the minus frame.
     */
   private def appendOnlyWindow(from: Long, to: Long): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(sink)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (fromDv, fromData) = AtomicIncrement
-      .entriesAtVersion(fs, sink, from).partition(AtomicIncrement.isDv)
-    val (toDv, toData) = AtomicIncrement
-      .entriesAtVersion(fs, sink, to).partition(AtomicIncrement.isDv)
+    val fromSnap = AtomicIncrement.snapshotAt(spark, sink, from)
+    val toSnap = AtomicIncrement.snapshotAt(spark, sink, to)
+    val (fromDv, fromData) = (fromSnap.dvs, fromSnap.data)
+    val (toDv, toData) = (toSnap.dvs, toSnap.data)
     val fromPaths = fromData.map(_.path).toSet
     val toPaths = toData.map(_.path).toSet
     val removed = fromData.filterNot(e => toPaths.contains(e.path))
@@ -306,8 +304,7 @@ class GraftAtomicStreamSource(sqlContext: SQLContext, sink: String,
     val added = toData.filterNot(e => fromPaths.contains(e.path))
     val dataCols = dataSchema.fields.toIndexedSeq
       .map(f => col(f.name).cast(f.dataType).as(f.name))
-    AtomicIncrement.readEffective(spark, sink, added, toDv,
-      Some(dataSchema))
+    AtomicIncrement.readEffective(spark, sink, added, toDv, dataSchema)
       .select(dataCols: _*)
       .withColumn(ChangeTypeCol, lit("insert"))
       .withColumn(CommitVersionCol, lit(to))

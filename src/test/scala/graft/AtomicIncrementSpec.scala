@@ -1820,7 +1820,7 @@ class AtomicIncrementSpec extends SparkSpec {
     val f = fs(sink)
     def line(t: Int, v: Int) = s"_data/batch-t$t/part-$v.parquet"
     val wins = raceRounds(threads = 4, rounds = 300) { (t, v) =>
-      AtomicIncrement.publish(f, sink, Seq(line(t, v)), v.toLong)
+      AtomicIncrement.publish(f, sink, Seq(line(t, v)), v.toLong, None, Nil)
     }
     val winners = wins.zipWithIndex
       .flatMap { case (vs, t) => vs.map(_ -> t) }.groupBy(_._1)
@@ -1833,6 +1833,127 @@ class AtomicIncrementSpec extends SparkSpec {
       val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().toList finally in.close()
       assert(lines.contains(line(t, v)), s"version $v lost its winner's line")
+    }
+  }
+
+  test("racing creates of one immutable tag: exactly one caller wins " +
+      "each name, the others throw, and the tag points at the winner's " +
+      "version") {
+    val sink = tmp()
+    for (i <- 1 to 4) AtomicIncrement.appendIncrementAtomic(
+      Seq((i.toLong, "x")).toDF("k", "v"), sink, "k")
+    val rounds = 300
+    val wins = raceRounds(threads = 4, rounds = rounds) { (t, r) =>
+      try AtomicIncrement.tagVersion(spark, sink, s"tag$r", t + 1L)
+      catch { // the name already stood when this caller looked: it lost
+        case _: IllegalArgumentException =>
+          throw new java.util.ConcurrentModificationException()
+      }
+    }
+    val winners = wins.zipWithIndex
+      .flatMap { case (rs, t) => rs.map(_ -> t) }.groupBy(_._1)
+    val contested = (1 to rounds)
+      .filterNot(r => winners.get(r).exists(_.size == 1))
+    assert(contested.isEmpty, s"names without exactly one winner: " +
+      contested.take(10).map(r => r -> winners.get(r).map(_.map(_._2))))
+    for ((r, Seq((_, t))) <- winners)
+      assert(AtomicIncrement.tagVersionOf(spark, sink, s"tag$r")
+        .contains(t + 1L), s"tag$r does not point at its winner's version")
+  }
+
+  test("a concurrent no-op publish cannot open the watermark floor: a " +
+      "replayed batch racing it never commits a row above the floor") {
+    val sink = tmp()
+    val batch = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    AtomicIncrement.appendIncrementAtomic(batch, sink, "k")
+    AtomicIncrement.deleteWhereAtomic(spark, sink, col("k") > 40)
+    val f = fs(sink)
+    val rounds = 200
+    // thread 0 replays the delivered batch; thread 1 republishes a
+    // snapshot unchanged (same max, same floor) at version + 1. It
+    // reads that snapshot at the end of the round before, so its
+    // publish lands as early as thread 0's snapshot read
+    @volatile var next = AtomicIncrement.latestSnapshot(spark, sink)
+    raceRounds(threads = 2, rounds = rounds) { (t, _) =>
+      if (t == 0) AtomicIncrement.appendIncrementAtomic(batch, sink, "k")
+      else {
+        val s = next
+        try AtomicIncrement.publish(f, sink, (s.data ++ s.dvs).map(_.render),
+          s.version + 1, Some(s.schema), s.floors)
+        finally next = AtomicIncrement.latestSnapshot(spark, sink)
+      }
+      ()
+    }
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    assert(snap.version > rounds / 2, "the no-op publishes did not land")
+    assert(AtomicIncrement.manifestMaxLong(snap.data, "k").contains(40L),
+      "a replayed row above the floor was committed")
+    assert(AtomicIncrement.readCommitted(spark, sink).count() == 40L)
+  }
+
+  /** The Spark jobs `body` starts, counted between two marker jobs:
+    * the listener bus delivers in order, so once the end marker is
+    * seen every job of the body is in. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new CountDownLatch(1)
+    @volatile var counting = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("ai-jobs-begin") => counting = true
+          case Some("ai-jobs-end") => counting = false; ended.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
+        }
+    }
+    def marker(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("ai-jobs-begin")
+      val out = body
+      marker("ai-jobs-end")
+      assert(ended.await(60, TimeUnit.SECONDS), "listener bus never drained")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a feed window across ADD COLUMN reads the column null-filled on " +
+      "both sides, with the schema from the two manifests alone") {
+    val sink = tmp()
+    AtomicIncrement.appendIncrementAtomic(
+      (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "v"), sink, "k")
+    // what ALTER TABLE ... ADD COLUMN commits: one zero-row file
+    // carrying the evolved schema
+    val evolvedAt = AtomicIncrement.evolveSchemaAtomic(spark, sink,
+      AtomicIncrement.latestSnapshot(spark, sink).schema
+        .add("note", org.apache.spark.sql.types.StringType))
+    // an append inside the window that lacks the new column
+    AtomicIncrement.appendIncrementAtomic(
+      (11 to 15).map(i => (i.toLong, s"v$i")).toDF("k", "v"), sink, "k")
+    val to = AtomicIncrement.snapshot(spark, sink)._1
+    // the column was added before the window (its file is common to
+    // both versions) and inside it (its file is on the plus side)
+    for (from <- Seq(evolvedAt, evolvedAt - 1)) {
+      val ((plus, minus), jobs) = jobsOf {
+        val (p, m) = AtomicIncrement.changesBetween(spark, sink, from, to)
+        p.count(); m.count(); (p, m)
+      }
+      for (side <- Seq(plus, minus))
+        assert(side.columns.toSeq == Seq("k", "v", "note"),
+          s"window ($from, $to]: ${side.columns.toSeq}")
+      assert(plus.select("k").as[Long].collect().sorted.toSeq ==
+        (11L to 15L), s"window ($from, $to]")
+      assert(plus.filter(col("note").isNotNull).count() == 0)
+      assert(minus.count() == 0)
+      // only the two counts' jobs: the union schema comes from the two
+      // manifests, where a footer merge-schema job would make it 4
+      assert(jobs == 3, s"window ($from, $to] ran $jobs jobs")
     }
   }
 

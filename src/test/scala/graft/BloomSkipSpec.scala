@@ -256,8 +256,9 @@ class BloomSkipSpec extends SparkSpec {
     val staged = graft.operators.Txn.begin(spark, sink)
       .stage(data.limit(0), Nil).map(_.path)
     assert(staged.nonEmpty, "fixture needs an empty part file")
-    val (v, prior) = AtomicIncrement.snapshot(spark, sink)
-    AtomicIncrement.publish(f, sink, prior ++ staged, v + 1)
+    val snap = AtomicIncrement.latestSnapshot(spark, sink)
+    AtomicIncrement.publish(f, sink, snap.data.map(_.path) ++ staged,
+      snap.version + 1, Some(snap.schema), snap.floors)
     val files = AtomicIncrement.committedFiles(spark, sink)
     assert(files.size == 1 + staged.size)
     assert(BloomSkip.ensureSidecars(spark, sink, "id") == files.size)

@@ -114,20 +114,25 @@ class GraftSqlDmlSpec extends SparkSpec {
   test("SQL UPDATE on a dv-carrying table: tombstoned rows never " +
       "resurrect; the rewrite outranks standing tombstones") {
     install()
-    val sink = tmp("graft_dml_dv")
-    try {
-      AtomicIncrement.appendIncrementAtomic(
-        (1 to 20).map(i => (i.toLong, i * 1.0)).toDF("k", "amt"),
-        sink, "k")
-      AtomicIncrement.mergeOnReadAtomic(
-        Seq((5L, 0.0, true)).toDF("k", "amt", "del"), sink, "k", "del")
-      spark.sql(s"UPDATE graft.`$sink` SET amt = 777 WHERE k <= 10")
-      val got = AtomicIncrement.readCommitted(spark, sink)
-      assert(got.count() === 19L)
-      assert(got.filter($"k" === 5L).count() === 0L,
-        "a dv-masked row resurrected through SQL UPDATE")
-      assert(got.filter($"k" <= 10 && $"amt" =!= 777.0).count() === 0L)
-    } finally rm(sink)
+    // a long key, and an int key whose dv file still holds the
+    // churn's LONG keys
+    for (key <- Seq("long", "int")) {
+      val sink = tmp("graft_dml_dv")
+      try {
+        AtomicIncrement.appendIncrementAtomic(
+          (1 to 20).map(i => (i.toLong, i * 1.0)).toDF("k", "amt")
+            .withColumn("k", $"k".cast(key)), sink, "k")
+        AtomicIncrement.mergeOnReadAtomic(
+          Seq((5L, 0.0, true)).toDF("k", "amt", "del")
+            .withColumn("k", $"k".cast(key)), sink, "k", "del")
+        spark.sql(s"UPDATE graft.`$sink` SET amt = 777 WHERE k <= 10")
+        val got = AtomicIncrement.readCommitted(spark, sink)
+        assert(got.count() === 19L, key)
+        assert(got.filter($"k" === 5L).count() === 0L,
+          s"a dv-masked row resurrected through SQL UPDATE ($key key)")
+        assert(got.filter($"k" <= 10 && $"amt" =!= 777.0).count() === 0L)
+      } finally rm(sink)
+    }
   }
 
   test("no-match SQL UPDATE publishes no version") {

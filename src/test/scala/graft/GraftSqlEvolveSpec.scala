@@ -97,7 +97,6 @@ class GraftSqlEvolveSpec extends SparkSpec {
       AtomicIncrement.appendIncrementAtomic(
         rows(1, 10).repartition(1), sink, "k")
       spark.sql(s"ALTER TABLE graft.`$sink` ADD COLUMN note STRING")
-      AtomicIncrement.clearSchemaMemoForTest() // cold process
       val old = spark.sql(
         s"SELECT * FROM graft.`$sink` VERSION AS OF 1")
       assert(old.columns.toSeq == Seq("k", "grp", "amt"),

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * resolution is O(manifest) even first-touch in a fresh process —
   * the footer sweep survives only as the legacy fallback. Pins:
   * (1) the manifest line ALONE answers (data files can vanish and
-  * dataSchema still resolves — a sweep would throw); (2) a legacy
-  * manifest without the line still sweeps correctly; (3) a
+  * the snapshot's schema still resolves — a sweep would throw); (2)
+  * a legacy manifest without the line still sweeps correctly, and
+  * its next commit embeds the line again; (3) a
   * schema-evolving append embeds the union and readers agree with
   * mergeSchema ground truth; (4) time travel resolves the pinned
   * version's schema from its own manifest.
@@ -45,11 +46,11 @@ class ManifestSchemaSpec extends SparkSpec {
       val swept = spark.read.option("mergeSchema", "true")
         .parquet(AtomicIncrement.committedFiles(spark, sink)
           .map(f => s"$sink/$f"): _*).schema
-      // cold process: memo wiped, then the snapshot parse must seed
-      // it from the embedded line — with every data file MOVED AWAY,
-      // a footer sweep would throw file-not-found
-      AtomicIncrement.clearSchemaMemoForTest()
-      val (_, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
+      // the snapshot parse alone must answer from the embedded line
+      // — with every data file MOVED AWAY, a footer sweep would throw
+      // file-not-found
+      val snap = AtomicIncrement.latestSnapshot(spark, sink)
+      val dataE = snap.data
       val f = fs(sink)
       val hidden = new org.apache.hadoop.fs.Path(sink, "_hidden")
       f.mkdirs(hidden)
@@ -59,7 +60,7 @@ class ManifestSchemaSpec extends SparkSpec {
           from.getName + "_" + math.abs(e.path.hashCode))
         assert(f.rename(from, to)); (from, to)
       }
-      val got = AtomicIncrement.dataSchema(spark, sink, dataE)
+      val got = snap.schema
       moved.foreach { case (from, to) => f.rename(to, from) }
       assert(got.fieldNames.toSeq === swept.fieldNames.toSeq)
       assert(got.fields.map(x => (x.name, x.dataType)).toSeq ===
@@ -95,11 +96,17 @@ class ManifestSchemaSpec extends SparkSpec {
       try out.write(lines.filterNot(_.startsWith("__graft_schema"))
         .mkString("\n").getBytes("UTF-8"))
       finally out.close()
-      AtomicIncrement.clearSchemaMemoForTest()
-      val (_, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
-      val got = AtomicIncrement.dataSchema(spark, sink, dataE)
+      val got = AtomicIncrement.latestSnapshot(spark, sink).schema
       assert(got.fieldNames.toSeq === Seq("k", "v"))
       assert(AtomicIncrement.readCommitted(spark, sink).count() === 10L)
+      // the next commit upgrades the legacy manifest: its writer's
+      // snapshot swept once, and the publish embeds the result
+      AtomicIncrement.appendIncrementAtomic(
+        (11 to 12).map(i => (i.toLong, s"v$i")).toDF("k", "v"), sink, "k")
+      val upgraded = AtomicIncrement.latestSnapshot(spark, sink)
+      assert(upgraded.version === 2L)
+      assert(upgraded.embeddedSchema.map(_.fieldNames.toSeq) ===
+        Some(Seq("k", "v")))
     } finally rm(sink)
   }
 
@@ -113,14 +120,11 @@ class ManifestSchemaSpec extends SparkSpec {
       AtomicIncrement.appendIncrementAtomic(
         (11 to 20).map(i => (i.toLong, i * 1.0, s"g$i"))
           .toDF("k", "amt", "grp"), sink, "k")
-      AtomicIncrement.clearSchemaMemoForTest()
-      val f = fs(sink)
-      val v1E = AtomicIncrement.entriesAtVersion(f, sink, 1L)
-      val got = AtomicIncrement.dataSchema(spark, sink, v1E)
+      val got = AtomicIncrement.snapshotAt(spark, sink, 1L).schema
       // version 1 predates the evolution: two columns, not three —
-      // and the resolve must come from v1's own embedded line (the
-      // memo was cold; no footer open can tell a 2-col subset apart
-      // faster than the line does)
+      // and the resolve must come from v1's own embedded line (no
+      // footer open can tell a 2-col subset apart faster than the
+      // line does)
       assert(got.fieldNames.toSeq === Seq("k", "amt"))
     } finally rm(sink)
   }
@@ -135,9 +139,7 @@ class ManifestSchemaSpec extends SparkSpec {
       AtomicIncrement.mergeOnReadAtomic(
         Seq((5L, 500.0, false), (6L, 0.0, true))
           .toDF("k", "amt", "del"), sink, "k", "del")
-      AtomicIncrement.clearSchemaMemoForTest()
-      val (_, dataE, _) = AtomicIncrement.snapshotSplit(spark, sink)
-      val got = AtomicIncrement.dataSchema(spark, sink, dataE)
+      val got = AtomicIncrement.latestSnapshot(spark, sink).schema
       assert(got.fieldNames.toSeq === Seq("k", "amt"))
       val rows = AtomicIncrement.readCommitted(spark, sink)
       assert(rows.count() === 19L)

@@ -216,6 +216,30 @@ class MergeOnReadSpec extends SparkSpec {
         Seq((5L, "zz", 0.0, false)).toDF("k", "v", "x", "del"),
         sink, "k", "del")
     }
+    // an Int-keyed table: its dv files hold the churn's LONG keys (the
+    // schema ChurnKeys.toDf writes), and every dv read — the masked
+    // read, the feed's newly-masked side, the targeted fold — reads
+    // them under that schema and agrees with readCommitted
+    val isink = tmp()
+    for (r <- Seq(1 to 10, 11 to 20))
+      AtomicIncrement.appendIncrementAtomic(
+        r.map(i => (i, s"v$i")).toDF("k", "v").repartition(1), isink, "k")
+    val v1 = AtomicIncrement.snapshot(spark, isink)._1
+    val ires = AtomicIncrement.mergeOnReadAtomic(
+      Seq((5, "UPD", false), (17, "", true)).toDF("k", "v", "del"),
+      isink, "k", "del")
+    def gotI = AtomicIncrement.readCommitted(spark, isink)
+      .select("k", "v").as[(Int, String)].collect().toMap
+    val expectI = ((1 to 20).filterNot(Set(5, 17))
+      .map(i => i -> s"v$i") ++ Seq(5 -> "UPD")).toMap
+    assert(gotI == expectI, s"Int-keyed MoR read wrong: ${gotI.toSeq.sorted.take(6)}")
+    val (_, minusI) = AtomicIncrement.changesBetween(spark, isink, v1,
+      ires.version)
+    assert(minusI.select("k", "v").as[(Int, String)].collect().toSet ==
+      Set((5, "v5"), (17, "v17")))
+    assert(AtomicIncrement.foldDvsTargeted(spark, isink)._1 == 2)
+    assert(AtomicIncrement.snapshotSplit(spark, isink)._3.isEmpty)
+    assert(gotI == expectI, "Int-keyed targeted fold moved content")
   }
 
   test("TARGETED dv fold rewrites only the masked files: a churn-" +

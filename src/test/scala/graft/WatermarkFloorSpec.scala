@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * replay the original batch → ZERO rows publish (the r15 NOTES'
   * documented hazard, now closed structurally); genuinely new rows
   * still land; merge-deletes are covered; the floor survives a
-  * process restart (manifest line, not memo); a full snapshot
+  * process restart (the manifest line alone); a full snapshot
   * REPLACE deliberately resets it.
   */
 class WatermarkFloorSpec extends SparkSpec {
@@ -60,8 +60,6 @@ class WatermarkFloorSpec extends SparkSpec {
     try {
       AtomicIncrement.appendIncrementAtomic(batch(1, 50), sink, "k")
       AtomicIncrement.deleteWhereAtomic(spark, sink, $"k" > 40)
-      AtomicIncrement.clearFloorMemoForTest()
-      AtomicIncrement.clearSchemaMemoForTest()
       val n = AtomicIncrement.appendIncrementAtomic(batch(1, 50), sink, "k")
       assert(n === 0L, s"cold-process replay re-admitted $n rows")
     } finally rm(sink)

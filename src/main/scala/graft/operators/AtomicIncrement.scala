@@ -163,9 +163,24 @@ object AtomicIncrement {
     * prefers it over filesystem mtime, which a DistCp/backup-restore
     * scrambles silently; manifests written before the stamp existed
     * fall back to mtime.
+    *
+    * The same line carries a `__graft_batch` group on a sink the CDC
+    * folds write: the highest batch id folded into it, the folds'
+    * exactly-once key (Delta's `txn` action, one id per sink). Every
+    * commit writes it — a fold its new id, any other commit the id of
+    * the snapshot it lands on — so a rewrite never loses it.
     */
   private val CommitMetaPath = "__graft_commit"
   private val TsCol = "__graft_ts"
+  private val BatchCol = "__graft_batch"
+
+  /** The per-row state columns the folds recorded their batch id in
+    * before the commit line carried it (`IncrementalAgg`'s CDC folds,
+    * `AggStream`). A legacy manifest answers [[Snapshot.lastBatch]]
+    * from their exact stats; a fold drops them from the state it
+    * reads.
+    */
+  private val LegacyBatchCols = Seq("__b", "__lastBatch")
 
   /** MANIFEST-EMBEDDED SCHEMA (round 16): a second reserved line
     * carrying the snapshot's merged data schema as base64(JSON) —
@@ -215,9 +230,12 @@ object AtomicIncrement {
     */
   private val FloorMetaPath = "__graft_wmfloor"
 
-  private def commitMetaLine(ms: Long): String =
+  private def commitMetaLine(ms: Long, batch: Option[Long]): String = {
+    def group(c: String, v: Long) =
+      FileColumnStats(c, "long", v.toString, v.toString)
     ManifestEntry(CommitMetaPath,
-      Seq(FileColumnStats(TsCol, "long", ms.toString, ms.toString))).render
+      group(TsCol, ms) +: batch.map(group(BatchCol, _)).toSeq).render
+  }
 
   private def schemaMetaLine(
       schema: org.apache.spark.sql.types.StructType): String =
@@ -297,15 +315,17 @@ object AtomicIncrement {
   }
 
   /** ONE parsed manifest: its version, data lines, delete-vector
-    * lines, the embedded `__graft_schema` line and the watermark
-    * floors ([[FloorMetaPath]]). Every reader and writer works from
+    * lines, the embedded `__graft_schema` line, the watermark floors
+    * ([[FloorMetaPath]]) and the last folded batch id (the commit
+    * line's `__graft_batch` group). Every reader and writer works from
     * one of these, so nothing about a snapshot is re-read or kept
     * beside it. Immutable like the manifest it came from.
     */
   private[graft] final case class Snapshot(version: Long,
       data: Seq[ManifestEntry], dvs: Seq[ManifestEntry],
       embeddedSchema: Option[org.apache.spark.sql.types.StructType],
-      floors: Seq[FileColumnStats])(spark: SparkSession, sink: String) {
+      floors: Seq[FileColumnStats], lastBatch: Option[Long])(
+      spark: SparkSession, sink: String) {
 
     /** Whether anything can answer the schema: the embedded line, or
       * data files to sweep. A legacy schema-only manifest has neither.
@@ -327,6 +347,28 @@ object AtomicIncrement {
       }
   }
 
+  /** Whether folding `batchId` into `snap`'s state would replay a
+    * batch: the id is at or below [[Snapshot.lastBatch]]. A legacy
+    * state (it still has a per-row batch column) whose manifest
+    * answers no id cannot tell, so it fails instead of folding again.
+    */
+  private[graft] def isReplay(snap: Snapshot, sink: String,
+      batchId: Long): Boolean = {
+    if (snap.lastBatch.isEmpty && snap.hasSchema &&
+        snap.schema.fieldNames.exists(LegacyBatchCols.contains))
+      throw new IllegalStateException(s"fold state at $sink has a " +
+        "legacy batch column but its manifest records no batch id")
+    snap.lastBatch.exists(batchId <= _)
+  }
+
+  /** A fold's prior state, None before the first fold: `snap`'s rows
+    * minus any legacy batch column, which the fold's commit drops.
+    */
+  private[graft] def readFoldState(spark: SparkSession, sink: String,
+      snap: Snapshot): Option[DataFrame] =
+    if (snap.data.isEmpty) None
+    else Some(readSnapshot(spark, sink, snap).drop(LegacyBatchCols: _*))
+
   private def manifestPath(sink: String, version: Long): Path =
     new Path(new Path(sink, ManifestDir), f"$version%020d")
 
@@ -339,10 +381,16 @@ object AtomicIncrement {
       finally in.close()
     val (meta, entries) = all.partition(isMeta)
     val (dvs, data) = entries.partition(isDv)
+    // a manifest written before the commit line carried the batch id
+    // answers from the exact max of its state's legacy batch column
+    val lastBatch = meta.find(_.path == CommitMetaPath)
+      .flatMap(_.statsFor(BatchCol)).flatMap(_.min.toLongOption)
+      .orElse(LegacyBatchCols.view.flatMap(manifestMaxLong(data, _))
+        .headOption)
     Snapshot(version, data, dvs,
       meta.find(_.path == SchemaMetaPath).flatMap(decodeSchemaMeta),
-      meta.find(_.path == FloorMetaPath).map(_.allStats).getOrElse(Nil))(
-      spark, sink)
+      meta.find(_.path == FloorMetaPath).map(_.allStats).getOrElse(Nil),
+      lastBatch)(spark, sink)
   }
 
   /** The latest committed snapshot — version 0 with nothing in it
@@ -354,7 +402,7 @@ object AtomicIncrement {
       sink: String): Snapshot = {
     val fs = fsOf(spark, sink)
     latestManifest(fs, sink) match {
-      case None => Snapshot(0L, Nil, Nil, None, Nil)(spark, sink)
+      case None => Snapshot(0L, Nil, Nil, None, Nil, None)(spark, sink)
       case Some((v, mf)) => parseSnapshot(spark, sink, fs, v, mf)
     }
   }
@@ -365,7 +413,8 @@ object AtomicIncrement {
     */
   private[graft] def snapshotAt(spark: SparkSession, sink: String,
       version: Long): Snapshot = {
-    if (version == 0L) return Snapshot(0L, Nil, Nil, None, Nil)(spark, sink)
+    if (version == 0L)
+      return Snapshot(0L, Nil, Nil, None, Nil, None)(spark, sink)
     val fs = fsOf(spark, sink)
     val mf = manifestPath(sink, version)
     require(fs.exists(mf), s"no manifest version $version at $sink")
@@ -1287,10 +1336,9 @@ object AtomicIncrement {
     exactMaxGroup(column, entries.map(_.statsFor(column)))
 
   /** Integral-column max from manifest stats alone
-    * ([[ManifestStats.exactBounds]]) — the zero-job answer for the
-    * fold-metadata columns (`__b`, `__wm`) the CDC folds stamp into
-    * their state lines (round-17 optimization: the replay-shield read
-    * was one 1-task job per fold/sync call).
+    * ([[ManifestStats.exactBounds]]), zero jobs — how the manifest
+    * parse answers a legacy fold state's batch id from its
+    * [[LegacyBatchCols]] stats.
     */
   private[graft] def manifestMaxLong(entries: Seq[ManifestEntry],
       column: String): Option[Long] =
@@ -1595,13 +1643,14 @@ object AtomicIncrement {
     * loses). `snapshotSchema` becomes the `__graft_schema` line (None
     * writes none); the new floor line folds this version's maxes over
     * `baseFloors` — the writer's snapshot's floors, or Nil for a
-    * deliberate reset. The temp file is fully written and closed
+    * deliberate reset. `batch` is the commit line's `__graft_batch`
+    * id (None writes none). The temp file is fully written and closed
     * before the move, so no reader can observe a partial manifest.
     */
   private[graft] def publish(fs: FileSystem, sink: String,
       files: Seq[String], version: Long,
       snapshotSchema: Option[org.apache.spark.sql.types.StructType],
-      baseFloors: Seq[FileColumnStats]): Unit = {
+      baseFloors: Seq[FileColumnStats], batch: Option[Long]): Unit = {
     val dir = new Path(sink, ManifestDir)
     fs.mkdirs(dir)
     val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
@@ -1610,7 +1659,7 @@ object AtomicIncrement {
       parsed.filterNot(e => isMeta(e) || isDv(e)))
     val floorLine = if (floors.isEmpty) Nil
       else Seq(ManifestEntry(FloorMetaPath, floors).render)
-    val metaLines = (commitMetaLine(System.currentTimeMillis()) +:
+    val metaLines = (commitMetaLine(System.currentTimeMillis(), batch) +:
       snapshotSchema.map(s => schemaMetaLine(asNullableStruct(s))).toSeq) ++
       floorLine
     val out = fs.create(tmp, false)
@@ -1685,7 +1734,8 @@ object AtomicIncrement {
     // row-preserving maintenance must CARRY the watermark floor —
     // only a deliberate snapshot replace may reset it
     val staged = replaceGated(snap.repartition(numFiles),
-      sink, base.version, statsFields, carriedFloors = base.floors)
+      sink, base.version, base.lastBatch, statsFields,
+      carriedFloors = base.floors)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -1732,8 +1782,8 @@ object AtomicIncrement {
     val clustered = snap
       .repartitionByRange(numFiles, byCols.map(col): _*)
       .sortWithinPartitions(byCols.map(col): _*)
-    val staged = replaceGated(clustered, sink, base.version, statsFields,
-      carriedFloors = base.floors)
+    val staged = replaceGated(clustered, sink, base.version,
+      base.lastBatch, statsFields, carriedFloors = base.floors)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -1977,8 +2027,8 @@ object AtomicIncrement {
     val statsFields = (zCols
         .flatMap(c => snap.schema.fields.find(_.name.equalsIgnoreCase(c)))
       ++ coveredStatsFields(dataE, snap.schema)).distinct
-    val staged = replaceGated(clustered, sink, base.version, statsFields,
-      carriedFloors = base.floors)
+    val staged = replaceGated(clustered, sink, base.version,
+      base.lastBatch, statsFields, carriedFloors = base.floors)
     bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
@@ -2006,11 +2056,14 @@ object AtomicIncrement {
     * for pinned readers until [[vacuumUncommitted]]; any commit that
     * lands after the caller's snapshot read collides at publish and
     * this replacement loses (staged files cleaned, exception thrown —
-    * re-run from a fresh snapshot).
+    * re-run from a fresh snapshot). The sink's recorded batch id
+    * carries over, so a rewritten fold state still refuses a replay.
     */
   def replaceSnapshot(df: DataFrame, sink: String,
-      expectVersion: Long): Unit =
-    { replaceGated(df, sink, expectVersion); () }
+      expectVersion: Long): Unit = {
+    replaceGated(df, sink, expectVersion,
+      latestSnapshot(df.sparkSession, sink).lastBatch); ()
+  }
 
   /** BLIND append — SQL `INSERT INTO` semantics through the catalog
     * face: rows land as new staged files with NO watermark gate (ANSI
@@ -2056,7 +2109,8 @@ object AtomicIncrement {
     val version = latestSnapshot(spark, sink).version
     require(version == 0L,
       s"table already committed at $sink (version $version)")
-    publish(fsOf(spark, sink), sink, Seq.empty, 1L, Some(schema), Nil)
+    publish(fsOf(spark, sink), sink, Seq.empty, 1L, Some(schema), Nil,
+      None)
   }
 
   /** `ALTER TABLE … ADD COLUMN` as a DEGENERATE APPEND (round 17):
@@ -2105,18 +2159,20 @@ object AtomicIncrement {
     * replace is a deliberate new history (the Complete-mode sink
     * rewrites its rollup every batch), not a destructive edit the
     * replay shield must remember. A row-preserving rewrite passes its
-    * snapshot's floors as `carriedFloors` instead.
+    * snapshot's floors as `carriedFloors` instead. `batch` is the id
+    * the commit line records: a fold's new one, or the replaced
+    * snapshot's own.
     */
   private[graft] def replaceGated(df: DataFrame, sink: String,
-      expectVersion: Long,
+      expectVersion: Long, batch: Option[Long],
       statsFields: Seq[org.apache.spark.sql.types.StructField] = Nil,
       carriedFloors: Seq[FileColumnStats] = Nil,
       gate: () => Boolean = () => true): Seq[ManifestEntry] = {
     val spark = df.sparkSession
-    val txn = new Txn(spark, sink,
-      Snapshot(expectVersion, Nil, Nil, None, carriedFloors)(spark, sink))
+    val txn = new Txn(spark, sink, Snapshot(expectVersion, Nil, Nil, None,
+      carriedFloors, None)(spark, sink))
     txn.commit(gate = _ => gate(), carry = _ => Nil,
-      schema = _ => Some(df.schema))(
+      schema = _ => Some(df.schema), batch = batch)(
       txn.stage(df, statsFields)).fold(Seq.empty[ManifestEntry])(_._2)
   }
 
@@ -2723,7 +2779,7 @@ object AtomicIncrement {
     * version" and "redelivery" are indistinguishable here and
     * silently skipping would swallow genuine out-of-order feeds. A
     * streaming driver therefore shields on its batch id BEFORE
-    * calling this (the [[IncrementalAgg.mergeCdcBatch]] `__b`
+    * calling this (the [[IncrementalAgg.mergeCdcBatch]] recorded-id
     * discipline), exactly once per micro-batch; scheduled batch jobs
     * replay-from-source instead.
     */

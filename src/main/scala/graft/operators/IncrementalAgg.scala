@@ -80,7 +80,7 @@ object IncrementalAgg {
       var n = 0L
       // stamp `__wm` stats into the state lines so the next fold's
       // stored-watermark read answers from the manifest (zero jobs)
-      AtomicIncrement.replaceGated(merged, sink, version,
+      AtomicIncrement.replaceGated(merged, sink, version, snap.lastBatch,
         statsFields = Seq(merged.schema("__wm")), gate = () => {
           n = gate.long()
           n > 0
@@ -110,10 +110,12 @@ object IncrementalAgg {
     *
     * Exactly-once on replay is keyed on `batchId` (the [[graft.streaming.AggStream]]
     * discipline — monotone per sink, NOT a data watermark: CDC batches
-    * routinely carry old keys): a batch at or below the state's
-    * `__b` high-water no-ops. Publication is the same OCC snapshot
-    * replace as every state fold here. Returns whether the batch
-    * applied (false = replay).
+    * routinely carry old keys): a batch at or below the batch id the
+    * sink's last commit recorded ([[AtomicIncrement.Snapshot]]'s
+    * `lastBatch`) no-ops before reading anything. Publication is the
+    * same OCC snapshot replace as every state fold here, recording
+    * `batchId` on its commit line. Returns whether the batch applied
+    * (false = replay).
     *
     * Sums accumulate in the column's NATIVE family — integral sums
     * stay LongType exactly like [[mergeBatch]]'s (a long count rolled
@@ -154,20 +156,11 @@ object IncrementalAgg {
       batchId: Long, weightCol: Option[String]): Boolean = {
     val spark = plus.sparkSession
     val snap = AtomicIncrement.latestSnapshot(spark, sink)
-    val (version, dataE) = (snap.version, snap.data)
-    val prior =
-      if (dataE.isEmpty) None
-      else Some(AtomicIncrement.readSnapshot(spark, sink, snap))
-    // the bootstrap fold (no committed state yet) always applies — a
+    // the bootstrap fold (nothing folded yet) always applies — a
     // bootstrap conventionally sits at batchId −1 so the stream's own
-    // ids can start at 0 without colliding with it. The replay-shield
-    // read answers from manifest stats when the state lines stamp
-    // them (every fold since the round-17 optimization; zero jobs),
-    // else one small max job (legacy sinks).
-    val last = prior.map(st =>
-      AtomicIncrement.manifestMaxLong(dataE, "__b").getOrElse(
-        st.agg(max("__b")).head().getLong(0))).getOrElse(Long.MinValue)
-    if (prior.nonEmpty && batchId <= last) return false
+    // ids can start at 0 without colliding with it
+    if (AtomicIncrement.isReplay(snap, sink, batchId)) return false
+    val prior = AtomicIncrement.readFoldState(spark, sink, snap)
     // ONE exchange for the whole fold (guide §2.3/§2.4, round 18): the
     // prior state, the plus rows, and the minus rows union as signed
     // per-row CONTRIBUTIONS (state rows carry their folded __n/sums,
@@ -180,16 +173,15 @@ object IncrementalAgg {
     // algebra, typed-zero coalesce, and the __n > 0 drop are unchanged
     // (Σ±value ≡ Σplus − Σminus; doubles reassociate within the same
     // rounding the fixtures already tolerate).
-    val merged = mergedCdcState(prior, plus, minus, keys, sumCols,
-      weightCol).withColumn("__b", lit(batchId))
-    AtomicIncrement.replaceGated(merged, sink, version,
-      statsFields = Seq(merged.schema("__b")))
+    AtomicIncrement.replaceGated(
+      mergedCdcState(prior, plus, minus, keys, sumCols, weightCol),
+      sink, snap.version, Some(batchId))
     true
   }
 
   /** The fold's merged state in one aggregate: signed contributions
     * from prior state + both batch sides through a single groupBy.
-    * Output: keys, `__n`, `sum_<c>`s (no `__b`).
+    * Output: keys, `__n`, `sum_<c>`s.
     */
   private[graft] def mergedCdcState(prior: Option[DataFrame],
       plus: DataFrame, minus: DataFrame, keys: Seq[String],
@@ -212,7 +204,7 @@ object IncrementalAgg {
         sumCols.map(c =>
           (if (sign >= 0) widened(c) else -widened(c)).as(s"sum_$c")): _*)
     }
-    val all = (prior.map(_.drop("__b")).toSeq :+
+    val all = (prior.toSeq :+
       contrib(plus, 1) :+ contrib(minus, -1)).reduce(_ unionByName _)
     // typed zero for a surviving group whose value contributions are
     // all null — signedAgg's zeroOf semantics, applied once post-union
@@ -262,9 +254,10 @@ object IncrementalAgg {
     * publishing — silence there would write stale or missing extremes.
     *
     * Exactly-once, publication, and bootstrap follow [[mergeCdcBatch]]
-    * (`__b` batch shield, OCC snapshot replace; bootstrap = everything
-    * in `plus`, `minus` empty, `churnedRows` = the full load). State
-    * schema: keys, `__n`, `sum_<c>`s, `min_<c>`/`max_<c>`s, `__b`.
+    * (the commit line's batch id, OCC snapshot replace; bootstrap =
+    * everything in `plus`, `minus` empty, `churnedRows` = the full
+    * load). State schema: keys, `__n`, `sum_<c>`s,
+    * `min_<c>`/`max_<c>`s.
     * Returns whether the batch applied (false = replay).
     */
   def mergeCdcExtremes(plus: DataFrame, minus: DataFrame,
@@ -275,14 +268,8 @@ object IncrementalAgg {
       "no min/max columns: use mergeCdcBatch, which needs no rescan")
     val spark = plus.sparkSession
     val snap = AtomicIncrement.latestSnapshot(spark, sink)
-    val (version, dataE) = (snap.version, snap.data)
-    val prior =
-      if (dataE.isEmpty) None
-      else Some(AtomicIncrement.readSnapshot(spark, sink, snap))
-    val last = prior.map(st =>
-      AtomicIncrement.manifestMaxLong(dataE, "__b").getOrElse(
-        st.agg(max("__b")).head().getLong(0))).getOrElse(Long.MinValue)
-    if (prior.nonEmpty && batchId <= last) return false
+    if (AtomicIncrement.isReplay(snap, sink, batchId)) return false
+    val prior = AtomicIncrement.readFoldState(spark, sink, snap)
     val kcols = keys.map(col)
     val mmNames = minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c"))
     // the groups this batch touches, either side; null group keys are
@@ -331,9 +318,8 @@ object IncrementalAgg {
         .filter(col("__cov"))
         .select(kcols ++ (col("__n") +:
           (sumCols.map(c => col(s"sum_$c")) ++ mmNames.map(col))): _*)
-        .withColumn("__b", lit(batchId))
-      AtomicIncrement.replaceGated(merged, sink, version,
-        statsFields = Seq(merged.schema("__b")), gate = () => {
+      AtomicIncrement.replaceGated(merged, sink, snap.version,
+        Some(batchId), gate = () => {
           require(gate.long() == 0L,
             "churnedRows under-covers the churn: a group alive by the " +
               "count algebra has no surviving rows to rescan extremes " +
@@ -361,7 +347,7 @@ object IncrementalAgg {
     * exact `COUNT(DISTINCT)` shuffles anyway, held incrementally; for
     * cardinalities where even that is too large, the alternative is
     * deletion-capable sketch state (a counting HLL), trading exactness
-    * — this is the exact path. Same `__b` replay shield, OCC publish,
+    * — this is the exact path. Same batch-id replay shield, OCC publish,
     * and bootstrap conventions as every CDC fold here.
     */
   def mergeCdcDistinct(plus: DataFrame, minus: DataFrame, sink: String,
@@ -430,7 +416,7 @@ object IncrementalAgg {
     * pinned error band and SATURATION (occupancy → m drives the
     * estimator to infinity — size m ≥ 4·D_expected; the read face
     * answers NULL for a fully-saturated group rather than a number).
-    * Same `__b` replay shield, OCC publish, and bootstrap conventions
+    * Same batch-id replay shield, OCC publish, and bootstrap conventions
     * as every CDC fold here.
     */
   def mergeCdcDistinctApprox(plus: DataFrame, minus: DataFrame,
@@ -483,10 +469,11 @@ object IncrementalAgg {
     *    heavy hitter's estimate is ≥ its true count and outranks the
     *    cap boundary.
     *
-    * Crash matrix (each child carries its own `__b` shield, folded in
-    * a fixed order): die before the cm fold → both replay; between cm
-    * and pool → cm no-ops, pool applies; after both → both no-op and
-    * the prune re-runs idempotently. Read via [[readTopKSketch]] with
+    * Crash matrix (each child sink's commit line records its own
+    * batch id; the two folds run side by side): die before either
+    * fold lands → both replay; after one → it no-ops, the other
+    * applies; after both → both no-op and the prune re-runs
+    * idempotently. Read via [[readTopKSketch]] with
     * the SAME width/depth.
     */
   def mergeCdcTopKSketch(plus: DataFrame, minus: DataFrame, sink: String,
@@ -520,12 +507,12 @@ object IncrementalAgg {
     // prune the pool to the cap by CM estimate — state-sized, runs
     // even on replay (idempotent), so a crash mid-prune self-heals
     val cap = poolFactor * k
-    val (poolVersion, poolFiles) = AtomicIncrement.snapshot(spark, poolSink)
-    if (poolFiles.nonEmpty) {
-      val pool = readState(spark, poolSink)
+    val poolSnap = AtomicIncrement.latestSnapshot(spark, poolSink)
+    if (poolSnap.data.nonEmpty) {
+      val pool = AtomicIncrement.readSnapshot(spark, poolSink, poolSnap)
       // the estimate joins BACK onto the intact pool rows — the pruned
-      // state must keep the fold's full schema (multiplicity `__n`,
-      // batch shield `__b`), not the estimate projection
+      // state must keep the fold's full schema (multiplicity `__n`),
+      // not the estimate projection
       val est = cmEstimate(spark, cellSink, pool, keys, valueCol,
         width, depth).select(
         (keys.map(k => col(k).as(s"__e_$k")) :+
@@ -537,11 +524,13 @@ object IncrementalAgg {
         .orderBy(col("__est").desc, col(valueCol))
       val ranked = pool.join(est, estCond)
         .withColumn("__rk", row_number().over(win))
+      // the prune's commit keeps the pool's batch id, so a replay of
+      // the batch it follows still no-ops
       if (ranked.filter(col("__rk") > cap).limit(1).count() > 0)
-        AtomicIncrement.replaceSnapshot(
+        AtomicIncrement.replaceGated(
           ranked.filter(col("__rk") <= cap)
             .select(pool.columns.toIndexedSeq.map(col): _*),
-          poolSink, poolVersion)
+          poolSink, poolSnap.version, poolSnap.lastBatch)
     }
     applied
   }
@@ -549,12 +538,12 @@ object IncrementalAgg {
   /** Run two INDEPENDENT fold legs concurrently (guide §2.6: actions
     * are only sequential because the driver calls them sequentially —
     * Spark schedules concurrent jobs FIFO and back-fills idle cores).
-    * The legs must target DISJOINT sinks: each keeps its own `__b`
-    * replay shield and OCC token, so the pair's crash/replay matrix is
-    * the product of the legs' independent ones — a crash can leave
-    * either applied and the retry no-ops whichever already landed,
-    * exactly as under the old fixed order (neither leg ever read the
-    * other's sink). Errors rethrow on the caller's thread; the other
+    * The legs must target DISJOINT sinks: each sink's commit line
+    * keeps its own batch id, and each fold its own OCC token, so the
+    * pair's crash/replay matrix is the product of the legs'
+    * independent ones — a crash can leave either applied and the
+    * retry no-ops whichever already landed, exactly as under the old
+    * fixed order (neither leg ever read the other's sink). Errors rethrow on the caller's thread; the other
     * leg is joined first so no fold is ever abandoned mid-commit. When
     * both legs throw, leg A's error carries leg B's as suppressed.
     */
@@ -606,7 +595,7 @@ object IncrementalAgg {
     * however the data churns, which is the point.
     *
     * INTEGRAL values only (the prefix tree is bit arithmetic); both
-    * signs supported. Same `__b` replay shield, OCC publish, and
+    * signs supported. Same batch-id replay shield, OCC publish, and
     * bootstrap conventions as every CDC fold.
     */
   def mergeCdcTopKDyadic(plus: DataFrame, minus: DataFrame,
@@ -856,7 +845,7 @@ object IncrementalAgg {
     * sketch (KLL, t-digest), a counting histogram is ABELIAN — it
     * supports deletion exactly, which is the whole reason it is the
     * retraction-safe choice here. NULL values are ignored on both
-    * sides (SQL aggregate semantics). Same `__b` replay shield, OCC
+    * sides (SQL aggregate semantics). Same batch-id replay shield, OCC
     * publish, and bootstrap conventions as every CDC fold.
     */
   def mergeCdcQuantile(plus: DataFrame, minus: DataFrame, sink: String,
@@ -929,22 +918,17 @@ object IncrementalAgg {
     */
   def syncQuantile(spark: org.apache.spark.sql.SparkSession,
       tableSink: String, stateSink: String, keys: Seq[String],
-      valueCol: String, lo: Double, hi: Double, bins: Int): Long = {
-    val current = AtomicIncrement.snapshot(spark, tableSink)._1
-    val last = lastSyncedBatch(spark, stateSink)
-    if (current <= last) return 0L
-    val (plus, minus) = AtomicIncrement.changesBetween(spark, tableSink,
-      math.max(last, 0L), current)
-    mergeCdcQuantile(plus, minus, stateSink, keys, valueCol, lo, hi,
-      bins, current)
-    current - math.max(last, 0L)
-  }
+      valueCol: String, lo: Double, hi: Double, bins: Int): Long =
+    syncWith(spark, tableSink, stateSink) { (plus, minus, current) =>
+      mergeCdcQuantile(plus, minus, stateSink, keys, valueCol, lo, hi,
+        bins, current)
+    }
 
   /** SELF-SYNCING rollup: fold everything `tableSink` committed since
     * this state's last sync, in ONE pull of the manifest-diff change
     * feed ([[AtomicIncrement.changesBetween]]) — no upstream
     * coordination, no CDC batch plumbing: the table's own VERSION is
-    * the exactly-once key (stored as the state's `__b`), so appends,
+    * the exactly-once key (the state's recorded batch id), so appends,
     * copy-on-write merges, and merge-on-read commits all flow through
     * the same telescoping fold, a catch-up after downtime spans any
     * number of commits in one feed window, and a re-run with nothing
@@ -960,15 +944,10 @@ object IncrementalAgg {
     */
   def syncRollup(spark: org.apache.spark.sql.SparkSession,
       tableSink: String, stateSink: String, keys: Seq[String],
-      sumCols: Seq[String]): Long = {
-    val current = AtomicIncrement.snapshot(spark, tableSink)._1
-    val last = lastSyncedBatch(spark, stateSink)
-    if (current <= last) return 0L
-    val (plus, minus) = AtomicIncrement.changesBetween(spark, tableSink,
-      math.max(last, 0L), current)
-    mergeCdcBatch(plus, minus, stateSink, keys, sumCols, current)
-    current - math.max(last, 0L)
-  }
+      sumCols: Seq[String]): Long =
+    syncWith(spark, tableSink, stateSink) { (plus, minus, current) =>
+      mergeCdcBatch(plus, minus, stateSink, keys, sumCols, current)
+    }
 
   /** [[syncRollup]]'s DISTINCT twin (round 14, completing the
     * self-sync family beside the extremes): the same version-keyed
@@ -982,15 +961,10 @@ object IncrementalAgg {
     */
   def syncDistinct(spark: org.apache.spark.sql.SparkSession,
       tableSink: String, stateSink: String, keys: Seq[String],
-      valueCol: String): Long = {
-    val current = AtomicIncrement.snapshot(spark, tableSink)._1
-    val last = lastSyncedBatch(spark, stateSink)
-    if (current <= last) return 0L
-    val (plus, minus) = AtomicIncrement.changesBetween(spark, tableSink,
-      math.max(last, 0L), current)
-    mergeCdcDistinct(plus, minus, stateSink, keys, valueCol, current)
-    current - math.max(last, 0L)
-  }
+      valueCol: String): Long =
+    syncWith(spark, tableSink, stateSink) { (plus, minus, current) =>
+      mergeCdcDistinct(plus, minus, stateSink, keys, valueCol, current)
+    }
 
   /** [[syncRollup]]'s EXTREMES twin: the same version-keyed feed pull,
     * folded through [[mergeCdcExtremes]] — churned groups' min/max
@@ -1011,31 +985,32 @@ object IncrementalAgg {
   def syncExtremes(spark: org.apache.spark.sql.SparkSession,
       tableSink: String, stateSink: String, keys: Seq[String],
       sumCols: Seq[String], minMaxCols: Seq[String],
-      maxGroupKeys: Int = 1000000): Long = {
+      maxGroupKeys: Int = 1000000): Long =
+    syncWith(spark, tableSink, stateSink) { (plus, minus, current) =>
+      val churnedRows = AtomicIncrement.readGroupLocality(spark,
+        tableSink, keys, Seq(plus, minus), maxGroupKeys)
+      mergeCdcExtremes(plus, minus, churnedRows, stateSink, keys,
+        sumCols, minMaxCols, current)
+    }
+
+  /** The self-syncing folds' one prologue: the state's recorded batch
+    * id is the table version it last synced (0 before bootstrap — sync
+    * feeds start at version 0); when the table has moved past it,
+    * `fold` gets the feed window's (plus, minus) and the table's
+    * current version as its batch id. Returns the versions folded
+    * (0 = already current).
+    */
+  private def syncWith(spark: org.apache.spark.sql.SparkSession,
+      tableSink: String, stateSink: String)(
+      fold: (DataFrame, DataFrame, Long) => Boolean): Long = {
     val current = AtomicIncrement.snapshot(spark, tableSink)._1
-    val last = lastSyncedBatch(spark, stateSink)
+    val last = math.max(AtomicIncrement.latestSnapshot(spark, stateSink)
+      .lastBatch.getOrElse(0L), 0L)
     if (current <= last) return 0L
     val (plus, minus) = AtomicIncrement.changesBetween(spark, tableSink,
-      math.max(last, 0L), current)
-    val churnedRows = AtomicIncrement.readGroupLocality(spark, tableSink,
-      keys, Seq(plus, minus), maxGroupKeys)
-    mergeCdcExtremes(plus, minus, churnedRows, stateSink, keys,
-      sumCols, minMaxCols, current)
-    current - math.max(last, 0L)
-  }
-
-  /** The state sink's last-applied batch id (0 before bootstrap —
-    * sync feeds start at version 0): manifest stats when the state
-    * lines stamp `__b` (zero jobs, every fold since the round-17
-    * optimization), else one small max job on legacy sinks.
-    */
-  private def lastSyncedBatch(spark: org.apache.spark.sql.SparkSession,
-      stateSink: String): Long = {
-    val snap = AtomicIncrement.latestSnapshot(spark, stateSink)
-    if (snap.data.isEmpty) 0L
-    else AtomicIncrement.manifestMaxLong(snap.data, "__b").getOrElse(
-      AtomicIncrement.readSnapshot(spark, stateSink, snap)
-        .agg(max("__b")).head().getLong(0))
+      last, current)
+    fold(plus, minus, current)
+    current - last
   }
 
   /** Run a query whose plumbing needs a scratch atomic sink, then

@@ -9,16 +9,18 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * an optional gate over one snapshot:
   *
   *  1. SNAPSHOT: the parsed manifest the writer read — its lines,
-  *     schema and watermark floors ([[AtomicIncrement.Snapshot]]).
+  *     schema, watermark floors and batch id
+  *     ([[AtomicIncrement.Snapshot]]).
   *  2. STAGE: parquet written under `_data/batch-<uuid>` dirs the
   *     transaction owns — [[stage]] writes a frame, [[own]] adopts a
   *     dir DSv2 executors already wrote.
   *  3. GATE: one optional predicate over the staged lines (an audit, an
   *     observed metric, a zero-row check); false publishes nothing.
-  *  4. PUBLISH: `carry(snapshot) ++ staged` at version + 1. A lost OCC
-  *     race re-reads the winner's snapshot and re-publishes the same
-  *     staged files on top of it while the writer's `retry` check says
-  *     they are still exact, at most [[Retries]] times.
+  *  4. PUBLISH: `carry(snapshot) ++ staged` at version + 1, with the
+  *     commit's batch id or else the snapshot's own. A lost OCC race
+  *     re-reads the winner's snapshot and re-publishes the same staged
+  *     files on top of it while the writer's `retry` check says they
+  *     are still exact, at most [[Retries]] times.
   *  5. RECLAIM: every exit that does not publish (a throwing stage, a
   *     closed gate, a lost race) deletes the owned dirs.
   *
@@ -65,11 +67,14 @@ private[graft] final class Txn(val spark: SparkSession, val sink: String,
   def reclaim(): Unit = Txn.reclaim(spark, sink, owned.toSeq)
 
   /** Stage `work`, gate it, publish it. Some((version, staged lines))
-    * on publish, None when the gate closed. */
+    * on publish, None when the gate closed. `batch` is the id a fold
+    * records; without one the commit keeps the id of the snapshot it
+    * lands on. */
   def commit(gate: Seq[ManifestEntry] => Boolean = _ => true,
       carry: Snapshot => Seq[ManifestEntry] = s => s.data ++ s.dvs,
       schema: Snapshot => Option[StructType],
-      retry: Option[(Snapshot, Snapshot) => Boolean] = None)(
+      retry: Option[(Snapshot, Snapshot) => Boolean] = None,
+      batch: Option[Long] = None)(
       work: => Seq[ManifestEntry]): Option[(Long, Seq[ManifestEntry])] =
     try {
       val staged = work
@@ -88,7 +93,7 @@ private[graft] final class Txn(val spark: SparkSession, val sink: String,
           try {
             AtomicIncrement.publish(fs, sink,
               (carried ++ lines).map(_.render), now.version + 1,
-              schema(now), now.floors)
+              schema(now), now.floors, batch.orElse(now.lastBatch))
             done = true
           } catch {
             case cme: java.util.ConcurrentModificationException =>

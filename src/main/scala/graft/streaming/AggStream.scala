@@ -7,19 +7,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming materialized rollup — `IncrementalAgg` fed by an
   * unbounded stream: every micro-batch folds into the atomic
-  * aggregate state (one row per key: count, per-column sums, and the
-  * highest folded micro-batch id) and publishes through
-  * [[AtomicIncrement]]'s manifest commit, so a dashboard reading the
-  * state gets snapshot isolation against a stream that never stops.
+  * aggregate state (one row per key: count and per-column sums) and
+  * publishes through [[AtomicIncrement]]'s manifest commit, which
+  * records the micro-batch id on its commit line, so a dashboard
+  * reading the state gets snapshot isolation against a stream that
+  * never stops.
   *
   * Idempotence keys on the BATCH ID, not the watermark: the batch
   * flavor's high-watermark replay filter assumes values arrive in
   * watermark order, which an event stream does not promise (late
   * data is normal). `foreachBatch` can redeliver a batch id after a
   * crash between the fold's publish and the checkpoint commit —
-  * exactly the window `__lastBatch` closes: a batch id at or below
-  * the state's recorded max is a replay and folds to a no-op, so the
-  * fold + checkpoint pair is exactly-once end to end. An OCC
+  * exactly the window the recorded id closes: a batch id at or below
+  * the one the state's last commit recorded is a replay and folds to
+  * a no-op, so the fold + checkpoint pair is exactly-once end to end. An OCC
   * collision (an external writer publishing into the same sink)
   * fails the batch; the restart re-folds from the checkpoint against
   * the winner's state.
@@ -38,26 +39,14 @@ object AggStream {
   private[graft] def foldBatch(batch: DataFrame, batchId: Long,
       sink: String, keys: Seq[String], sumCols: Seq[String]): Long = {
     val spark = batch.sparkSession
+    // ONE snapshot serves both the replay gate and the merge: a second
+    // read for the union could straddle an external writer's publish
+    // and merge against a state the gate never saw (the OCC token
+    // protects the WRITE, not the consistency of two reads)
     val snap = AtomicIncrement.latestSnapshot(spark, sink)
-    val (version, dataE) = (snap.version, snap.data)
-    // ONE committed read serves both the replay gate and the merge:
-    // a second readCommitted for the union could straddle an external
-    // writer's publish and merge against a state the `__lastBatch`
-    // gate never saw (the OCC token protects the WRITE, not the
-    // consistency of two reads) — and it doubles per-batch state I/O.
-    // The replay gate itself answers from the SAME snapshot's manifest
-    // stats when the state lines stamp `__lastBatch` (zero jobs since
-    // the round-17 optimization), one small max job on legacy sinks.
-    val state =
-      if (dataE.isEmpty) None
-      else Some(AtomicIncrement.readSnapshot(spark, sink, snap))
-    val lastBatch = state match {
-      case Some(st) =>
-        AtomicIncrement.manifestMaxLong(dataE, "__lastBatch").getOrElse(
-          st.agg(max("__lastBatch")).head().getLong(0))
-      case None => -1L
-    }
-    if (batchId <= lastBatch) return 0L // redelivery after a crash
+    if (AtomicIncrement.isReplay(snap, sink, batchId))
+      return 0L // redelivery after a crash
+    val state = AtomicIncrement.readFoldState(spark, sink, snap)
     // ONE action for count + fold (round 18, the mergeBatch shape):
     // the batch-row count is OBSERVED on the partial aggregate as the
     // staging write streams through it — no cache, no dedicated
@@ -67,20 +56,18 @@ object AggStream {
     graft.operators.MetricGate.withGate(spark) { gate =>
       val partial = batch.groupBy(keys.map(col): _*).agg(
         count(lit(1)).as("__n"),
-        sumCols.map(c => sum(col(c)).as(s"sum_$c")) :+
-          lit(batchId).as("__lastBatch"): _*)
+        sumCols.map(c => sum(col(c)).as(s"sum_$c")): _*)
         .observe(gate.name, coalesce(sum("__n"), lit(0L)).as("__fresh"))
       val merged = state match {
         case None => partial
         case Some(st) => st.unionByName(partial)
           .groupBy(keys.map(col): _*).agg(
             sum("__n").as("__n"),
-            sumCols.map(c => sum(s"sum_$c").as(s"sum_$c")) :+
-              max("__lastBatch").as("__lastBatch"): _*)
+            sumCols.map(c => sum(s"sum_$c").as(s"sum_$c")): _*)
       }
       var n = 0L
-      AtomicIncrement.replaceGated(merged, sink, version,
-        statsFields = Seq(merged.schema("__lastBatch")), gate = () => {
+      AtomicIncrement.replaceGated(merged, sink, snap.version,
+        Some(batchId), gate = () => {
           n = gate.long()
           n > 0
         })
@@ -111,6 +98,5 @@ object AggStream {
     val st = AtomicIncrement.readCommitted(spark, sink)
     sumCols.foldLeft(st.withColumnRenamed("__n", "n"))((d, c) =>
       d.withColumn(s"avg_$c", col(s"sum_$c") / col("n")))
-      .drop("__lastBatch")
   }
 }

@@ -1820,7 +1820,8 @@ class AtomicIncrementSpec extends SparkSpec {
     val f = fs(sink)
     def line(t: Int, v: Int) = s"_data/batch-t$t/part-$v.parquet"
     val wins = raceRounds(threads = 4, rounds = 300) { (t, v) =>
-      AtomicIncrement.publish(f, sink, Seq(line(t, v)), v.toLong, None, Nil)
+      AtomicIncrement.publish(f, sink, Seq(line(t, v)), v.toLong, None, Nil,
+        None)
     }
     val winners = wins.zipWithIndex
       .flatMap { case (vs, t) => vs.map(_ -> t) }.groupBy(_._1)
@@ -1879,7 +1880,7 @@ class AtomicIncrementSpec extends SparkSpec {
       else {
         val s = next
         try AtomicIncrement.publish(f, sink, (s.data ++ s.dvs).map(_.render),
-          s.version + 1, Some(s.schema), s.floors)
+          s.version + 1, Some(s.schema), s.floors, s.lastBatch)
         finally next = AtomicIncrement.latestSnapshot(spark, sink)
       }
       ()

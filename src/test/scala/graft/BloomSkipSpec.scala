@@ -258,7 +258,7 @@ class BloomSkipSpec extends SparkSpec {
     assert(staged.nonEmpty, "fixture needs an empty part file")
     val snap = AtomicIncrement.latestSnapshot(spark, sink)
     AtomicIncrement.publish(f, sink, snap.data.map(_.path) ++ staged,
-      snap.version + 1, Some(snap.schema), snap.floors)
+      snap.version + 1, Some(snap.schema), snap.floors, snap.lastBatch)
     val files = AtomicIncrement.committedFiles(spark, sink)
     assert(files.size == 1 + staged.size)
     assert(BloomSkip.ensureSidecars(spark, sink, "id") == files.size)

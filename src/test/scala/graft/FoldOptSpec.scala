@@ -9,9 +9,10 @@ import java.nio.file.Files
   *  - the WEIGHTED CDC fold (pre-aggregated multiplicities — guide
   *    §2.3 "aggregate before you shuffle" applied before a generator
   *    fan-out) produces byte-identical state to the per-row fold;
-  *  - fold metadata (`__b`, `__wm`) rides the state lines' manifest
-  *    stats, so the replay-shield/watermark read answers with zero
-  *    Spark jobs (manifestMaxLong/the stats group are present);
+  *  - fold metadata answers from the manifest with zero Spark jobs:
+  *    the CDC folds' batch id from the commit line
+  *    (`Snapshot.lastBatch`), the stored watermark `__wm` from the
+  *    state lines' stats group;
   *  - a small churn stages ONE delete-vector file, not one per core
   *    (the ChurnKeys size-adaptive slicing).
   */
@@ -47,11 +48,15 @@ class FoldOptSpec extends SparkSpec {
     assert(IncrementalAgg.mergeCdcWeighted(pre(plus), pre(minus),
       wSink, Seq("g", "ts"), "__w", 1L))
     def st(sink: String) = IncrementalAgg.readState(spark, sink)
-      .select("g", "ts", "__n", "__b").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .select("g", "ts", "__n").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2)).toSeq
     assert(st(wSink) == st(rowSink),
       "weighted fold diverged from the per-row fold")
+    def lastBatch(sink: String) =
+      AtomicIncrement.latestSnapshot(spark, sink).lastBatch
+    assert(lastBatch(wSink) == lastBatch(rowSink),
+      "weighted fold recorded a different batch id")
     // replay shield holds on the weighted face too
     assert(!IncrementalAgg.mergeCdcWeighted(pre(plus), pre(minus),
       wSink, Seq("g", "ts"), "__w", 1L))
@@ -62,9 +67,8 @@ class FoldOptSpec extends SparkSpec {
     val cdcSink = tmp("foldopt_b")
     assert(IncrementalAgg.mergeCdcBatch(rows(1 to 30), rows(1 to 0),
       cdcSink, Seq("g"), Seq("x"), 7L))
-    val (_, dataE, _) = AtomicIncrement.snapshotSplit(spark, cdcSink)
-    assert(AtomicIncrement.manifestMaxLong(dataE, "__b").contains(7L),
-      "state lines do not serve the replay shield from stats")
+    assert(AtomicIncrement.latestSnapshot(spark, cdcSink).lastBatch ==
+      Some(7L), "the manifest does not serve the replay shield")
     val wmSink = tmp("foldopt_wm")
     assert(IncrementalAgg.mergeBatch(rows(1 to 40), wmSink,
       Seq("g"), Seq("x"), "ts") == 40)

@@ -724,4 +724,97 @@ class IncrementalAggSpec extends SparkSpec {
     assert(IncrementalAgg.syncQuantile(spark, tableSink, stateSink,
       Seq("g"), "v", lo, hi, bins) == 0L)
   }
+
+  /** The one-pass (g, count, Σx) of `df`, sorted like [[state]]. */
+  private def direct(df: org.apache.spark.sql.DataFrame) =
+    df.groupBy("g").agg(count(lit(1)).as("n"), sum("x").as("s"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(_._1).toSeq
+
+  test("a fold state emptied by retraction still refuses a replay and " +
+      "takes the next batch, through mergeCdcBatch and syncRollup") {
+    // direct face: bootstrap groups g1, g2 at id 0, retract both at 1
+    val sink = tmp()
+    val two = rows(1 to 2)
+    assert(IncrementalAgg.mergeCdcBatch(two, two.limit(0), sink, keys,
+      sums, 0L))
+    assert(IncrementalAgg.mergeCdcBatch(two.limit(0), two, sink, keys,
+      sums, 1L))
+    assert(state(sink).isEmpty)
+    assert(!IncrementalAgg.mergeCdcBatch(two.limit(0), two, sink, keys,
+      sums, 1L))
+    assert(IncrementalAgg.mergeCdcBatch(two, two.limit(0), sink, keys,
+      sums, 2L))
+    assert(state(sink) == direct(two))
+    // sync face: the table empties, so does the state; the sync after
+    // the next append folds just that append
+    val tableSink = tmp()
+    val stateSink = tmp()
+    AtomicIncrement.appendIncrementAtomic(two, tableSink, "ts")
+    assert(IncrementalAgg.syncRollup(spark, tableSink, stateSink,
+      keys, sums) == 1L)
+    AtomicIncrement.deleteWhereAtomic(spark, tableSink, lit(true))
+    assert(IncrementalAgg.syncRollup(spark, tableSink, stateSink,
+      keys, sums) == 1L)
+    assert(state(stateSink).isEmpty)
+    AtomicIncrement.appendIncrementAtomic(rows(3 to 4), tableSink, "ts")
+    assert(IncrementalAgg.syncRollup(spark, tableSink, stateSink,
+      keys, sums) == 1L)
+    assert(state(stateSink) == direct(rows(3 to 4)))
+  }
+
+  test("a compaction of a fold state keeps its batch id: the replay " +
+      "after it still no-ops") {
+    val sink = tmp()
+    assert(IncrementalAgg.mergeCdcBatch(rows(1 to 30), rows(1 to 0),
+      sink, keys, sums, 0L))
+    assert(IncrementalAgg.mergeCdcBatch(rows(31 to 40), rows(1 to 0),
+      sink, keys, sums, 1L))
+    val folded = state(sink)
+    AtomicIncrement.compact(spark, sink)
+    assert(AtomicIncrement.latestSnapshot(spark, sink).lastBatch ==
+      Some(1L))
+    assert(!IncrementalAgg.mergeCdcBatch(rows(31 to 40), rows(1 to 0),
+      sink, keys, sums, 1L))
+    assert(state(sink) == folded)
+  }
+
+  test("a legacy fold state answers its batch id from its __b stats, " +
+      "drops the column on its next fold, and fails loudly when " +
+      "nothing answers") {
+    // the state as a fold wrote it before the commit line carried the
+    // id: a per-row `__b` column with exact stats, no batch group
+    val legacy = rows(1 to 30).groupBy("g")
+      .agg(count(lit(1)).as("__n"), sum("x").as("sum_x"))
+      .withColumn("__b", lit(4L))
+    val sink = tmp()
+    AtomicIncrement.replaceGated(legacy, sink, 0L, None,
+      statsFields = Seq(legacy.schema("__b")))
+    assert(AtomicIncrement.latestSnapshot(spark, sink).lastBatch ==
+      Some(4L))
+    val pre = state(sink)
+    for (replay <- Seq(3L, 4L))
+      assert(!IncrementalAgg.mergeCdcBatch(rows(31 to 40), rows(1 to 0),
+        sink, keys, sums, replay))
+    assert(state(sink) == pre)
+    assert(IncrementalAgg.mergeCdcBatch(rows(31 to 40), rows(1 to 0),
+      sink, keys, sums, 5L))
+    assert(!IncrementalAgg.readState(spark, sink).columns.contains("__b"))
+    assert(AtomicIncrement.latestSnapshot(spark, sink).lastBatch ==
+      Some(5L))
+    val folded = state(sink)
+    assert(folded.map(t => (t._1, t._2)) ==
+      direct(rows(1 to 40)).map(t => (t._1, t._2)))
+    for ((f, d) <- folded.zip(direct(rows(1 to 40))))
+      assert(math.abs(f._3 - d._3) < 1e-9, s"sum drift: $f vs $d")
+    // without the stats nothing tells a replay from a new batch
+    val mute = tmp()
+    AtomicIncrement.replaceGated(legacy, mute, 0L, None)
+    val e = intercept[IllegalStateException] {
+      IncrementalAgg.mergeCdcBatch(rows(31 to 40), rows(1 to 0), mute,
+        keys, sums, 9L)
+    }
+    assert(e.getMessage.contains(mute))
+    assert(AtomicIncrement.latestSnapshot(spark, mute).version == 1L)
+  }
 }

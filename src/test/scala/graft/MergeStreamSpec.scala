@@ -214,8 +214,8 @@ class MergeStreamSpec extends SparkSpec {
       (Option.empty[Long], "gB", 1.0, 1L, false))
       .toDF("k", "g", "x", "v", "del")
     val preState = stateRows(stateSink)
-    val preB = IncrementalAgg.readState(spark, stateSink)
-      .agg(max("__b")).head().getLong(0)
+    val preB = AtomicIncrement.latestSnapshot(spark, stateSink).lastBatch
+    assert(preB == Some(-1L), "the bootstrap fold's id is not recorded")
     val e = intercept[IllegalArgumentException] {
       MergeStream.applyBatchStep(nullKeyed, 7L, tableSink, "k", "v", "del",
         Some(stateSink), Seq("g"), Seq("x"))
@@ -224,9 +224,8 @@ class MergeStreamSpec extends SparkSpec {
     // neither half moved: state identical, batch id NOT recorded — a
     // later corrected batch 7 still applies
     assert(stateRows(stateSink) == preState)
-    assert(IncrementalAgg.readState(spark, stateSink)
-      .agg(max("__b")).head().getLong(0) == preB,
-      "the fold recorded a batch the table never applied")
+    assert(AtomicIncrement.latestSnapshot(spark, stateSink).lastBatch ==
+      preB, "the fold recorded a batch the table never applied")
   }
 
   test("streamed CDC apply maintains a MIN/MAX rollup: extremes " +

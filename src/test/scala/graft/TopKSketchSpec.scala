@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 /** The bounded-state top-k sketch ([[IncrementalAgg.mergeCdcTopKSketch]]):
   * state stays capped at high cardinality, planted heavy hitters
   * surface with estimates inside the CM band, retraction demotes
-  * exactly, and the `__b` shield makes replays no-ops.
+  * exactly, and the batch id each child sink's commit records makes
+  * replays no-ops.
   */
 class TopKSketchSpec extends SparkSpec {
   import spark.implicits._
@@ -72,13 +73,14 @@ class TopKSketchSpec extends SparkSpec {
       // 5 drops out of the podium (50 rows left); 4, 3, 2 move up
       assert(top.map(_.getLong(1)).toSeq === Seq(4L, 3L, 2L))
       // replay of batch 1: cells and pool must not move
-      val before = IncrementalAgg.readState(spark, s"$sink/cm")
-        .agg(sum("__n")).head().getLong(0)
+      def mass(child: String) = IncrementalAgg.readState(spark,
+        s"$sink/$child").agg(sum("__n")).head().getLong(0)
+      val before = (mass("cm"), mass("pool"))
       assert(!IncrementalAgg.mergeCdcTopKSketch(df.limit(0), minus, sink,
         Seq("grp"), "v", 1L, k = 3))
-      val after = IncrementalAgg.readState(spark, s"$sink/cm")
-        .agg(sum("__n")).head().getLong(0)
-      assert(before === after, "a replayed batch moved the cells")
+      val after = (mass("cm"), mass("pool"))
+      assert(before._1 === after._1, "a replayed batch moved the cells")
+      assert(before._2 === after._2, "a replayed batch moved the pool")
     } finally rm(sink)
   }
 

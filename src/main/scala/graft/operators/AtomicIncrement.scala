@@ -1030,18 +1030,11 @@ object AtomicIncrement {
         pruneChurnCollects.incrementAndGet()
         val vals = readDvKeys(spark, sink, newDv, keyCol, schema).distinct()
           .limit(maxPruneKeys + 1).collect()
-        import org.apache.spark.sql.types._
         if (vals.length > maxPruneKeys) {
           pruneFenceFallbacks.incrementAndGet()
           None // over the fence: keep every common file
-        } else schema.apply(schema.fieldIndex(keyCol)).dataType match {
-          case StringType =>
-            Some(StringChurn(sortUtf8(vals.map(_.getString(0)))))
-          case ByteType | ShortType | IntegerType | LongType =>
-            Some(LongChurn(vals.map(
-              _.get(0).asInstanceOf[Number].longValue()).sorted))
-          case _ => None // no interval family: keep every common file
-        }
+        } else // None for a key with no interval family: keep them all
+          ChurnKeys.of(vals, 0, schema(schema.fieldIndex(keyCol)).dataType)
       }
     val newlyMasked = common.groupBy(seqOf).toSeq.flatMap { case (s, group) =>
       val touched = pruneChurn match {
@@ -2074,9 +2067,12 @@ object AtomicIncrement {
     * shortcut survive the insert; on a dv-carrying table the staged
     * lines outrank standing tombstones (an inserted key that was once
     * deleted must not be re-masked). Same OCC/crash contract as every
-    * commit. Returns the appended row count.
+    * commit. `batch` is the id the commit line records (a maintained
+    * index's batch id); without one the commit keeps the snapshot's.
+    * Returns the appended row count.
     */
-  def appendBlindAtomic(df: DataFrame, sink: String): Long = {
+  def appendBlindAtomic(df: DataFrame, sink: String,
+      batch: Option[Long] = None): Long = {
     val txn = Txn.begin(df.sparkSession, sink)
     val dataE = txn.snap.data
     val statsFields =
@@ -2091,7 +2087,7 @@ object AtomicIncrement {
     // that as empty would silently drop real rows
     txn.commit(
       gate = st => dataE.isEmpty || !counts(st).forall(_.contains(0L)),
-      schema = appendSchema(_, df.schema))(
+      schema = appendSchema(_, df.schema), batch = batch)(
       txn.stage(df, statsFields))
       .fold(0L)(p => counts(p._2).flatten.sum)
   }
@@ -2231,6 +2227,23 @@ object AtomicIncrement {
       .map(_._2)
   }
 
+  private[graft] object ChurnKeys {
+    /** The distinct keys in column `index` of collected `rows`, in the
+      * family `dataType` names: string keys by their UTF-8 bytes,
+      * integral ones as longs. None for a type with no interval family.
+      */
+    def of(rows: Array[org.apache.spark.sql.Row], index: Int,
+        dataType: org.apache.spark.sql.types.DataType): Option[ChurnKeys] =
+      tagOf(dataType) match {
+        case Some("string") =>
+          Some(StringChurn(sortUtf8(rows.map(_.getString(index)).distinct)))
+        case Some(t) if integralTags.contains(t) =>
+          Some(LongChurn(rows.map(
+            _.get(index).asInstanceOf[Number].longValue()).distinct.sorted))
+        case _ => None
+      }
+  }
+
   /** How many churn key sets merge paths have collected — a test
     * probe pinning the one-collect-per-micro-batch contract (the
     * streaming CDC apply collects once and threads the set through
@@ -2285,15 +2298,8 @@ object AtomicIncrement {
           "raise maxChurnKeys deliberately or rebuild the table")
       rows
     }
-    if (tag.contains("string"))
-      StringChurn(sortUtf8(validated(
-        changes.select(col(keyCol)).distinct().collect())
-        .map(_.getString(0))))
-    else
-      LongChurn(validated(
-        changes.select(col(keyCol)
-          .cast(org.apache.spark.sql.types.LongType)).distinct().collect())
-        .map(_.getLong(0)).sorted)
+    ChurnKeys.of(validated(changes.select(col(keyCol)).distinct().collect()),
+      0, keyField.dataType).get
   }
 
   /** What a [[mergeAtomic]] did, plus the change-derived frames a
@@ -2596,14 +2602,16 @@ object AtomicIncrement {
   def mergeOnReadAtomic(changes: DataFrame, sink: String, keyCol: String,
       deleteCol: String, maxChurnKeys: Int = 10000000): MergeResult =
     mergeOnReadAtomic(changes, sink, keyCol, deleteCol, maxChurnKeys,
-      collectChurn(changes, keyCol, maxChurnKeys))
+      collectChurn(changes, keyCol, maxChurnKeys), None)
 
   /** [[mergeOnReadAtomic]] with the churn already collected — the
     * streaming CDC apply's one-collect-per-micro-batch discipline.
+    * `batch` is the id the commit line records (a maintained index's
+    * batch id); without one the commit keeps the snapshot's.
     */
   private[graft] def mergeOnReadAtomic(changes: DataFrame, sink: String,
       keyCol: String, deleteCol: String, maxChurnKeys: Int,
-      churn: ChurnKeys): MergeResult = {
+      churn: ChurnKeys, batch: Option[Long]): MergeResult = {
     val spark = changes.sparkSession
     val txn = Txn.begin(spark, sink)
     val (dataE, dvE) = (txn.snap.data, txn.snap.dvs)
@@ -2641,7 +2649,8 @@ object AtomicIncrement {
     // two staged batch dirs (after-images, dv); the staged dv lines
     // make the commit stamp both at this commit's sequence
     val (published, staged) = txn.commit(
-        schema = _ => mergeStructs(fullSchema, upserts.schema)) {
+        schema = _ => mergeStructs(fullSchema, upserts.schema),
+        batch = batch) {
       txn.stage(upserts, statsFields) ++
         txn.stage(dvDf, dvDf.schema.fields.toSeq)
           .map(e => e.copy(allStats = e.allStats :+ dvMark))
@@ -2690,9 +2699,7 @@ object AtomicIncrement {
       s"delete vectors disagree on the merge key at $sink: $keyCols")
     val keyCol = keyCols.head
     val fullSchema = txn.snap.schema
-    val isString = fullSchema.fields
-      .find(_.name.equalsIgnoreCase(keyCol))
-      .flatMap(f => tagOf(f.dataType)).contains("string")
+    val keyType = dvSchema(keyCol, fullSchema).head.dataType
     // per-sequence dv key sets (one bounded collect per distinct dv
     // sequence — dv commits since the last fold, small by the
     // maintenance cadence), pooled under the churn fence
@@ -2711,11 +2718,7 @@ object AtomicIncrement {
       }
     def churnAbove(s: Long): Option[ChurnKeys] = {
       val rows = keysBySeq.filter(_._1 > s).values.flatten.toArray
-      if (rows.isEmpty) None
-      else if (isString)
-        Some(StringChurn(sortUtf8(rows.map(_.getString(0)).distinct)))
-      else Some(LongChurn(rows.map(
-        _.get(0).asInstanceOf[Number].longValue()).distinct.sorted))
+      if (rows.isEmpty) None else ChurnKeys.of(rows, 0, keyType)
     }
     val parts = dataE.groupBy(seqOf).toSeq.map { case (s, group) =>
       churnAbove(s) match {
@@ -2982,13 +2985,7 @@ object AtomicIncrement {
     }
     val churns = groupKeys.indices.flatMap { i =>
       if (!supported(i) || tuples.exists(_.isNullAt(i))) None
-      else dts(i).get match {
-        case StringType => Some(groupKeys(i) -> StringChurn(
-          sortUtf8(tuples.map(_.getString(i)).distinct.toArray)))
-        case _ => Some(groupKeys(i) -> LongChurn(tuples.map(
-          _.get(i).asInstanceOf[Number].longValue())
-          .distinct.sorted.toArray))
-      }
+      else ChurnKeys.of(tuples, i, dts(i).get).map(groupKeys(i) -> _)
     }
     if (churns.isEmpty) full
     else readKeyedChurnMulti(spark, sink, churns)

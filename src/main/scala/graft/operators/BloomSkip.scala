@@ -533,7 +533,9 @@ object BloomSkip {
         element_at(split(col("f"), "/"), -1)).as("rel"))
     postings.repartitionByRange(col("h")).sortWithinPartitions("h")
       .write.mode("append").parquet(new Path(root, "postings").toString)
-    writeSmallText(fs, metaP, s"buckets=$buckets")
+    // written once: a probe beside this build parses it, so it is never
+    // rewritten in place (a torn read would fail the probe)
+    if (!fs.exists(metaP)) writeSmallText(fs, metaP, s"buckets=$buckets")
     writeSmallText(fs, coveredP,
       (covered ++ missing.map(rel2)).toSeq.sorted.mkString("\n"))
     missing.size

@@ -450,18 +450,70 @@ object Similarity {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** The version the LATEST pointer names, if the index exists. */
-  private def pqLatestVersion(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[Long] = {
-    val fs = hadoopFs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/LATEST")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(text.trim.toLong)
+  private def readTextFile(spark: org.apache.spark.sql.SparkSession,
+      path: String): String = {
+    val in = hadoopFs(spark, path).open(new org.apache.hadoop.fs.Path(path))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  /** A centroid sidecar: one `#<kind> k=v …` header line, then one
+    * `id<TAB>d,d,…` line per centroid. `Double.toString` round-trips
+    * exactly, so a reader rebuilds bit-identical centroids.
+    */
+  private def centroidsText(header: String,
+      cents: Seq[(Long, Seq[Double])]): String =
+    (header +: cents.map { case (id, c) => s"$id\t${c.mkString(",")}" })
+      .mkString("\n")
+
+  private def parseCentroidsTsv(text: String): Seq[(Long, Seq[Double])] =
+    text.split("\n").toSeq.filter(_.nonEmpty).tail.map { line =>
+      val Array(id, dims) = line.split("\t", 2)
+      (id.toLong, dims.split(",").toSeq.map(_.toDouble))
     }
+
+  // ---- versioned (build-once-probe-many) indexes ----------------------
+
+  /** The empty file whose creation publishes a versioned index's
+    * `v<N>/`. */
+  private val PublishedMarker = "_PUBLISHED"
+
+  /** The highest published version of a versioned index, if any — one
+    * glob over the `v<N>/` markers. A marker is created empty, last and
+    * never rewritten, so no reader can see a version half-published or
+    * a pointer half-written.
+    */
+  private[graft] def indexVersion(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[Long] =
+    Option(hadoopFs(spark, dir).globStatus(
+        new org.apache.hadoop.fs.Path(s"$dir/v*/$PublishedMarker")))
+      .toSeq.flatten
+      .flatMap(_.getPath.getParent.getName.stripPrefix("v").toLongOption)
+      .maxOption
+
+  private def currentVersion(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Long =
+    indexVersion(spark, dir).getOrElse(throw new IllegalStateException(
+      s"no published index version under $dir"))
+
+  /** Publish version `v`, whose codes already sit under `v<N>/`: write
+    * its centroid sidecar, then create the marker — refusing one that
+    * exists, so of two writers of one version only one publishes. The
+    * version before `v` is retained for readers that pinned it
+    * mid-probe; older ones are pruned.
+    */
+  private[graft] def publishVersion(spark: org.apache.spark.sql.SparkSession,
+      dir: String, v: Long, sidecar: String): Unit = {
+    val fs = hadoopFs(spark, dir)
+    val out = fs.create(
+      new org.apache.hadoop.fs.Path(s"$dir/v$v/centroids.tsv"), true)
+    try out.write(sidecar.getBytes("UTF-8")) finally out.close()
+    fs.create(new org.apache.hadoop.fs.Path(s"$dir/v$v/$PublishedMarker"),
+      false).close()
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/v*")))
+      .toSeq.flatten.map(_.getPath)
+      .filter(_.getName.stripPrefix("v").toLongOption.exists(_ < v - 1))
+      .foreach(fs.delete(_, true))
   }
 
   /** Persist the IVF-PQ index: codes as parquet PARTITIONED BY the
@@ -474,55 +526,36 @@ object Similarity {
     * cost this removes.
     *
     * PUBLICATION is versioned: each build lands complete under
-    * `v<N>/`, and the one-file LATEST pointer flips only after both
-    * codes and sidecar are down — a crash mid-rebuild leaves readers
-    * on the previous complete version, never on new codes with stale
-    * centroids. The version before the new one is retained for
-    * readers that pinned it mid-probe; older ones are pruned.
-    * Single-writer contract (like any snapshot-pointer table).
+    * `v<N>/` and [[publishVersion]] marks it last — a crash mid-rebuild
+    * leaves readers on the previous complete version, never on new
+    * codes with stale centroids. Single-writer contract; an index that
+    * changes between rebuilds is the maintained PQ index
+    * ([[appendPqIncrement]]).
     */
   def writePqIndex(corpus: DataFrame, dir: String, numLists: Int = 16,
       numSubspaces: Int = 8, dim: Int = 64): Unit = {
     val spark = corpus.sparkSession
-    val v = pqLatestVersion(spark, dir).getOrElse(0L) + 1
+    val v = indexVersion(spark, dir).getOrElse(0L) + 1
     val cents = hashCentroids(corpus, numLists)
-    // base rows sit at −1 in the version's maintenance log: any
-    // tombstone masks them, any append outranks them
     pqEncode(corpus, cents, numSubspaces, dim)
-      .withColumn("batch", lit(-1L))
       .write.mode(SaveMode.Overwrite).partitionBy("list_id")
       .parquet(s"$dir/v$v/codes")
-    val fs = hadoopFs(spark, dir)
-    def writeFile(path: String, content: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-    writeFile(s"$dir/v$v/centroids.tsv",
-      pqSidecarText(cents, numSubspaces, dim))
-    writeFile(s"$dir/LATEST", v.toString) // the publication point
-    for (old <- 1L until v - 1)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v$old"), true)
+    publishVersion(spark, dir, v, pqSidecarText(cents, numSubspaces, dim))
   }
 
   /** The centroid sidecar + build params of a persisted index's
     * current version.
     */
   def readPqSidecar(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : (Seq[(Long, Seq[Double])], Int, Int) = {
-    val v = pqLatestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $dir"))
-    parsePqSidecar(readTextFile(spark, s"$dir/v$v/centroids.tsv"))
-  }
+      : (Seq[(Long, Seq[Double])], Int, Int) =
+    parsePqSidecar(readTextFile(spark,
+      s"$dir/v${currentVersion(spark, dir)}/centroids.tsv"))
 
   private def parsePqSidecar(text: String)
       : (Seq[(Long, Seq[Double])], Int, Int) = {
-    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
-    val params = lines.head.stripPrefix("#pq ").split(" ")
+    val params = text.split("\n").head.stripPrefix("#pq ").split(" ")
       .map { kv => val Array(k, n) = kv.split("="); k -> n.toInt }.toMap
-    val cents = lines.tail.map { line =>
-      val Array(id, dims) = line.split("\t", 2)
-      (id.toLong, dims.split(",").toSeq.map(_.toDouble))
-    }
+    val cents = parseCentroidsTsv(text)
     val dim = params("dim")
     require(cents.forall(_._2.length == dim),
       s"sidecar centroids disagree with dim=$dim")
@@ -531,213 +564,57 @@ object Similarity {
 
   private def pqSidecarText(cents: Seq[(Long, Seq[Double])],
       numSubspaces: Int, dim: Int): String =
-    (s"#pq numLists=${cents.size} numSubspaces=$numSubspaces dim=$dim" +:
-      cents.map { case (id, c) => s"$id\t${c.mkString(",")}" })
-      .mkString("\n")
-
-  /** Append new vectors to the CURRENT version of a persisted index:
-    * they are encoded against the FROZEN sidecar centroids (codebooks
-    * never move on append — the standard incremental-IVF contract;
-    * quantization drift from a shifting corpus is what `writePqIndex`
-    * rebuilds are for) and their codes land as new files inside the
-    * existing list partitions, so probes see them immediately with no
-    * rewrite of prior data. Batch single-writer semantics: an append
-    * is not idempotent — a streaming caller wanting replay safety
-    * lands each batch under its own subdirectory (the `BatchDirs`
-    * pattern) or rebuilds periodically.
-    *
-    * `batchId` stamps the new code rows' position in the version's
-    * maintenance log (base rows from a build or compaction sit at −1):
-    * a tombstone at batch `b` masks only code rows from STRICTLY
-    * EARLIER batches, so a delete-then-re-append of the same id —
-    * [[deleteFromPqIndex]] at `b` plus an append at `b` — is an
-    * upsert whose fresh codes survive their own tombstone, instead of
-    * being silently hidden (and then physically dropped by
-    * [[compactPqIndex]]) the way an orderless mask would.
-    */
-  def appendToPqIndex(newVecs: DataFrame, dir: String,
-      batchId: Long = 0L): Unit = {
-    require(batchId >= 0L,
-      s"append batch ids start at 0 (base code rows sit at -1): $batchId")
-    val spark = newVecs.sparkSession
-    val (cents, numSubspaces, dim) = readPqSidecar(spark, dir)
-    val v = pqLatestVersion(spark, dir).get
-    pqEncode(newVecs, cents, numSubspaces, dim)
-      .withColumn("batch", lit(batchId))
-      .write.mode(SaveMode.Append).partitionBy("list_id")
-      .parquet(s"$dir/v$v/codes")
-  }
+    centroidsText(
+      s"#pq numLists=${cents.size} numSubspaces=$numSubspaces dim=$dim", cents)
 
   /** Probe a persisted index. Subspace count and dim come FROM the
     * sidecar (a caller-supplied mismatch would read absent code
     * columns as nulls and rank garbage silently); the explicit schema
     * pins `list_id` to LONG (partition-dir inference would guess INT
     * and the cast would defeat partition pruning on the probe join).
-    * Tombstoned ids ([[deleteFromPqIndex]]) mask out under the shared
-    * log-ordered broadcast anti-join ([[maskTombstonesAt]]) — the
-    * delete set is churn-sized, never corpus-sized, and only code rows
-    * from batches STRICTLY BEFORE an id's latest tombstone die, so a
-    * re-appended id keeps its fresh codes.
+    * Sidecar and codes come from ONE version read.
     */
   def probePqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val (cents, numSubspaces, dim) = readPqSidecar(spark, dir)
-    val v = pqLatestVersion(spark, dir).get
-    val codes = readPqCodes(spark, dir, v, numSubspaces)
-    val live = maskTombstonesAt(spark, s"$dir/v$v/_tombstones", codes)
-      .drop("batch")
-    pqProbe(live, queries, cents, k, numSubspaces, dim, nprobe)
-  }
-
-  /** Code rows of one version, batch-stamped. `coalesce(batch, −1)`
-    * self-heals layouts written before the log-ordered mask existed:
-    * their files lack the column, the explicit schema reads it as
-    * null, and −1 (the base-row position) restores the exact orderless
-    * semantics those layouts were written under.
-    */
-  private def readPqCodes(spark: org.apache.spark.sql.SparkSession,
-      dir: String, v: Long, numSubspaces: Int): DataFrame = {
+    val v = currentVersion(spark, dir)
+    val (cents, numSubspaces, dim) =
+      parsePqSidecar(readTextFile(spark, s"$dir/v$v/centroids.tsv"))
     val schema = StructType(
       StructField("vec_id", LongType) +:
         (0 until numSubspaces).map(m => StructField(s"code$m", IntegerType)) :+
-        StructField("batch", LongType) :+
         StructField("list_id", LongType))
-    spark.read.schema(schema).parquet(s"$dir/v$v/codes")
-      .withColumn("batch", coalesce(col("batch"), lit(-1L)))
+    pqProbe(spark.read.schema(schema).parquet(s"$dir/v$v/codes"), queries,
+      cents, k, numSubspaces, dim, nprobe)
   }
 
-  /** Tombstone delete for the persisted PQ index — the
-    * [[deleteIvfIncrement]] contract on the versioned layout: ids land
-    * whole under the CURRENT version's `_tombstones/batch=<id>`
-    * (underscore-prefixed, invisible to the codes read), every probe
-    * masks them until [[compactPqIndex]] drops the code rows
-    * physically. The mask is LOG-ORDERED (shared [[maskTombstonesAt]]):
-    * a tombstone at batch `b` kills code rows from batches strictly
-    * before `b` only — base rows sit at −1, so any delete masks them,
-    * while an [[appendToPqIndex]] at `b` survives its own tombstone
-    * (the upsert shape) and only dies under a LATER delete. Batch-dir
-    * Overwrite makes redelivery idempotent; a replay against an
-    * already-compacted version re-masks ids whose rows are gone — a
-    * no-op by construction, so no horizon is needed on this layout
-    * (each version starts tombstone-free).
-    */
-  def deleteFromPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, batchId: Long): Unit = {
-    val v = pqLatestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $dir"))
-    ids.select(col("vec_id"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/v$v/_tombstones/batch=$batchId")
-  }
-
-  /** Fold the current version's live codes (tombstones applied) into
-    * `v<V+1>`, carry the immutable centroid sidecar forward, flip
-    * `LATEST` — the [[writePqIndex]] publication discipline, so a
-    * crash mid-compaction leaves readers on the previous complete
-    * version. The version before the new one is retained for pinned
-    * readers; older ones are pruned.
-    */
-  def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val v = pqLatestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $dir"))
-    val (_, numSubspaces, _) = readPqSidecar(spark, dir)
-    val codes = readPqCodes(spark, dir, v, numSubspaces)
-    // same log-ordered mask the probes apply, so the physical fold
-    // keeps exactly the rows a probe would have seen — including a
-    // re-appended id whose older codes a tombstone masked. Survivors
-    // restart at the base batch position: the new version opens
-    // tombstone-free, its log empty.
-    val live = maskTombstonesAt(spark, s"$dir/v$v/_tombstones", codes)
-      .withColumn("batch", lit(-1L))
-    live.write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/v${v + 1}/codes")
-    writeSmallFile(spark, s"$dir/v${v + 1}/centroids.tsv",
-      readTextFile(spark, s"$dir/v$v/centroids.tsv"))
-    writeSmallFile(spark, s"$dir/LATEST", (v + 1).toString)
-    val fs = hadoopFs(spark, dir)
-    for (old <- 1L until v)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v$old"), true)
-  }
-
-  private def readTextFile(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val in = hadoopFs(spark, path).open(new org.apache.hadoop.fs.Path(path))
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
-  // ---- persisted IVF (full-vector) index ------------------------------
+  /** Posting rows: each vector assigned to its nearest (frozen)
+    * centroid, with its norm — one map-only pass. */
+  private def ivfRows(vecs: DataFrame,
+      cents: Seq[(Long, Seq[Double])]): DataFrame =
+    spreadScan(vecs.select(col("vec_id"), col("embedding").as("c_v")))
+      .withColumn("list_id", nearestCentroid(col("c_v"), cents))
+      .withColumn("c_norm", sqrt(fdot(col("c_v"), col("c_v"))))
 
   /** Persist a k-means IVF index: (vec_id, vector, norm) rows
     * PARTITIONED BY inverted list + the centroid sidecar — the same
-    * versioned LATEST-pointer publication as [[writePqIndex]]. Unlike
-    * PQ the vectors ride along (exact in-list cosine, no compression),
-    * so this is the reuse shape for `kmeansTopK`: the Lloyd refinement
-    * and the full-corpus assignment pass are paid once, probes after
-    * that read only their nprobe list directories.
+    * versioned publication as [[writePqIndex]]. Unlike PQ the vectors
+    * ride along (exact in-list cosine, no compression), so this is the
+    * reuse shape for `kmeansTopK`: the Lloyd refinement and the
+    * full-corpus assignment pass are paid once, probes after that read
+    * only their nprobe list directories.
     */
   def writeIvfIndex(corpus: DataFrame, dir: String, numLists: Int = 16,
       iters: Int = 2, sampleFrac: Double = 1.0,
       centsOpt: Option[Seq[(Long, Seq[Double])]] = None): Unit = {
     val spark = corpus.sparkSession
-    val v = pqLatestVersion(spark, dir).getOrElse(0L) + 1
+    val v = indexVersion(spark, dir).getOrElse(0L) + 1
     val cents = centsOpt.getOrElse(
       kmeansCentroids(corpus, numLists, iters, sampleFrac))
-    spreadScan(corpus.select(col("vec_id"), col("embedding").as("c_v")))
-      .withColumn("list_id", nearestCentroid(col("c_v"), cents))
-      .withColumn("c_norm", sqrt(fdot(col("c_v"), col("c_v"))))
+    ivfRows(corpus, cents)
       .write.mode(SaveMode.Overwrite).partitionBy("list_id")
       .parquet(s"$dir/v$v/codes")
-    val fs = hadoopFs(spark, dir)
-    def writeFile(path: String, content: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-    val dim = cents.head._2.length
-    writeFile(s"$dir/v$v/centroids.tsv",
-      (s"#ivf numLists=$numLists dim=$dim" +:
-        cents.map { case (id, c) => s"$id\t${c.mkString(",")}" })
-        .mkString("\n"))
-    writeFile(s"$dir/LATEST", v.toString)
-    for (old <- 1L until v - 1)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v$old"), true)
-  }
-
-  private def parseCentroidsTsv(text: String): Seq[(Long, Seq[Double])] =
-    text.split("\n").toSeq.filter(_.nonEmpty).tail.map { line =>
-      val Array(id, dims) = line.split("\t", 2)
-      (id.toLong, dims.split(",").toSeq.map(_.toDouble))
-    }
-
-  private def readCentroidsFile(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(Long, Seq[Double])] = {
-    val in = hadoopFs(spark, path).open(new org.apache.hadoop.fs.Path(path))
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    parseCentroidsTsv(text)
-  }
-
-  private def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-      dir: String, v: Long): Seq[(Long, Seq[Double])] =
-    readCentroidsFile(spark, s"$dir/v$v/centroids.tsv")
-
-  /** Append new vectors to the CURRENT version of a persisted IVF
-    * index: assigned against the FROZEN sidecar centroids (the same
-    * incremental-IVF contract as [[appendToPqIndex]] — codebooks never
-    * move on append; rebuilds handle drift), landing as new files in
-    * the existing list partitions. Probes see them immediately.
-    */
-  def appendToIvfIndex(newVecs: DataFrame, dir: String): Unit = {
-    val spark = newVecs.sparkSession
-    val v = pqLatestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $dir"))
-    val cents = readIvfCentroids(spark, dir, v)
-    spreadScan(newVecs.select(col("vec_id"), col("embedding").as("c_v")))
-      .withColumn("list_id", nearestCentroid(col("c_v"), cents))
-      .withColumn("c_norm", sqrt(fdot(col("c_v"), col("c_v"))))
-      .write.mode(SaveMode.Append).partitionBy("list_id")
-      .parquet(s"$dir/v$v/codes")
+    publishVersion(spark, dir, v, centroidsText(
+      s"#ivf numLists=$numLists dim=${cents.head._2.length}", cents))
   }
 
   /** Probe a persisted IVF index — [[probeAssigned]] over the stored
@@ -745,9 +622,9 @@ object Similarity {
     */
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val v = pqLatestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $dir"))
-    val cents = readIvfCentroids(spark, dir, v)
+    val v = currentVersion(spark, dir)
+    val cents =
+      parseCentroidsTsv(readTextFile(spark, s"$dir/v$v/centroids.tsv"))
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("c_v", ArrayType(FloatType)),
@@ -778,473 +655,299 @@ object Similarity {
   private[graft] def ensurePqIndex(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): String = {
     val dir = indexCacheDir(spark, sfDir, "pq")
-    if (pqLatestVersion(spark, dir).isEmpty)
+    if (indexVersion(spark, dir).isEmpty)
       writePqIndex(table(spark, sfDir, "embeddings"), dir)
-    dir
-  }
-
-  /** The CDC lifecycle for the declared upsert query: the full corpus
-    * lands as batch 0, then ONE change batch — every `vec_id % 5 == 1`
-    * document "re-embedded" (deterministically: it takes `vec_id + 1`'s
-    * vector, so the oracle can replay the mutation in SQL) and every
-    * `vec_id % 7 == 3` document deleted. Probes must rank the
-    * re-embedded docs by their NEW vectors and never surface the
-    * deleted ones. Ids that are both (re-embed ∩ takedown) are
-    * takedowns — the upsert set excludes them, keeping the semantics
-    * deterministic.
-    */
-  private[graft] def ensureIvfUpserted(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
-    val dir = indexCacheDir(spark, sfDir, "ivf-ups")
-    if (!graft.sources.DerivedCache.isComplete(spark, dir) ||
-        pqLatestVersion(spark, dir).isEmpty) {
-      val cents = ensureKmeansQuantizer(spark, sfDir)
-      val e = table(spark, sfDir, "embeddings")
-      appendIvfIncrement(spark, dir, e, cents, 0L)
-      val next = e.select((col("vec_id") - 1).as("vec_id"),
-        col("embedding").as("__new_emb"))
-      val ups = e.select("vec_id").join(next, "vec_id")
-        .filter(pmod(col("vec_id"), lit(5)) === 1 &&
-          pmod(col("vec_id"), lit(7)) =!= 3)
-        .select(col("vec_id"), col("__new_emb").as("embedding"),
-          lit("upsert").as("op"))
-      val dels = e.filter(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id"), col("embedding"), lit("delete").as("op"))
-      upsertIvfIncrement(spark, dir, ups.unionByName(dels), cents, 1L)
-      hadoopFs(spark, dir)
-        .create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
-    }
-    dir
-  }
-
-  /** Build + delete + compact lifecycle for the declared PQ delete
-    * query — the [[ensureIvfDeleted]] pattern on the versioned PQ
-    * layout, so the oracle grades the physically-compacted codes.
-    * Crash anywhere before the `_SUCCESS` witness → the rerun builds a
-    * fresh version through `writePqIndex`'s own publication and
-    * converges (stale versions are pruned by the next flip).
-    */
-  private[graft] def ensurePqDeleted(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): String = {
-    val dir = indexCacheDir(spark, sfDir, "pq-del")
-    if (!graft.sources.DerivedCache.isComplete(spark, dir) ||
-        pqLatestVersion(spark, dir).isEmpty) {
-      val e = table(spark, sfDir, "embeddings")
-      writePqIndex(e, dir)
-      deleteFromPqIndex(spark, dir,
-        e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"), 0L)
-      compactPqIndex(spark, dir)
-      hadoopFs(spark, dir)
-        .create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
-    }
     dir
   }
 
   private[graft] def ensureIvfIndex(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): String = {
     val dir = indexCacheDir(spark, sfDir, "ivf")
-    if (pqLatestVersion(spark, dir).isEmpty)
+    if (indexVersion(spark, dir).isEmpty)
       writeIvfIndex(table(spark, sfDir, "embeddings"), dir,
         numLists = 16, iters = 2, sampleFrac = 0.5,
         centsOpt = Some(ensureKmeansQuantizer(spark, sfDir)))
     dir
   }
 
+  /** Build a maintained index for a declared query iff its cache dir
+    * holds no complete build; return the dir. `_SUCCESS` lands after
+    * the last step, and every step is a batch-id-keyed commit, so a
+    * crashed build re-runs: the steps that landed no-op as replays and
+    * the rest apply. A dir with no committed manifest (an older layout's
+    * cache) is rebuilt, never read.
+    */
+  private def ensureMaintained(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String, kind: String)(build: String => Unit): String = {
+    val dir = indexCacheDir(spark, sfDir, kind)
+    if (!graft.sources.DerivedCache.isComplete(spark, dir) ||
+        AtomicIncrement.latestSnapshot(spark, dir).version == 0L) {
+      val fs = hadoopFs(spark, dir)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), false)
+      build(dir)
+      fs.create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
+    }
+    dir
+  }
+
+  /** The CDC change batch of the declared upsert queries, over the
+    * corpus `e`: every `vec_id % 5 == 1` document "re-embedded"
+    * (deterministically: it takes `vec_id + 1`'s vector, so the oracle
+    * can replay the mutation in SQL) and every `vec_id % 7 == 3`
+    * document deleted. Ids that are both are takedowns — the upsert set
+    * excludes them, keeping the semantics deterministic.
+    */
+  private def declaredChurn(e: DataFrame): DataFrame = {
+    val next = e.select((col("vec_id") - 1).as("vec_id"),
+      col("embedding").as("__new_emb"))
+    val ups = e.select("vec_id").join(next, "vec_id")
+      .filter(pmod(col("vec_id"), lit(5)) === 1 &&
+        pmod(col("vec_id"), lit(7)) =!= 3)
+      .select(col("vec_id"), col("__new_emb").as("embedding"),
+        lit("upsert").as("op"))
+    val dels = e.filter(pmod(col("vec_id"), lit(7)) === 3)
+      .select(col("vec_id"), col("embedding"), lit("delete").as("op"))
+    ups.unionByName(dels)
+  }
+
+  /** The CDC lifecycle for the declared upsert query: the full corpus
+    * lands as batch 0, then ONE change batch ([[declaredChurn]]).
+    * Probes must rank the re-embedded docs by their NEW vectors and
+    * never surface the deleted ones.
+    */
+  private[graft] def ensureIvfUpserted(
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
+    ensureMaintained(spark, sfDir, "ivf-ups") { dir =>
+      val cents = ensureKmeansQuantizer(spark, sfDir)
+      val e = table(spark, sfDir, "embeddings")
+      appendIvfIncrement(spark, dir, e, cents, 0L)
+      upsertIvfIncrement(spark, dir, declaredChurn(e), cents, 1L)
+    }
+
+  /** Build + delete + compact lifecycle for the declared PQ delete
+    * query — the [[ensureIvfDeleted]] pattern on the maintained PQ
+    * index, so the oracle grades the physically-compacted codes. The
+    * codebook is the `hashCentroids(e, 16)` one [[pqTopK]] fits, and
+    * the probe is the same [[pqProbe]].
+    */
+  private[graft] def ensurePqDeleted(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String): String =
+    ensureMaintained(spark, sfDir, "pq-del") { dir =>
+      val e = table(spark, sfDir, "embeddings")
+      appendPqIncrement(spark, dir, e, hashCentroids(e, 16), 0L)
+      deleteIvfIncrement(spark, dir,
+        e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"), 1L)
+      compactIvfIncremental(spark, dir)
+    }
+
+  // ---- maintained (incremental) indexes -------------------------------
+
   /** INCREMENTAL index maintenance — the missing half of
     * build-once-probe-many at 100 TB: a production IVF index is not
     * rebuilt per ingest, it ABSORBS increments against a frozen
     * quantizer (retrain is a rare, monitored event — `q_centroid_drift`
-    * is the monitor), masks deletes with tombstones, and compacts
-    * occasionally. Layout: `LATEST` names the current GENERATION
-    * `g<G>/`, inside which every increment lands whole under
-    * `batch=<id>/list_id=<l>/` and every delete under
-    * `_tombstones/batch=<id>/`; compaction folds live postings into
-    * `g<G+1>` and flips the pointer (the [[writePqIndex]] publication
-    * discipline — a crash mid-compaction leaves readers on the
-    * complete previous generation).
+    * is the monitor), masks deletes, and compacts occasionally.
     *
-    * Each increment is one map-only pass over the NEW vectors (assign
-    * to the frozen centroids, norm, write) — cost ∝ batch, the
-    * existing postings are never touched. `batch=<id>` is overwritten
-    * whole on replay (the CorpusStream shield), and a batch id at or
-    * below the generation's `_FOLDED` horizon no-ops — a redelivery
-    * straddling a compaction cannot re-insert rows the fold already
-    * carried forward. Probes read the union of batches; `list_id`
-    * stays a PARTITION column, so the per-list directory pruning that
-    * makes an IVF probe cheap holds across every increment (and
-    * dynamic partition pruning covers the join path on a cluster).
-    * Single-writer maintenance contract (appends/deletes/compactions
-    * serialized), like any snapshot-pointer table; probes are
-    * lock-free.
+    * Each maintained index (full-vector postings or PQ codes) is ONE
+    * graft sink ([[AtomicIncrement]]), and every maintenance call is
+    * one `Txn` commit that records its batch id on the commit line:
+    *  - append: [[AtomicIncrement.appendBlindAtomic]];
+    *  - delete, upsert: one [[AtomicIncrement.mergeOnReadAtomic]]
+    *    commit keyed on `vec_id` ([[mergeIncrement]]);
+    *  - compaction: [[Maintenance.maintainAtomic]]
+    *    ([[compactIvfIncremental]]);
+    *  - probe, stats: [[AtomicIncrement.readCommitted]].
+    * A call whose batch id is at or below the sink's recorded one is a
+    * replay and applies nothing ([[AtomicIncrement.isReplay]]); a crash
+    * before the publish leaves the snapshot as it was, and the replay
+    * applies. The id is per sink, so ONE stream (one checkpoint) writes
+    * an index; probes are snapshot-isolated and lock-free. Returns
+    * whether the call applied.
+    */
+  private def maintain(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, batchId: Long)(
+      write: (AtomicIncrement.Snapshot, Option[Long]) => Unit): Boolean = {
+    val snap = AtomicIncrement.latestSnapshot(spark, indexDir)
+    val fresh = !AtomicIncrement.isReplay(snap, indexDir, batchId)
+    if (fresh) write(snap, Some(batchId))
+    fresh
+  }
+
+  /** Append `vecs` to the maintained full-vector index: one map-only
+    * pass over the NEW vectors (assign to the frozen centroids, norm,
+    * stage) — cost ∝ batch, the existing postings are never touched.
     */
   def appendIvfIncrement(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, vecs: DataFrame,
-      cents: Seq[(Long, Seq[Double])], batchId: Long): Unit = {
-    val g = ivfIncGeneration(spark, indexDir)
-    if (batchId <= ivfIncFoldedThrough(spark, indexDir, g)) return
-    spreadScan(vecs.select(col("vec_id"), col("embedding").as("c_v")))
-      .withColumn("list_id", nearestCentroid(col("c_v"), cents))
-      .withColumn("c_norm", sqrt(fdot(col("c_v"), col("c_v"))))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("list_id")
-      .parquet(s"$indexDir/g$g/batch=$batchId")
-  }
+      cents: Seq[(Long, Seq[Double])], batchId: Long): Boolean =
+    maintain(spark, indexDir, batchId) { (_, batch) =>
+      AtomicIncrement.appendBlindAtomic(ivfRows(vecs, cents), indexDir, batch)
+      ()
+    }
 
-  /** Tombstone delete: the ids land whole under the current
-    * generation's `_tombstones/batch=<id>/` (underscore-prefixed, so
-    * postings reads never see them as data) and every probe anti-joins
-    * them out until a compaction removes the rows physically — the
-    * append-only answer to retention/right-to-be-forgotten at 100 TB,
-    * where rewriting the postings per delete would dwarf the delete.
-    * A tombstone at batch `b` masks postings from batches STRICTLY
-    * BEFORE `b` — log ordering, so [[upsertIvfIncrement]]'s same-batch
-    * re-append survives its own tombstone. Replay-idempotent twice
-    * over: the batch dir overwrites whole, and a redelivery past a
-    * compaction (`batchId <= _FOLDED`) no-ops — by then the masked
-    * rows are physically gone.
+  /** Delete `ids` from a maintained index of either layout: a delete
+    * vector of the ids masks their rows in every probe from this commit
+    * on, and no posting is rewritten — the append-only answer to
+    * retention/right-to-be-forgotten at 100 TB, where rewriting the
+    * postings per delete would dwarf the delete. Compaction removes the
+    * rows physically.
     */
   def deleteIvfIncrement(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, ids: DataFrame, batchId: Long): Unit = {
-    val g = ivfIncGeneration(spark, indexDir)
-    if (batchId <= ivfIncFoldedThrough(spark, indexDir, g)) return
-    ids.select(col("vec_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$indexDir/g$g/_tombstones/batch=$batchId")
-  }
+      indexDir: String, ids: DataFrame, batchId: Long): Boolean =
+    mergeIncrement(spark, indexDir, ids, None, batchId)
 
-  /** CDC upsert batch: every incoming id is tombstoned at this batch
-    * (killing all earlier postings for it) and the non-delete rows
-    * re-append in the SAME batch with their new vectors — re-embedded
-    * documents land under the fresh assignment, takedowns (`op` =
-    * "delete") just vanish. This is how a 100 TB ANN index tracks an
-    * encoder refresh or a document edit stream without rebuilds: per
-    * batch, cost ∝ churn. Both writes ride the same replay shields as
-    * their building blocks; a crash between them leaves the index
-    * temporarily missing the re-appends, and the batch replay rewrites
-    * both sides to the converged state.
+  /** CDC upsert batch: every incoming id's old posting dies and the
+    * non-delete rows (`op` != "delete") land with their new vectors —
+    * re-embedded documents under the fresh assignment, takedowns just
+    * vanish. This is how a 100 TB ANN index tracks an encoder refresh
+    * or a document edit stream without rebuilds: per batch, cost ∝
+    * churn. One commit: a batch that fails anywhere leaves the index at
+    * its pre-batch snapshot.
     */
   def upsertIvfIncrement(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batch: DataFrame,
       cents: Seq[(Long, Seq[Double])], batchId: Long,
-      opCol: String = "op"): Unit = {
-    deleteIvfIncrement(spark, indexDir, batch.select(col("vec_id")), batchId)
-    appendIvfIncrement(spark, indexDir,
-      batch.filter(col(opCol) =!= "delete").select("vec_id", "embedding"),
-      cents, batchId)
-  }
+      opCol: String = "op"): Boolean =
+    mergeIncrement(spark, indexDir, batch.select(col("vec_id")),
+      Some(ivfRows(batch.filter(col(opCol) =!= "delete"), cents)), batchId)
 
-  /** The live postings of the current generation: the union of its
-    * increment batches minus its tombstones (broadcast anti-join — the
-    * tombstone set is churn-sized, never corpus-sized). A tombstone
-    * masks postings from STRICTLY EARLIER batches only: that log
-    * ordering is what makes UPSERT expressible as tombstone + re-append
-    * in one batch (the re-embedded vector survives its own tombstone;
-    * every older posting for the id dies), while a pure delete — a
-    * tombstone with no re-append — removes the id entirely. The
-    * explicit schema pins both partition columns to LONG (inference
-    * would guess INT and the cast would defeat the probe join's
-    * partition pruning).
-    */
-  private def ivfIncLive(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, g: Long,
-      exclude: Set[Long] = Set.empty): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("c_v", ArrayType(FloatType)),
-      StructField("c_norm", DoubleType),
-      StructField("batch", LongType),
-      StructField("list_id", LongType)))
-    val all = spark.read.schema(schema).parquet(s"$indexDir/g$g")
-    // `batch` is a partition column, so the torn-batch exclusion a
-    // compaction passes prunes whole directories at planning time
-    val codes =
-      if (exclude.isEmpty) all
-      else all.filter(!col("batch").isin(exclude.toSeq: _*))
-    maskIncTombstones(spark, indexDir, g, codes, exclude)
-      .select(col("vec_id").as("neighbor_id"), col("c_v"),
-        col("c_norm"), col("list_id"))
-  }
+  private val DeleteCol = "__delete"
+  private val MaxChurnKeys = 10000000
 
-  /** The log-ordered tombstone mask shared by every maintained layout
-    * (incremental full-vector postings, incremental PQ codes, and the
-    * versioned PQ index): one row per id at its LATEST tombstone
-    * batch, broadcast (churn-sized, never corpus-sized); a row
-    * survives iff it landed at or after every tombstone for its id —
-    * the ordering that makes upsert expressible as tombstone +
-    * same-batch re-append. `exclude` drops named tombstone batches
-    * (compaction passes the torn set, so a half-written delete is
-    * never baked into a fold it could not survive replaying).
+  /** One delete/upsert commit: the delete vector of `ids` and the
+    * `afterImages` publish together, and the after-images land at the
+    * delete vector's own commit sequence, so they survive it (the
+    * sink's dv rule) while every older row of their ids dies. An index
+    * with no committed rows has nothing to delete: the after-images
+    * append.
     */
-  private def maskTombstonesAt(spark: org.apache.spark.sql.SparkSession,
-      tombDir: String, rows: DataFrame,
-      exclude: Set[Long] = Set.empty): DataFrame = {
-    val tombPath = new org.apache.hadoop.fs.Path(tombDir)
-    if (!hadoopFs(spark, tombDir).exists(tombPath)) rows
-    else {
-      val all = spark.read
-        .schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("batch", LongType))))
-        .parquet(tombDir)
-      val kept =
-        if (exclude.isEmpty) all
-        else all.filter(!col("batch").isin(exclude.toSeq: _*))
-      val tombs = kept
-        .select(col("vec_id").as("__t_id"), col("batch"))
-        .groupBy("__t_id").agg(max("batch").as("__t_batch"))
-      rows.join(broadcast(tombs),
-        rows("vec_id") === tombs("__t_id") &&
-          rows("batch") < tombs("__t_batch"), "left_anti")
+  private def mergeIncrement(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, ids: DataFrame, afterImages: Option[DataFrame],
+      batchId: Long): Boolean =
+    maintain(spark, indexDir, batchId) { (snap, batch) =>
+      if (snap.data.isEmpty)
+        afterImages.foreach(
+          AtomicIncrement.appendBlindAtomic(_, indexDir, batch))
+      else {
+        // a delete row is its key under the index schema, nulls elsewhere
+        val dels = ids.select(snap.schema.fields.toSeq.map(f =>
+            if (f.name == "vec_id") col("vec_id")
+            else lit(null).cast(f.dataType).as(f.name)): _*)
+          .withColumn(DeleteCol, lit(true))
+        val changes = afterImages.fold(dels)(
+          _.withColumn(DeleteCol, lit(false)).unionByName(dels))
+        AtomicIncrement.mergeOnReadAtomic(changes, indexDir, "vec_id",
+          DeleteCol, MaxChurnKeys,
+          AtomicIncrement.collectChurn(changes, "vec_id", MaxChurnKeys), batch)
+        ()
+      }
     }
-  }
 
-  private def maskIncTombstones(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, g: Long, rows: DataFrame,
-      exclude: Set[Long] = Set.empty): DataFrame =
-    maskTombstonesAt(spark, s"$indexDir/g$g/_tombstones", rows, exclude)
-
-  /** Probe the incrementally-grown postings: identical semantics (and
+  /** Probe the maintained full-vector index: identical semantics (and
     * identical results — the declared queries share their oracle
     * strings with the batch-built twins) to [[probeIvfIndex]], over
     * however many increments, deletes and compactions have landed.
     */
   def probeIvfIncremental(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, cents: Seq[(Long, Seq[Double])],
-      queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val g = pqLatestVersion(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $indexDir"))
-    probeAssigned(ivfIncLive(spark, indexDir, g), queries, cents, k, nprobe)
-  }
+      queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame =
+    probeAssigned(AtomicIncrement.readCommitted(spark, indexDir)
+      .withColumnRenamed("vec_id", "neighbor_id"), queries, cents, k, nprobe)
 
-  /** Fold the current generation's live postings (tombstones applied)
-    * into a single-batch next generation and flip `LATEST` — the
-    * publication point. The old generation is retained for readers
-    * that pinned it mid-probe; generations before it are pruned. The
-    * new generation's `_FOLDED` horizon records the largest batch id
-    * the fold consumed, so replayed increments/deletes at or below it
-    * no-op instead of re-inserting folded rows.
+  /** Compact a maintained index of either layout: the sink's
+    * [[Maintenance.maintainAtomic]] pass over a `list_id`-clustered
+    * target, the pass `MergeStream`'s `maintainEvery` runs. Standing
+    * delete vectors fold (deleted rows go physically), a fragmented
+    * index rewrites clustered by list, and the vacuums reclaim the
+    * superseded files. Its commits keep the sink's batch id, so a
+    * replay straddling it still no-ops.
     */
   def compactIvfIncremental(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit =
-    foldGeneration(spark, indexDir, (g, torn) =>
-      ivfIncLive(spark, indexDir, g, torn)
-        .select(col("neighbor_id").as("vec_id"), col("c_v"),
-          col("c_norm"), col("list_id")))
-
-  /** The shared compaction step of both incremental layouts: fold the
-    * current generation's live rows (whatever frame `live` derives for
-    * it — full-vector postings or PQ codes, tombstones already
-    * applied) into `g<G+1>/batch=0`, record the `_FOLDED` horizon (the
-    * largest batch id consumed, so replays at or below it no-op), flip
-    * `LATEST`, prune generations older than the one retained for
-    * pinned readers.
-    *
-    * TORN batches — directories missing Spark's `_SUCCESS` witness,
-    * i.e. a crashed append or delete that has not replayed yet — are
-    * excluded twice over: their ids stay OUT of the horizon (so the
-    * replay still fires against the new generation instead of
-    * no-opping) and their partial rows stay out of the fold input (so
-    * half a batch is never frozen into a generation as if it were the
-    * whole). Without this a compaction racing a crashed write would
-    * make the torn batch permanent: the horizon would swallow its id,
-    * the replay would no-op, and the partial rows would be the
-    * batch forever. A batch id is torn if ANY directory bearing it
-    * (data or tombstone) lacks the witness — an upsert is one
-    * tombstone write plus one data write, and a crash between them
-    * must keep the WHOLE batch replayable, not fold the delete half
-    * while dropping the re-append.
-    */
-  private def foldGeneration(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, live: (Long, Set[Long]) => DataFrame): Unit = {
-    val g = pqLatestVersion(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $indexDir"))
-    val fs = hadoopFs(spark, indexDir)
-    def batchDirs(parent: org.apache.hadoop.fs.Path): Seq[(Long, Boolean)] =
-      fs.listStatus(parent).toSeq
-        .filter(_.getPath.getName.startsWith("batch="))
-        .map { s =>
-          (s.getPath.getName.stripPrefix("batch=").toLong,
-            fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-        }
-    val gPath = new org.apache.hadoop.fs.Path(s"$indexDir/g$g")
-    val tombPath = new org.apache.hadoop.fs.Path(s"$indexDir/g$g/_tombstones")
-    val seen = batchDirs(gPath) ++
-      (if (fs.exists(tombPath)) batchDirs(tombPath) else Nil)
-    val torn = seen.collect { case (id, false) => id }.toSet
-    val folded = ivfIncFoldedThrough(spark, indexDir, g)
-    val horizon = (seen.map(_._1).filterNot(torn) :+ folded).max
-    // the torn-batch exclusion assumes ONE sequential writer: a crash
-    // always leaves the torn batch as the highest id, so excluding it
-    // from the horizon keeps its replay live. A torn id BELOW a
-    // completed non-torn id (and above the already-folded horizon —
-    // redelivery debris at or below it was applied long ago and is
-    // harmless) means that assumption broke: folding would swallow
-    // the id into the horizon's max and the partial batch would be
-    // lost silently. Fail loudly instead — replay or remove the torn
-    // dirs, then compact.
-    val swallowed = torn.filter(t => t > folded && t < horizon)
-    require(swallowed.isEmpty,
-      s"torn batch id(s) ${swallowed.toSeq.sorted.mkString(",")} sit " +
-        s"below the fold horizon $horizon under $indexDir/g$g: a " +
-        "non-torn batch committed after a crashed write, violating " +
-        "the single-sequential-writer contract — folding now would " +
-        "permanently discard the torn batch's replay. Replay or " +
-        "remove those batch dirs first.")
-    live(g, torn)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("list_id")
-      .parquet(s"$indexDir/g${g + 1}/batch=0")
-    writeSmallFile(spark, s"$indexDir/g${g + 1}/_FOLDED", horizon.toString)
-    writeSmallFile(spark, s"$indexDir/LATEST", (g + 1).toString)
-    for (old <- 1L until g)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/g$old"), true)
-  }
-
-  /** Current generation, initializing `LATEST` to 1 on first touch —
-    * concurrent first writers race benignly (identical bytes).
-    */
-  private def ivfIncGeneration(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Long =
-    pqLatestVersion(spark, indexDir).getOrElse {
-      writeSmallFile(spark, s"$indexDir/LATEST", "1"); 1L
-    }
-
-  /** The current generation's folded-batch horizon (−1 if the index
-    * does not exist yet or was never compacted). The streaming batch
-    * steps consult this to skip their compaction leg on a
-    * post-compaction redelivery: the append already no-ops
-    * (`batchId <= horizon`), and without the same guard the fold
-    * would re-run anyway — a full corpus-sized rewrite plus a garbage
-    * generation per redelivered batch, for zero state change.
-    */
-  def incFoldedThrough(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Long =
-    pqLatestVersion(spark, indexDir)
-      .map(g => ivfIncFoldedThrough(spark, indexDir, g))
-      .getOrElse(-1L)
-
-  /** The generation's folded-batch horizon: compaction folded every
-    * batch id at or below it (−1 for a never-compacted generation).
-    */
-  private def ivfIncFoldedThrough(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, g: Long): Long = {
-    val fs = hadoopFs(spark, indexDir)
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/g$g/_FOLDED")
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.trim.toLong
-    }
-  }
-
-  private def writeSmallFile(spark: org.apache.spark.sql.SparkSession,
-      path: String, content: String): Unit = {
-    val out = hadoopFs(spark, path)
-      .create(new org.apache.hadoop.fs.Path(path), true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
+      indexDir: String): Maintenance.Report =
+    Maintenance.maintainAtomic(spark,
+      Maintenance.Target(indexDir, clusterCols = Seq("list_id")))
 
   // ---- incremental PQ (compressed-code) index maintenance -------------
 
   /** The [[appendIvfIncrement]] lifecycle on the COMPRESSED index —
     * the layout a 100 TB ANN deployment actually ships, because the
-    * codes are M bytes per vector where the postings are 4·dim. Same
-    * generation/batch/tombstone discipline, but each increment is one
-    * map-only ENCODE pass against the frozen codebook (pqEncode — the
-    * full embedding is dropped after encoding, so an increment's
-    * storage cost is its code rows, nothing else). The codebook
-    * publishes once at the index root on first touch: it is frozen
-    * across generations by the incremental contract (codebook drift is
-    * what full [[writePqIndex]] rebuilds are for, and
-    * `q_centroid_drift` is the monitor that triggers them), so probes
-    * never refit and never need the caller to re-supply it.
+    * codes are M bytes per vector where the postings are 4·dim. Each
+    * increment is one map-only ENCODE pass against the frozen codebook
+    * (pqEncode — the full embedding is dropped after encoding, so an
+    * increment's storage cost is its code rows, nothing else).
     */
   def appendPqIncrement(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, vecs: DataFrame,
       cents: Seq[(Long, Seq[Double])], batchId: Long,
-      numSubspaces: Int = 8, dim: Int = 64): Unit = {
-    val g = ivfIncGeneration(spark, indexDir)
-    val sidecar = new org.apache.hadoop.fs.Path(s"$indexDir/centroids.tsv")
-    if (!hadoopFs(spark, indexDir).exists(sidecar))
-      writeSmallFile(spark, s"$indexDir/centroids.tsv",
-        pqSidecarText(cents, numSubspaces, dim))
-    if (batchId <= ivfIncFoldedThrough(spark, indexDir, g)) return
-    pqEncode(vecs.select("vec_id", "embedding"), cents, numSubspaces, dim)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("list_id")
-      .parquet(s"$indexDir/g$g/batch=$batchId")
+      numSubspaces: Int = 8, dim: Int = 64): Boolean = {
+    writePqCodebook(spark, indexDir, cents, numSubspaces, dim)
+    maintain(spark, indexDir, batchId) { (_, batch) =>
+      AtomicIncrement.appendBlindAtomic(pqEncode(
+        vecs.select("vec_id", "embedding"), cents, numSubspaces, dim),
+        indexDir, batch)
+      ()
+    }
+  }
+
+  /** The compressed index's codebook sidecar at the index root: written
+    * before the first commit, with no overwrite, and never rewritten.
+    * The incremental contract freezes the codebook (codebook drift is
+    * what full [[writePqIndex]] rebuilds are for, and
+    * `q_centroid_drift` is the monitor that triggers them), so probes
+    * never refit and never need the caller to re-supply it.
+    */
+  private def writePqCodebook(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, cents: Seq[(Long, Seq[Double])],
+      numSubspaces: Int, dim: Int): Unit = {
+    val fs = hadoopFs(spark, indexDir)
+    val p = new org.apache.hadoop.fs.Path(s"$indexDir/centroids.tsv")
+    if (!fs.exists(p)) {
+      val out = fs.create(p, false)
+      try out.write(pqSidecarText(cents, numSubspaces, dim).getBytes("UTF-8"))
+      finally out.close()
+    }
   }
 
   /** CDC upsert on the compressed index — [[upsertIvfIncrement]]'s
-    * contract (tombstone every incoming id at this batch, re-encode
-    * the non-deletes in the same batch; log ordering lets the fresh
-    * codes survive their own tombstone). [[deleteIvfIncrement]] is
-    * layout-agnostic (it only writes ids under the generation's
-    * `_tombstones/`), so both layouts share it verbatim.
+    * contract, the non-deletes re-ENCODED against the frozen codebook
+    * in the same commit that deletes their old codes.
     */
   def upsertPqIncrement(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batch: DataFrame,
       cents: Seq[(Long, Seq[Double])], batchId: Long,
-      numSubspaces: Int = 8, dim: Int = 64, opCol: String = "op"): Unit = {
-    deleteIvfIncrement(spark, indexDir, batch.select(col("vec_id")), batchId)
-    appendPqIncrement(spark, indexDir,
-      batch.filter(col(opCol) =!= "delete").select("vec_id", "embedding"),
-      cents, batchId, numSubspaces, dim)
+      numSubspaces: Int = 8, dim: Int = 64,
+      opCol: String = "op"): Boolean = {
+    writePqCodebook(spark, indexDir, cents, numSubspaces, dim)
+    mergeIncrement(spark, indexDir, batch.select(col("vec_id")),
+      Some(pqEncode(batch.filter(col(opCol) =!= "delete")
+        .select("vec_id", "embedding"), cents, numSubspaces, dim)), batchId)
   }
 
-  /** Live codes of the current generation: batch union minus the
-    * log-ordered tombstone mask ([[maskIncTombstones]] — shared with
-    * the full-vector layout). Explicit schema pins `batch` and
-    * `list_id` to LONG for the same partition-pruning reason as
-    * everywhere else.
-    */
-  private def pqIncLive(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, g: Long, numSubspaces: Int,
-      exclude: Set[Long] = Set.empty): DataFrame = {
-    val schema = StructType(
-      StructField("vec_id", LongType) +:
-        (0 until numSubspaces).map(m =>
-          StructField(s"code$m", IntegerType)) :+
-        StructField("batch", LongType) :+
-        StructField("list_id", LongType))
-    val all = spark.read.schema(schema).parquet(s"$indexDir/g$g")
-    val codes =
-      if (exclude.isEmpty) all
-      else all.filter(!col("batch").isin(exclude.toSeq: _*))
-    maskIncTombstones(spark, indexDir, g, codes, exclude).drop("batch")
-  }
-
-  /** Probe the incrementally-grown compressed index: the sidecar at
-    * the index root supplies codebook and params, [[pqProbe]] does the
-    * rest — identical semantics (and, for the declared query, an
-    * identical oracle string) to a fresh full encode.
+  /** Probe the maintained compressed index: the sidecar at the index
+    * root supplies codebook and params, [[pqProbe]] does the rest —
+    * identical semantics (and, for the declared query, an identical
+    * oracle string) to a fresh full encode.
     */
   def probePqIncremental(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, k: Int,
       nprobe: Int = 1): DataFrame = {
     val (cents, numSubspaces, dim) =
       parsePqSidecar(readTextFile(spark, s"$indexDir/centroids.tsv"))
-    val g = pqLatestVersion(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $indexDir"))
-    pqProbe(pqIncLive(spark, indexDir, g, numSubspaces), queries, cents, k,
-      numSubspaces, dim, nprobe)
+    pqProbe(AtomicIncrement.readCommitted(spark, indexDir), queries, cents,
+      k, numSubspaces, dim, nprobe)
   }
 
-  /** Per-list balance of the incrementally-maintained index — the
-    * probe-latency monitor: a probe opens nprobe lists, so one hot
-    * list IS the tail latency, and list skew is what a quantizer
-    * retrain (the `q_centroid_drift` trigger) actually fixes. One
-    * map-side-combined count over the live postings, |lists|-row
-    * output at any corpus size; `imbalance` = max/mean (1.0 =
-    * perfectly balanced; a probe of the hottest list costs
-    * `imbalance ×` the average probe).
+  /** Per-list balance of the maintained index — the probe-latency
+    * monitor: a probe opens nprobe lists, so one hot list IS the tail
+    * latency, and list skew is what a quantizer retrain (the
+    * `q_centroid_drift` trigger) actually fixes. One map-side-combined
+    * count over the live postings, |lists|-row output at any corpus
+    * size; `imbalance` = max/mean (1.0 = perfectly balanced; a probe of
+    * the hottest list costs `imbalance ×` the average probe).
     */
   def ivfIndexStats(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val g = pqLatestVersion(spark, indexDir).getOrElse(
-      throw new IllegalStateException(s"no LATEST pointer under $indexDir"))
-    val lc = ivfIncLive(spark, indexDir, g)
+    val lc = AtomicIncrement.readCommitted(spark, indexDir)
       .groupBy("list_id").agg(count(lit(1)).as("n_postings"))
     val t = broadcast(lc.agg(
       sum("n_postings").cast(LongType).as("total"),
@@ -1256,109 +959,59 @@ object Similarity {
         .as("imbalance"))
   }
 
-  /** Fold the live codes into the next generation —
-    * [[foldGeneration]], with the root sidecar untouched (the codebook
-    * is generation-invariant on this layout).
-    */
-  def compactPqIncremental(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val (_, numSubspaces, _) =
-      parsePqSidecar(readTextFile(spark, s"$indexDir/centroids.tsv"))
-    foldGeneration(spark, indexDir, (g, torn) =>
-      pqIncLive(spark, indexDir, g, numSubspaces, torn))
-  }
-
-  /** Build the incremental compressed index for the declared query iff
-    * absent: codebook fit once on the full corpus (the same
-    * deterministic md5-rank sample [[writePqIndex]] uses, so the
-    * q_ann_pq oracle replays it), then the corpus arrives as two
-    * disjoint increments. `_SUCCESS` lands last — a crashed build
-    * re-runs both appends over their Overwrite shields.
+  /** Build the maintained compressed index for the declared query:
+    * codebook fit once on the full corpus (the same deterministic
+    * md5-rank sample [[writePqIndex]] uses, so the q_ann_pq oracle
+    * replays it), then the corpus arrives as two disjoint increments.
     */
   private[graft] def ensurePqIncremental(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
-    val dir = indexCacheDir(spark, sfDir, "pq-inc")
-    if (!graft.sources.DerivedCache.isComplete(spark, dir) ||
-        pqLatestVersion(spark, dir).isEmpty) {
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
+    ensureMaintained(spark, sfDir, "pq-inc") { dir =>
       val e = table(spark, sfDir, "embeddings")
       val cents = hashCentroids(e, 16)
       appendPqIncrement(spark, dir,
         e.filter(pmod(col("vec_id"), lit(2)) === 0), cents, 0L)
       appendPqIncrement(spark, dir,
         e.filter(pmod(col("vec_id"), lit(2)) === 1), cents, 1L)
-      hadoopFs(spark, dir)
-        .create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
     }
-    dir
-  }
 
   /** [[ensureIvfUpserted]]'s CDC lifecycle on the compressed index:
-    * full corpus at batch 0, then one change batch re-embedding every
-    * `vec_id % 5 == 1` doc (as `vec_id + 1`'s vector) and taking down
-    * every `vec_id % 7 == 3` — through [[upsertPqIncrement]], so the
-    * fresh CODES survive their own tombstone by log ordering.
+    * full corpus at batch 0, then the [[declaredChurn]] batch through
+    * [[upsertPqIncrement]].
     */
   private[graft] def ensurePqUpserted(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
-    val dir = indexCacheDir(spark, sfDir, "pq-ups")
-    if (!graft.sources.DerivedCache.isComplete(spark, dir) ||
-        pqLatestVersion(spark, dir).isEmpty) {
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
+    ensureMaintained(spark, sfDir, "pq-ups") { dir =>
       val e = table(spark, sfDir, "embeddings")
       val cents = hashCentroids(e, 16)
       appendPqIncrement(spark, dir, e, cents, 0L)
-      val next = e.select((col("vec_id") - 1).as("vec_id"),
-        col("embedding").as("__new_emb"))
-      val ups = e.select("vec_id").join(next, "vec_id")
-        .filter(pmod(col("vec_id"), lit(5)) === 1 &&
-          pmod(col("vec_id"), lit(7)) =!= 3)
-        .select(col("vec_id"), col("__new_emb").as("embedding"),
-          lit("upsert").as("op"))
-      val dels = e.filter(pmod(col("vec_id"), lit(7)) === 3)
-        .select(col("vec_id"), col("embedding"), lit("delete").as("op"))
-      upsertPqIncrement(spark, dir, ups.unionByName(dels), cents, 1L)
-      hadoopFs(spark, dir)
-        .create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
+      upsertPqIncrement(spark, dir, declaredChurn(e), cents, 1L)
     }
-    dir
-  }
 
-  /** Build the incremental index for the declared query iff absent:
-    * the corpus arrives as two disjoint increments (even then odd
-    * vec_ids). The root `_SUCCESS` lands only after the last
-    * increment — a crash mid-build leaves no marker and the next
-    * caller re-runs both appends over their own Overwrite shields.
+  /** Build the maintained index for the declared query: the corpus
+    * arrives as two disjoint increments (even then odd vec_ids).
     */
   private[graft] def ensureIvfIncremental(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
-    val dir = indexCacheDir(spark, sfDir, "ivf-inc")
-    // a complete marker without a generation pointer is a stale
-    // pre-generation layout — rebuild rather than fail the probe
-    if (!graft.sources.DerivedCache.isComplete(spark, dir) ||
-        pqLatestVersion(spark, dir).isEmpty) {
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
+    ensureMaintained(spark, sfDir, "ivf-inc") { dir =>
       val cents = ensureKmeansQuantizer(spark, sfDir)
       val e = table(spark, sfDir, "embeddings")
       appendIvfIncrement(spark, dir,
         e.filter(pmod(col("vec_id"), lit(2)) === 0), cents, 0L)
       appendIvfIncrement(spark, dir,
         e.filter(pmod(col("vec_id"), lit(2)) === 1), cents, 1L)
-      val fs = hadoopFs(spark, dir)
-      fs.create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
     }
-    dir
-  }
 
   /** The full maintenance lifecycle for the declared delete query:
-    * two increments, a tombstone delete of every `vec_id % 7 == 3`
-    * row, then a compaction — so the ORACLE (the batch replay over the
-    * corpus minus the deleted ids) grades the physically-compacted
-    * index, not just the tombstone mask. The mask path is spec-pinned
-    * equal to this one.
+    * two increments, a delete of every `vec_id % 7 == 3` row, then a
+    * compaction — so the ORACLE (the batch replay over the corpus minus
+    * the deleted ids) grades the physically-compacted index, not just
+    * the delete-vector mask. The mask path is spec-pinned equal to
+    * this one.
     */
   private[graft] def ensureIvfDeleted(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
-    val dir = indexCacheDir(spark, sfDir, "ivf-del")
-    if (!graft.sources.DerivedCache.isComplete(spark, dir) ||
-        pqLatestVersion(spark, dir).isEmpty) {
+      spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
+    ensureMaintained(spark, sfDir, "ivf-del") { dir =>
       val cents = ensureKmeansQuantizer(spark, sfDir)
       val e = table(spark, sfDir, "embeddings")
       appendIvfIncrement(spark, dir,
@@ -1368,11 +1021,7 @@ object Similarity {
       deleteIvfIncrement(spark, dir,
         e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"), 2L)
       compactIvfIncremental(spark, dir)
-      val fs = hadoopFs(spark, dir)
-      fs.create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
     }
-    dir
-  }
 
   /** Fit-once FROZEN quantizer: the sample-refined Lloyd centroids
     * that q_ann_kmeans_indexed's IVF build, q_semdedup's cluster
@@ -1404,17 +1053,15 @@ object Similarity {
     val fs = hadoopFs(spark, dir)
     val tsv = s"$dir/centroids.tsv"
     if (graft.sources.DerivedCache.isComplete(spark, dir))
-      readCentroidsFile(spark, tsv)
+      parseCentroidsTsv(readTextFile(spark, tsv))
     else {
       val cents = kmeansCentroids(
         spreadScan(table(spark, sfDir, "embeddings")),
         numLists, iters, sampleFrac)
-      val dim = cents.head._2.length
       val out = fs.create(new org.apache.hadoop.fs.Path(tsv), true)
-      try out.write(
-        (s"#kmeans numLists=$numLists dim=$dim" +:
-          cents.map { case (id, c) => s"$id\t${c.mkString(",")}" })
-          .mkString("\n").getBytes("UTF-8"))
+      try out.write(centroidsText(
+        s"#kmeans numLists=$numLists dim=${cents.head._2.length}", cents)
+        .getBytes("UTF-8"))
       finally out.close()
       fs.create(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), true).close()
       cents
@@ -1496,9 +1143,9 @@ object Similarity {
         |ORDER BY query_id, neighbor_id""".stripMargin
 
   /** q_ann_ivf_delete's oracle: the kmeans probe replay with the
-    * tombstoned ids (`vec_id % 7 == 3`) excluded from the CORPUS side
+    * deleted ids (`vec_id % 7 == 3`) excluded from the CORPUS side
     * only — deleted vectors stop being findable but remain valid
-    * queries, exactly what the tombstone mask and the compacted index
+    * queries, exactly what the delete-vector mask and the compacted index
     * must both produce.
     */
   private lazy val kmeansDeleteOracleSql: String =
@@ -1697,7 +1344,7 @@ object Similarity {
         |ORDER BY query_id""".stripMargin
 
   /** q_ann_pq_delete's oracle: the PQ probe replay with the
-    * tombstoned ids (`vec_id % 7 == 3`) excluded from the CANDIDATE
+    * deleted ids (`vec_id % 7 == 3`) excluded from the CANDIDATE
     * side only — deleted vectors remain valid queries but stop being
     * findable, the same contract as `q_ann_ivf_delete` on the
     * compressed-code index.
@@ -2192,13 +1839,13 @@ object Similarity {
       },
       kmeansOracleSql),
 
-    // Index DELETION + COMPACTION (round 11): tombstone every
+    // Index DELETION + COMPACTION (round 11): delete every
     // `vec_id % 7 == 3` vector, compact, probe — the oracle replays
     // the batch build over the corpus MINUS the deleted ids, so it
     // grades the physically-rewritten postings (the
     // right-to-be-forgotten path: after compaction the bytes are
-    // gone, not just masked). The pre-compaction tombstone mask is
-    // spec-pinned equal to this result.
+    // gone, not just masked). The pre-compaction delete-vector mask
+    // is spec-pinned equal to this result.
     "q_ann_ivf_delete" -> QueryDef(
       (s, dir) => {
         val e = table(s, dir, "embeddings")
@@ -2210,7 +1857,7 @@ object Similarity {
       kmeansDeleteOracleSql),
 
     // CDC UPSERT through the index (round 11): one change batch
-    // re-embeds every vec_id % 5 == 1 document (tombstone + same-batch
+    // re-embeds every vec_id % 5 == 1 document (delete + same-commit
     // re-append with the new vector) and takes down every
     // vec_id % 7 == 3. The oracle replays the mutation in SQL against
     // the FROZEN quantizer — probes must rank re-embedded docs by
@@ -2418,7 +2065,7 @@ object Similarity {
       pqOracleSql),
 
     // The build-once-probe-many twin of q_ann_pq over the persisted
-    // compressed index (codes + sidecar, versioned LATEST pointer).
+    // compressed index (codes + sidecar, versioned publication).
     // SAME oracle string as q_ann_pq: the persisted codes must rank
     // identically to a fresh encode.
     "q_ann_pq_indexed" -> QueryDef(
@@ -2431,14 +2078,14 @@ object Similarity {
       pqOracleSql),
 
     // PQ-index DELETION + COMPACTION (round 11): the q_ann_ivf_delete
-    // lifecycle on the versioned compressed-code index — tombstone
-    // every vec_id % 7 == 3 row, compact into v2, probe. The oracle
-    // replays the PQ pipeline minus the deleted ids against the
+    // lifecycle on the maintained compressed-code index — delete
+    // every vec_id % 7 == 3 row, compact, probe. The oracle replays
+    // the PQ pipeline minus the deleted ids against the
     // physically-rewritten codes.
     "q_ann_pq_delete" -> QueryDef(
       (s, dir) => {
         val e = table(s, dir, "embeddings")
-        probePqIndex(s, ensurePqDeleted(s, dir),
+        probePqIncremental(s, ensurePqDeleted(s, dir),
             e.filter(col("vec_id") < 32), k = 3)
           .orderBy("query_id", "neighbor_id")
       },
@@ -2459,8 +2106,8 @@ object Similarity {
       pqOracleSql),
 
     // CDC UPSERT on the compressed index (round 11): the
-    // q_ann_ivf_upsert change batch applied through tombstone +
-    // same-batch re-ENCODE. The oracle replays the mutation through
+    // q_ann_ivf_upsert change batch applied through delete +
+    // same-commit re-ENCODE. The oracle replays the mutation through
     // the full PQ pipeline — codebook and query side frozen on the
     // original corpus, candidate assignment AND subspace codes
     // re-derived from the mutated one — so the compression itself is

@@ -3,50 +3,48 @@ package graft.streaming
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 
-/** Streaming vector ingest into the incremental IVF index — the
+/** Streaming vector ingest into the maintained IVF index — the
   * wired twin of `q_ann_ivf_incremental`: each micro-batch of
   * `(vec_id, embedding)` rows is ONE [[Similarity.appendIvfIncrement]]
   * keyed on the foreachBatch batch id (a map-only assign pass against
   * the frozen quantizer, cost ∝ batch), so a 100 TB ANN index absorbs
   * an embedding stream without ever rebuilding. Probes
   * ([[Similarity.probeIvfIncremental]]) run concurrently against
-  * whatever has landed — they read the committed generation, lock-free.
+  * whatever has committed — snapshot-isolated, lock-free.
   *
-  * Exactly-once across replays is structural, twice over: the
-  * `batch=<id>` directory overwrites WHOLE on redelivery (a crashed
-  * batch's partial files are replaced byte-identically), and the
-  * generation's `_FOLDED` horizon no-ops any id an intervening
-  * compaction already folded — the one replay shape a plain overwrite
-  * shield cannot survive, because the folded generation no longer has
-  * the batch directory to overwrite.
+  * Exactly-once across replays is the graft sink's: every step is one
+  * commit that records its batch id on the manifest's commit line, and
+  * a redelivered id at or below the recorded one applies nothing —
+  * before or after an intervening compaction, whose commits keep the
+  * id. The id is per index, so ONE stream (one checkpoint) writes an
+  * index.
   *
-  * `compactEvery > 0` folds tombstone-free single-batch generations on
-  * a cadence, bounding the directory count a probe must list (the
-  * small-files problem of any append-only index); the fold itself is
-  * the crash-safe `LATEST`-flip publication, so a kill mid-compaction
-  * replays cleanly. The fold leg is horizon-guarded
-  * ([[Similarity.incFoldedThrough]]): a redelivery of a compacting
-  * batch AFTER its compaction landed no-ops entirely — without the
-  * guard the append would no-op but the fold would re-run, paying a
-  * corpus-sized rewrite and minting a garbage generation per
-  * redelivery. Single maintenance writer (the streaming query), like
-  * every snapshot-pointer sink here.
+  * `compactEvery > 0` runs [[Similarity.compactIvfIncremental]] (the
+  * sink's maintenance pass) on a cadence, bounding the committed file
+  * count a probe must read and folding delete vectors away. A step
+  * compacts only when its own commit applied, so a redelivered
+  * compacting batch pays nothing.
   */
 object IvfStream {
+
+  private def compactOnCadence(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, batchId: Long, compactEvery: Long,
+      applied: Boolean): Unit =
+    if (applied && compactEvery > 0L &&
+        batchId % compactEvery == compactEvery - 1L)
+      Similarity.compactIvfIncremental(spark, indexDir)
 
   def ingestBatchStep(batch: DataFrame, batchId: Long, indexDir: String,
       cents: Seq[(Long, Seq[Double])], compactEvery: Long = 0L): Unit = {
     val spark = batch.sparkSession
-    Similarity.appendIvfIncrement(spark, indexDir, batch, cents, batchId)
-    if (compactEvery > 0L && batchId % compactEvery == compactEvery - 1L &&
-        batchId > Similarity.incFoldedThrough(spark, indexDir))
-      Similarity.compactIvfIncremental(spark, indexDir)
+    compactOnCadence(spark, indexDir, batchId, compactEvery,
+      Similarity.appendIvfIncrement(spark, indexDir, batch, cents, batchId))
   }
 
   /** CDC variant: each micro-batch carries `(vec_id, embedding, op)`
     * rows — `op` = "delete" takes the document down, anything else
-    * re-embeds it ([[Similarity.upsertIvfIncrement]]: tombstone every
-    * incoming id, re-append the non-deletes in the same batch). This
+    * re-embeds it ([[Similarity.upsertIvfIncrement]]: one commit that
+    * deletes every incoming id and re-appends the non-deletes). This
     * is the encoder-refresh / document-edit stream a production ANN
     * index actually receives; per batch the cost is ∝ churn.
     */
@@ -54,11 +52,9 @@ object IvfStream {
       cents: Seq[(Long, Seq[Double])], compactEvery: Long = 0L,
       opCol: String = "op"): Unit = {
     val spark = batch.sparkSession
-    Similarity.upsertIvfIncrement(spark, indexDir, batch, cents, batchId,
-      opCol)
-    if (compactEvery > 0L && batchId % compactEvery == compactEvery - 1L &&
-        batchId > Similarity.incFoldedThrough(spark, indexDir))
-      Similarity.compactIvfIncremental(spark, indexDir)
+    compactOnCadence(spark, indexDir, batchId, compactEvery,
+      Similarity.upsertIvfIncrement(spark, indexDir, batch, cents, batchId,
+        opCol))
   }
 
   def upsertStream(changes: DataFrame, indexDir: String,
@@ -98,8 +94,8 @@ object IvfStream {
     * cheaper and safer than indexing it and masking later, because a
     * tombstone can be forgotten but an un-indexed row cannot leak
     * into a probe. The gate is a pure per-batch filter (broadcast
-    * panel, map-side threshold), so every replay shield of the
-    * underlying append applies unchanged.
+    * panel, map-side threshold), so the underlying append's replay
+    * check applies unchanged.
     */
   def gatedIngestBatchStep(batch: DataFrame, batchId: Long,
       indexDir: String, cents: Seq[(Long, Seq[Double])],
@@ -128,18 +124,16 @@ object IvfStream {
   /** The compressed-index twin: each micro-batch is ONE
     * [[Similarity.appendPqIncrement]] — a map-only ENCODE pass against
     * the frozen codebook, so what streams into long-term storage is M
-    * bytes per vector, not the full embedding. Same replay shields
-    * (whole-batch overwrite + `_FOLDED` horizon), same fold cadence.
+    * bytes per vector, not the full embedding. Same replay check, same
+    * compaction cadence.
     */
   def pqIngestBatchStep(batch: DataFrame, batchId: Long, indexDir: String,
       cents: Seq[(Long, Seq[Double])], compactEvery: Long = 0L,
       numSubspaces: Int = 8, dim: Int = 64): Unit = {
     val spark = batch.sparkSession
-    Similarity.appendPqIncrement(spark, indexDir, batch, cents, batchId,
-      numSubspaces, dim)
-    if (compactEvery > 0L && batchId % compactEvery == compactEvery - 1L &&
-        batchId > Similarity.incFoldedThrough(spark, indexDir))
-      Similarity.compactPqIncremental(spark, indexDir)
+    compactOnCadence(spark, indexDir, batchId, compactEvery,
+      Similarity.appendPqIncrement(spark, indexDir, batch, cents, batchId,
+        numSubspaces, dim))
   }
 
   def pqIngestStream(vecs: DataFrame, indexDir: String,
@@ -161,7 +155,7 @@ object IvfStream {
   /** CDC on the compressed index — [[upsertBatchStep]]'s contract
     * through [[Similarity.upsertPqIncrement]], so re-embedded
     * documents re-ENCODE against the frozen codebook in the same
-    * batch that tombstones their old codes. Completes the
+    * commit that deletes their old codes. Completes the
     * {full-vector, compressed} × {ingest, upsert} × {batch, stream}
     * matrix.
     */
@@ -169,11 +163,9 @@ object IvfStream {
       cents: Seq[(Long, Seq[Double])], compactEvery: Long = 0L,
       numSubspaces: Int = 8, dim: Int = 64, opCol: String = "op"): Unit = {
     val spark = batch.sparkSession
-    Similarity.upsertPqIncrement(spark, indexDir, batch, cents, batchId,
-      numSubspaces, dim, opCol)
-    if (compactEvery > 0L && batchId % compactEvery == compactEvery - 1L &&
-        batchId > Similarity.incFoldedThrough(spark, indexDir))
-      Similarity.compactPqIncremental(spark, indexDir)
+    compactOnCadence(spark, indexDir, batchId, compactEvery,
+      Similarity.upsertPqIncrement(spark, indexDir, batch, cents, batchId,
+        numSubspaces, dim, opCol))
   }
 
   def pqUpsertStream(changes: DataFrame, indexDir: String,

@@ -98,7 +98,7 @@ object MergeStream {
     // are semantically idempotent on replay.
     if (defer)
       AtomicIncrement.mergeOnReadAtomic(resolved, tableSink, keyCol,
-        deleteCol, maxChurnKeys, churn)
+        deleteCol, maxChurnKeys, churn, None)
     else
       AtomicIncrement.mergeAtomic(resolved, tableSink, keyCol, deleteCol,
         maxChurnKeys, churn)

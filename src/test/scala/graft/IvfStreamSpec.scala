@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{AtomicIncrement, Maintenance, Similarity}
 import graft.streaming.IvfStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -28,12 +28,12 @@ class IvfStreamSpec extends SparkSpec {
       .orderBy("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
 
-  private def latestGen(dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/LATEST")
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-    finally in.close()
-  }
+  /** The index's committed manifest version. */
+  private def version(dir: String): Long =
+    AtomicIncrement.latestSnapshot(spark, dir).version
+
+  /** A maintained index's live rows: its committed snapshot. */
+  private def liveRows(dir: String) = AtomicIncrement.readCommitted(spark, dir)
 
   private def feed(): Seq[Seq[(Long, Seq[Float])]] = {
     val rows = corpus().select("vec_id", "embedding")
@@ -60,11 +60,13 @@ class IvfStreamSpec extends SparkSpec {
       assert(probeSorted(dir, cents) == expect,
         s"streamed index (compactEvery=$compactEvery) diverged from batch build")
       if (compactEvery == 2L) {
-        // batches 0..2 → one fold after batch 1; the folded generation
-        // carries batches {0(fold), 2} — strictly fewer dirs than landed
-        val dirs = spark.read.parquet(s"$dir/g${latestGen(dir)}")
-          .select("batch").distinct().count()
-        assert(dirs <= 2, s"compaction did not bound batch dirs: $dirs")
+        // batches 0..2 → one compaction after batch 1, then batch 2's
+        // append: the snapshot under that append is the compaction's,
+        // bounded by its target's file count
+        val folded = AtomicIncrement.snapshotAt(spark, dir, version(dir) - 1)
+        assert(folded.data.size <= Maintenance.Target(dir).targetFiles,
+          s"compaction did not bound committed files: ${folded.data.size}")
+        assert(folded.dvs.isEmpty)
       }
     }
   }
@@ -102,9 +104,13 @@ class IvfStreamSpec extends SparkSpec {
     assert(probeFor(2L) == got)
     Similarity.compactIvfIncremental(spark, dir)
     assert(probeFor(2L) == got, "compaction changed upsert results")
-    val live = spark.read.parquet(s"$dir/g${latestGen(dir)}")
-    assert(live.count() == e.count() - 1, "takedown not removed physically")
-    assert(live.filter(col("vec_id") === 1).count() == 1,
+    // physical: no delete vector stands, the committed files' raw rows
+    // are the live ones
+    val snap = AtomicIncrement.latestSnapshot(spark, dir)
+    assert(snap.dvs.isEmpty, "compaction left a delete vector")
+    val raw = spark.read.parquet(snap.data.map(f => s"$dir/${f.path}"): _*)
+    assert(raw.count() == e.count() - 1, "takedown not removed physically")
+    assert(raw.filter(col("vec_id") === 1).count() == 1,
       "upserted id must keep exactly one posting")
   }
 
@@ -126,8 +132,7 @@ class IvfStreamSpec extends SparkSpec {
     try {
       feed().foreach { chunk => mem.addData(chunk); q.processAllAvailable() }
     } finally q.stop()
-    val indexed = spark.read.parquet(s"$dir/g1")
-      .select("vec_id").as[Long].collect().toSet
+    val indexed = liveRows(dir).select("vec_id").as[Long].collect().toSet
     // stream ≡ batch gate over the same corpus
     val kept = graft.operators.Hygiene.semanticGate(e, ev, tau)
       .select("vec_id").as[Long].collect().toSet
@@ -136,7 +141,7 @@ class IvfStreamSpec extends SparkSpec {
     // ANY eval vector (straight-line Scala cosines, no Spark involved)
     val evV = ev.select("vec_id", "embedding")
       .as[(Long, Seq[Float])].collect()
-    val idxV = spark.read.parquet(s"$dir/g1")
+    val idxV = liveRows(dir)
       .select(col("vec_id"), col("c_v"))
       .as[(Long, Seq[Float])].collect()
     def cos(a: Seq[Float], b: Seq[Float]): Double = {
@@ -147,10 +152,10 @@ class IvfStreamSpec extends SparkSpec {
     assert(idxV.forall { case (_, v) => evV.forall { case (_, w) =>
       cos(v, w) < tau } }, "a contaminated vector reached the index")
     assert(evV.forall { case (id, _) => !indexed.contains(id) })
-    // redelivery through the gate overwrites whole — no duplication
+    // redelivery through the gate applies nothing — no duplication
     IvfStream.gatedIngestBatchStep(
       feed()(1).toDF("vec_id", "embedding"), 1L, dir, cents, ev, tau)
-    assert(spark.read.parquet(s"$dir/g1").count() == kept.size)
+    assert(liveRows(dir).count() == kept.size)
   }
 
   test("streamed PQ ingest ≡ fresh full encode; replays and in-stream " +
@@ -182,8 +187,7 @@ class IvfStreamSpec extends SparkSpec {
     val replay = feed()(1).toDF("vec_id", "embedding")
     IvfStream.pqIngestBatchStep(replay, 1L, dir, cents, compactEvery = 2L)
     assert(probe(dir) == expect, "replayed PQ batch changed probes")
-    assert(spark.read.parquet(s"$dir/g${latestGen(dir)}").count() ==
-      e.count(), "replay duplicated codes")
+    assert(liveRows(dir).count() == e.count(), "replay duplicated codes")
   }
 
   test("streamed PQ CDC upsert ≡ fresh encode of the mutated corpus; " +
@@ -251,18 +255,18 @@ class IvfStreamSpec extends SparkSpec {
     // REPLAY of batch 1 (post-fold redelivery) and batch 2
     IvfStream.ingestBatchStep(chunks(0), 0L, dir, cents, compactEvery = 2L)
     IvfStream.ingestBatchStep(chunks(1), 1L, dir, cents, compactEvery = 2L)
-    val genAfterFold = latestGen(dir)
+    val versionAfterFold = version(dir)
     IvfStream.ingestBatchStep(chunks(1), 1L, dir, cents, compactEvery = 2L)
     // the redelivered compacting batch no-ops on BOTH legs: its append
-    // sits below the horizon AND its compaction is skipped — re-running
-    // the fold would pay a corpus-sized rewrite and mint a garbage
-    // generation per redelivery, for zero state change
-    assert(latestGen(dir) == genAfterFold,
+    // is a replay of the recorded batch id AND its compaction is
+    // skipped — re-running the pass would pay a rewrite and publish a
+    // version per redelivery, for zero state change
+    assert(version(dir) == versionAfterFold,
       "post-fold redelivery re-ran the compaction")
     IvfStream.ingestBatchStep(chunks(2), 2L, dir, cents, compactEvery = 2L)
     assert(probeSorted(dir, cents) == batchReference(cents),
       "replayed ingest diverged from batch build")
-    val n = spark.read.parquet(s"$dir/g${latestGen(dir)}").count()
+    val n = liveRows(dir).count()
     assert(n == corpus().count(), s"replay duplicated postings: $n")
   }
 }

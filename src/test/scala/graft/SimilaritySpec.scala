@@ -10,6 +10,36 @@ import org.apache.spark.sql.functions._
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  private def fsOf(dir: String) = new org.apache.hadoop.fs.Path(dir)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A maintained index's live rows: its committed snapshot. */
+  private def liveRows(dir: String) =
+    graft.operators.AtomicIncrement.readCommitted(spark, dir)
+
+  /** The rows its committed data files hold, delete vectors NOT applied. */
+  private def rawRows(dir: String) =
+    spark.read.parquet(graft.operators.AtomicIncrement.committedFiles(
+      spark, dir).map(f => s"$dir/$f"): _*)
+
+  private def standingDvs(dir: String) =
+    graft.operators.AtomicIncrement.latestSnapshot(spark, dir).dvs
+
+  /** The batch dirs on disk, and those the latest manifest lists. */
+  private def stagedDirs(dir: String): Set[String] =
+    fsOf(dir).listStatus(new org.apache.hadoop.fs.Path(s"$dir/_data"))
+      .map(_.getPath.getName).toSet
+  private def committedDirs(dir: String): Set[String] = {
+    val snap = graft.operators.AtomicIncrement.latestSnapshot(spark, dir)
+    (snap.data ++ snap.dvs).map(_.path.split("/")(1)).toSet
+  }
+
+  /** An embedding column that fails whenever it is read. */
+  private val failingRead = udf((v: Seq[Float]) => {
+    if (v != null) throw new IllegalStateException("embedding read failed")
+    v
+  })
+
   test("bruteForceTopK returns the exact nearest neighbors in order") {
     // 2-d corpus with known geometry around the x axis
     val corpus = Seq(
@@ -195,8 +225,8 @@ class SimilaritySpec extends SparkSpec {
     val plan = probed.queryExecution.executedPlan.toString.toLowerCase
     assert(plan.contains("dynamicpruning"),
       s"no dynamic partition pruning on the codes scan:\n$plan")
-    // versioned publication: rebuilds flip LATEST and retain only the
-    // previous version for in-flight readers
+    // versioned publication: rebuilds publish a new version and retain
+    // only the previous one for in-flight readers
     writePqIndex(e, dir)
     writePqIndex(e, dir)
     val versions = {
@@ -224,50 +254,31 @@ class SimilaritySpec extends SparkSpec {
       s"no dynamic partition pruning on the IVF codes scan:\n$plan")
   }
 
-  test("appendToIvfIndex grows the index under frozen centroids") {
-    val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
-    val half = e.filter(col("vec_id") % 2 === 0)
-    val rest = e.filter(col("vec_id") % 2 === 1)
-    val queries = e.filter(col("vec_id") < 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfa").toString
-    writeIvfIndex(half, dir, numLists = 16, iters = 1)
-    appendToIvfIndex(rest, dir)
-    // index covers the whole corpus exactly once
-    val indexed = spark.read.parquet(s"$dir/v1/codes")
-      .select("vec_id").as[Long].collect().sorted.toSeq
-    assert(indexed == e.select("vec_id").as[Long].collect().sorted.toSeq)
-    // probing equals assigning the full corpus against the SAME frozen
-    // (half-built) centroids — append is pure growth, no re-clustering
-    val cents = kmeansCentroids(half, 16, iters = 1)
-    val expected = ivfTopKWithCentroids(e, queries, cents, k = 3)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    val got = probeIvfIndex(spark, dir, queries, k = 3)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    assert(got == expected)
-  }
-
-  test("appendToPqIndex grows the index under frozen codebooks; probes " +
-      "see appended vectors immediately") {
-    val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
-    val half = e.filter(col("vec_id") % 2 === 0)
-    val rest = e.filter(col("vec_id") % 2 === 1)
-    val queries = e.filter(col("vec_id") < 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqa").toString
-    writePqIndex(half, dir)
-    appendToPqIndex(rest, dir)
-    // the index now covers the whole corpus exactly once
-    val (cents, m, d) = readPqSidecar(spark, dir)
-    val indexed = spark.read.parquet(s"$dir/v1/codes")
-      .select("vec_id").as[Long].collect().sorted.toSeq
-    val all = e.select("vec_id").as[Long].collect().sorted.toSeq
-    assert(indexed == all)
-    // probing equals encoding the full corpus against the SAME frozen
-    // (half-built) centroids — append is pure growth, no re-clustering
-    val expected = pqProbe(pqEncode(e, cents, m, d), queries, cents, k = 3,
-      m, d).orderBy("query_id", "neighbor_id").collect().toSeq
-    val got = probePqIndex(spark, dir, queries, k = 3)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    assert(got == expected)
+  test("versioned index publication: a reader racing repeated publishes " +
+      "only ever reads a complete, monotone version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vrace").toString
+    val publishes = 400
+    @volatile var done = false
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val reads = new java.util.concurrent.atomic.AtomicLong
+    val reader = new Thread(() => {
+      var last = 0L
+      while (!done) {
+        try indexVersion(spark, dir).foreach { v =>
+          if (v < last) errors.add(s"version went back: $last -> $v")
+          last = v
+        } catch { case t: Throwable => errors.add(t.toString) }
+        reads.incrementAndGet()
+      }
+    })
+    reader.start()
+    try for (v <- 1L to publishes) publishVersion(spark, dir, v, s"#v $v")
+    finally { done = true; reader.join() }
+    val failed = errors.size
+    assert(failed == 0, s"$failed of ${reads.get} reads failed, " +
+      s"e.g. ${errors.peek}")
+    assert(reads.get > 0)
+    assert(indexVersion(spark, dir).contains(publishes.toLong))
   }
 
   test("lshSignature buckets co-directional vectors together") {
@@ -554,18 +565,16 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(inc == batch, "incremental index diverged from batch build")
-    // replay shield: redeliver increment 1 — batch dir overwrites
-    // whole, postings don't duplicate, answers unchanged
-    appendIvfIncrement(spark, dir,
-      e.filter(pmod(col("vec_id"), lit(2)) === 1), cents, 1L)
+    // replay: the sink records batch 1, so its redelivery applies
+    // nothing — postings don't duplicate, answers unchanged
+    assert(!appendIvfIncrement(spark, dir,
+      e.filter(pmod(col("vec_id"), lit(2)) === 1), cents, 1L))
     assert(probe(dir) == inc)
-    val n = spark.read.parquet(s"$dir/g1").count()
+    val n = liveRows(dir).count()
     assert(n == e.count(), s"postings duplicated: $n")
-    // crash shield: no root marker → ensure re-runs both appends over
-    // their Overwrite shields and converges to the same index
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), false)
+    // crash shield: no root marker → ensure re-runs both appends, which
+    // no-op as replays, and converges to the same index
+    fsOf(dir).delete(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), false)
     assert(ensureIvfIncremental(spark, sfDir) == dir)
     assert(probe(dir) == inc)
   }
@@ -592,62 +601,95 @@ class SimilaritySpec extends SparkSpec {
         e.filter(pmod(col("vec_id"), lit(7)) =!= 3), panel, cents, k = 3)
       .orderBy("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(masked == expect, "tombstone mask diverged from batch probe")
+    assert(masked == expect, "delete-vector mask diverged from batch probe")
     // deleted vectors stay valid queries but are never neighbors
     assert(masked.exists(t => t._1 % 7 == 3))
     assert(!masked.exists(t => t._2 % 7 == 3))
     compactIvfIncremental(spark, dir)
     assert(probe() == expect, "compacted index diverged from the mask")
-    // physical removal: gen 2 holds exactly the live rows, no tombstones
-    val liveN = spark.read.parquet(s"$dir/g2").count()
-    assert(liveN == e.filter(pmod(col("vec_id"), lit(7)) =!= 3).count())
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/g2/_tombstones")))
-    // replays straddling the compaction no-op: the _FOLDED horizon
-    // covers both the folded increments and the folded tombstones
-    appendIvfIncrement(spark, dir,
-      e.filter(pmod(col("vec_id"), lit(2)) === 1), cents, 1L)
-    deleteIvfIncrement(spark, dir,
-      e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"), 2L)
-    assert(spark.read.parquet(s"$dir/g2").count() == liveN,
+    // physical removal: no delete vector stands, and the committed
+    // files hold exactly the live rows
+    val liveN = e.filter(pmod(col("vec_id"), lit(7)) =!= 3).count()
+    assert(standingDvs(dir).isEmpty, "compaction left a delete vector")
+    assert(rawRows(dir).count() == liveN)
+    // replays straddling the compaction no-op: its commits keep the
+    // sink's recorded batch id
+    assert(!appendIvfIncrement(spark, dir,
+      e.filter(pmod(col("vec_id"), lit(2)) === 1), cents, 1L))
+    assert(!deleteIvfIncrement(spark, dir,
+      e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"), 2L))
+    assert(liveRows(dir).count() == liveN,
       "replayed increment re-inserted folded rows")
     assert(probe() == expect)
-    // a genuinely NEW increment past the horizon still lands
-    appendIvfIncrement(spark, dir,
+    // a genuinely NEW increment past the recorded id still lands
+    assert(appendIvfIncrement(spark, dir,
       e.filter(col("vec_id") < 8)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
-      cents, 3L)
-    assert(spark.read.parquet(s"$dir/g2").count() == liveN + 8)
+      cents, 3L))
+    assert(liveRows(dir).count() == liveN + 8)
   }
 
-  test("incremental IVF compaction crash: a written-but-unpublished " +
-      "next generation is invisible to probes until LATEST flips, and " +
-      "the re-run compaction overwrites it cleanly") {
+  test("a maintenance commit that fails mid-stage changes nothing: the " +
+      "snapshot and the probe stay, and the same batch id then applies") {
     val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
     val panel = e.filter(col("vec_id") < 32)
     val cents = ensureKmeansQuantizer(spark, sfDir)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfcrash").toString
-    appendIvfIncrement(spark, dir, e, cents, 0L)
-    deleteIvfIncrement(spark, dir,
-      e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"), 1L)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfcrash").toString
     def probe() = probeIvfIncremental(spark, dir, cents, panel, k = 3)
       .orderBy("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val even = e.filter(pmod(col("vec_id"), lit(2)) === 0)
+    val odd = e.filter(pmod(col("vec_id"), lit(2)) === 1)
+    appendIvfIncrement(spark, dir, even, cents, 0L)
     val before = probe()
-    // a compaction that died after writing data but BEFORE the pointer
-    // flip: garbage (wrong rows, wrong schema) sits at g2, LATEST
-    // still names g1
-    e.limit(5).select(col("vec_id"), col("embedding"))
-      .write.parquet(s"$dir/g2/batch=0")
-    assert(probe() == before,
-      "an unpublished generation leaked into a probe")
-    // the re-run fold Overwrites the partial g2 and publishes
-    compactIvfIncremental(spark, dir)
-    assert(probe() == before, "re-run compaction diverged")
-    assert(spark.read.parquet(s"$dir/g2").count() ==
-      e.count() - e.filter(pmod(col("vec_id"), lit(7)) === 3).count())
+    val snap = graft.operators.AtomicIncrement.latestSnapshot(spark, dir)
+    // batch 1 dies mid-stage: its embeddings fail when read
+    intercept[Exception] {
+      appendIvfIncrement(spark, dir,
+        odd.withColumn("embedding", failingRead(col("embedding"))), cents, 1L)
+    }
+    val after = graft.operators.AtomicIncrement.latestSnapshot(spark, dir)
+    assert(after.version == snap.version && after.lastBatch == Some(0L),
+      "a failed stage moved the snapshot")
+    assert(probe() == before, "a failed stage leaked into a probe")
+    assert(stagedDirs(dir) == committedDirs(dir),
+      "the failed stage's files outlived it")
+    // the same batch id applies when it is replayed with good data
+    assert(appendIvfIncrement(spark, dir, odd, cents, 1L))
+    assert(probe() == ivfTopKWithCentroids(e, panel, cents, k = 3)
+      .orderBy("query_id", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
+  }
+
+  test("an upsert batch whose embeddings fail to read applies nothing: " +
+      "probes keep the pre-batch answers, and its replay with good data " +
+      "applies") {
+    val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
+    val panel = e.filter(col("vec_id") < 32)
+    val cents = ensureKmeansQuantizer(spark, sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfatom").toString
+    def probe() = probeIvfIncremental(spark, dir, cents, panel, k = 3)
+      .orderBy("query_id", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    appendIvfIncrement(spark, dir, e, cents, 0L)
+    val before = probe()
+    // every id upserts: doc 1 re-embedded as doc 2's vector, the rest
+    // with their own. The delete half needs only vec_id, the re-append
+    // half reads the embeddings, which fail.
+    val good = e.filter(col("vec_id") =!= 1L)
+      .select(col("vec_id"), col("embedding"), lit("upsert").as("op"))
+      .unionByName(e.filter(col("vec_id") === 2L).select(lit(1L).as("vec_id"),
+        col("embedding"), lit("upsert").as("op")))
+    intercept[Exception] {
+      upsertIvfIncrement(spark, dir,
+        good.withColumn("embedding", failingRead(col("embedding"))), cents, 1L)
+    }
+    assert(probe() == before, "a failed upsert batch changed the index")
+    assert(upsertIvfIncrement(spark, dir, good, cents, 1L))
+    val got = probe()
+    // doc 1 now carries doc 2's exact vector → cosine 1.0 for query 2
+    assert(got.contains((2L, 1L, 1.0)),
+      s"the replayed upsert did not apply: ${got.filter(_._1 == 2L)}")
   }
 
   test("PQ index deletes + compaction: tombstone mask ≡ compacted " +
@@ -657,31 +699,39 @@ class SimilaritySpec extends SparkSpec {
     val panel = e.filter(col("vec_id") < 32)
     val doomed = e.filter(pmod(col("vec_id"), lit(7)) === 3).select("vec_id")
     val dir = java.nio.file.Files.createTempDirectory("graft_pqdel").toString
-    writePqIndex(e, dir)
-    deleteFromPqIndex(spark, dir, doomed, 0L)
-    def probe() = probePqIndex(spark, dir, panel, k = 3)
+    val cents = hashCentroids(e, 16)
+    appendPqIncrement(spark, dir, e, cents, 0L)
+    deleteIvfIncrement(spark, dir, doomed, 1L)
+    def probe() = probePqIncremental(spark, dir, panel, k = 3)
       .orderBy("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val masked = probe()
-    // deleted vectors stay valid queries but are never neighbors
+    // the mask ranks like a fresh encode of the corpus minus the
+    // deleted ids; deleted vectors stay valid queries, never neighbors
+    assert(masked == pqProbe(pqEncode(
+        e.filter(pmod(col("vec_id"), lit(7)) =!= 3), cents), panel, cents,
+        k = 3)
+      .orderBy("query_id", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
     assert(masked.exists(t => t._1 % 7 == 3))
     assert(!masked.exists(t => t._2 % 7 == 3))
-    // replayed tombstone batch overwrites whole — answers unchanged
-    deleteFromPqIndex(spark, dir, doomed, 0L)
+    // a replayed delete batch applies nothing — answers unchanged
+    assert(!deleteIvfIncrement(spark, dir, doomed, 1L))
     assert(probe() == masked)
-    val sidecarBefore = readPqSidecar(spark, dir)
-    compactPqIndex(spark, dir)
+    val sidecar = new java.io.File(s"$dir/centroids.tsv")
+    val sidecarBefore = (sidecar.lastModified,
+      java.nio.file.Files.readAllBytes(sidecar.toPath).toSeq)
+    compactIvfIncremental(spark, dir)
     assert(probe() == masked, "compacted codes diverged from the mask")
-    assert(readPqSidecar(spark, dir) == sidecarBefore,
-      "compaction must carry the frozen codebook sidecar forward")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v2/_tombstones")))
-    val liveN = spark.read.parquet(s"$dir/v2/codes").count()
+    assert((sidecar.lastModified,
+        java.nio.file.Files.readAllBytes(sidecar.toPath).toSeq) ==
+      sidecarBefore, "compaction must leave the frozen codebook sidecar")
+    assert(standingDvs(dir).isEmpty, "compaction left a delete vector")
+    val liveN = rawRows(dir).count()
     assert(liveN == e.count() - doomed.count(),
-      s"compaction did not remove tombstoned codes: $liveN")
-    // a post-compaction re-mask of already-gone ids is a no-op
-    deleteFromPqIndex(spark, dir, doomed, 1L)
+      s"compaction did not remove deleted codes: $liveN")
+    // a post-compaction re-delete of already-gone ids is a no-op
+    assert(deleteIvfIncrement(spark, dir, doomed, 2L))
     assert(probe() == masked)
   }
 
@@ -703,17 +753,15 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(inc == batch, "incremental PQ index diverged from full encode")
-    // replay shield: redelivered increment overwrites whole
+    // replay: the sink records batch 1, so its redelivery applies nothing
     val cents = hashCentroids(e, 16)
-    appendPqIncrement(spark, dir,
-      e.filter(pmod(col("vec_id"), lit(2)) === 1), cents, 1L)
+    assert(!appendPqIncrement(spark, dir,
+      e.filter(pmod(col("vec_id"), lit(2)) === 1), cents, 1L))
     assert(probe(dir) == inc)
-    assert(spark.read.parquet(s"$dir/g1").count() == e.count(),
+    assert(liveRows(dir).count() == e.count(),
       "replayed increment duplicated codes")
     // crash shield: no root marker → ensure re-runs both appends
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), false)
+    fsOf(dir).delete(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"), false)
     assert(ensurePqIncremental(spark, sfDir) == dir)
     assert(probe(dir) == inc)
   }
@@ -758,27 +806,24 @@ class SimilaritySpec extends SparkSpec {
     assert(got == expect, "upserted PQ index diverged from mutated encode")
     assert(!got.exists(_._2 % 7 == 3), "a takedown surfaced as a neighbor")
     // compaction: physical removal, probe unchanged
-    compactPqIncremental(spark, dir)
+    compactIvfIncremental(spark, dir)
     assert(probe() == expect, "compacted codes diverged")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/g2/_tombstones")))
-    val liveN = spark.read.parquet(s"$dir/g2").count()
+    assert(standingDvs(dir).isEmpty, "compaction left a delete vector")
+    val liveN = rawRows(dir).count()
     assert(liveN == mutated.count(), s"stale codes survived the fold: $liveN")
-    // the pre-compaction generation is RETAINED for readers that
-    // pinned it mid-probe (the documented publication contract):
-    // its batch dirs are still physically readable after the fold
-    assert(spark.read.parquet(s"$dir/g1/batch=0").count() ==
-      e.filter(pmod(col("vec_id"), lit(2)) === 0).count())
+    // the pass's vacuums reclaimed every file the folded snapshot no
+    // longer lists: what stays on disk is exactly what is committed
+    assert(stagedDirs(dir) == committedDirs(dir),
+      "compaction left superseded files on disk")
     // folded replay no-ops; a genuinely new increment still lands
-    upsertPqIncrement(spark, dir, ups.unionByName(dels), cents, 2L)
-    assert(spark.read.parquet(s"$dir/g2").count() == liveN)
+    assert(!upsertPqIncrement(spark, dir, ups.unionByName(dels), cents, 2L))
+    assert(liveRows(dir).count() == liveN)
     assert(probe() == expect)
-    appendPqIncrement(spark, dir,
+    assert(appendPqIncrement(spark, dir,
       e.filter(col("vec_id") < 8)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
-      cents, 3L)
-    assert(spark.read.parquet(s"$dir/g2").count() == liveN + 8)
+      cents, 3L))
+    assert(liveRows(dir).count() == liveN + 8)
   }
 
   test("centroidDrift: counts reconcile on harness data; clustered fixture separates stable from shifted") {
@@ -856,183 +901,4 @@ class SimilaritySpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("versioned PQ index: delete-then-re-append of the same id is an " +
-      "upsert — the fresh codes survive the tombstone mask, survive " +
-      "compaction PHYSICALLY, and only a LATER tombstone removes them") {
-    val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
-    val panel = e.filter(col("vec_id") < 32)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqups").toString
-    writePqIndex(e, dir)
-    val (cents, m, d) = readPqSidecar(spark, dir)
-    def probe() = probePqIndex(spark, dir, panel, k = 3)
-      .orderBy("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    def expectOver(corpus: org.apache.spark.sql.DataFrame) =
-      pqProbe(pqEncode(corpus, cents, m, d), panel, cents, k = 3, m, d)
-        .orderBy("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // upsert doc 5 with doc 6's embedding: tombstone at batch 0 + a
-    // SAME-batch re-append. An orderless mask (the pre-fix behavior)
-    // would hide the fresh codes behind their own tombstone.
-    val mutated = e.filter(col("vec_id") === 6L)
-      .select(lit(5L).as("vec_id"), col("embedding"))
-    val mutCorpus = e.filter(col("vec_id") =!= 5L)
-      .select("vec_id", "embedding").unionByName(mutated)
-    deleteFromPqIndex(spark, dir, mutated.select("vec_id"), 0L)
-    appendToPqIndex(mutated, dir, 0L)
-    val upserted = expectOver(mutCorpus)
-    assert(probe() == upserted,
-      "re-appended codes did not survive their own tombstone")
-    // the mutation is visible, not a silent no-op
-    assert(upserted != expectOver(e.select("vec_id", "embedding")))
-    // compaction must carry the re-appended codes into the new version
-    // physically — the ADVICE failure mode was dropping them forever
-    compactPqIndex(spark, dir)
-    assert(probe() == upserted, "compaction dropped the upserted codes")
-    val v = spark.read.textFile(s"$dir/LATEST").collect().head.trim
-    val rows5 = spark.read.parquet(s"$dir/v$v/codes")
-      .filter(col("vec_id") === 5L).count()
-    assert(rows5 == 1L, s"expected exactly one live code row for id 5: $rows5")
-    // a LATER tombstone still deletes the id outright
-    deleteFromPqIndex(spark, dir, mutated.select("vec_id"), 1L)
-    assert(probe() == expectOver(e.filter(col("vec_id") =!= 5L)
-      .select("vec_id", "embedding")))
-  }
-
-  test("versioned PQ index self-heals pre-batch-column layouts: codes " +
-      "written without the log column read as base rows") {
-    val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
-    val panel = e.filter(col("vec_id") < 32)
-    val dirA = java.nio.file.Files.createTempDirectory("graft_pqnew").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_pqold").toString
-    writePqIndex(e, dirA)
-    // replicate dirA as a legacy layout: same codes minus the batch
-    // column, same sidecar, same pointer
-    spark.read.parquet(s"$dirA/v1/codes").drop("batch")
-      .write.partitionBy("list_id").parquet(s"$dirB/v1/codes")
-    val fs = new org.apache.hadoop.fs.Path(dirB)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (f <- Seq("v1/centroids.tsv", "LATEST")) {
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(s"$dirA/$f"), fs,
-        new org.apache.hadoop.fs.Path(s"$dirB/$f"), false,
-        spark.sparkContext.hadoopConfiguration)
-    }
-    def probe(dir: String) = probePqIndex(spark, dir, panel, k = 3)
-      .orderBy("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(probe(dirB) == probe(dirA),
-      "legacy codes (no batch column) diverged from the current layout")
-    // legacy rows coalesce to the base position −1, so any tombstone
-    // masks them — the exact semantics they were written under
-    val doomed = e.filter(pmod(col("vec_id"), lit(7)) === 3)
-      .select("vec_id")
-    deleteFromPqIndex(spark, dirA, doomed, 0L)
-    deleteFromPqIndex(spark, dirB, doomed, 0L)
-    assert(probe(dirB) == probe(dirA))
-    assert(!probe(dirB).exists(t => t._2 % 7 == 3))
-  }
-
-  test("compaction skips TORN batches (no _SUCCESS witness): partial " +
-      "rows stay out of the fold, the horizon leaves them replayable, " +
-      "and the replay converges in the new generation") {
-    val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
-    val panel = e.filter(col("vec_id") < 32)
-    val cents = ensureKmeansQuantizer(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_torn").toString
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def probe() = probeIvfIncremental(spark, dir, cents, panel, k = 3)
-      .orderBy("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    def reference(corpus: org.apache.spark.sql.DataFrame) =
-      ivfTopKWithCentroids(corpus, panel, cents, k = 3)
-        .orderBy("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val even = e.filter(pmod(col("vec_id"), lit(2)) === 0)
-    val odd = e.filter(pmod(col("vec_id"), lit(2)) === 1)
-    appendIvfIncrement(spark, dir, even, cents, 0L)
-    appendIvfIncrement(spark, dir, odd, cents, 1L)
-    // simulate the crash: batch 1 landed its rows but died before the
-    // _SUCCESS witness — indistinguishable from a half-written batch
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/g1/batch=1/_SUCCESS"),
-      false)
-    compactIvfIncremental(spark, dir)
-    // the fold froze ONLY the complete batch…
-    assert(spark.read.parquet(s"$dir/g2").count() == even.count(),
-      "torn batch was folded into the new generation")
-    assert(probe() == reference(even))
-    // …and left the torn id BELOW the horizon, so its replay fires
-    // instead of no-opping — the pre-fix behavior lost it forever
-    appendIvfIncrement(spark, dir, odd, cents, 1L)
-    assert(probe() == reference(e), "torn batch replay did not converge")
-    assert(spark.read.parquet(s"$dir/g2").count() == e.count())
-  }
-
-  test("compaction skips a torn UPSERT batch on BOTH sides: a complete " +
-      "tombstone whose same-id data half tore is not applied, so the " +
-      "replayed upsert restores the re-append") {
-    val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
-    val panel = e.filter(col("vec_id") < 32)
-    val cents = ensureKmeansQuantizer(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tornup").toString
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def probe() = probeIvfIncremental(spark, dir, cents, panel, k = 3)
-      .orderBy("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    appendIvfIncrement(spark, dir, e, cents, 0L)
-    val before = probe()
-    // upsert batch 1: re-embed doc 1 as doc 2's vector. The tombstone
-    // write completed; the data write tore (witness gone).
-    val change = e.filter(col("vec_id") === 2L)
-      .select(lit(1L).as("vec_id"), col("embedding"))
-    upsertIvfIncrement(spark, dir,
-      change.withColumn("op", lit("upsert")), cents, 1L)
-    val upserted = probe()
-    assert(upserted != before, "fixture upsert must change the ranking")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/g1/batch=1/_SUCCESS"),
-      false)
-    compactIvfIncremental(spark, dir)
-    // folding the delete half alone would vanish doc 1 with no replay
-    // able to bring it back; skipping the whole batch keeps the
-    // pre-upsert state — converged, not corrupted
-    assert(probe() == before,
-      "torn upsert was half-applied by the compaction")
-    // the replayed upsert lands in the new generation and converges
-    upsertIvfIncrement(spark, dir,
-      change.withColumn("op", lit("upsert")), cents, 1L)
-    assert(probe() == upserted, "replayed torn upsert did not converge")
-  }
-
-  test("compaction REFUSES a torn batch sitting BELOW a completed " +
-      "one: the single-sequential-writer contract broke, and folding " +
-      "would swallow the replay — fail loudly, replay heals, then fold") {
-    val e = graft.sources.Tables.table(spark, sfDir, "embeddings")
-    val cents = ensureKmeansQuantizer(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tornlow").toString
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val third = (r: Int) => e.filter(pmod(col("vec_id"), lit(3)) === r)
-    appendIvfIncrement(spark, dir, third(0), cents, 0L)
-    appendIvfIncrement(spark, dir, third(1), cents, 1L)
-    appendIvfIncrement(spark, dir, third(2), cents, 2L)
-    // the contract violation: batch 1 tore, yet batch 2 committed
-    // after it (two writers, or an out-of-order retry)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/g1/batch=1/_SUCCESS"),
-      false)
-    val ex = intercept[IllegalArgumentException] {
-      compactIvfIncremental(spark, dir)
-    }
-    assert(ex.getMessage.contains("torn"), ex.getMessage)
-    // nothing moved: no new generation was published
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/g2")),
-      "refused compaction still published a generation")
-    // the replay overwrites the torn dir whole (witness restored) and
-    // compaction then proceeds with every batch intact
-    appendIvfIncrement(spark, dir, third(1), cents, 1L)
-    compactIvfIncremental(spark, dir)
-    assert(spark.read.parquet(s"$dir/g2").count() == e.count(),
-      "healed fold lost rows")
-  }
 }

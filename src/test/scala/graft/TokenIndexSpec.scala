@@ -94,4 +94,23 @@ class TokenIndexSpec extends SparkSpec {
         "a dv-masked row surfaced through the indexed grep")
     } finally rm(sink)
   }
+
+  test("a top-up build never rewrites _meta.txt: a probe beside it " +
+      "cannot read it torn") {
+    val sink = tmp("graft_tidx3")
+    try {
+      AtomicIncrement.appendIncrementAtomic(docs(1, 25, "alpha"), sink, "id")
+      BloomSkip.ensureTokenIndex(spark, sink, "text", buckets = 4096)
+      val meta = new java.io.File(s"$sink/_index/tok-text/_meta.txt")
+      val bytes = java.nio.file.Files.readAllBytes(meta.toPath).toSeq
+      // an old stamp, so any rewrite shows whatever the clock's grain
+      assert(meta.setLastModified(1000000000L))
+      AtomicIncrement.appendIncrementAtomic(docs(26, 50, "beta"), sink, "id")
+      assert(BloomSkip.ensureTokenIndex(spark, sink, "text",
+        buckets = 4096) > 0, "the top-up must index the new files")
+      assert(meta.lastModified === 1000000000L,
+        "the top-up build rewrote _meta.txt")
+      assert(java.nio.file.Files.readAllBytes(meta.toPath).toSeq === bytes)
+    } finally rm(sink)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Incremental.{AllNullFile, BinaryStats, DoubleStats, LongStats}
@@ -305,14 +305,22 @@ object AtomicIncrement {
     })
   }
 
-  /** (version, manifest path) of the latest commit, if any. */
-  private def latestManifest(fs: FileSystem, sink: String): Option[(Long, Path)] = {
+  /** Every retained manifest version with its file, ascending: the one
+    * listing of `_graft_manifest`.
+    */
+  private def manifestVersions(fs: FileSystem,
+      sink: String): Seq[(Long, FileStatus)] = {
     val dir = new Path(sink, ManifestDir)
-    if (!fs.exists(dir)) None
+    if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).toSeq
-      .flatMap(st => st.getPath.getName.toLongOption.map(_ -> st.getPath))
-      .sortBy(_._1).lastOption
+      .flatMap(st => st.getPath.getName.toLongOption.map(_ -> st))
+      .sortBy(_._1)
   }
+
+  /** (version, manifest path) of the latest commit, if any. */
+  private def latestManifest(fs: FileSystem,
+      sink: String): Option[(Long, Path)] =
+    manifestVersions(fs, sink).lastOption.map(v => v._1 -> v._2.getPath)
 
   /** ONE parsed manifest: its version, data lines, delete-vector
     * lines, the embedded `__graft_schema` line, the watermark floors
@@ -368,6 +376,61 @@ object AtomicIncrement {
       snap: Snapshot): Option[DataFrame] =
     if (snap.data.isEmpty) None
     else Some(readSnapshot(spark, sink, snap).drop(LegacyBatchCols: _*))
+
+  /** The latest snapshot of a sink a stream writes. While the sink has
+    * no manifest, a dir holding `batch=<id>` dirs is refused: the
+    * pre-manifest stream layout wrote it, and reading it as empty would
+    * silently re-admit every document it holds.
+    */
+  private[graft] def streamSnapshot(spark: SparkSession,
+      sink: String): Snapshot = {
+    val snap = latestSnapshot(spark, sink)
+    if (snap.version == 0L) {
+      val fs = fsOf(spark, sink)
+      val dir = new Path(sink)
+      if (fs.exists(dir) &&
+          fs.listStatus(dir).exists(_.getPath.getName.startsWith("batch=")))
+        throw new IllegalStateException(s"$sink holds batch=<id> dirs " +
+          "but no committed manifest: the pre-manifest stream layout " +
+          "wrote it — rebuild it as a graft sink from its rows, or point " +
+          "the stream at a new dir")
+    }
+    snap
+  }
+
+  /** The committed rows of a sink a stream writes, None while it holds
+    * no data file ([[streamSnapshot]]'s refusal applies).
+    */
+  private[graft] def readStreamState(spark: SparkSession,
+      sink: String): Option[DataFrame] = {
+    val snap = streamSnapshot(spark, sink)
+    if (snap.data.isEmpty) None else Some(readSnapshot(spark, sink, snap))
+  }
+
+  /** The replay-checked apply of a stream-maintained sink: `write` runs
+    * with the batch id to record unless `batchId` is at or below the
+    * one the sink's commit line holds ([[isReplay]]). A crash before the
+    * publish leaves the snapshot as it was, and the replay applies. The
+    * id is per sink, so ONE stream, keeping its checkpoint, writes a
+    * sink: a second stream with a fresh checkpoint has its batches
+    * skipped as replays. Returns whether the call applied.
+    */
+  private[graft] def applyOnce(spark: SparkSession, sink: String,
+      batchId: Long)(write: (Snapshot, Option[Long]) => Unit): Boolean = {
+    val snap = streamSnapshot(spark, sink)
+    val fresh = !isReplay(snap, sink, batchId)
+    if (fresh) write(snap, Some(batchId))
+    fresh
+  }
+
+  /** [[applyOnce]] of one [[appendBlindAtomic]]: an empty `df` on a
+    * sink holding data publishes nothing, so its replay is a no-op too.
+    */
+  private[graft] def appendOnce(df: DataFrame, sink: String,
+      batchId: Long): Boolean =
+    applyOnce(df.sparkSession, sink, batchId) { (_, batch) =>
+      appendBlindAtomic(df, sink, batch); ()
+    }
 
   private def manifestPath(sink: String, version: Long): Path =
     new Path(new Path(sink, ManifestDir), f"$version%020d")
@@ -642,37 +705,39 @@ object AtomicIncrement {
     */
   private[graft] def versionAsOf(spark: SparkSession, sink: String,
       tsMillis: Long): Long = {
-    val fs = fsOf(spark, sink)
-    val dir = new Path(sink, ManifestDir)
-    require(fs.exists(dir), s"no committed snapshot at $sink")
-    val versions = fs.listStatus(dir).toSeq
-      .flatMap(st => st.getPath.getName.toLongOption
-        .map(v => (v, st.getPath, st.getModificationTime)))
-      .sortBy(_._1)
-    val times = inParallel(versions) { case (v, p, mtime) =>
-      (v, commitTimeOf(fs, p, mtime)) }
-    val adjusted = times.scanLeft((0L, Long.MinValue)) {
-      case ((_, prev), (v, t)) => (v, math.max(prev, t)) }.drop(1)
-    val eligible = adjusted.filter(_._2 <= tsMillis)
+    val versions = timeline(fsOf(spark, sink), sink, full = false)
+    require(versions.nonEmpty, s"no committed snapshot at $sink")
+    val eligible = versions.filter(_._2 <= tsMillis)
     require(eligible.nonEmpty,
       s"no manifest version at or before $tsMillis at $sink " +
         "(expired, or the table is younger)")
     eligible.last._1
   }
 
-  /** The commit wall-clock of one manifest: the embedded stamp when
-    * present, the file's mtime otherwise (pre-stamp manifests). Reads
-    * only the head line.
+  /** The commit timeline every time face reads: each retained version
+    * with its commit wall-clock made MONOTONE by a running max (see
+    * [[readVersionAsOf]]) and its parsed manifest lines — only the head
+    * line unless `full`. The wall-clock is the embedded stamp when
+    * present, the file's mtime otherwise (pre-stamp manifests). One
+    * small manifest read per retained version.
     */
-  private def commitTimeOf(fs: FileSystem, mf: Path,
-      mtime: Long): Long = {
-    val in = fs.open(mf)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .find(_.nonEmpty).map(parseLine)
-      .filter(_.path == CommitMetaPath)
-      .flatMap(_.statsFor(TsCol)).flatMap(_.min.toLongOption)
-      .getOrElse(mtime)
-    finally in.close()
+  private def timeline(fs: FileSystem, sink: String, full: Boolean)
+      : Seq[(Long, Long, Seq[ManifestEntry])] = {
+    val read = inParallel(manifestVersions(fs, sink)) { case (v, st) =>
+      val in = fs.open(st.getPath)
+      val lines = try {
+        val it = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .filter(_.nonEmpty).map(parseLine)
+        (if (full) it else it.take(1)).toList
+      } finally in.close()
+      val stamp = lines.find(_.path == CommitMetaPath)
+        .flatMap(_.statsFor(TsCol)).flatMap(_.min.toLongOption)
+        .getOrElse(st.getModificationTime)
+      (v, stamp, lines)
+    }
+    read.scanLeft((0L, Long.MinValue, Seq.empty[ManifestEntry])) {
+      case ((_, prev, _), (v, t, lines)) => (v, math.max(prev, t), lines)
+    }.drop(1)
   }
 
   private val RefsDir = "_refs"
@@ -845,18 +910,9 @@ object AtomicIncrement {
     // mtimes or skewed clocks invert the raw stamps. Cost: one small
     // manifest-head read per retained version, the same price
     // versionAsOf already declares (expireManifests bounds the count).
-    val committedAt: Any = {
-      val dir = new Path(sink, ManifestDir)
-      val versions =
-        if (!fs.exists(dir)) Nil
-        else fs.listStatus(dir).toSeq
-          .flatMap(st => st.getPath.getName.toLongOption
-            .map(v => (v, st.getPath, st.getModificationTime)))
-      if (versions.isEmpty) null
-      else org.apache.spark.sql.catalyst.util.DateTimeUtils
-        .toJavaTimestamp(inParallel(versions) { case (_, p, mtime) =>
-          commitTimeOf(fs, p, mtime) }.max * 1000L)
-    }
+    val committedAt: Any = timeline(fs, sink, full = false).lastOption
+      .map(t => org.apache.spark.sql.catalyst.util.DateTimeUtils
+        .toJavaTimestamp(t._2 * 1000L)).orNull
     val tagList = tags(spark, sink).toSeq.sortBy(_._1)
       .map { case (n, v) => s"$n@$v" }
     val schemaOut = StructType(Seq(
@@ -883,42 +939,20 @@ object AtomicIncrement {
     */
   def history(spark: SparkSession, sink: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val fs = fsOf(spark, sink)
-    val dir = new Path(sink, ManifestDir)
-    val versions =
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq
-        .flatMap(st => st.getPath.getName.toLongOption
-          .map(v => (v, st.getPath, st.getModificationTime)))
-        .sortBy(_._1)
     // ONE read per manifest serves both the commit stamp and the
-    // entry counts (a per-field re-open would double the metadata
-    // listing cost the scaladoc prices at one small read per version)
-    val rows = inParallel(versions) { case (v, p, mtime) =>
-      val in = fs.open(p)
-      val parsed = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).map(parseLine).toList
-        finally in.close()
-      val (meta, entries) = parsed.partition(isMeta)
-      val t = meta.find(_.path == CommitMetaPath)
-        .flatMap(_.statsFor(TsCol))
-        .flatMap(_.min.toLongOption).getOrElse(mtime)
-      val (dv, data) = entries.partition(isDv)
-      (v, t, data.size, dv.size)
+    // entry counts
+    val rows = timeline(fsOf(spark, sink), sink, full = true).map {
+      case (v, t, lines) =>
+        val (dv, data) = lines.filterNot(isMeta).partition(isDv)
+        org.apache.spark.sql.Row(v, org.apache.spark.sql.catalyst.util
+          .DateTimeUtils.toJavaTimestamp(t * 1000L), data.size, dv.size)
     }
-    val adjusted = rows.scanLeft((0L, Long.MinValue, 0, 0)) {
-      case ((_, prev, _, _), (v, t, d, k)) =>
-        (v, math.max(prev, t), d, k) }.drop(1)
     val schemaOut = StructType(Seq(
       StructField("version", LongType, nullable = false),
       StructField("committed_at", TimestampType, nullable = false),
       StructField("files", IntegerType, nullable = false),
       StructField("dv_files", IntegerType, nullable = false)))
-    spark.createDataFrame(java.util.Arrays.asList(
-      adjusted.map { case (v, t, d, k) =>
-        org.apache.spark.sql.Row(v,
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .toJavaTimestamp(t * 1000L), d, k) }: _*), schemaOut)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schemaOut)
   }
 
   /** CHANGE DATA FEED between two committed versions, derived from the
@@ -2651,7 +2685,16 @@ object AtomicIncrement {
     val (published, staged) = txn.commit(
         schema = _ => mergeStructs(fullSchema, upserts.schema),
         batch = batch) {
-      txn.stage(upserts, statsFields) ++
+      // an all-delete batch stages one 0-row after-image file: its line
+      // would ride every later manifest, so the line goes, and with it
+      // the file, or the whole staged dir when nothing in it is kept
+      val (empty, afterImages) = txn.stage(upserts, statsFields)
+        .partition(_.statsFor(RowsCol).flatMap(_.min.toLongOption)
+          .contains(0L))
+      empty.map(e => new Path(s"$sink/${e.path}")).foreach(p =>
+        fsOf(spark, sink).delete(if (afterImages.isEmpty) p.getParent else p,
+          true))
+      afterImages ++
         txn.stage(dvDf, dvDf.schema.fields.toSeq)
           .map(e => e.copy(allStats = e.allStats :+ dvMark))
     }.get
@@ -3060,11 +3103,8 @@ object AtomicIncrement {
       keepLast: Int): Int = {
     require(keepLast >= 1, "must keep at least the latest manifest")
     val fs = fsOf(spark, sink)
-    val dir = new Path(sink, ManifestDir)
-    if (!fs.exists(dir)) return 0
-    val versions = fs.listStatus(dir).toSeq
-      .flatMap(st => st.getPath.getName.toLongOption.map(_ -> st.getPath))
-      .sortBy(_._1)
+    val versions = manifestVersions(fs, sink)
+    if (versions.isEmpty) return 0
     // a TAGGED version never expires (round 14): the tag pinned it,
     // and retiring its manifest would break readTag while the vacuums
     // still honor its file pins — the inconsistent half-state. Strict:
@@ -3072,7 +3112,7 @@ object AtomicIncrement {
     val pinned = pinnedVersionsStrict(spark, sink).toSet
     val expired = versions.dropRight(keepLast)
       .filterNot(v => pinned.contains(v._1))
-    inParallel(expired)(v => fs.delete(v._2, false))
+    inParallel(expired)(v => fs.delete(v._2.getPath, false))
     expired.size
   }
 

@@ -758,32 +758,20 @@ object Similarity {
     *    ([[compactIvfIncremental]]);
     *  - probe, stats: [[AtomicIncrement.readCommitted]].
     * A call whose batch id is at or below the sink's recorded one is a
-    * replay and applies nothing ([[AtomicIncrement.isReplay]]); a crash
+    * replay and applies nothing ([[AtomicIncrement.applyOnce]]); a crash
     * before the publish leaves the snapshot as it was, and the replay
     * applies. The id is per sink, so ONE stream (one checkpoint) writes
-    * an index; probes are snapshot-isolated and lock-free. Returns
-    * whether the call applied.
-    */
-  private def maintain(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, batchId: Long)(
-      write: (AtomicIncrement.Snapshot, Option[Long]) => Unit): Boolean = {
-    val snap = AtomicIncrement.latestSnapshot(spark, indexDir)
-    val fresh = !AtomicIncrement.isReplay(snap, indexDir, batchId)
-    if (fresh) write(snap, Some(batchId))
-    fresh
-  }
-
-  /** Append `vecs` to the maintained full-vector index: one map-only
+    * an index; probes are snapshot-isolated and lock-free. Each call
+    * returns whether it applied.
+    *
+    * Append `vecs` to the maintained full-vector index: one map-only
     * pass over the NEW vectors (assign to the frozen centroids, norm,
     * stage) — cost ∝ batch, the existing postings are never touched.
     */
   def appendIvfIncrement(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, vecs: DataFrame,
       cents: Seq[(Long, Seq[Double])], batchId: Long): Boolean =
-    maintain(spark, indexDir, batchId) { (_, batch) =>
-      AtomicIncrement.appendBlindAtomic(ivfRows(vecs, cents), indexDir, batch)
-      ()
-    }
+    AtomicIncrement.appendOnce(ivfRows(vecs, cents), indexDir, batchId)
 
   /** Delete `ids` from a maintained index of either layout: a delete
     * vector of the ids masks their rows in every probe from this commit
@@ -824,7 +812,7 @@ object Similarity {
   private def mergeIncrement(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, ids: DataFrame, afterImages: Option[DataFrame],
       batchId: Long): Boolean =
-    maintain(spark, indexDir, batchId) { (snap, batch) =>
+    AtomicIncrement.applyOnce(spark, indexDir, batchId) { (snap, batch) =>
       if (snap.data.isEmpty)
         afterImages.foreach(
           AtomicIncrement.appendBlindAtomic(_, indexDir, batch))
@@ -881,12 +869,9 @@ object Similarity {
       cents: Seq[(Long, Seq[Double])], batchId: Long,
       numSubspaces: Int = 8, dim: Int = 64): Boolean = {
     writePqCodebook(spark, indexDir, cents, numSubspaces, dim)
-    maintain(spark, indexDir, batchId) { (_, batch) =>
-      AtomicIncrement.appendBlindAtomic(pqEncode(
-        vecs.select("vec_id", "embedding"), cents, numSubspaces, dim),
-        indexDir, batch)
-      ()
-    }
+    AtomicIncrement.appendOnce(pqEncode(
+      vecs.select("vec_id", "embedding"), cents, numSubspaces, dim),
+      indexDir, batchId)
   }
 
   /** The compressed index's codebook sidecar at the index root: written

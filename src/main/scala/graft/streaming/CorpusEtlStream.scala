@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.operators.TextAnalysis
+import graft.operators.{AtomicIncrement, IncrementalAgg, TextAnalysis}
 import graft.pipelines.Corpus
-import graft.streaming.BatchDirs.{batchPartitions, deleteOlderThan}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
@@ -22,23 +21,27 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * cheaper gate) → sliding-window chunking — with the same
   * replay-safety mechanics as `CorpusStream` (the near-dup sibling):
   *
-  *  - every write goes to `<dir>/batch=<id>` with Overwrite, so a
-  *    replayed micro-batch rewrites its own partition instead of
-  *    double-appending chunks or fingerprints;
+  *  - the chunk sink, the fingerprint index (`<indexDir>/fps`), the
+  *    spend state and the near-dup index are graft sinks, each written
+  *    by one commit per micro-batch that records the batch id, so a
+  *    replayed micro-batch skips every sink its crashed attempt already
+  *    committed and lands the same admission in the rest;
   *  - the fingerprint probe anti-joins out the current batch's own
-  *    doc_ids, so a crashed attempt's leftovers cannot drop the very
-  *    docs that wrote them (doc_id must be unique stream-wide — the
-  *    `CorpusStream` contract);
-  *  - every `compactEvery` batches the fingerprint partitions fold
-  *    (distinct()ed) into the current one and the old directories are
-  *    deleted — index files stay O(compactEvery); a crash between fold
-  *    and delete re-collapses on replay;
+  *    doc_ids, so a crashed attempt's committed fingerprints cannot
+  *    drop the very docs that wrote them (doc_id must be unique
+  *    stream-wide — the `CorpusStream` contract);
+  *  - the batch id is per sink, so ONE stream, keeping its checkpoint,
+  *    writes these sinks;
+  *  - on the `compactEvery` cadence, after the step's last commit, the
+  *    index and state sinks run the sink's maintenance pass
+  *    (`CorpusStream.maintainIndex`): file counts stay O(compactEvery);
   *  - operator-internal caches are scoped to the batch.
   *
   * State is one (doc_id, fp) row per ADMITTED document — bounded by
   * the corpus, keyed nowhere (the probe is a fp equi-join, and at
   * 100 TB the index would bucket by fp); chunks never re-enter the
-  * pipeline.
+  * pipeline. Read the chunk sink with `AtomicIncrement.readCommitted`
+  * or the `graft-atomic` source.
   */
 object CorpusEtlStream {
 
@@ -68,17 +71,15 @@ object CorpusEtlStream {
       chunkTokens: Int, stride: Int, compactEvery: Int,
       benchmark: Option[DocGate], nearDupJaccard: Option[Double],
       budgets: Option[SourceBudgets], spark: SparkSession,
-      // crash-matrix seam: invoked after each durable publish inside
-      // the batch ("spent", "neardup", "chunks", "fps") so a spec can
-      // simulate a process death at EVERY boundary by throwing from
-      // here — production callers leave it a no-op
+      // crash-matrix seam: invoked after each commit inside the batch
+      // ("spent", "neardup", "chunks", "fps") so a spec can simulate a
+      // process death at EVERY boundary by throwing from here —
+      // production callers leave it a no-op
       afterWrite: String => Unit = _ => ()): Unit = {
     val fpPath = s"$indexDir/fps"
+    val spentPath = s"$indexDir/spent"
+    val nearDupPath = s"$indexDir/neardup"
     val batchDocIds = batch.select("doc_id")
-    // ONE filesystem listing per batch decides both the probe and the
-    // compaction branch (each listing is a remote LIST on an
-    // object-store index)
-    val havePrior = batchPartitions(spark, fpPath).nonEmpty
     // quality gate, then batch-internal exact dedup — the fingerprint
     // is computed ONCE and drives the min-id keep directly (running
     // Corpus.exactDedup here would md5-normalize every doc a second
@@ -94,15 +95,15 @@ object CorpusEtlStream {
     val clean = benchmark.fold(deduped)(_.scrubWithFp(deduped, "__fp"))
     // drop docs whose fingerprint is already ADMITTED — excluding this
     // batch's own ids (the replay shield)
-    val survivors =
-      if (havePrior) {
-        val priorFps = spark.read.parquet(fpPath)
+    val survivors = AtomicIncrement.readStreamState(spark, fpPath)
+      .fold(clean) { idx =>
+        val priorFps = idx
           .select(col("doc_id").as("idx_id"), col("fp").as("__fp"))
           .join(batchDocIds.select(col("doc_id").as("idx_id")),
             Seq("idx_id"), "left_anti")
           .select("__fp").distinct()
         clean.join(priorFps, Seq("__fp"), "left_anti")
-      } else clean
+      }
     // optional per-source budget gate: runs after the cheap gates (so
     // only docs that could land spend budget) and BEFORE the near-dup
     // stage (so a budget-dropped doc never lands bands that would
@@ -110,8 +111,7 @@ object CorpusEtlStream {
     // with BudgetStream/tokenBudgetMix: every doc OFFERED at this
     // stage spends its cost, admitted or not.
     val inBudget = budgets.fold(survivors) { b =>
-      val kept = applyBudgetGate(survivors, batchId, s"$indexDir/spent", b,
-        compactEvery, spark)
+      val kept = applyBudgetGate(survivors, batchId, spentPath, b, spark)
       afterWrite("spent")
       kept
     }
@@ -126,7 +126,7 @@ object CorpusEtlStream {
       case Some(j) =>
         val a = CorpusStream.admitNearDups(
           inBudget.select("doc_id", "text", "__fp"),
-          batchDocIds, batchId, s"$indexDir/neardup", j, compactEvery)
+          batchDocIds, batchId, nearDupPath, j)
         afterWrite("neardup")
         (a, Seq.empty: graft.InternalCaches.Handle)
       case None =>
@@ -134,54 +134,39 @@ object CorpusEtlStream {
           inBudget.select("doc_id", "text", "__fp"))
     }
     graft.InternalCaches.trackRdds(ckpt)
-    TextAnalysis.chunkDocs(admitted, "doc_id", "text", chunkTokens, stride)
-      .write.mode(SaveMode.Overwrite).parquet(s"$sinkDir/batch=$batchId")
+    AtomicIncrement.appendOnce(
+      TextAnalysis.chunkDocs(admitted, "doc_id", "text", chunkTokens, stride),
+      sinkDir, batchId)
     afterWrite("chunks")
-    val newFps = admitted.select(col("doc_id"), col("__fp").as("fp"))
-    val compact = compactEvery > 0 && batchId % compactEvery == 0 && havePrior
-    if (compact) {
-      val priorFps = spark.read.parquet(fpPath).select("doc_id", "fp")
-        .join(batchDocIds, Seq("doc_id"), "left_anti")
-      val (fold, foldCkpt) = graft.InternalCaches.localCheckpointHandle(
-        priorFps.union(newFps).distinct().coalesce(2))
-      graft.InternalCaches.trackRdds(foldCkpt)
-      fold.write.mode(SaveMode.Overwrite).parquet(s"$fpPath/batch=$batchId")
-      deleteOlderThan(spark, fpPath, batchId)
-    } else {
-      newFps.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$fpPath/batch=$batchId")
-    }
+    val applied = AtomicIncrement.appendOnce(
+      admitted.select(col("doc_id"), col("__fp").as("fp")).coalesce(1),
+      fpPath, batchId)
     afterWrite("fps")
+    IvfStream.compactOnCadence(batchId, compactEvery, applied)(
+      CorpusStream.maintainIndex(spark, Seq(fpPath) ++
+        budgets.map(_ => spentPath) ++
+        nearDupJaccard.toSeq.flatMap(_ =>
+          CorpusStream.nearDupIndex(nearDupPath)): _*))
   }
 
   /** Per-source cost budgets for the optional ingest budget gate. */
   case class SourceBudgets(perSource: Map[String, Long],
       default: Long = 0L)
 
-  /** The budget gate's batch half. Spend state is a tiny parquet of
-    * (source, spent, folded) rows under `spentPath/batch=<id>` — the
-    * same partition-overwrite replay shield as the fingerprint index
-    * (a replayed batch recomputes the identical delta into its own
-    * partition). Within the batch, admission replays the
-    * tokenBudgetMix contract: per-source md5-rank order, inclusive
-    * running cost offset by the prior spend, keep iff ≤ budget; the
-    * window is micro-batch-sized, so no bucket decomposition is
-    * needed here. Every `compactEvery` batches the delta partitions
-    * fold into one (summed per source, `folded=true`) and older
-    * directories drop — listing stays O(compactEvery), state is
-    * |sources| longs.
+  /** The budget gate's batch half. Spend state is one (source, spent)
+    * rollup in a graft sink at `spentPath`: one
+    * [[IncrementalAgg.mergeCdcBatch]] fold per batch, keyed on `source`
+    * and summing the batch's spend, whose commit records the batch id.
+    * Within the batch, admission replays the tokenBudgetMix contract:
+    * per-source md5-rank order, inclusive running cost offset by the
+    * prior spend, keep iff ≤ budget; the window is micro-batch-sized,
+    * so no bucket decomposition is needed here.
     *
-    * REPLAY of a compaction batch needs care the fp index doesn't:
-    * fps are a membership SET (a fold that still coexists with the
-    * dirs it absorbed is harmless), but spend is a SUM. Once a first
-    * attempt has folded `batch=N` and deleted the older dirs, a
-    * replay that merely excluded `batch=N` would see zero prior
-    * spend and re-admit budget-dropped docs. So when `batch=N` holds
-    * a fold, prior is reconstructed as `fold − delta` (the delta is
-    * deterministic on replay) and the older dirs — absorbed, possibly
-    * not yet deleted — are ignored entirely; both the crash-between-
-    * fold-and-delete and the crash-after-delete windows replay to the
-    * identical admission.
+    * On a fresh batch the prior spend is the state. A replayed batch
+    * (its crashed attempt already folded) reads a state that holds its
+    * own delta, so its prior is the state minus that delta — the delta
+    * is deterministic on replay, and the fold itself is skipped. The
+    * state stays one row per source.
     *
     * Docs a cheaper gate already dropped never reach this stage and
     * spend nothing; a budget-dropped doc RE-OFFERED in a later batch
@@ -190,10 +175,10 @@ object CorpusEtlStream {
     * caller's lever.
     */
   private def applyBudgetGate(offered: DataFrame, batchId: Long,
-      spentPath: String, budgets: SourceBudgets, compactEvery: Int,
+      spentPath: String, budgets: SourceBudgets,
       spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // pin the gate input: the delta write and the admitted frame both
+    // pin the gate input: the delta fold and the admitted frame both
     // read it, and without the checkpoint each would re-run the whole
     // upstream gate pipeline
     val (withCost, h) = graft.InternalCaches.localCheckpointHandle(
@@ -202,31 +187,20 @@ object CorpusEtlStream {
     graft.InternalCaches.trackRdds(h)
     // delta covers every OFFERED doc (strict prefix), admitted or not
     val delta = withCost.groupBy("source").agg(sum("__cost").as("spent"))
-    val havePrior = batchPartitions(spark, spentPath).nonEmpty
-    val state = if (havePrior) Some(spark.read.parquet(spentPath)) else None
-    // a fold already at batch=N means this is a replay past the
-    // compaction point — the state frame is tiny (≤ compactEvery ×
-    // |sources| rows), so the probe is a driver-side head(1)
-    val replayingFold = state.exists(_
-      .filter(col("batch") === batchId && col("folded")).head(1).nonEmpty)
-    val prior = (state, replayingFold) match {
-      case (Some(s), true) =>
-        s.filter(col("batch") === batchId)
-          .groupBy("source").agg(sum("spent").as("__fold"))
+    val snap = AtomicIncrement.streamSnapshot(spark, spentPath)
+    val replay = AtomicIncrement.isReplay(snap, spentPath, batchId)
+    val prior = AtomicIncrement.readFoldState(spark, spentPath, snap)
+      .fold(spark.emptyDataFrame.withColumn("source", lit(""))
+        .withColumn("__prior", lit(0L))) { state =>
+        val spent = state.select(col("source"), col("sum_spent").as("__prior"))
+        if (!replay) spent
+        else spent
           .join(delta.withColumnRenamed("spent", "__d"), Seq("source"), "left")
           .select(col("source"),
-            (col("__fold") - coalesce(col("__d"), lit(0L))).as("__prior"))
-      case (Some(s), false) =>
-        s.filter(col("batch") =!= batchId)
-          .groupBy("source").agg(sum("spent").as("__prior"))
-      case (None, _) => spark.emptyDataFrame
-        .withColumn("source", lit("")).withColumn("__prior", lit(0L))
-    }
-    // pin prior (|sources| rows) BEFORE the writes below: `kept` is
-    // consumed after this method overwrites batch=N / deletes the
-    // folded-away dirs, so a lazy re-scan would hit missing files
-    val (priorPinned, hp) = graft.InternalCaches.localCheckpointHandle(prior)
-    graft.InternalCaches.trackRdds(hp)
+            (col("__prior") - coalesce(col("__d"), lit(0L))).as("__prior"))
+      }
+    IncrementalAgg.mergeCdcBatch(delta, delta.limit(0), spentPath,
+      Seq("source"), Seq("spent"), batchId)
     val budgetCol = budgets.perSource.toSeq.sortBy(_._1)
       .foldLeft(lit(budgets.default)) { case (acc, (s, b)) =>
         when(col("source") === s, lit(b)).otherwise(acc)
@@ -234,27 +208,11 @@ object CorpusEtlStream {
     val w = Window.partitionBy("source")
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val kept = withCost
+    withCost
       .withColumn("__cum", sum("__cost").over(w))
-      .join(broadcast(priorPinned), Seq("source"), "left")
+      .join(broadcast(prior), Seq("source"), "left")
       .filter(coalesce(col("__prior"), lit(0L)) + col("__cum") <= budgetCol)
       .drop("__cost", "__cum", "__prior")
-    val compact = compactEvery > 0 && batchId % compactEvery == 0 && havePrior
-    if (compact) {
-      // fold = prior + delta via the SAME replay-aware prior as the
-      // admission above, so re-folding on replay is a fixed point
-      val fold = priorPinned.select(col("source"), col("__prior").as("spent"))
-        .union(delta).groupBy("source").agg(sum("spent").as("spent"))
-        .withColumn("folded", lit(true))
-      fold.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$spentPath/batch=$batchId")
-      deleteOlderThan(spark, spentPath, batchId)
-    } else {
-      delta.withColumn("folded", lit(false)).coalesce(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$spentPath/batch=$batchId")
-    }
-    kept
   }
 
   /** Wire the step into a checkpointed AvailableNow/continuous stream. */

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{AtomicIncrement, Dedup, Maintenance}
 import graft.pipelines.Corpus
-import graft.streaming.BatchDirs.{batchPartitions, deleteOlderThan}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
@@ -30,45 +29,48 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *   3. survivors get the batch-internal near-dedup
   *      (`Corpus.nearDedup`: LSH pairs → components → keep min id);
   *   4. admitted docs land in the sink, their bands/shingles in the
-  *      index — each in a `batch=<id>` partition directory.
+  *      index's `bands` and `shingles` tables.
   *
-  * REPLAY SAFETY (exactly-once effective semantics without a
-  * transactional table format):
-  *   - every write goes to `<dir>/batch=<batchId>` with Overwrite, so
-  *     a replayed micro-batch rewrites its own partition instead of
-  *     double-appending sink or index;
+  * REPLAY SAFETY: the sink and both index tables are graft sinks
+  * ([[AtomicIncrement]]). A step is one commit per sink that records
+  * the batch id on the manifest's commit line, and a redelivered id at
+  * or below the recorded one applies nothing
+  * ([[AtomicIncrement.appendOnce]]). A crash between two of a step's
+  * commits leaves some sinks at the batch and the rest before it; the
+  * replay skips the former and lands the same admission in the latter:
   *   - the index probe excludes the current batch's doc_ids by
-  *     anti-join (NOT by partition), so leftovers from a crashed
-  *     attempt of this very batch can't self-match and over-drop, and
-  *     the admit decision is bit-identical on every attempt;
-  *   - `admitted` is localCheckpoint'ed before any write, truncating
-  *     lineage over the index files the overwrite is about to replace.
+  *     anti-join, so rows an earlier attempt of this very batch
+  *     committed can't self-match and over-drop, and the admit
+  *     decision is identical on every attempt;
+  *   - `admitted` is localCheckpoint'ed before any write, so the index
+  *     and sink commits land one admission, computed once.
   *     localCheckpoint is executor-local, NOT fault-tolerant: an
   *     executor lost between checkpoint and the writes fails that
-  *     attempt — acceptable only because the idempotent replay re-runs
-  *     the batch cleanly (a lossy cluster wanting attempt-level
-  *     recovery would use reliable checkpoint() to DFS instead);
+  *     attempt, and the replay re-runs it (a lossy cluster wanting
+  *     attempt-level recovery would use reliable checkpoint() to DFS);
   *   - the anti-join shield keys on doc_id, so doc_id MUST be unique
   *     across the stream's lifetime (the usual contract for a document
   *     corpus). A source that re-delivers an already-admitted doc_id in
   *     a LATER batch is indistinguishable from a crashed attempt of
   *     that batch: the old index rows are excluded from the probe and
-  *     the doc is re-admitted as a duplicate sink row.
+  *     the doc is re-admitted as a duplicate sink row;
+  *   - the batch id is per sink, so ONE stream, keeping its checkpoint,
+  *     writes a sink and its index: a second stream with a fresh
+  *     checkpoint has its batches skipped as replays.
+  * Read the sink with `AtomicIncrement.readCommitted` or the
+  * `graft-atomic` source.
   *
-  * COMPACTION: every `compactEvery` batches the prior index partitions
-  * are folded (together with the batch's own rows) into the current
-  * `batch=<id>` partition and the old directories deleted, bounding
-  * index file count by O(compactEvery), not O(stream length). A crash
-  * between fold and delete leaves prior rows present in both an old
-  * partition and the fold; admission stays correct (the probe ends in
-  * `distinct()`), and the replayed fold `distinct()`s its input so the
-  * duplicates collapse instead of accumulating. A crash after the
-  * deletes is covered by the fold: reads go through the parent
-  * directory, so rows survive in whichever partition carries them.
+  * COMPACTION: on the `compactEvery` cadence
+  * ([[IvfStream.compactOnCadence]]), after the step's last commit, each
+  * index table runs the sink's maintenance pass ([[maintainIndex]]): an
+  * index of more than two files rewrites into two, and the superseded
+  * files are reclaimed, so its file count stays O(compactEvery), not
+  * O(stream length). A compaction that fails leaves the index at its
+  * committed snapshot.
   *
-  * State is the index directory: bounded by the ADMITTED corpus (not
-  * the stream length), keyed by band bucket so the per-batch probe
-  * shuffles only the batch.
+  * State is the index: bounded by the ADMITTED corpus (not the stream
+  * length), keyed by band bucket so the per-batch probe shuffles only
+  * the batch.
   */
 object CorpusStream {
 
@@ -80,8 +82,8 @@ object CorpusStream {
   def nearDedupBatchStep(batch: DataFrame, batchId: Long, indexDir: String,
       sinkDir: String, minJaccard: Double, compactEvery: Int = 8,
       benchmark: Option[DocGate] = None): Unit =
-    // every operator-internal cache this batch creates (the admitted/
-    // fold checkpoints, the shingle persists and component checkpoints
+    // every operator-internal cache this batch creates (the admitted
+    // checkpoint, the shingle persists and component checkpoints
     // inside Corpus.nearDedup) is scoped to the batch and released on
     // exit — a stream that skipped this would leak one cache set per
     // micro-batch, and a GLOBAL drain here would invalidate caches of
@@ -101,47 +103,60 @@ object CorpusStream {
     // filter, so a replayed batch drops the same docs again.
     val gated = benchmark.fold(batch)(_.scrubDocs(batch))
     val admitted = admitNearDups(gated, batch.select("doc_id"), batchId,
-      indexDir, minJaccard, compactEvery)
-    admitted.select("doc_id", "text")
-      .write.mode(SaveMode.Overwrite).parquet(s"$sinkDir/batch=$batchId")
+      indexDir, minJaccard)
+    val applied = AtomicIncrement.appendOnce(
+      admitted.select("doc_id", "text"), sinkDir, batchId)
+    IvfStream.compactOnCadence(batchId, compactEvery, applied)(
+      maintainIndex(batch.sparkSession, nearDupIndex(indexDir): _*))
   }
+
+  /** The band and shingle tables of a near-dup index. */
+  private[streaming] def nearDupIndex(indexDir: String): Seq[String] =
+    Seq(s"$indexDir/bands", s"$indexDir/shingles")
+
+  /** The streams' index maintenance pass: an index table of more than
+    * two files rewrites into two, and the pass reclaims the files the
+    * rewrite and earlier commits superseded.
+    */
+  private[graft] def maintainIndex(spark: SparkSession,
+      dirs: String*): Unit =
+    dirs.foreach(d => Maintenance.maintainAtomic(spark,
+      Maintenance.Target(d, targetFiles = 2)))
 
   /** The near-dup ADMISSION core, shared with `CorpusEtlStream`'s
     * optional near-dup stage: probe the admitted-bands index, exact-
     * verify candidates by Jaccard, batch-internal near-dedup, then
-    * land the admitted docs' bands/shingles in the index partition for
-    * `batchId` (with the compaction fold). Returns the admitted docs
-    * in the INPUT's full schema, localCheckpoint'ed (lineage truncated
-    * over the index files a replay overwrites) and cache-tracked.
-    * `batchDocIds` is the PRE-GATE batch id set — the replay shield
-    * must exclude every id a crashed attempt could have written.
+    * commit the admitted docs' bands/shingles to the index for
+    * `batchId`. Returns the admitted docs in the INPUT's full schema,
+    * localCheckpoint'ed and cache-tracked. `batchDocIds` is the
+    * PRE-GATE batch id set — the replay shield must exclude every id a
+    * crashed attempt could have committed. The caller runs the
+    * index's compaction after its own last write.
     */
   private[streaming] def admitNearDups(gated: DataFrame,
       batchDocIds: DataFrame, batchId: Long, indexDir: String,
-      minJaccard: Double, compactEvery: Int): DataFrame = {
+      minJaccard: Double): DataFrame = {
     val spark = gated.sparkSession
-    val bandsPath = s"$indexDir/bands"
-    val shinglesPath = s"$indexDir/shingles"
+    val Seq(bandsPath, shinglesPath) = nearDupIndex(indexDir)
     val sh = Dedup.shingled(gated, "doc_id", "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = Dedup.lshBandsFromShingles(sh, "doc_id")
-    val havePrior = batchPartitions(spark, bandsPath).nonEmpty
+    // an index table's committed rows minus the batch's own ids: the
+    // replay shield — see the object doc
+    def prior(path: String) = AtomicIncrement.readStreamState(spark, path)
+      .map(_.withColumnRenamed("doc_id", "idx_id")
+        .join(batchDocIds.select(col("doc_id").as("idx_id")), Seq("idx_id"),
+          "left_anti"))
     // docs near-dupped by the ADMITTED corpus: band-bucket probe, then
     // exact Jaccard against the admitted shingle sets (candidate-only
-    // work, the batch LSH contract). The anti-join against the batch's
-    // own ids is the replay shield — see the object doc.
-    val doomedByIndex =
-      if (havePrior) {
-        val idxBands = spark.read.parquet(bandsPath)
-          .select(col("doc_id").as("idx_id"), col("band"), col("band_key"))
-          .join(batchDocIds.select(col("doc_id").as("idx_id")), Seq("idx_id"), "left_anti")
-        val idxSh = spark.read.parquet(shinglesPath)
-          .select(col("doc_id").as("idx_id"), col("sh").as("sh_old"))
-          .join(batchDocIds.select(col("doc_id").as("idx_id")), Seq("idx_id"), "left_anti")
-        bands.join(idxBands, Seq("band", "band_key"))
+    // work, the batch LSH contract)
+    val doomedByIndex = (prior(bandsPath), prior(shinglesPath)) match {
+      case (Some(idxBands), Some(idxSh)) =>
+        bands.join(idxBands.select("idx_id", "band", "band_key"),
+            Seq("band", "band_key"))
           .select(col("doc_id"), col("idx_id")).distinct()
           .join(sh.select(col("doc_id"), col("sh").as("sh_new")), "doc_id")
-          .join(idxSh, "idx_id")
+          .join(idxSh.select(col("idx_id"), col("sh").as("sh_old")), "idx_id")
           // quantize before comparing — the same 1e-4-grid boundary
           // rule as MinHashGate and the batch paths (Dedup,
           // DedupIncremental), so gate/batch/stream cuts agree on
@@ -149,50 +164,21 @@ object CorpusStream {
           .filter(round(Dedup.jaccard(col("sh_new"), col("sh_old")), 4)
             >= minJaccard)
           .select("doc_id").distinct()
-      } else spark.emptyDataFrame.withColumn("doc_id", lit(0L)).limit(0)
+      case _ => spark.emptyDataFrame.withColumn("doc_id", lit(0L)).limit(0)
+    }
     val survivors = gated.join(doomedByIndex, Seq("doc_id"), "left_anti")
-    // batch-internal near-dedup (min-id canonical within the batch);
-    // localCheckpoint truncates lineage over the index files the
-    // writes below may replace on a replay
+    // batch-internal near-dedup (min-id canonical within the batch),
+    // computed once for the index and sink commits
     val (admitted, admittedCkpt) = graft.InternalCaches.localCheckpointHandle(
       Corpus.nearDedup(survivors, "doc_id", "text", minJaccard))
     graft.InternalCaches.trackRdds(admittedCkpt)
     val admittedIds = admitted.select("doc_id")
-    // micro-batches are small → one file per partition dir; at 100 TB
-    // size this by bytes (batchRows / targetFileRows) instead
-    val newBands = bands.join(admittedIds, "doc_id")
-      .select("doc_id", "band", "band_key")
-    val newSh = sh.join(admittedIds, "doc_id").select("doc_id", "sh")
-    val compact = compactEvery > 0 && havePrior && batchId % compactEvery == 0
-    if (compact) {
-      val priorBands = spark.read.parquet(bandsPath)
-        .select("doc_id", "band", "band_key")
-        .join(batchDocIds, Seq("doc_id"), "left_anti")
-      val priorSh = spark.read.parquet(shinglesPath)
-        .select("doc_id", "sh")
-        .join(batchDocIds, Seq("doc_id"), "left_anti")
-      // materialize the fold BEFORE overwriting inside the same tree:
-      // the write job must not re-list files its own Overwrite deletes.
-      // distinct() folds away rows a prior crash (between fold-write and
-      // partition delete) left present in BOTH an old partition and the
-      // fold — without it those rows re-duplicate on every replay and
-      // persist in the index permanently
-      val (foldBands, fbCkpt) = graft.InternalCaches.localCheckpointHandle(
-        priorBands.union(newBands).distinct().coalesce(2))
-      val (foldSh, fsCkpt) = graft.InternalCaches.localCheckpointHandle(
-        priorSh.union(newSh).distinct().coalesce(2))
-      graft.InternalCaches.trackRdds(fbCkpt)
-      graft.InternalCaches.trackRdds(fsCkpt)
-      foldBands.write.mode(SaveMode.Overwrite).parquet(s"$bandsPath/batch=$batchId")
-      foldSh.write.mode(SaveMode.Overwrite).parquet(s"$shinglesPath/batch=$batchId")
-      for (dir <- Seq(bandsPath, shinglesPath))
-        deleteOlderThan(spark, dir, batchId)
-    } else {
-      newBands.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$bandsPath/batch=$batchId")
-      newSh.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$shinglesPath/batch=$batchId")
-    }
+    // micro-batches are small → one file per commit; at 100 TB size
+    // this by bytes (batchRows / targetFileRows) instead
+    AtomicIncrement.appendOnce(bands.join(admittedIds, "doc_id")
+      .select("doc_id", "band", "band_key").coalesce(1), bandsPath, batchId)
+    AtomicIncrement.appendOnce(sh.join(admittedIds, "doc_id")
+      .select("doc_id", "sh").coalesce(1), shinglesPath, batchId)
     sh.unpersist()
     admitted
   }

@@ -20,25 +20,30 @@ import org.apache.spark.sql.DataFrame
   * index.
   *
   * `compactEvery > 0` runs [[Similarity.compactIvfIncremental]] (the
-  * sink's maintenance pass) on a cadence, bounding the committed file
-  * count a probe must read and folding delete vectors away. A step
-  * compacts only when its own commit applied, so a redelivered
-  * compacting batch pays nothing.
+  * sink's maintenance pass) on a cadence ([[compactOnCadence]]),
+  * bounding the committed file count a probe must read and folding
+  * delete vectors away.
   */
 object IvfStream {
 
-  private def compactOnCadence(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, batchId: Long, compactEvery: Long,
-      applied: Boolean): Unit =
+  /** The streams' one compaction cadence (this object's and the corpus
+    * streams'): `compact` runs on the last batch of every `compactEvery`
+    * (ids `compactEvery − 1`, `2·compactEvery − 1`, …), and only when
+    * the step's own commit `applied`, so a redelivered compacting batch
+    * pays nothing. A step calls it after its last write.
+    */
+  private[streaming] def compactOnCadence(batchId: Long,
+      compactEvery: Long, applied: Boolean)(compact: => Unit): Unit =
     if (applied && compactEvery > 0L &&
         batchId % compactEvery == compactEvery - 1L)
-      Similarity.compactIvfIncremental(spark, indexDir)
+      compact
 
   def ingestBatchStep(batch: DataFrame, batchId: Long, indexDir: String,
       cents: Seq[(Long, Seq[Double])], compactEvery: Long = 0L): Unit = {
     val spark = batch.sparkSession
-    compactOnCadence(spark, indexDir, batchId, compactEvery,
-      Similarity.appendIvfIncrement(spark, indexDir, batch, cents, batchId))
+    compactOnCadence(batchId, compactEvery,
+      Similarity.appendIvfIncrement(spark, indexDir, batch, cents, batchId))(
+      Similarity.compactIvfIncremental(spark, indexDir))
   }
 
   /** CDC variant: each micro-batch carries `(vec_id, embedding, op)`
@@ -52,9 +57,10 @@ object IvfStream {
       cents: Seq[(Long, Seq[Double])], compactEvery: Long = 0L,
       opCol: String = "op"): Unit = {
     val spark = batch.sparkSession
-    compactOnCadence(spark, indexDir, batchId, compactEvery,
+    compactOnCadence(batchId, compactEvery,
       Similarity.upsertIvfIncrement(spark, indexDir, batch, cents, batchId,
-        opCol))
+        opCol))(
+      Similarity.compactIvfIncremental(spark, indexDir))
   }
 
   def upsertStream(changes: DataFrame, indexDir: String,
@@ -131,9 +137,10 @@ object IvfStream {
       cents: Seq[(Long, Seq[Double])], compactEvery: Long = 0L,
       numSubspaces: Int = 8, dim: Int = 64): Unit = {
     val spark = batch.sparkSession
-    compactOnCadence(spark, indexDir, batchId, compactEvery,
+    compactOnCadence(batchId, compactEvery,
       Similarity.appendPqIncrement(spark, indexDir, batch, cents, batchId,
-        numSubspaces, dim))
+        numSubspaces, dim))(
+      Similarity.compactIvfIncremental(spark, indexDir))
   }
 
   def pqIngestStream(vecs: DataFrame, indexDir: String,
@@ -163,9 +170,10 @@ object IvfStream {
       cents: Seq[(Long, Seq[Double])], compactEvery: Long = 0L,
       numSubspaces: Int = 8, dim: Int = 64, opCol: String = "op"): Unit = {
     val spark = batch.sparkSession
-    compactOnCadence(spark, indexDir, batchId, compactEvery,
+    compactOnCadence(batchId, compactEvery,
       Similarity.upsertPqIncrement(spark, indexDir, batch, cents, batchId,
-        numSubspaces, dim, opCol))
+        numSubspaces, dim, opCol))(
+      Similarity.compactIvfIncremental(spark, indexDir))
   }
 
   def pqUpsertStream(changes: DataFrame, indexDir: String,

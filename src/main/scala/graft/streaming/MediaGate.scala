@@ -48,50 +48,51 @@ final class PHashGate(corpusHashes: DataFrame) extends Serializable {
 }
 
 /** The wired image-ingest stream: binary payloads in, near-dup-free
-  * media corpus out, with the same replay-safe `batch=<id>` directory
-  * protocol as [[CorpusStream]]. Per micro-batch: decode + hash the
-  * batch's own payloads (partition-local, cost ∝ batch), canonical
-  * batch-internal dedup (min doc_id per hash), probe the persisted
-  * index of previously ADMITTED hashes — excluding rows a failed
-  * attempt of THIS batch already wrote (the anti-replay shield) —
-  * then write admitted rows to `sink/batch=<id>` and their hashes to
-  * `index/phashes/batch=<id>`, both with Overwrite so a replayed
-  * batch lands byte-identically. UNDECODABLE payloads are not
-  * evidence of duplication but must not pollute a media corpus
-  * either: they land in `sink/__corrupt/batch=<id>` for quarantine
-  * review instead of being admitted or silently dropped.
+  * media corpus out, with the same replay-safe graft-sink commits as
+  * [[CorpusStream]]. Per micro-batch: decode + hash the batch's own
+  * payloads (partition-local, cost ∝ batch), canonical batch-internal
+  * dedup (min doc_id per hash), probe the committed index of
+  * previously ADMITTED hashes — excluding rows a failed attempt of
+  * THIS batch already committed (the anti-replay shield) — then commit
+  * admitted rows to the sink and their hashes to `index/phashes`, one
+  * commit per sink recording the batch id, so a replayed batch skips
+  * every sink its crashed attempt already committed. UNDECODABLE
+  * payloads are not evidence of duplication but must not pollute a
+  * media corpus either: they land in the `sink/__corrupt` sink for
+  * quarantine review instead of being admitted or silently dropped.
+  * The batch id is per sink, so ONE stream, keeping its checkpoint,
+  * writes these sinks. Read them with `AtomicIncrement.readCommitted`
+  * or the `graft-atomic` source.
   */
 object MediaStream {
-  import org.apache.spark.sql.{SaveMode, SparkSession}
-  import graft.streaming.BatchDirs.batchPartitions
+  import graft.operators.AtomicIncrement
 
   def ingestBatchStep(batch: DataFrame, batchId: Long, indexDir: String,
       sinkDir: String): Unit = {
     val spark = batch.sparkSession
-    // lineage must not reach through the index files this batch
-    // overwrites below — checkpoint the decoded hashes first
+    // decode + hash once: the probe, both commits and the quarantine
+    // all read the hashes
     val (hashed, ckpt) = graft.InternalCaches.localCheckpointHandle(
       Multimodal.aHash64(
         Multimodal.decodeImageBatch(batch, "doc_id", "payload")).toDF())
     graft.InternalCaches.trackRdds(ckpt)
     val phPath = s"$indexDir/phashes"
-    val prior =
-      if (batchPartitions(spark, phPath).nonEmpty)
-        spark.read.parquet(phPath)
-          .join(batch.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      else hashed.limit(0)
+    val prior = AtomicIncrement.readStreamState(spark, phPath)
+      .fold(hashed.limit(0))(
+        _.join(batch.select(col("doc_id")), Seq("doc_id"), "left_anti"))
     val doomed = hashed
       .join(prior.select("phash"), Seq("phash"), "left_semi")
       .select("doc_id")
     val admittedIds = hashed.groupBy("phash").agg(min("doc_id").as("doc_id"))
       .select("doc_id")
       .join(doomed, Seq("doc_id"), "left_anti")
-    batch.join(admittedIds, Seq("doc_id"), "left_semi")
-      .write.mode(SaveMode.Overwrite).parquet(s"$sinkDir/batch=$batchId")
-    hashed.join(admittedIds, Seq("doc_id"), "left_semi")
-      .write.mode(SaveMode.Overwrite).parquet(s"$phPath/batch=$batchId")
-    batch.join(hashed.select("doc_id"), Seq("doc_id"), "left_anti")
-      .write.mode(SaveMode.Overwrite).parquet(s"$sinkDir/__corrupt/batch=$batchId")
+    AtomicIncrement.appendOnce(
+      batch.join(admittedIds, Seq("doc_id"), "left_semi"), sinkDir, batchId)
+    AtomicIncrement.appendOnce(
+      hashed.join(admittedIds, Seq("doc_id"), "left_semi"), phPath, batchId)
+    AtomicIncrement.appendOnce(
+      batch.join(hashed.select("doc_id"), Seq("doc_id"), "left_anti"),
+      s"$sinkDir/__corrupt", batchId)
   }
 
   def ingestStream(payloads: DataFrame, indexDir: String, sinkDir: String,

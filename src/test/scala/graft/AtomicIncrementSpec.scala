@@ -1735,8 +1735,8 @@ class AtomicIncrementSpec extends SparkSpec {
       Seq((15L, "", true)).toDF("k", "v", "del"), sink, "k", "del")
     val d = AtomicIncrement.describeSink(spark, sink).head()
     assert(d.getLong(0) == 4L, s"version: $d")
-    // 3 appended files + the merge's (empty) after-image file
-    assert(d.getInt(1) == 4 && d.getInt(2) == 1, s"files/dvs: $d")
+    // 3 appended files; the all-delete merge adds its dv and no file
+    assert(d.getInt(1) == 3 && d.getInt(2) == 1, s"files/dvs: $d")
     assert(d.getLong(3) > 0L, s"bytes: $d")
     assert(d.isNullAt(4), "rows must be NULL while a dv stands")
     assert(d.getSeq[String](5) == Seq("rel@2"), s"tags: $d")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AtomicIncrement
 import graft.streaming.CorpusEtlStream
 import org.apache.spark.sql.functions._
 
@@ -8,6 +9,22 @@ import org.apache.spark.sql.functions._
   */
 class CorpusEtlStreamSpec extends SparkSpec {
   import spark.implicits._
+
+  private def committed(dir: String) = AtomicIncrement.readCommitted(spark, dir)
+
+  /** The committed data files of an index table, after asserting that
+    * no superseded file stays on disk beside them.
+    */
+  private def indexFiles(dir: String): Seq[String] = {
+    val files = AtomicIncrement.committedFiles(spark, dir)
+    val root = java.nio.file.Paths.get(dir)
+    val it = java.nio.file.Files.walk(root.resolve("_data")).iterator()
+    val onDisk = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(root.relativize(_).toString).toSet
+    assert(onDisk == files.toSet, s"$dir keeps superseded files")
+    files
+  }
 
   test("stream gates quality, drops exact dups across batches, chunks " +
       "admitted docs, and replays idempotently") {
@@ -21,7 +38,7 @@ class CorpusEtlStreamSpec extends SparkSpec {
     def step(rows: Seq[(Long, String)], id: Long): Unit =
       CorpusEtlStream.prepareBatchStep(rows.toDF("doc_id", "text"), id,
         index, sink, chunkTokens = 8, stride = 6, compactEvery = 3)
-    def sinkDocIds: Set[Long] = spark.read.parquet(sink)
+    def sinkDocIds: Set[Long] = committed(sink)
       .select("doc_id").distinct().as[Long].collect().toSet
 
     // batch 0: one good doc, one below the 5-token floor, one pure
@@ -29,7 +46,7 @@ class CorpusEtlStreamSpec extends SparkSpec {
     step(Seq(doc(1), (2L, "too short"), (3L, "!!! ??? ;;; ::: ...")), 0L)
     assert(sinkDocIds == Set(1L))
     // chunking really chunked: 12 tokens at chunk 8 / stride 6 → 2 rows
-    val d1 = spark.read.parquet(sink).filter(col("doc_id") === 1L)
+    val d1 = committed(sink).filter(col("doc_id") === 1L)
       .orderBy("chunk_id").collect()
     assert(d1.length == 2)
     assert(d1(0).getAs[Int]("n_chunk_tokens") == 8)
@@ -42,19 +59,14 @@ class CorpusEtlStreamSpec extends SparkSpec {
     // REPLAY batch 1: same sink state, no duplicate chunk rows
     step(Seq((4L, doc(1)._2), doc(5), (6L, doc(5)._2), doc(7)), 1L)
     assert(sinkDocIds == Set(1L, 5L, 7L))
-    val chunks = spark.read.parquet(sink)
+    val chunks = committed(sink)
     assert(chunks.count() == chunks.dropDuplicates("doc_id", "chunk_id").count())
 
-    // more batches; compaction fires at batch 3 and 6 → bounded dirs
+    // more batches; compaction fires at batch 2 and 5 → bounded files
     for (i <- 2 to 6) step(Seq(doc(10 + i)), i.toLong)
     assert(sinkDocIds == Set(1L, 5L, 7L, 12L, 13L, 14L, 15L, 16L))
-    val fpDirs = {
-      val it = java.nio.file.Files.list(
-        java.nio.file.Paths.get(index, "fps")).iterator()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(_.getFileName.toString).filter(_.startsWith("batch=")).toSeq
-    }
-    assert(fpDirs.size <= 3, s"fp index partitions unbounded: $fpDirs")
+    val fpFiles = indexFiles(s"$index/fps")
+    assert(fpFiles.size <= 3, s"fp index files unbounded: $fpFiles")
     // the folded index still drops a copy of a batch-0 doc
     step(Seq((99L, doc(1)._2)), 7L)
     assert(sinkDocIds == Set(1L, 5L, 7L, 12L, 13L, 14L, 15L, 16L))
@@ -80,7 +92,7 @@ class CorpusEtlStreamSpec extends SparkSpec {
       CorpusEtlStream.prepareBatchStep(rows.toDF("doc_id", "text"), id,
         index, sink, chunkTokens = 8, stride = 6, compactEvery = 3,
         benchmark = Some(gate), nearDupJaccard = Some(0.8))
-    def sinkDocIds: Set[Long] = spark.read.parquet(sink)
+    def sinkDocIds: Set[Long] = committed(sink)
       .select("doc_id").distinct().as[Long].collect().toSet
 
     // batch 0: good doc; 2-token doc (quality floor); benchmark copy
@@ -96,28 +108,23 @@ class CorpusEtlStreamSpec extends SparkSpec {
     // replay batch 1: same state, no duplicate chunks
     step(b1, 1L)
     assert(sinkDocIds == Set(1L, 6L))
-    val chunks = spark.read.parquet(sink)
+    val chunks = committed(sink)
     assert(chunks.count() == chunks.dropDuplicates("doc_id", "chunk_id").count())
     // chunking still chunks: doc 1 (12 tokens, chunk 8 / stride 6) → 2
     assert(chunks.filter(col("doc_id") === 1L).count() == 2)
 
-    // batches through the compaction boundary (batch 3 folds both the
-    // fp index and the near-dup band/shingle index)
+    // batches through the compaction boundary (batch 2 compacts both
+    // the fp index and the near-dup band/shingle index)
     step(Seq((22L, fill1)), 2L)
     step(Seq((23L, fill2)), 3L)
     // post-compaction: a near-dup of batch-1's doc 6 is still dropped,
     // an exact copy of doc 1 is still dropped
     step(Seq((30L, baseB + " fourteen"), (31L, baseA)), 4L)
     assert(sinkDocIds == Set(1L, 6L, 22L, 23L))
-    // both indexes stay bounded after the fold
+    // both indexes stay bounded after the compaction
     for (sub <- Seq("fps", "neardup/bands", "neardup/shingles")) {
-      val dirs = {
-        val it = java.nio.file.Files.list(
-          java.nio.file.Paths.get(index, sub)).iterator()
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-          .map(_.getFileName.toString).filter(_.startsWith("batch=")).toSeq
-      }
-      assert(dirs.size <= 3, s"$sub partitions unbounded: $dirs")
+      val files = indexFiles(s"$index/$sub")
+      assert(files.size <= 3, s"$sub data files unbounded: $files")
     }
   }
 
@@ -177,10 +184,10 @@ class CorpusEtlStreamSpec extends SparkSpec {
         benchmark = Some(composed), nearDupJaccard = Some(0.8),
         budgets = Some(budgets), afterWrite = hook)
     def state(base: java.nio.file.Path): (Set[Long], Long, Set[Long]) = {
-      val chunks = spark.read.parquet(base.resolve("sink").toString)
+      val chunks = committed(base.resolve("sink").toString)
       (chunks.select("doc_id").distinct().as[Long].collect().toSet,
         chunks.count(),
-        spark.read.parquet(base.resolve("index").toString + "/fps")
+        committed(base.resolve("index").toString + "/fps")
           .select("doc_id").distinct().as[Long].collect().toSet)
     }
     // the reference: both batches, no crash — every gate catches its doc
@@ -243,7 +250,7 @@ class CorpusEtlStreamSpec extends SparkSpec {
       CorpusEtlStream.prepareBatchStep(rows.toDF("doc_id", "text"), id,
         index, sink, chunkTokens = 8, stride = 6, compactEvery = 3,
         benchmark = Some(gate))
-    def sinkDocIds: Set[Long] = spark.read.parquet(sink)
+    def sinkDocIds: Set[Long] = committed(sink)
       .select("doc_id").distinct().as[Long].collect().toSet
 
     val b0 = Seq(
@@ -260,7 +267,7 @@ class CorpusEtlStreamSpec extends SparkSpec {
     // replay: pure per-batch filters → same verdicts, no dup chunks
     step(b0, 0L)
     assert(sinkDocIds == Set(1L))
-    val chunks = spark.read.parquet(sink)
+    val chunks = committed(sink)
     assert(chunks.count() == chunks.dropDuplicates("doc_id", "chunk_id").count())
     // a later batch: the frozen models still gate (cross-batch), and a
     // fresh fluent on-target doc still passes
@@ -283,7 +290,7 @@ class CorpusEtlStreamSpec extends SparkSpec {
         rows.toDF("doc_id", "text", "source"), id, index, sink,
         chunkTokens = 8, stride = 6, compactEvery = 3,
         budgets = Some(budgets))
-    def sinkDocIds: Set[Long] = spark.read.parquet(sink)
+    def sinkDocIds: Set[Long] = committed(sink)
       .select("doc_id").distinct().as[Long].collect().toSet
 
     // batch 0: three "a" docs (36 > 24 budget → exactly the 2 lowest
@@ -303,29 +310,27 @@ class CorpusEtlStreamSpec extends SparkSpec {
     // replay batch 1: same admission, no duplicate chunks
     step(Seq(doc(7, "a"), doc(8, "c"), doc(9, "c")), 1L)
     assert(sinkDocIds == aKept + 4L + 8L + 9L)
-    // "c" now holds spend 36 > 30: closed
+    // "c" now holds spend 36 > 30: closed. Batch 2 runs the cadence's
+    // maintenance pass over the spend state
     step(Seq(doc(10, "c"), doc(11, "b")), 2L)
     assert(sinkDocIds == aKept + 4L + 8L + 9L + 11L)
-    // batch 3 compacts the spend index (folds deltas, drops old dirs)
+    // REPLAY the compaction batch: the state already holds its spend —
+    // prior must reconstruct as state − delta, not the state
+    step(Seq(doc(10, "c"), doc(11, "b")), 2L)
+    assert(sinkDocIds == aKept + 4L + 8L + 9L + 11L)
     step(Seq(doc(12, "b")), 3L)
     assert(sinkDocIds == aKept + 4L + 8L + 9L + 11L + 12L)
-    // REPLAY the compaction batch: the fold is now the only spend
-    // partition — prior must reconstruct as fold − delta, not zero
     step(Seq(doc(12, "b")), 3L)
     assert(sinkDocIds == aKept + 4L + 8L + 9L + 11L + 12L)
-    val chunks = spark.read.parquet(sink)
+    val chunks = committed(sink)
     assert(chunks.count() == chunks.dropDuplicates("doc_id", "chunk_id").count())
     // post-compaction: "a" and "c" stay closed (spend survived the fold)
     step(Seq(doc(13, "a"), doc(14, "c"), doc(15, "b")), 4L)
     assert(sinkDocIds == aKept + 4L + 8L + 9L + 11L + 12L + 15L)
-    // the spend index stays bounded
-    val spentDirs = {
-      val it = java.nio.file.Files.list(
-        java.nio.file.Paths.get(index, "spent")).iterator()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(_.getFileName.toString).filter(_.startsWith("batch=")).toSeq
-    }
-    assert(spentDirs.size <= 3, s"spend partitions unbounded: $spentDirs")
+    // the spend state is one row per source
+    val spent = committed(s"$index/spent").select("source").as[String]
+      .collect().toSeq
+    assert(spent.sorted == Seq("a", "b", "c", "x"), s"spend rows: $spent")
   }
 
   test("benchmark gate drops exact benchmark copies, replays idempotently") {
@@ -342,13 +347,13 @@ class CorpusEtlStreamSpec extends SparkSpec {
       CorpusEtlStream.prepareBatchStep(rows.toDF("doc_id", "text"), id,
         index, sink, chunkTokens = 8, stride = 6, benchmark = Some(gate))
     step(Seq(doc(1), doc(2), doc(3)), 0L)
-    def sinkDocIds: Set[Long] = spark.read.parquet(sink)
+    def sinkDocIds: Set[Long] = committed(sink)
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(sinkDocIds == Set(1L, 3L))
     // replay: same state, no duplicates
     step(Seq(doc(1), doc(2), doc(3)), 0L)
     assert(sinkDocIds == Set(1L, 3L))
-    val chunks = spark.read.parquet(sink)
+    val chunks = committed(sink)
     assert(chunks.count() ==
       chunks.dropDuplicates("doc_id", "chunk_id").count())
   }
@@ -374,14 +379,14 @@ class CorpusEtlStreamSpec extends SparkSpec {
     step(Seq((1L, corpusText), // exact corpus copy → exact gate
       (2L, nearDup), // one token drifted → ONLY the minhash gate
       (3L, novel)), 0L)
-    def sinkDocIds: Set[Long] = spark.read.parquet(sink)
+    def sinkDocIds: Set[Long] = committed(sink)
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(sinkDocIds == Set(3L),
       s"expected only the novel doc through, got $sinkDocIds")
     // replay idempotent — both gates are pure functions of (text, corpus)
     step(Seq((1L, corpusText), (2L, nearDup), (3L, novel)), 0L)
     assert(sinkDocIds == Set(3L))
-    assert(spark.read.parquet(sink).where(col("doc_id") === 3L).count() > 0)
+    assert(committed(sink).where(col("doc_id") === 3L).count() > 0)
   }
 
   test("winnow gate drops an edit-drifted benchmark copy the exact " +
@@ -401,7 +406,7 @@ class CorpusEtlStreamSpec extends SparkSpec {
         base.resolve("index").toString, base.resolve("sink").toString,
         chunkTokens = 8, stride = 6, benchmark = Some(gate))
     step(Seq((1L, text(1)), (2L, text(2)), (3L, text(3))), 0L)
-    val ids = spark.read.parquet(base.resolve("sink").toString)
+    val ids = committed(base.resolve("sink").toString)
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(ids == Set(1L, 3L))
   }
@@ -440,7 +445,7 @@ class CorpusEtlStreamSpec extends SparkSpec {
     land(Seq((3L, doc(1)._2), doc(4)), "b2.parquet")
     runOnce()
     runOnce() // restart with nothing new: no reprocessing
-    val ids = spark.read.parquet(sink)
+    val ids = committed(sink)
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(ids == Set(1L, 2L, 4L))
   }

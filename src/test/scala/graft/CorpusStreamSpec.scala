@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.AtomicIncrement
 import graft.streaming.CorpusStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,6 +21,17 @@ class CorpusStreamSpec extends SparkSpec {
   private val baseB = "one two three four five six seven eight nine ten eleven twelve"
   private val baseD = "red orange yellow green blue indigo violet cyan magenta white black gray"
 
+  private def committed(dir: String) = AtomicIncrement.readCommitted(spark, dir)
+
+  /** Every parquet file under a sink's `_data`, sink-relative. */
+  private def dataFilesOnDisk(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val it = java.nio.file.Files.walk(root.resolve("_data")).iterator()
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(root.relativize(_).toString).toSet
+  }
+
   test("stream admits first arrivals, drops cross-batch and in-batch near-dups") {
     val base = java.nio.file.Files.createTempDirectory("graft_cstream")
     val in = base.resolve("in"); java.nio.file.Files.createDirectories(in)
@@ -34,7 +46,7 @@ class CorpusStreamSpec extends SparkSpec {
       q.stop()
     }
     def sinkIds: Set[Long] =
-      spark.read.parquet(sink).select("doc_id").as[Long].collect().toSet
+      committed(sink).select("doc_id").as[Long].collect().toSet
 
     // the file source lists FILES, not nested write directories — land
     // each batch as one flat parquet file
@@ -76,12 +88,12 @@ class CorpusStreamSpec extends SparkSpec {
     assert(sinkIds == Set(1L, 2L, 4L))
 
     // admitted corpus carries no near-dup pair at all (the invariant)
-    val admitted = spark.read.parquet(sink)
+    val admitted = committed(sink)
     val pairs = graft.operators.Dedup.minhashNearDups(
       admitted, "doc_id", "text", minJaccard = 0.8)
     assert(pairs.count() == 0)
     // and the index holds bands for exactly the admitted docs
-    val indexed = spark.read.parquet(s"$index/bands")
+    val indexed = committed(s"$index/bands")
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(indexed == sinkIds)
   }
@@ -98,13 +110,7 @@ class CorpusStreamSpec extends SparkSpec {
         rows.toDF("doc_id", "text"), id, index, sink,
         minJaccard = 0.8, compactEvery = 3)
     def sinkIds: Seq[Long] =
-      spark.read.parquet(sink).select("doc_id").as[Long].collect().toSeq.sorted
-    def bandPartDirs: Seq[String] = {
-      val d = java.nio.file.Paths.get(index, "bands")
-      val it = java.nio.file.Files.list(d).iterator()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(_.getFileName.toString).filter(_.startsWith("batch=")).toSeq
-    }
+      committed(sink).select("doc_id").as[Long].collect().toSeq.sorted
 
     step(Seq(doc(1), doc(2)), 0L)
     // batch 1: a near-dup of doc 1 (dropped via the index) + fresh doc 3
@@ -116,80 +122,88 @@ class CorpusStreamSpec extends SparkSpec {
     // must not self-match doc 3 out of the corpus
     step(Seq(nearDup1, doc(3)), 1L)
     assert(sinkIds == Seq(1L, 2L, 3L))
-    // five more unique-doc batches; compaction fires at ids 3 and 6
+    // five more unique-doc batches; compaction fires at ids 2 and 5
     for (i <- 2 to 6) step(Seq(doc(10 + i)), i.toLong)
     assert(sinkIds == Seq(1L, 2L, 3L, 12L, 13L, 14L, 15L, 16L))
-    assert(bandPartDirs.size <= 3, s"index partitions unbounded: $bandPartDirs")
+    // the compaction at 5 left two files, batch 6 added one, and every
+    // superseded file is gone from disk
+    for (table <- Seq("bands", "shingles")) {
+      val files = AtomicIncrement.committedFiles(spark, s"$index/$table")
+      assert(files.size <= 3, s"$table data files unbounded: $files")
+      assert(dataFilesOnDisk(s"$index/$table") == files.toSet,
+        s"$table keeps superseded files")
+    }
     // the folded index still drops a near-dup of a batch-0 doc
     step(Seq((99L, doc(2)._2 + " tail")), 7L)
     assert(sinkIds == Seq(1L, 2L, 3L, 12L, 13L, 14L, 15L, 16L))
     // and holds bands for exactly the admitted docs
-    val indexed = spark.read.parquet(s"$index/bands")
+    val indexed = committed(s"$index/bands")
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(indexed == sinkIds.toSet)
   }
 
-  test("compaction crash between fold-write and delete: replay collapses " +
-      "the duplicated rows instead of accumulating them") {
+  test("a compaction that fails mid-stage leaves the index snapshot " +
+      "and the next admission unchanged") {
     val base = java.nio.file.Files.createTempDirectory("graft_ccrash")
     val index = base.resolve("index").toString
     val sink = base.resolve("sink").toString
+    val bands = s"$index/bands"
     def doc(i: Int): (Long, String) =
       (i.toLong, (0 until 12).map(t => s"c${i}y$t").mkString(" "))
     def step(rows: Seq[(Long, String)], id: Long): Unit =
       CorpusStream.nearDedupBatchStep(
         rows.toDF("doc_id", "text"), id, index, sink,
-        minJaccard = 0.8, compactEvery = 3)
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      val it = java.nio.file.Files.walk(from).iterator()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).foreach { p =>
-        val dst = to.resolve(from.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(dst)
-        else java.nio.file.Files.copy(p, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
+        minJaccard = 0.8, compactEvery = 0)
+    def bandRows = committed(bands).collect().map(_.toString).sorted.toSeq
 
     step(Seq(doc(1), doc(2)), 0L)
     step(Seq(doc(3)), 1L)
     step(Seq(doc(4)), 2L)
-    // snapshot the pre-compaction index, then compact at batch 3
-    val snap = base.resolve("snap")
-    copyTree(java.nio.file.Paths.get(index), snap)
-    val b3 = Seq(doc(5))
-    step(b3, 3L)
-    // simulate the crash window: fold partition batch=3 exists AND the
-    // pre-compaction partitions are back (delete never ran)
-    copyTree(snap, java.nio.file.Paths.get(index))
-    // drop the inferred batch=<id> partition column so row identity is
-    // the index payload, not the directory the row happens to live in
-    val bandsDup = spark.read.parquet(s"$index/bands").drop("batch")
-    assert(bandsDup.count() > bandsDup.distinct().count(),
-      "precondition: crash state must actually duplicate rows")
-    // replay batch 3: the fold must distinct() the duplicates away and
-    // the delete must clear the old partitions
-    step(b3, 3L)
-    val bands = spark.read.parquet(s"$index/bands").drop("batch")
-    assert(bands.count() == bands.distinct().count(),
-      "replayed fold left duplicate band rows")
-    val shingles = spark.read.parquet(s"$index/shingles").drop("batch")
-    assert(shingles.count() == shingles.distinct().count(),
-      "replayed fold left duplicate shingle rows")
-    def partsUnder(sub: String): Seq[String] = {
-      val it = java.nio.file.Files.list(
-        java.nio.file.Paths.get(index, sub)).iterator()
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(_.getFileName.toString).filter(_.startsWith("batch=")).toSeq
+    val before = AtomicIncrement.latestSnapshot(spark, bands)
+    val (rowsBefore, onDiskBefore) = (bandRows, dataFilesOnDisk(bands))
+    assert(before.data.size == 3, "precondition: three files to compact")
+    // the compaction dies after staging its rewrite, before the publish
+    val boom = intercept[RuntimeException] {
+      graft.operators.Txn.racing(throw new RuntimeException("die@compact")) {
+        CorpusStream.maintainIndex(spark, bands)
+      }
     }
-    assert(partsUnder("bands") == Seq("batch=3"))
-    assert(partsUnder("shingles") == Seq("batch=3"))
-    // admission is still exact after the replayed compaction: a near-dup
-    // of a batch-0 doc is dropped, a fresh doc admitted
-    step(Seq((50L, doc(1)._2 + " tail"), doc(6)), 4L)
-    val ids = spark.read.parquet(sink)
-      .select("doc_id").as[Long].collect().toSet
-    assert(ids == Set(1L, 2L, 3L, 4L, 5L, 6L))
+    assert(boom.getMessage == "die@compact")
+    val after = AtomicIncrement.latestSnapshot(spark, bands)
+    assert((after.version, after.data, after.lastBatch) ==
+      (before.version, before.data, before.lastBatch))
+    assert(bandRows == rowsBefore)
+    assert(dataFilesOnDisk(bands) == onDiskBefore,
+      "the failed compaction left staged files behind")
+    // admission is still exact: a near-dup of a batch-0 doc is dropped,
+    // a fresh doc admitted
+    step(Seq((50L, doc(1)._2 + " tail"), doc(6)), 3L)
+    val ids = committed(sink).select("doc_id").as[Long].collect().toSet
+    assert(ids == Set(1L, 2L, 3L, 4L, 6L))
+  }
+
+  test("a sink or index dir the pre-manifest batch=<id> layout wrote " +
+      "fails loudly, naming the dir, instead of reading as empty") {
+    val base = java.nio.file.Files.createTempDirectory("graft_clegacy")
+    def refused(index: String, sink: String, dir: String): Unit = {
+      val e = intercept[IllegalStateException](
+        CorpusStream.nearDedupBatchStep(
+          Seq((1L, baseA)).toDF("doc_id", "text"), 0L, index, sink,
+          minJaccard = 0.8))
+      assert(e.getMessage.contains(s"$dir holds batch=<id> dirs"),
+        e.getMessage)
+    }
+    def legacy(dir: String): Unit =
+      Seq((7L, baseB)).toDF("doc_id", "text").write.parquet(s"$dir/batch=0")
+    val index = base.resolve("index").toString
+    legacy(s"$index/bands")
+    refused(index, base.resolve("sink").toString, s"$index/bands")
+    // a fresh index over a parent-layout sink: the sink append refuses
+    val sink = base.resolve("sink2").toString
+    legacy(sink)
+    refused(base.resolve("index2").toString, sink, sink)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(sink, "_graft_manifest")))
   }
 
   test("benchmark gate keeps contaminated docs out of sink AND index") {
@@ -206,8 +220,7 @@ class CorpusStreamSpec extends SparkSpec {
     // near-dup of the contaminated doc — is still admitted
     step(Seq((1L, baseA), (3L, baseB)), 0L)
     step(Seq((2L, baseA + " nu")), 1L)
-    val ids = spark.read.parquet(sink)
-      .select("doc_id").as[Long].collect().toSet
+    val ids = committed(sink).select("doc_id").as[Long].collect().toSet
     assert(ids == Set(2L, 3L))
   }
 }

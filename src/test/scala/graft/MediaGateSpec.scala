@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Multimodal
+import graft.operators.{AtomicIncrement, Multimodal}
 import graft.streaming.PHashGate
 
 /** The streaming image near-dup gate: equality with the batch
@@ -113,10 +113,11 @@ class MediaGateSpec extends SparkSpec {
       12L -> novelPng(5)), "b2.parquet")
     runOnce()
     runOnce() // restart with nothing new: no reprocessing
-    val ids = spark.read.parquet(sink).select("doc_id")
+    val ids = AtomicIncrement.readCommitted(spark, sink).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 12L), s"admitted $ids")
-    val corrupt = spark.read.parquet(s"$sink/__corrupt").select("doc_id")
+    val corrupt = AtomicIncrement.readCommitted(spark, s"$sink/__corrupt")
+      .select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(corrupt == Set(90L))
     InternalCaches.drain(blocking = true)

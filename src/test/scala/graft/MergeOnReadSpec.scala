@@ -29,6 +29,31 @@ class MergeOnReadSpec extends SparkSpec {
     AtomicIncrement.readCommitted(spark, sink)
       .select("k", "v").as[(Long, String)].collect().toMap
 
+  test("an all-delete merge-on-read commit publishes no 0-row data " +
+      "file: only its dv line is added, no stray part file stays on " +
+      "disk, and the effective read is the copy-on-write result") {
+    val sink = tmp()
+    loadRanged(sink)
+    val before = AtomicIncrement.latestSnapshot(spark, sink)
+    val changes = Seq((5L, "", 0.0, true), (25L, "", 0.0, true))
+      .toDF("k", "v", "x", "del")
+    val res = AtomicIncrement.mergeOnReadAtomic(changes, sink, "k", "del")
+    assert(res.staged == 0, s"an all-delete batch staged data: $res")
+    val after = AtomicIncrement.latestSnapshot(spark, sink)
+    assert(after.data == before.data,
+      s"data lines moved: ${after.data.map(_.render)}")
+    assert(after.dvs.size == 1)
+    val root = java.nio.file.Paths.get(sink)
+    val it = Files.walk(root.resolve("_data")).iterator()
+    val onDisk = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(root.relativize(_).toString).toSet
+    assert(onDisk == (after.data ++ after.dvs).map(_.path).toSet,
+      s"stray files: ${onDisk -- (after.data ++ after.dvs).map(_.path)}")
+    assert(rows(sink) == (1L to 30L).filterNot(Set(5L, 25L))
+      .map(k => k -> s"v$k").toMap)
+  }
+
   test("merge-on-read rewrites NOTHING: prior data-file lines ride " +
       "verbatim, the effective read equals the copy-on-write result, " +
       "the sequence rule lets a second batch delete the first batch's " +

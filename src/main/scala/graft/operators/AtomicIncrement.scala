@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 import Incremental.{AllNullFile, BinaryStats, DoubleStats, LongStats}
 
 /** Manifest-committed incremental sink (SURVEY §7.5 #7's transactional
-  * gap): `Incremental.appendIncrement` is idempotent on replay but a
-  * crash mid-append exposes a partial file set to concurrent readers.
-  * This layout closes that with a two-phase commit — the snapshot-
-  * isolation core of the Delta/Iceberg commit protocol, without the
-  * formats:
+  * gap): a watermark append into a plain parquet directory is
+  * idempotent on replay, but a crash mid-append exposes a partial file
+  * set to concurrent readers, and the re-run's watermark then filters
+  * the rest of the batch out. This layout closes that with a two-phase
+  * commit — the snapshot-isolation core of the Delta/Iceberg commit
+  * protocol, without the formats:
   *
   *  1. STAGE: the increment is written to `<sink>/_data/batch-<id>/`.
   *     `_data` is a hidden directory — plain `spark.read.parquet`,
@@ -534,8 +535,8 @@ object AtomicIncrement {
   }
 
   /** The committed snapshot as a DataFrame (under the snapshot's
-    * merged schema — schema evolution reads like
-    * `Incremental.readEvolved`), with any delete vectors APPLIED:
+    * merged schema — a file written before a column was added reads
+    * it as null), with any delete vectors APPLIED:
     * a table carrying merge-on-read tombstones reads its effective
     * rows here, exactly what the copy-on-write result would hold.
     * Throws before the first commit.

@@ -2,76 +2,24 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables.table
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Incremental-load semantics (SURVEY.md §2.8, K5/S9): high-watermark
-  * append with schema evolution.
+/** Incremental-load semantics (SURVEY.md §2.8, K5/S9): the footer
+  * statistics a high-watermark append reads, and the watermark filter
+  * as a declared query.
   *
   * The reference's pattern: read `max(key)` from the sink, insert only
   * rows above it, `ALTER TABLE ADD COLUMN IF NOT EXISTS` for new
-  * columns. Here the sink is parquet (the 100 TB path — a table
-  * format, not JDBC): the watermark read is a parquet-stats-only
-  * aggregate, the append is partitioned, and evolution is mergeSchema
-  * on read. `JdbcDdl` provides the DDL generation for an actual JDBC
+  * columns. Here the sink is a graft sink (the 100 TB path — a table
+  * format, not JDBC): [[AtomicIncrement.appendIncrementAtomic]] reads
+  * the watermark from its manifest's stats, falling back to the
+  * parquet footers below, and evolution is the manifest's merged
+  * schema. `JdbcDdl` provides the DDL generation for an actual JDBC
   * sink.
   */
 object Incremental {
-
-  /** Does the sink contain data files? Hadoop FS API, not java.io —
-    * a `java.io.File` probe silently reports hdfs:///s3a:// paths as
-    * absent, which would re-ingest the full source every run. Hidden
-    * entries (_SUCCESS, .staging) don't count: a dir holding only
-    * markers must read as empty or the parquet reader fails schema
-    * inference.
-    */
-  private def sinkNonEmpty(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** Sink max of `column` from parquet FOOTER statistics — O(files)
-    * metadata reads, never a data scan, which is what makes the
-    * watermark read viable against a 100 TB sink. Returns the max as
-    * a comparison Column, or None when footers can't answer exactly
-    * (no stats, an unsupported type — INT96 stats are unreliable — or
-    * a string bound parquet may have cut) and the caller must fall
-    * back to an aggregate scan. Files missing the column (schema
-    * evolution) contribute nothing, matching the mergeSchema read's
-    * null semantics; a chunk with no non-null values is skipped the
-    * same way.
-    */
-  private[graft] def footerMax(spark: SparkSession, path: String,
-      column: String, dt: DataType): Option[org.apache.spark.sql.Column] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val rootUri = fs.makeQualified(root).toUri.getPath
-    val files = {
-      val it = fs.listFiles(root, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-      while (it.hasNext) {
-        val st = it.next()
-        val fp = st.getPath
-        // EVERY path component below the root must be non-hidden, not
-        // just the leaf — a crashed writer's _temporary/.../part.parquet
-        // would otherwise inflate the watermark with uncommitted data
-        // (Spark's own reader skips hidden components the same way)
-        val rel = fs.makeQualified(fp).toUri.getPath.stripPrefix(rootUri)
-        val hiddenComponent = rel.split("/").exists(seg =>
-          seg.startsWith("_") || seg.startsWith("."))
-        if (st.isFile && fp.getName.endsWith(".parquet") && !hiddenComponent)
-          buf += fp
-      }
-      buf.toSeq
-    }
-    footerMaxOfFiles(spark, files, column, dt)
-  }
 
   /** Exact per-file footer statistics for one column, in the stats'
     * PRIMITIVE domain — also the decoded form of a manifest line's
@@ -104,57 +52,35 @@ object Incremental {
   private[graft] final case class BinaryStats(min: Array[Byte],
       max: Array[Byte]) extends FooterStats
 
-  /** Open ONE parquet footer and evaluate `f` over it — the shared
-    * open/close/fallback seam: None on any read surprise, so every
-    * footer consumer degrades to its scan fallback rather than trust
-    * a partial answer.
-    */
-  private def withFooter[A](spark: SparkSession,
-      file: org.apache.hadoop.fs.Path)(
-      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A)
-      : Option[A] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        file, spark.sparkContext.hadoopConfiguration))
-      try Some(f(reader.getFooter)) finally reader.close()
-    } catch { case _: Exception => None }
-  }
-
   /** Per-column stats AND the exact row count of ONE file from a
     * SINGLE footer open — what [[graft.operators.AtomicIncrement]]'s
     * stage path uses (the one-open-per-column shape paid N+1 footer
     * round trips per staged file; on object storage each open is a
     * round trip, so a 200-file × 5-column stage was 1200 serial
-    * opens). A column the footer can't answer exactly is simply
-    * absent from the map; a failed open returns (empty, None).
+    * opens). A column the footer can't answer EXACTLY — missing stats,
+    * a NaN-suppressed float chunk (parquet-mr omits min/max there), an
+    * unsupported type — is simply absent from the map, so callers fall
+    * back to scan-derived values rather than trust a partial answer; a
+    * failed open returns (empty, None).
     */
   private[graft] def footerStatsOfFileAll(spark: SparkSession,
       file: org.apache.hadoop.fs.Path, fields: Seq[StructField])
       : (Map[String, FooterStats], Option[Long]) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    withFooter(spark, file) { footer =>
-      (fields.flatMap(f =>
-          columnStatsOf(footer, f.name, f.dataType).map(f.name -> _))
-        .toMap,
-        footer.getBlocks.asScala.map(_.getRowCount).sum)
-    } match {
-      case Some((stats, rows)) => (stats, Some(rows))
-      case None => (Map.empty, None)
-    }
+    try {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        file, spark.sparkContext.hadoopConfiguration))
+      try {
+        val footer = reader.getFooter
+        (fields.flatMap(f =>
+            columnStatsOf(footer, f.name, f.dataType).map(f.name -> _))
+          .toMap,
+          Some(footer.getBlocks.asScala.map(_.getRowCount).sum))
+      } finally reader.close()
+    } catch { case _: Exception => (Map.empty, None) }
   }
-
-  /** (min, max) of `column` in ONE parquet file, from footer metadata
-    * only. None when the footer cannot answer EXACTLY — missing stats,
-    * a NaN-suppressed float chunk (parquet-mr omits min/max there), an
-    * unsupported type — so callers fall back to scan-derived values
-    * rather than trust a partial answer.
-    */
-  private[graft] def footerStatsOfFile(spark: SparkSession,
-      file: org.apache.hadoop.fs.Path, column: String,
-      dt: DataType): Option[FooterStats] =
-    withFooter(spark, file)(columnStatsOf(_, column, dt)).flatten
 
   private def columnStatsOf(
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
@@ -248,118 +174,22 @@ object Incremental {
     }
   }
 
-  /** [[footerMax]] over an EXPLICIT file list — the entry point for
-    * manifest-committed sinks ([[AtomicIncrement]]), whose data files
-    * live under hidden directories a recursive listing must skip. The
+  /** The exact max of `column` over an explicit file list from their
+    * parquet footers — the watermark fallback of a graft sink whose
+    * manifest lines carry no stats for the column (legacy lines). The
     * files' footer stats go through [[ManifestStats.foldExact]], so any
     * file that cannot answer exactly (or a string bound parquet may
     * have cut) fails the whole fold (scan fallback), stopping at that
-    * file; all-null files contribute nothing.
+    * file; all-null files contribute nothing, matching the
+    * merged-schema read's null semantics for files missing the column.
     */
   private[graft] def footerMaxOfFiles(spark: SparkSession,
       files: Seq[org.apache.hadoop.fs.Path], column: String,
       dt: DataType): Option[org.apache.spark.sql.Column] =
-    ManifestStats.foldExact(
-      files.iterator.map(footerStatsOfFile(spark, _, column, dt)))
+    ManifestStats.foldExact(files.iterator.map(f =>
+        footerStatsOfFileAll(spark, f, Seq(StructField(column, dt)))._1
+          .get(column)))
       .flatMap(ManifestStats.maxLiteral(dt, _))
-
-  /** Append only rows with watermarkCol strictly above the sink's
-    * current max. Returns the number of appended rows. Idempotent:
-    * re-running with the same input appends 0. The watermark comes
-    * from parquet footer statistics when they can answer exactly;
-    * otherwise from a mergeSchema aggregate scan.
-    */
-  def appendIncrement(df: DataFrame, path: String, watermarkCol: String): Long = {
-    val spark = df.sparkSession
-    // resolve case-insensitively like every other column reference in
-    // Spark — a strict df.schema(name) lookup would reject "Date" vs
-    // "date" that max()/col() happily accept
-    val resolved = df.schema.fields
-      .find(_.name.equalsIgnoreCase(watermarkCol))
-      .getOrElse(throw new IllegalArgumentException(
-        s"watermark column '$watermarkCol' not in ${df.columns.mkString(",")}"))
-    val wmExpr: Option[org.apache.spark.sql.Column] =
-      if (!sinkNonEmpty(spark, path)) None
-      else footerMax(spark, path, resolved.name, resolved.dataType)
-        .orElse(
-          Option(spark.read.option("mergeSchema", "true").parquet(path)
-            .agg(max(watermarkCol)).head().get(0)).map(lit))
-    val fresh = wmExpr match {
-      case Some(w) => df.filter(col(watermarkCol) > w)
-      case None => df
-    }
-    // count once via an accumulator-free two-phase write: cache the
-    // increment (it is the small delta, not the full table)
-    fresh.cache()
-    val n = fresh.count()
-    if (n > 0) fresh.write.mode("append").parquet(path)
-    fresh.unpersist()
-    n
-  }
-
-  /** Read an evolved sink (union of all historical schemas). */
-  def readEvolved(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** The 100 TB flavor (SURVEY.md §7.5 #7): sink partitioned by a
-    * date-derived column; the watermark is the max *partition value*,
-    * read from the directory listing — pure metadata, no data scan of
-    * the sink — and the append touches only partitions above it.
-    * Semantics: everything in a partition lands atomically-per-file
-    * with the partition dir as the visibility unit; re-running with
-    * the same input appends 0 (same strict > filter as the row-level
-    * variant, at partition granularity).
-    */
-  def appendIncrementPartitioned(df: DataFrame, path: String,
-      partitionCol: String): Long = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // dir names are Hive-escaped (a timestamp partition writes
-    // "ts=2024-01-01 10%3A00%3A00"); without unescaping, the cast
-    // below yields null, the filter becomes col > null, and every
-    // later run silently appends 0 rows
-    val existing: Array[String] =
-      if (hfs.exists(p)) hfs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith(s"$partitionCol="))
-        .map(n => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(n.stripPrefix(s"$partitionCol=")))
-      else Array.empty
-    // the watermark is the max in the COLUMN's type, not the max dir
-    // string: lexicographic max picks '9' over '10' for numeric
-    // partitions and would silently skip (or re-append) partitions.
-    // The filter literal is cast to the column type for the same
-    // reason. Date-style fixed-width strings order identically either
-    // way.
-    val dt = df.schema(partitionCol).dataType
-    // a null partition value lands as __HIVE_DEFAULT_PARTITION__ —
-    // never a watermark candidate, and unparseable for numeric
-    // columns (it would NumberFormatException the whole ingest)
-    val parseable = existing.filter { v =>
-      dt match {
-        case LongType | IntegerType | ShortType | ByteType => v.toLongOption.isDefined
-        case DoubleType | FloatType => v.toDoubleOption.isDefined
-        case _ => v != "__HIVE_DEFAULT_PARTITION__"
-      }
-    }
-    val maxPart: Option[String] =
-      if (parseable.isEmpty) None
-      else Some(dt match {
-        case LongType | IntegerType | ShortType | ByteType => parseable.maxBy(_.toLong)
-        case DoubleType | FloatType => parseable.maxBy(_.toDouble)
-        case _ => parseable.max
-      })
-    val fresh = maxPart match {
-      case Some(m) => df.filter(col(partitionCol) > lit(m).cast(dt))
-      case None => df
-    }
-    fresh.cache()
-    val n = fresh.count()
-    if (n > 0) fresh.write.mode("append")
-      .partitionBy(partitionCol).parquet(path)
-    fresh.unpersist()
-    n
-  }
 
   /** The S9/K5 watermark semantics as a declared query: max over the
     * "sink" slice, then only strictly-newer source rows survive. The

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * version token, and replaying a delivered batch is a no-op — the
   * stored watermark filters it to zero rows and no new version is
   * published (the same high-watermark contract as
-  * `Incremental.appendIncrement`, which also means batches must
-  * arrive in watermark order). Mirrors the reference's max-date
+  * `AtomicIncrement.appendIncrementAtomic`, which also means batches
+  * must arrive in watermark order). Mirrors the reference's max-date
   * incremental pattern (extractor_legacy/load_increment.py) lifted
   * from row appends to aggregate state.
   */

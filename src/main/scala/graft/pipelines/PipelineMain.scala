@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import graft.operators.Incremental
+import graft.operators.{AtomicIncrement, Incremental}
 import graft.sources.{SchemaGuard, Sinks}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -23,8 +23,9 @@ import org.apache.spark.sql.types._
   *  - the K6 spreadsheet writeback is forced by an action BEFORE the
   *    mapping is re-read for the gitlab enrichment join, so the side
   *    effect cannot be reordered behind it;
-  *  - the projectsync sinks go through the K5 watermark-incremental
-  *    append (re-running the whole orchestrator appends 0).
+  *  - the projectsync sinks are graft sinks, written by the K5
+  *    watermark-incremental append (re-running the whole orchestrator
+  *    appends 0; read them with `AtomicIncrement.readCommitted`).
   */
 object PipelineMain {
 
@@ -205,8 +206,10 @@ object PipelineMain {
         "mapping_writeback" -> written))
     }
 
-    // 3. projectsync — K5 watermark-incremental sinks: the whole
-    // orchestrator is idempotent because re-runs append 0 here
+    // 3. projectsync — K5 watermark-incremental graft sinks: the whole
+    // orchestrator is idempotent because re-runs append 0 here, and an
+    // append that dies mid-write commits nothing, so the re-run's
+    // watermark never sees its part files
     val syncResult = stage("projectsync") {
       val sync = readBronze(spark, bronzeDir, "tim_export_project_sync")
         .withColumn("date", col("date").cast(TimestampType))
@@ -214,10 +217,10 @@ object PipelineMain {
       val out = ProjectSync.transform(sync, ad, syncCfg)
       val (bim, designers) = ProjectSync.split(out)
       StageResult("projectsync", Map(
-        "projectsync_bim" ->
-          Incremental.appendIncrement(bim, s"$sinkDir/projectsync_bim", "date"),
-        "projectsync_designers" ->
-          Incremental.appendIncrement(designers, s"$sinkDir/projectsync_designers", "date")))
+        "projectsync_bim" -> AtomicIncrement.appendIncrementAtomic(
+          bim, s"$sinkDir/projectsync_bim", "date"),
+        "projectsync_designers" -> AtomicIncrement.appendIncrementAtomic(
+          designers, s"$sinkDir/projectsync_designers", "date")))
     }
 
     // 4. yougile — task-tracker export; alongside the parquet sink,

@@ -68,10 +68,10 @@ object MediaStream {
   import graft.operators.AtomicIncrement
 
   def ingestBatchStep(batch: DataFrame, batchId: Long, indexDir: String,
-      sinkDir: String): Unit = {
+      sinkDir: String): Unit = graft.InternalCaches.scoped {
     val spark = batch.sparkSession
     // decode + hash once: the probe, both commits and the quarantine
-    // all read the hashes
+    // all read the hashes; the scope releases the checkpoint on return
     val (hashed, ckpt) = graft.InternalCaches.localCheckpointHandle(
       Multimodal.aHash64(
         Multimodal.decodeImageBatch(batch, "doc_id", "payload")).toDF())

@@ -1252,7 +1252,7 @@ class AtomicIncrementSpec extends SparkSpec {
   test("string watermarks under a set parquet.statistics.truncate.length " +
       "refuse the cut bounds: each append and fold takes the next batch, " +
       "and statsAggregate answers None or the exact bounds") {
-    import graft.operators.{Incremental, IncrementalAgg}
+    import graft.operators.IncrementalAgg
     val truncKey = "parquet.statistics.truncate.length"
     def batch(ts: String) = Seq((ts, 1L)).toDF("ts", "x")
     def tsOf(df: org.apache.spark.sql.DataFrame) =
@@ -1264,9 +1264,6 @@ class AtomicIncrementSpec extends SparkSpec {
       ("appendIncrementAtomic",
         (df, sink) => AtomicIncrement.appendIncrementAtomic(df, sink, "ts"),
         sink => tsOf(AtomicIncrement.readCommitted(spark, sink))),
-      ("Incremental.appendIncrement",
-        (df, sink) => Incremental.appendIncrement(df, sink, "ts"),
-        sink => tsOf(spark.read.parquet(sink))),
       ("IncrementalAgg.mergeBatch (string __wm)",
         (df, sink) => IncrementalAgg.mergeBatch(df, sink, Seq("ts"),
           Seq("x"), "ts"),

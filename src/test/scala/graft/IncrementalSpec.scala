@@ -1,13 +1,16 @@
 package graft
 
-import graft.operators.{Incremental, JdbcDdl}
+import graft.operators.{AtomicIncrement, Incremental, JdbcDdl}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 
 /** High-watermark incremental append (SURVEY.md §2.8, K5/S9):
-  * idempotence, strict-watermark filtering, schema evolution, and the
-  * JDBC DDL generation the reference's _ensure_table_and_columns does.
+  * idempotence, strict-watermark filtering and schema evolution of the
+  * graft sink's append, the footer-stats watermark it falls back to,
+  * and the JDBC DDL generation the reference's
+  * _ensure_table_and_columns does.
   */
 class IncrementalSpec extends SparkSpec {
   import spark.implicits._
@@ -18,93 +21,45 @@ class IncrementalSpec extends SparkSpec {
   test("first append writes all rows; re-running the same input appends 0") {
     val path = tmp()
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
-    assert(Incremental.appendIncrement(df, path, "k") == 3)
-    assert(Incremental.appendIncrement(df, path, "k") == 0)
-    assert(spark.read.parquet(path).count() == 3)
+    assert(AtomicIncrement.appendIncrementAtomic(df, path, "k") == 3)
+    assert(AtomicIncrement.appendIncrementAtomic(df, path, "k") == 0)
+    assert(AtomicIncrement.readCommitted(spark, path).count() == 3)
   }
 
   test("only rows strictly above the sink watermark are appended") {
     val path = tmp()
-    Incremental.appendIncrement(Seq((1L, "a"), (5L, "b")).toDF("k", "v"), path, "k")
-    val n = Incremental.appendIncrement(
+    AtomicIncrement.appendIncrementAtomic(
+      Seq((1L, "a"), (5L, "b")).toDF("k", "v"), path, "k")
+    val n = AtomicIncrement.appendIncrementAtomic(
       Seq((4L, "late"), (5L, "dup"), (6L, "new"), (7L, "new")).toDF("k", "v"), path, "k")
     assert(n == 2)
-    val keys = spark.read.parquet(path).select("k").as[Long].collect().sorted
+    val keys = AtomicIncrement.readCommitted(spark, path)
+      .select("k").as[Long].collect().sorted
     assert(keys.toSeq == Seq(1L, 5L, 6L, 7L))
   }
 
   test("schema evolution: new columns survive mergeSchema read") {
     val path = tmp()
-    Incremental.appendIncrement(Seq((1L, "a")).toDF("k", "v"), path, "k")
-    Incremental.appendIncrement(
+    AtomicIncrement.appendIncrementAtomic(Seq((1L, "a")).toDF("k", "v"), path, "k")
+    AtomicIncrement.appendIncrementAtomic(
       Seq((2L, "b", 9.5)).toDF("k", "v", "score"), path, "k")
-    val evolved = Incremental.readEvolved(spark, path)
+    val evolved = AtomicIncrement.readCommitted(spark, path)
     assert(evolved.columns.toSet == Set("k", "v", "score"))
     val old = evolved.filter(col("k") === 1L).head()
     assert(old.isNullAt(old.fieldIndex("score")))
   }
 
-  test("partitioned variant: watermark from partition dirs, no sink data scan") {
-    val path = tmp()
-    val day1 = Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("d", "v")
-    assert(Incremental.appendIncrementPartitioned(day1, path, "d") == 2)
-    // re-run: idempotent
-    assert(Incremental.appendIncrementPartitioned(day1, path, "d") == 0)
-    // late row (old partition) is rejected; new partition lands
-    val day2 = Seq(("2024-01-02", 99L), ("2024-01-03", 3L)).toDF("d", "v")
-    assert(Incremental.appendIncrementPartitioned(day2, path, "d") == 1)
-    val rows = spark.read.parquet(path)
-      .selectExpr("CAST(d AS STRING) AS d", "v")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(rows == Set(("2024-01-01", 1L), ("2024-01-02", 2L), ("2024-01-03", 3L)))
-  }
-
   test("sink probe goes through the Hadoop FS API: file: URIs work") {
     val path = "file://" + tmp()
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-    assert(Incremental.appendIncrement(df, path, "k") == 2)
-    assert(Incremental.appendIncrement(df, path, "k") == 0)
+    assert(AtomicIncrement.appendIncrementAtomic(df, path, "k") == 2)
+    assert(AtomicIncrement.appendIncrementAtomic(df, path, "k") == 0)
   }
 
-  test("partitioned watermark compares in the column's type, not dir-name order") {
-    val path = tmp()
-    // lexicographic max of dirs would be '9' — the typed max is 10
-    val first = Seq((9L, "a"), (10L, "b")).toDF("p", "v")
-    assert(Incremental.appendIncrementPartitioned(first, path, "p") == 2)
-    // 9 and 10 already present; only 11 is new. A string compare
-    // ('11' < '9') would wrongly re-append nothing — or worse,
-    // re-append 10.
-    val next = Seq((9L, "dup"), (10L, "dup"), (11L, "new")).toDF("p", "v")
-    assert(Incremental.appendIncrementPartitioned(next, path, "p") == 1)
-    val parts = spark.read.parquet(path).select("p").as[Long].collect().sorted
-    assert(parts.toSeq == Seq(9L, 10L, 11L))
-  }
-
-  test("partitioned watermark survives a null partition value " +
-      "(__HIVE_DEFAULT_PARTITION__ dir)") {
-    val path = tmp()
-    val withNull = Seq((Some(9L), "a"), (None, "null-part")).toDF("p", "v")
-    assert(Incremental.appendIncrementPartitioned(withNull, path, "p") == 2)
-    // the hive default-partition dir must not poison the numeric max
-    val next = Seq((Some(9L), "dup"), (Some(10L), "new")).toDF("p", "v")
-    assert(Incremental.appendIncrementPartitioned(next, path, "p") == 1)
-  }
-
-  test("partitioned watermark unescapes Hive dir encoding (timestamp partitions)") {
-    val path = tmp()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    // timestamp dirs land as "ts=2024-01-01 10%3A00%3A00"
-    val first = Seq((t("2024-01-01 10:00:00"), "a"), (t("2024-01-02 11:30:00"), "b"))
-      .toDF("ts", "v")
-    assert(Incremental.appendIncrementPartitioned(first, path, "ts") == 2)
-    // idempotent re-run: without unescaping, the cast of the escaped
-    // dir value nulls out and this would re-append everything (or 0
-    // forever) — the watermark must be the real max timestamp
-    assert(Incremental.appendIncrementPartitioned(first, path, "ts") == 0)
-    val next = Seq((t("2024-01-02 11:30:00"), "dup"), (t("2024-01-03 09:15:00"), "new"))
-      .toDF("ts", "v")
-    assert(Incremental.appendIncrementPartitioned(next, path, "ts") == 1)
-  }
+  /** The parquet files a plain `write.parquet(path)` produced. */
+  private def parts(path: String): Seq[Path] =
+    new java.io.File(path).listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).map(f => new Path(f.toURI))
 
   test("footerMax answers from parquet statistics for numeric/temporal " +
       "and (since r13) strings, declines for absent columns") {
@@ -114,26 +69,26 @@ class IncrementalSpec extends SparkSpec {
         (9L, -2.5, t("2024-03-05 08:30:00"), "z"))
       .toDF("k", "x", "ts", "s")
       .repartition(2).write.parquet(path)
+    val files = parts(path)
     def evalExpr(c: org.apache.spark.sql.Column): Any =
       spark.range(1).select(c).head().get(0)
-    val kMax = Incremental.footerMax(spark, path, "k", LongType)
+    val kMax = Incremental.footerMaxOfFiles(spark, files, "k", LongType)
     assert(kMax.isDefined && evalExpr(kMax.get) == 9L)
-    val xMax = Incremental.footerMax(spark, path, "x", DoubleType)
+    val xMax = Incremental.footerMaxOfFiles(spark, files, "x", DoubleType)
     assert(xMax.isDefined && evalExpr(xMax.get) == 1.5)
     // timestamps: exact when written as TIMESTAMP_MICROS, None (scan
     // fallback) when the writer used INT96 — either way never wrong
-    Incremental.footerMax(spark, path, "ts", TimestampType).foreach { c =>
+    Incremental.footerMaxOfFiles(spark, files, "ts", TimestampType).foreach { c =>
       assert(evalExpr(c) == t("2024-03-05 08:30:00"))
     }
     // strings answer from the byte-ordered binary bounds (r13 — the
     // ISO-string watermark path; parquet-mr OMITS oversized bounds
     // rather than truncating, and omission declines below)
-    val sMax = Incremental.footerMax(spark, path, "s", StringType)
+    val sMax = Incremental.footerMaxOfFiles(spark, files, "s", StringType)
     assert(sMax.isDefined && evalExpr(sMax.get) == "z")
     // absent column: no stats anywhere -> None, caller scans
-    assert(Incremental.footerMax(spark, path, "nope", LongType).isEmpty)
+    assert(Incremental.footerMaxOfFiles(spark, files, "nope", LongType).isEmpty)
   }
-
   test("binary footer bounds agree with Spark's string min/max across " +
       "Unicode (ASCII, Cyrillic, CJK, emoji/supplementary): the " +
       "byte-order contract every string-stats consumer relies on") {
@@ -159,31 +114,10 @@ class IncrementalSpec extends SparkSpec {
       s"Spark's own min/max is not byte order: $sparkMin/$sparkMax " +
         s"vs ${byByte.head}/${byByte.last}")
     // the footer bounds must fold to the same pair
-    val fMax = Incremental.footerMax(spark, path, "s", StringType)
+    val fMax = Incremental.footerMaxOfFiles(spark, parts(path), "s", StringType)
     assert(fMax.isDefined &&
       spark.range(1).select(fMax.get).head().getString(0) == sparkMax,
       "footer max diverged from Spark's string max")
-  }
-
-  test("footer watermark ignores uncommitted files under hidden directories") {
-    val path = tmp()
-    Seq((5L, "a")).toDF("k", "v").write.parquet(path)
-    // a crashed writer's task attempt: higher watermark, never
-    // committed (staged outside, then placed like a leftover task file)
-    val staging = tmp()
-    Seq((99L, "junk")).toDF("k", "v").coalesce(1).write.parquet(staging)
-    val part = new java.io.File(staging).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val tempDir = new java.io.File(s"$path/.staging/0")
-    tempDir.mkdirs()
-    java.nio.file.Files.copy(part.toPath,
-      new java.io.File(tempDir, part.getName).toPath)
-    val m = Incremental.footerMax(spark, path, "k", LongType)
-    assert(m.isDefined)
-    assert(spark.range(1).select(m.get).head().get(0) == 5L)
-    // and the full append honors the committed watermark only
-    assert(Incremental.appendIncrement(
-      Seq((6L, "new")).toDF("k", "v"), path, "k") == 1)
   }
 
   test("footer watermark converts TIMESTAMP_MILLIS statistics by declared unit") {
@@ -192,7 +126,7 @@ class IncrementalSpec extends SparkSpec {
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
     try Seq((t("2024-03-05 08:30:00"), "a")).toDF("ts", "v").write.parquet(path)
     finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
-    Incremental.footerMax(spark, path, "ts", TimestampType) match {
+    Incremental.footerMaxOfFiles(spark, parts(path), "ts", TimestampType) match {
       case Some(c) =>
         // millis stats scaled to micros — NOT a 1970-adjacent value
         assert(spark.range(1).select(c).head().getTimestamp(0) ==

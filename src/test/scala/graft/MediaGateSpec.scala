@@ -77,6 +77,8 @@ class MediaGateSpec extends SparkSpec {
     val index = base.resolve("index").toString
     val sink = base.resolve("sink").toString
     val ckpt = base.resolve("ckpt").toString
+    // suites share one context; only caches ADDED by this test count
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType),
@@ -120,6 +122,8 @@ class MediaGateSpec extends SparkSpec {
       .select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(corrupt == Set(90L))
-    InternalCaches.drain(blocking = true)
+    // and the batch scope left no caches of its own behind
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"batch scope leaked cached RDDs: $leaked")
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
+import graft.operators.AtomicIncrement
 import graft.pipelines.{PipelineMain, ProjectSync}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
@@ -21,7 +23,12 @@ class PipelineMainSpec extends SparkSpec {
     objectClassifier = ProjectSync.Classifier("project_name",
       Seq("атом" -> "АЭС", "ику" -> "ИКУ"), "Неизвестные проекты"))
 
-  private def writeBronze(): String = {
+  private val syncRows = Seq(
+    ("АТОМ-1_корпус_Анна", "Анна", "2024-01-01 10:00:00"),
+    ("прочее_здание", "Борис", "2024-01-02 11:00:00"))
+
+  private def writeBronze(sync: Seq[(String, String, String)] = syncRows)
+      : String = {
     val dir = Files.createTempDirectory("graft_bronze").toString
     def csv(name: String, df: org.apache.spark.sql.DataFrame): Unit =
       df.coalesce(1).write.option("header", "true").option("escape", "\"")
@@ -52,10 +59,8 @@ class PipelineMainSpec extends SparkSpec {
     csv("tim_export_log", Seq(
       ("p1", "Анна", "m1"), ("p2", "Борис", "m2"))
       .toDF("plugin_id", "user_display_name", "message"))
-    csv("tim_export_project_sync", Seq(
-      ("АТОМ-1_корпус_Анна", "Анна", "2024-01-01 10:00:00"),
-      ("прочее_здание", "Борис", "2024-01-02 11:00:00"))
-      .toDF("project_name", "user_display_name", "date"))
+    csv("tim_export_project_sync",
+      sync.toDF("project_name", "user_display_name", "date"))
     csv("ad_users", Seq(("Анна", "anna"), ("Борис", "boris"))
       .toDF("display_name", "login"))
     val taskSchema = StructType(Seq(
@@ -114,8 +119,9 @@ class PipelineMainSpec extends SparkSpec {
   }
 
   /** Every parquet sink of one run: its reported `sinkRows` against a
-    * scan of what landed. An incremental projectsync sink that appended
-    * nothing has no directory and must report 0.
+    * scan of what landed. The projectsync sinks are graft sinks, read
+    * through their manifest; one that appended nothing has no commit
+    * and must report 0.
     */
   private def assertSinkRowsMatchScan(results: Seq[PipelineMain.StageResult],
       sinks: String): Unit = {
@@ -127,9 +133,11 @@ class PipelineMainSpec extends SparkSpec {
       "projectsync_designers", "yougile_tasks", "logs_bim",
       "logs_designers"))
     reported.foreach { case (name, rows) =>
-      val dir = new java.io.File(s"$sinks/$name")
+      val dir = s"$sinks/$name"
       val scanned =
-        if (dir.exists) spark.read.parquet(dir.toString).count() else 0L
+        if (!name.startsWith("projectsync_")) spark.read.parquet(dir).count()
+        else if (AtomicIncrement.snapshot(spark, dir)._1 == 0) 0L
+        else AtomicIncrement.readCommitted(spark, dir).count()
       assert(rows == scanned, s"$name: sinkRows $rows, scan $scanned")
     }
   }
@@ -158,7 +166,43 @@ class PipelineMainSpec extends SparkSpec {
     assert(rows0("logs_designers") == 2L)
   }
 
-  test("one run over the spec's bronze starts 57 Spark jobs: sinks are " +
+  test("a crashed plain append's leftover part file costs the re-run no " +
+      "row: the projectsync sinks read only what their manifest commits") {
+    val bronze = writeBronze(syncRows ++ Seq(
+      ("АТОМ-2_корпус", "Анна", "2024-01-03 09:00:00"),
+      ("ику_блок", "Анна", "2024-01-04 12:00:00")))
+    val sinks = Files.createTempDirectory("graft_sinks_stray").toString
+    val sync = PipelineMain.readBronze(spark, bronze, "tim_export_project_sync")
+      .withColumn("date", col("date").cast(TimestampType))
+    val (bim, _) = ProjectSync.split(ProjectSync.transform(sync,
+      PipelineMain.readBronze(spark, bronze, "ad_users"), cfg))
+    val bimRows = bim.count()
+    assert(bimRows == 3L)
+    // the part file one task of a plain append committed before the
+    // append died: it holds the batch's latest-dated row
+    val stray = Files.createTempDirectory("graft_stray").resolve("d")
+    bim.orderBy(col("date").desc).limit(1).coalesce(1).write
+      .parquet(stray.toString)
+    val part = Files.list(stray).iterator()
+    val file = Iterator.continually(part).takeWhile(_.hasNext).map(_.next())
+      .find(_.toString.endsWith(".parquet")).get
+    val sinkDir = Files.createDirectories(
+      java.nio.file.Paths.get(sinks, "projectsync_bim"))
+    Files.copy(file, sinkDir.resolve("part-00000-stray.parquet"))
+
+    val rows = PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg)
+      .flatMap(_.sinkRows).toMap
+    assert(rows("projectsync_bim") == bimRows,
+      "the leftover's watermark filtered the batch out")
+    val committed = AtomicIncrement.readCommitted(spark, sinkDir.toString)
+    assert(committed.count() == bimRows)
+    assert(committed.select("project_name").as[String].collect().toSet ==
+      bim.select("project_name").as[String].collect().toSet)
+    assert(!AtomicIncrement.committedFiles(spark, sinkDir.toString)
+      .exists(_.contains("stray")))
+  }
+
+  test("one run over the spec's bronze starts 51 Spark jobs: sinks are " +
       "counted from their footers, each bronze schema is inferred once") {
     // Per stage (each CSV bronze read is 2 jobs: header + inference):
     //   bronze       4  plugin, development_stage reads
@@ -167,8 +211,9 @@ class PipelineMainSpec extends SparkSpec {
     //   gitlab      10  gitlab_repos read (2), K6 unmapped collect (2),
     //                   mapping append (1), post-K6 mapping re-read (2),
     //                   gitlab_enriched write (3)
-    //   projectsync 14  sync + ad_users reads (4), per K5 sink a delta
-    //                   count (4) and its append (1)
+    //   projectsync  8  sync + ad_users reads (4), per K5 sink its
+    //                   staging write (2); the graft sink counts the
+    //                   staged rows from their footers
     //   yougile      9  yougile_users read (2), parquet write (6), BOM
     //                   CSV export from the snapshot (1)
     //   logs         6  log read (2), two sink writes (2 each)
@@ -176,7 +221,9 @@ class PipelineMainSpec extends SparkSpec {
     // Before footer counting a run took 78: every `sink` re-read its
     // parquet to count it (footer-schema job + 2-job count, 6 sinks),
     // plugin_mapping was inferred once more in gitlab (2) and the
-    // yougile snapshot inferred its schema from a footer (1).
+    // yougile snapshot inferred its schema from a footer (1). Before
+    // the projectsync sinks became graft sinks a run took 57: each K5
+    // sink cached and counted its delta (4) before appending it (1).
     val bronze = writeBronze()
     val sinks = Files.createTempDirectory("graft_sinks_jobs").toString
     val sc = spark.sparkContext
@@ -204,7 +251,7 @@ class PipelineMainSpec extends SparkSpec {
       marker("pm-jobs-end")
       assert(ended.await(60, TimeUnit.SECONDS), "listener bus never drained")
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 57)
+    assert(jobs.get == 51)
   }
 
   test("fail-fast: breaking bronze drift aborts the first stage, no sinks written") {

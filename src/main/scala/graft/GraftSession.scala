@@ -9,6 +9,12 @@ import org.apache.spark.sql.SparkSession
   * partitions follow parallelism, AQE handles runtime coalescing /
   * skew joins, and the session timezone is pinned to UTC so timestamp
   * semantics match the DuckDB oracle regardless of host TZ.
+  *
+  * The session keeps Hadoop's default (v1) file-output committer: a
+  * plain parquet write that fails leaves no committed task's file in
+  * its output dir. Only the graft sink's staging write
+  * (`graft.operators.Txn.stage`) opts into the v2 committer, because
+  * its manifest publish, not the committer, is the commit boundary.
   */
 object GraftSession {
 
@@ -30,17 +36,6 @@ object GraftSession {
       // explicit since the whole correctness/bench harness rides on them.
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.parquet.enableVectorizedReader", "true")
-      // v2 file-output committer: task commits rename straight into the
-      // output dir, job commit is O(1) instead of moving every task's
-      // dir again. Visibility/atomicity of a graft sink NEVER rides the
-      // committer — the manifest publish is the transaction boundary
-      // and half-staged batch dirs are reclaimed on failure — so v2's
-      // weaker job-failure cleanup is immaterial here while every
-      // staged commit saves the double rename (109 → 95 ms per tiny
-      // staged file, OPTIMIZATION_r18.md; scales with file count).
-      // On an object store without atomic rename you would override
-      // this with a store-native committer either way.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
 
   /** Entries of Spark's generated-class cache (`CodeGenerator`'s LRU;

@@ -1738,15 +1738,13 @@ object AtomicIncrement {
     *
     * Returns (files before, files after).
     *
-    * `bloomCols`: compaction writes NEW data files, which are
-    * bloom-uncovered until the next [[BloomSkip.ensureSidecars]] —
-    * correct (absent sidecar = may-contain) but un-pruned. Naming the
-    * table's point-lookup columns here re-ensures their sidecars in
-    * the same maintenance step, so lookups prune again immediately
-    * after the rewrite.
+    * Compaction writes NEW data files, which are bloom-uncovered until
+    * the next [[BloomSkip.ensureSidecars]] — correct (absent sidecar =
+    * may-contain) but un-pruned; [[Maintenance.maintainAtomic]]
+    * re-covers every lookup column after any rewrite.
     */
   def compact(spark: SparkSession, sink: String,
-      numFiles: Int = 1, bloomCols: Seq[String] = Nil): (Int, Int) = {
+      numFiles: Int = 1): (Int, Int) = {
     val base = latestSnapshot(spark, sink)
     val dataE = base.data
     require(dataE.nonEmpty, s"nothing committed to compact at $sink")
@@ -1764,7 +1762,6 @@ object AtomicIncrement {
     val staged = replaceGated(snap.repartition(numFiles),
       sink, base.version, base.lastBatch, statsFields,
       carriedFloors = base.floors)
-    bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
 
@@ -1792,13 +1789,10 @@ object AtomicIncrement {
     * key domain is the trigger, and after enough random-key churn
     * that is where a merged table drifts). Same OCC/crash/pinned-
     * reader semantics as every snapshot replace. Returns (files
-    * before, files after). `bloomCols` re-ensures point-lookup
-    * sidecars over the rewritten files in the same step (see
-    * [[compact]]).
+    * before, files after).
     */
   def compactClustered(spark: SparkSession, sink: String,
-      byCols: Seq[String], numFiles: Int = 8,
-      bloomCols: Seq[String] = Nil): (Int, Int) = {
+      byCols: Seq[String], numFiles: Int = 8): (Int, Int) = {
     require(byCols.nonEmpty, "cluster columns required")
     val base = latestSnapshot(spark, sink)
     val dataE = base.data
@@ -1812,7 +1806,6 @@ object AtomicIncrement {
       .sortWithinPartitions(byCols.map(col): _*)
     val staged = replaceGated(clustered, sink, base.version,
       base.lastBatch, statsFields, carriedFloors = base.floors)
-    bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
 
@@ -1841,8 +1834,7 @@ object AtomicIncrement {
     * when fewer than two small files stand — nothing to bin.
     */
   def compactSmall(spark: SparkSession, sink: String, smallBytes: Long,
-      targetFiles: Int = 1, keyCol: Option[String] = None,
-      bloomCols: Seq[String] = Nil): (Int, Int) = {
+      targetFiles: Int = 1, keyCol: Option[String] = None): (Int, Int) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1: $targetFiles")
     val fs = fsOf(spark, sink)
     val txn = Txn.begin(spark, sink)
@@ -1866,7 +1858,6 @@ object AtomicIncrement {
       .flatMap(c => fullSchema.fields.find(_.name.equalsIgnoreCase(c)))
     val staged = txn.commit(carry = _ => large ++ dvE,
       schema = _ => Some(fullSchema))(txn.stage(packed, statsFields)).get._2
-    bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (small.size, staged.size)
   }
 
@@ -1908,13 +1899,11 @@ object AtomicIncrement {
     * and pruning remain may-contain correct; an all-null dimension
     * drops out of the grid (degrading to fewer dims, then to
     * [[compactClustered]]/[[compact]]). Same OCC/crash/pinned-reader
-    * semantics as every snapshot replace; `bloomCols` re-covers
-    * point-lookup sidecars in the same step. Returns (files before,
+    * semantics as every snapshot replace. Returns (files before,
     * files after).
     */
   def compactZordered(spark: SparkSession, sink: String,
-      zCols: Seq[String], numFiles: Int, bloomCols: Seq[String],
-      bits: Int): (Int, Int) = {
+      zCols: Seq[String], numFiles: Int = 16, bits: Int = 8): (Int, Int) = {
     require(zCols.size >= 2, s"z-order needs >= 2 columns, got $zCols")
     require(bits >= 1 && bits <= 16, s"bits out of range: $bits")
     require(bits * zCols.size <= 62,
@@ -2016,10 +2005,9 @@ object AtomicIncrement {
     // fewer than two left, degrade to the clustered/plain rewrite
     val live = zCols.zipWithIndex.filterNot { case (_, i) =>
       bounds.isNullAt(2 * i) }
-    if (live.isEmpty) return compact(spark, sink, numFiles, bloomCols)
+    if (live.isEmpty) return compact(spark, sink, numFiles)
     if (live.size == 1)
-      return compactClustered(spark, sink, Seq(live.head._1), numFiles,
-        bloomCols)
+      return compactClustered(spark, sink, Seq(live.head._1), numFiles)
     val side = BigInt(1L << bits)
     def bucket(c: String, i: Int): org.apache.spark.sql.Column = {
       val mn = BigInt(bounds.getLong(2 * i))
@@ -2057,26 +2045,8 @@ object AtomicIncrement {
       ++ coveredStatsFields(dataE, snap.schema)).distinct
     val staged = replaceGated(clustered, sink, base.version,
       base.lastBatch, statsFields, carriedFloors = base.floors)
-    bloomCols.foreach(c => BloomSkip.ensureSidecars(spark, sink, c))
     (dataE.size, staged.size)
   }
-
-  /** [[compactZordered]] over a column list with the usual defaults. */
-  def compactZordered(spark: SparkSession, sink: String,
-      zCols: Seq[String], numFiles: Int): (Int, Int) =
-    compactZordered(spark, sink, zCols, numFiles, Nil, 8)
-
-  def compactZordered(spark: SparkSession, sink: String,
-      zCols: Seq[String]): (Int, Int) =
-    compactZordered(spark, sink, zCols, 16, Nil, 8)
-
-  /** The two-column form earlier rounds shipped — delegates to the
-    * N-dimensional rewrite. */
-  def compactZordered(spark: SparkSession, sink: String,
-      colA: String, colB: String, numFiles: Int = 16,
-      bloomCols: Seq[String] = Nil, bits: Int = 8): (Int, Int) =
-    compactZordered(spark, sink, Seq(colA, colB), numFiles, bloomCols,
-      bits)
 
   /** Replace the committed snapshot with `df`'s contents as manifest
     * version `expectVersion + 1` — the OCC primitive behind [[compact]]

@@ -1469,7 +1469,7 @@ object IncrementalAgg {
         val beforeK = opened("o_orderkey", cutK) < total
         val beforeC = opened("o_custkey", cutC) < total
         AtomicIncrement.compactZordered(s, sink,
-          "o_orderkey", "o_custkey", numFiles = 16)
+          Seq("o_orderkey", "o_custkey"), numFiles = 16)
         val readK = AtomicIncrement.readCommittedAbove(
           s, sink, "o_orderkey", cutK)
         val readC = AtomicIncrement.readCommittedAbove(

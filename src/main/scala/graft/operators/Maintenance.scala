@@ -101,8 +101,7 @@ object Maintenance {
       if (target.smallFileBytes <= 0L || rewrite) (0, 0)
       else AtomicIncrement.compactSmall(spark, target.sink,
         target.smallFileBytes,
-        keyCol = (target.clusterCols ++ target.zorderCols).headOption,
-        bloomCols = target.bloomCols)
+        keyCol = (target.clusterCols ++ target.zorderCols).headOption)
     val (before, after) =
       if (!rewrite)
         (committed,

@@ -45,11 +45,25 @@ private[graft] final class Txn(val spark: SparkSession, val sink: String,
   def newDir(): String =
     own(s"${AtomicIncrement.DataDir}/batch-${java.util.UUID.randomUUID()}")
 
-  /** Write `df` into a new owned dir; one manifest line per part file. */
+  /** Write `df` into a new owned dir; one manifest line per part file.
+    *
+    * The write runs under the v2 file-output committer: task commits
+    * rename straight into the output dir, and the job commit is O(1)
+    * instead of moving every task's files again. Visibility never
+    * rides the committer here: the manifest publish is the commit
+    * boundary, and a failed write's dir is reclaimed. So v2's weaker
+    * job-failure cleanup is immaterial, while every staged commit
+    * saves the double rename (109 → 95 ms per tiny staged file,
+    * OPTIMIZATION_r18.md; scales with file count). The option is set
+    * on this write only, so a plain parquet write elsewhere keeps v1's
+    * all-or-nothing output dir. On an object store without atomic
+    * rename, use a store-native committer instead.
+    */
   def stage(df: DataFrame, statsFields: Seq[StructField])
       : Seq[ManifestEntry] = {
     val dir = newDir()
-    df.write.parquet(s"$sink/$dir")
+    df.write.option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .parquet(s"$sink/$dir")
     entries(fsOf(spark, sink).listStatus(new Path(s"$sink/$dir")).toSeq
       .map(_.getPath.getName)
       .filter(n => n.endsWith(".parquet") && !n.startsWith("_") &&

@@ -1,8 +1,7 @@
 package graft.pipelines
 
-import graft.operators.{AtomicIncrement, Incremental}
+import graft.operators.AtomicIncrement
 import graft.sources.{SchemaGuard, Sinks}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,9 +22,15 @@ import org.apache.spark.sql.types._
   *  - the K6 spreadsheet writeback is forced by an action BEFORE the
   *    mapping is re-read for the gitlab enrichment join, so the side
   *    effect cannot be reordered behind it;
-  *  - the projectsync sinks are graft sinks, written by the K5
-  *    watermark-incremental append (re-running the whole orchestrator
-  *    appends 0; read them with `AtomicIncrement.readCommitted`).
+  *  - every parquet sink is a graft sink (`AtomicIncrement`): the two
+  *    projectsync sinks take the K5 watermark-incremental append
+  *    (re-running the whole orchestrator appends 0), the other six a
+  *    snapshot replace. A write that dies publishes nothing, so each
+  *    gold table stays at its last committed snapshot. Read them with
+  *    `AtomicIncrement.readCommitted`; a plain parquet read of a sink
+  *    dir also sees superseded and staged batch dirs. A sink dir
+  *    written before the sinks were graft sinks keeps its root-level
+  *    part files, which no manifest lists and no read returns.
   */
 object PipelineMain {
 
@@ -121,23 +126,6 @@ object PipelineMain {
         s"pipeline stage '$name' failed — run aborted (fail-fast)", e)
     }
 
-  /** Overwrite `sinkDir/name` with `df` and return its row count,
-    * summed from the footers of the part files the write just produced
-    * (footer metadata only, no Spark job). If any footer cannot
-    * be read, the count falls back to a scan of the written parquet.
-    */
-  private def sink(df: DataFrame, sinkDir: String, name: String): (String, Long) = {
-    val spark = df.sparkSession
-    val dir = new Path(s"$sinkDir/$name")
-    df.write.mode("overwrite").parquet(dir.toString)
-    val parts = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-    val footerRows = parts.map(Incremental.footerStatsOfFileAll(spark, _, Nil)._2)
-    name -> (if (footerRows.forall(_.isDefined)) footerRows.flatten.sum
-      else spark.read.parquet(dir.toString).count())
-  }
-
   /** The full run. Returns per-stage sink row counts, in execution
     * order. `bimUsers` and the projectsync classifier are run config
     * (the reference hard-codes them in notebook cells).
@@ -147,6 +135,26 @@ object PipelineMain {
       syncCfg: ProjectSync.Config,
       maintainTargets: Seq[graft.operators.Maintenance.Target] = Nil)
       : Seq[StageResult] = {
+
+    // the sinks `sink` replaced, in order: maintenance reclaims the
+    // snapshots they superseded
+    val replaced = scala.collection.mutable.ArrayBuffer.empty[String]
+    /** Replace the graft sink `sinkDir/name` with `df` in one snapshot
+      * commit and return its row count, summed from the `__graft_rows`
+      * stats the staging read from the part files' footers (no Spark
+      * job). If a staged line has no count, the committed snapshot is
+      * scanned instead. The superseded snapshot's batch dir stays
+      * until the maintenance stage reclaims it.
+      */
+    def sink(df: DataFrame, name: String): (String, Long) = {
+      val dir = s"$sinkDir/$name"
+      val counts = AtomicIncrement.replaceGated(df, dir,
+          AtomicIncrement.snapshot(spark, dir)._1, batch = None)
+        .map(_.statsFor(AtomicIncrement.RowsCol).flatMap(_.min.toLongOption))
+      replaced += name
+      name -> (if (counts.forall(_.isDefined)) counts.flatten.sum
+        else AtomicIncrement.readCommitted(spark, dir).count())
+    }
 
     // shared dims, read once before any stage (run.py's extractors
     // phase has already landed them in bronze)
@@ -166,8 +174,8 @@ object PipelineMain {
         gitScan, bimUsers)
       val (bim, designers) = Scripts.split(out)
       (StageResult("scripts", Map(
-        sink(bim, sinkDir, "scripts_bim"),
-        sink(designers, sinkDir, "scripts_designers"))), mapping)
+        sink(bim, "scripts_bim"),
+        sink(designers, "scripts_designers"))), mapping)
     }
 
     // 2. gitlab — K6 FIRST: the unmapped-plugin writeback is an action
@@ -202,7 +210,7 @@ object PipelineMain {
       val mappingAfter = readBronze(spark, bronzeDir, "plugin_mapping")
       val enriched = Gitlab.transform(repos, mappingAfter, plugins)
       StageResult("gitlab", Map(
-        sink(enriched, sinkDir, "gitlab_enriched"),
+        sink(enriched, "gitlab_enriched"),
         "mapping_writeback" -> written))
     }
 
@@ -231,14 +239,14 @@ object PipelineMain {
         .json(s"$bronzeDir/yougile_tasks")
       val users = readBronze(spark, bronzeDir, "yougile_users")
       val out = Yougile.transform(tasks, users)
-      val parquetSink = sink(out, sinkDir, "yougile_tasks")
-      // export FROM the parquet snapshot just written — re-running the
+      val parquetSink = sink(out, "yougile_tasks")
+      // export FROM the snapshot just committed — re-running the
       // transform plan would execute the whole anti-join/explode chain
       // a third time and could diverge if bronze changed mid-run. CSV
       // can't carry arrays, so sticker ids flatten in the export only;
-      // the parquet sink keeps the typed column. The written frame's
-      // schema is handed to the reader, so no footer is read to infer it.
-      val snapshot = spark.read.schema(out.schema).parquet(s"$sinkDir/yougile_tasks")
+      // the parquet sink keeps the typed column. The manifest carries
+      // the written frame's schema, so no footer is read to infer it.
+      val snapshot = AtomicIncrement.readCommitted(spark, s"$sinkDir/yougile_tasks")
       Sinks.csvOverwriteWithBom(
         snapshot.withColumn("sticker_ids", concat_ws(",", col("sticker_ids"))),
         s"$sinkDir/yougile_tasks_csv")
@@ -252,8 +260,8 @@ object PipelineMain {
       val out = Logs.transform(logs, plugins, bimUsers)
       val (bim, designers) = Logs.split(out)
       StageResult("logs", Map(
-        sink(bim, sinkDir, "logs_bim"),
-        sink(designers, sinkDir, "logs_designers")))
+        sink(bim, "logs_bim"),
+        sink(designers, "logs_designers")))
     }
 
     // 6. maintenance — the operational home of the derived-artifact
@@ -265,12 +273,17 @@ object PipelineMain {
     // running it after the sinks land mirrors the reference's
     // end-of-run cleanup position and honors the sweep's
     // no-concurrent-readers assumption (the stages above are done).
+    // The same window lets vacuumUncommitted reclaim the snapshot each
+    // replaced sink just superseded (listings and deletes, no Spark
+    // job): a reader still on that snapshot would lose its files.
     // ... and the lakehouse half of the same stage: every atomic sink
     // the run maintains gets one OPTIMIZE → bloom re-cover → vacuum
     // pass (graft.operators.Maintenance) — the sinks above were just
     // written, so the no-concurrent-writers contract holds here too.
     val maintenanceResult = stage("maintenance") {
       val evicted = graft.sources.DerivedCache.vacuumStale(spark)
+      val reclaimed = replaced.map(n => s"${n}_reclaimed" ->
+        AtomicIncrement.vacuumUncommitted(spark, s"$sinkDir/$n").toLong)
       val maintained = maintainTargets.flatMap { t =>
         val r = graft.operators.Maintenance.maintainAtomic(spark, t)
         val name = t.sink.split("/").last
@@ -279,7 +292,8 @@ object PipelineMain {
             (r.supersededRemoved + r.orphanDirsRemoved).toLong)
       }
       StageResult("maintenance",
-        Map("evicted_artifacts" -> evicted.size.toLong) ++ maintained)
+        Map("evicted_artifacts" -> evicted.size.toLong) ++ reclaimed ++
+          maintained)
     }
 
     Seq(scriptsResult, gitlabResult, syncResult, yougileResult, logsResult,

@@ -81,33 +81,6 @@ object DerivedCache {
     ok
   }
 
-  /** Evict every cache directory whose key is no longer current — the
-    * operational twin of `AtomicIncrement.vacuumUncommitted`. Content
-    * keys fold in the source's mtime/length, so a rewritten source
-    * STRANDS the old key's artifact forever unless someone sweeps;
-    * `keepCurrent` is the set of dirs the caller still derives (the
-    * result of re-calling `dirFor` for each live (source, kind,
-    * params) tuple), and everything else under the cache root goes.
-    * Returns the deleted dirs. Deleting a dir another process is
-    * still BUILDING is safe (no _SUCCESS yet, the loser rebuilds) —
-    * but deleting a COMPLETE artifact while another job is mid-read
-    * fails that reader's tasks with FileNotFoundException (Spark has
-    * already resolved the file listing). Vacuum therefore assumes no
-    * concurrent readers: single-harness / maintenance-window use.
-    */
-  def vacuum(spark: SparkSession, keepCurrent: Set[String]): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(
-      s"${sys.props("java.io.tmpdir")}/graft_cache")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val keep = keepCurrent.map(d =>
-      fs.makeQualified(new org.apache.hadoop.fs.Path(d)).toString)
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        !keep.contains(fs.makeQualified(st.getPath).toString))
-      .map { st => fs.delete(st.getPath, true); st.getPath.toString }
-  }
-
   /** The OPERATIONAL sweep (run by PipelineMain's maintenance stage):
     * evict every artifact whose derivation this process knows
     * (same kind as a cataloged tuple) but whose key is no longer
@@ -117,7 +90,7 @@ object DerivedCache {
     * source's CURRENT state; kinds absent from the catalog are not
     * touched, so a process that derived nothing deletes nothing and
     * other workloads' artifact families survive. Same no-concurrent-
-    * readers assumption as [[vacuum]].
+    * readers assumption as every sweep here ([[sweep]]).
     */
   def vacuumStale(spark: SparkSession): Seq[String] = {
     import scala.jdk.CollectionConverters._
@@ -127,19 +100,7 @@ object DerivedCache {
       try Some(dirFor(spark, src, kind, params))
       catch { case _: java.io.IOException => None } // source gone → stranded
     }
-    val root = new org.apache.hadoop.fs.Path(
-      s"${sys.props("java.io.tmpdir")}/graft_cache")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val keepQ = keep.map(d =>
-      fs.makeQualified(new org.apache.hadoop.fs.Path(d)).toString)
-    val pats = tuples.map(_._2).map(k =>
-      java.util.regex.Pattern.quote(k) + "-[0-9a-f]{32}")
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        pats.exists(st.getPath.getName.matches) &&
-        !keepQ.contains(fs.makeQualified(st.getPath).toString))
-      .map { st => fs.delete(st.getPath, true); st.getPath.toString }
+    sweep(spark, tuples.map(_._2), keep)
   }
 
   /** Evict only the cache dirs of the given `kinds` (every key, all
@@ -147,20 +108,36 @@ object DerivedCache {
     * (MultimodalSpec, SimilaritySpec) deletes exactly the artifact
     * family it must rebuild WITHOUT wiping unrelated kinds that other
     * suites in the same JVM, or another process on the host, still
-    * read (DerivedCacheSpec pins the scoping). Dir names are
-    * `kind-<32-hex>`; the hex anchor keeps a kind from prefix-matching
-    * a longer kind name (`trade-edges` vs a hypothetical `trade`).
+    * read (DerivedCacheSpec pins the scoping, no prefix bleed:
+    * `trade-edges` vs a hypothetical `trade`).
     */
-  def vacuumKinds(spark: SparkSession, kinds: Set[String]): Seq[String] = {
+  def vacuumKinds(spark: SparkSession, kinds: Set[String]): Seq[String] =
+    sweep(spark, kinds, Set.empty)
+
+  /** Delete every dir under the cache root named `kind-<32-hex>` for
+    * one of `kinds`, except the dirs in `keep`; returns the deleted
+    * dirs. The hex anchor keeps a kind from prefix-matching a longer
+    * kind name. Deleting a dir another process is still BUILDING is
+    * safe (no _SUCCESS yet, the loser rebuilds), but deleting a
+    * COMPLETE artifact while another job is mid-read fails that
+    * reader's tasks with FileNotFoundException (Spark has already
+    * resolved the file listing). The sweeps therefore assume no
+    * concurrent readers: single-harness / maintenance-window use.
+    */
+  private def sweep(spark: SparkSession, kinds: Set[String],
+      keep: Set[String]): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(
       s"${sys.props("java.io.tmpdir")}/graft_cache")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
+    val keepQ = keep.map(d =>
+      fs.makeQualified(new org.apache.hadoop.fs.Path(d)).toString)
     val pats = kinds.map(k =>
       java.util.regex.Pattern.quote(k) + "-[0-9a-f]{32}")
     fs.listStatus(root).toSeq
       .filter(st => st.isDirectory &&
-        pats.exists(st.getPath.getName.matches))
+        pats.exists(st.getPath.getName.matches) &&
+        !keepQ.contains(fs.makeQualified(st.getPath).toString))
       .map { st => fs.delete(st.getPath, true); st.getPath.toString }
   }
 }

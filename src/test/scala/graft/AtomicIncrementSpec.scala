@@ -995,7 +995,7 @@ class AtomicIncrementSpec extends SparkSpec {
       "fixture broke: pruning possible before the z-order rewrite")
     val before = AtomicIncrement.readCommitted(spark, sink)
       .select("k", "c").as[(Long, Long)].collect().sorted.toSeq
-    val (nb, na) = AtomicIncrement.compactZordered(spark, sink, "k", "c",
+    val (nb, na) = AtomicIncrement.compactZordered(spark, sink, Seq("k", "c"),
       numFiles = 8)
     assert(nb == total && na >= 1)
     val total2 = AtomicIncrement.committedFiles(spark, sink).size
@@ -1015,7 +1015,7 @@ class AtomicIncrementSpec extends SparkSpec {
     }
     // a non-integral dimension has no bucket grid — loud
     val e = intercept[IllegalArgumentException] {
-      AtomicIncrement.compactZordered(spark, sink, "k", "x")
+      AtomicIncrement.compactZordered(spark, sink, Seq("k", "x"))
     }
     assert(e.getMessage.contains("integral"))
   }
@@ -1138,7 +1138,7 @@ class AtomicIncrementSpec extends SparkSpec {
     // the z-key budget is enforced loudly: 16 bits x 4 dims > 62
     val e = intercept[IllegalArgumentException] {
       AtomicIncrement.compactZordered(spark, sink,
-        Seq("k", "c", "d", "k"), 8, Nil, 16)
+        Seq("k", "c", "d", "k"), 8, 16)
     }
     assert(e.getMessage.contains("62-bit"))
   }

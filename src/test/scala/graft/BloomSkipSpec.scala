@@ -200,16 +200,17 @@ class BloomSkipSpec extends SparkSpec {
     assert(lookupRows(sink, id) == fullRows(sink, id))
   }
 
-  test("compact(bloomCols=...) re-covers the rewritten files in the " +
-      "same maintenance step: lookups prune again IMMEDIATELY") {
+  test("one ensureSidecars pass after a clustered rewrite re-covers " +
+      "every rewritten file: lookups prune again IMMEDIATELY") {
     val sink = tmp()
     load(sink)
     BloomSkip.ensureSidecars(spark, sink, "id")
-    AtomicIncrement.compactClustered(spark, sink, Seq("ts"),
-      numFiles = 3, bloomCols = Seq("id"))
+    AtomicIncrement.compactClustered(spark, sink, Seq("ts"), numFiles = 3)
+    assert(BloomSkip.ensureSidecars(spark, sink, "id") ==
+      AtomicIncrement.committedFiles(spark, sink).size)
     // full coverage with zero further builds...
     assert(BloomSkip.ensureSidecars(spark, sink, "id") == 0,
-      "compaction left files uncovered despite bloomCols")
+      "one pass left rewritten files uncovered")
     // ...and an absent-key lookup prunes right away
     assert(BloomSkip.pointLookup(spark, sink, "id", lit(999999L))
       .inputFiles.length <

@@ -24,37 +24,6 @@ class DerivedCacheSpec extends SparkSpec {
     assert(d1 != DerivedCache.dirFor(spark, f.toString, "k", "p=1"))
   }
 
-  test("vacuum evicts the stranded old key and keeps the current one") {
-    val f = Files.createTempFile("graft_dc3", ".parquet")
-    Files.write(f, "v1".getBytes)
-    val oldDir = DerivedCache.dirFor(spark, f.toString, "vac", "p=1")
-    Files.createDirectories(Paths.get(oldDir))
-    Files.write(Paths.get(oldDir, "_SUCCESS"), Array.emptyByteArray)
-    // the source is rewritten → new content key; the old artifact is
-    // now unreachable by any dirFor call and would strand forever
-    Files.write(f, "v2-longer".getBytes)
-    val curDir = DerivedCache.dirFor(spark, f.toString, "vac", "p=1")
-    assert(curDir != oldDir)
-    Files.createDirectories(Paths.get(curDir))
-    Files.write(Paths.get(curDir, "_SUCCESS"), Array.emptyByteArray)
-    // keep-set = every live dir except the stranded key (the shape a
-    // real caller produces by re-deriving dirFor for each live tuple;
-    // here it also leaves other suites' memoized artifacts alone)
-    import scala.jdk.CollectionConverters._
-    def liveDirs: Set[String] = {
-      val root = Paths.get(sys.props("java.io.tmpdir"), "graft_cache")
-      Files.list(root).iterator().asScala.map(_.toString).toSet
-    }
-    val deleted = DerivedCache.vacuum(spark, liveDirs - oldDir)
-    assert(deleted.exists(_.endsWith(Paths.get(oldDir).getFileName.toString)))
-    assert(!Files.exists(Paths.get(oldDir)))
-    assert(DerivedCache.isComplete(spark, curDir))
-    // idempotent: a second sweep with the same keep-set deletes nothing
-    // it shouldn't — the current dir survives again
-    DerivedCache.vacuum(spark, liveDirs)
-    assert(DerivedCache.isComplete(spark, curDir))
-  }
-
   test("vacuumKinds evicts only the named kinds, every key, no prefix bleed") {
     val f = Files.createTempFile("graft_dc4", ".parquet")
     Files.write(f, "v1".getBytes)

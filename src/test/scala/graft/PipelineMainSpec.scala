@@ -119,8 +119,8 @@ class PipelineMainSpec extends SparkSpec {
   }
 
   /** Every parquet sink of one run: its reported `sinkRows` against a
-    * scan of what landed. The projectsync sinks are graft sinks, read
-    * through their manifest; one that appended nothing has no commit
+    * scan of what landed. Every sink is a graft sink, read through its
+    * manifest; a projectsync sink that appended nothing has no commit
     * and must report 0.
     */
   private def assertSinkRowsMatchScan(results: Seq[PipelineMain.StageResult],
@@ -135,8 +135,7 @@ class PipelineMainSpec extends SparkSpec {
     reported.foreach { case (name, rows) =>
       val dir = s"$sinks/$name"
       val scanned =
-        if (!name.startsWith("projectsync_")) spark.read.parquet(dir).count()
-        else if (AtomicIncrement.snapshot(spark, dir)._1 == 0) 0L
+        if (AtomicIncrement.snapshot(spark, dir)._1 == 0) 0L
         else AtomicIncrement.readCommitted(spark, dir).count()
       assert(rows == scanned, s"$name: sinkRows $rows, scan $scanned")
     }
@@ -149,8 +148,8 @@ class PipelineMainSpec extends SparkSpec {
     assertSinkRowsMatchScan(
       PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg), sinks)
 
-    // no BIM users: every *_bim sink is empty; the two written through
-    // the footer count still land (one empty part file each) and count 0
+    // no BIM users: every *_bim sink is empty; the two replaced ones
+    // still commit a snapshot (one empty part file each) and count 0
     val bronze0 = writeBronze()
     val sinks0 = Files.createTempDirectory("graft_sinks_rows0").toString
     val results0 = PipelineMain.run(spark, bronze0, sinks0, Seq.empty,
@@ -164,6 +163,70 @@ class PipelineMainSpec extends SparkSpec {
     assert(rows0("projectsync_bim") == 0L)
     assert(rows0("scripts_designers") == 2L)
     assert(rows0("logs_designers") == 2L)
+  }
+
+  /** The batch dirs under a graft sink's `_data`. */
+  private def batchDirs(sink: String): Set[String] = {
+    val data = new java.io.File(s"$sink/_data")
+    Option(data.listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.startsWith("batch-")).toSet
+  }
+
+  private val overwriteSinks = Seq("scripts_bim", "scripts_designers",
+    "gitlab_enriched", "yougile_tasks", "logs_bim", "logs_designers")
+
+  test("a re-run that dies before its first sink commit leaves every " +
+      "overwrite sink at the last committed snapshot, nothing staged") {
+    import graft.operators.Txn
+    val bronze = writeBronze()
+    val sinks = Files.createTempDirectory("graft_sinks_crash").toString
+    PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg)
+    def bimRows = AtomicIncrement.readCommitted(spark, s"$sinks/scripts_bim")
+      .collect().map(_.toString).sorted.toSeq
+    val run1 = bimRows
+    assert(run1.size == 1)
+    val dirs1 = batchDirs(s"$sinks/scripts_bim")
+    // the monitoring bronze changes: run 2 would replace scripts_bim
+    // with two rows
+    new scala.reflect.io.Directory(
+      new java.io.File(s"$bronze/tim_export_monitoring")).deleteRecursively()
+    Seq(("p1", "Анна", "ABC_Tower_stage2", "1.0", "u", "pn", "pv"),
+      ("p2", "Анна", "Solo", "1.0", "u", "pn", "pv"),
+      ("p2", "Борис", "Solo", "1.0", "u", "pn", "pv"))
+      .toDF("plugin_id", "user_display_name", "project_name",
+        "plugin_version", "username", "program_name", "program_version")
+      .coalesce(1).write.option("header", "true")
+      .csv(s"$bronze/tim_export_monitoring")
+
+    val e = intercept[RuntimeException] {
+      Txn.racing(throw new IllegalStateException("boom")) {
+        PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg)
+      }
+    }
+    assert(e.getMessage.contains("'scripts'"))
+    assert(bimRows == run1, "the crashed replace moved scripts_bim")
+    assert(batchDirs(s"$sinks/scripts_bim") == dirs1,
+      "the crashed replace left its staged dir")
+    for (name <- overwriteSinks)
+      assert(batchDirs(s"$sinks/$name") == AtomicIncrement.committedFiles(
+        spark, s"$sinks/$name").map(_.split("/")(1)).toSet, name)
+  }
+
+  test("after two runs into one sink dir, each overwrite sink holds " +
+      "exactly its committed batch dir") {
+    val bronze = writeBronze()
+    val sinks = Files.createTempDirectory("graft_sinks_twice").toString
+    PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg)
+    val report = PipelineMain.run(spark, bronze, sinks, Seq("Анна"), cfg)
+      .find(_.stage == "maintenance").get.sinkRows
+    for (name <- overwriteSinks) {
+      val dir = s"$sinks/$name"
+      val committed = AtomicIncrement.committedFiles(spark, dir)
+        .map(_.split("/")(1)).toSet
+      assert(committed.size == 1, s"$name: $committed")
+      assert(batchDirs(dir) == committed, s"$name kept a superseded dir")
+      assert(report(s"${name}_reclaimed") == 1L, s"$name: $report")
+    }
   }
 
   test("a crashed plain append's leftover part file costs the re-run no " +

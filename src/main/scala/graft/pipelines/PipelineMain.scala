@@ -27,10 +27,11 @@ import org.apache.spark.sql.types._
   *    (re-running the whole orchestrator appends 0), the other six a
   *    snapshot replace. A write that dies publishes nothing, so each
   *    gold table stays at its last committed snapshot. Read them with
-  *    `AtomicIncrement.readCommitted`; a plain parquet read of a sink
-  *    dir also sees superseded and staged batch dirs. A sink dir
-  *    written before the sinks were graft sinks keeps its root-level
-  *    part files, which no manifest lists and no read returns.
+  *    `AtomicIncrement.readCommitted`: the data files live in batch
+  *    dirs under the sink's hidden `_data` dir, which a plain parquet
+  *    read of the sink dir skips. A sink dir written before these
+  *    sinks were graft sinks keeps its root-level part files; no
+  *    manifest lists them, so `readCommitted` never returns them.
   */
 object PipelineMain {
 

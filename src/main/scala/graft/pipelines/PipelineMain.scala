@@ -4,6 +4,7 @@ import graft.operators.AtomicIncrement
 import graft.sources.{SchemaGuard, Sinks}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CsvSchemaBridge
 import org.apache.spark.sql.types._
 
 /** The `run.py`-equivalent orchestrator (reference: run.py:29-31) —
@@ -18,7 +19,9 @@ import org.apache.spark.sql.types._
   *    the declared contract (SchemaGuard) once, in the first stage that
   *    needs it; the one exception is `plugin_mapping`, read in scripts
   *    (that frame also feeds the gitlab stage's unmapped-plugin check)
-  *    and read again after the K6 writeback changed it;
+  *    and read again after the K6 writeback changed it. Inference runs
+  *    in the driver over the CSV lines with Spark's own inference
+  *    classes, so a bronze read starts no Spark job;
   *  - the K6 spreadsheet writeback is forced by an action BEFORE the
   *    mapping is re-read for the gitlab enrichment join, so the side
   *    effect cannot be reordered behind it;
@@ -84,13 +87,17 @@ object PipelineMain {
 
   /** CSV bronze read: inference happens here and only here; breaking
     * drift (contract column removed or retyped, or a dereferenced
-    * numeric/temporal column missing) aborts the run.
+    * numeric/temporal column missing) aborts the run. The schema is
+    * the one `inferSchema` gives, inferred in the driver
+    * (`CsvSchemaBridge`), so the read starts no Spark job; the data is
+    * then read under it.
     */
   def readBronze(spark: SparkSession, bronzeDir: String, name: String): DataFrame = {
-    val df = spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(s"$bronzeDir/$name")
+    val path = s"$bronzeDir/$name"
+    val options = Map("header" -> "true", "inferSchema" -> "true")
+    val df = spark.read.options(options)
+      .schema(CsvSchemaBridge.inferSchema(spark, path, options))
+      .csv(path)
     contracts.get(name).foreach(c => SchemaGuard.requireCompatible(c, df.schema))
     val missing = requiredCols.getOrElse(name, Nil)
       .filterNot(df.columns.map(_.toLowerCase).contains)

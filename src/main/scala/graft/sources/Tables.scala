@@ -78,6 +78,9 @@ object Tables {
 
   /** S1: CSV scan — header, schema inference, UTF-8 (BOM handled by the
     * reader); reference site: datasets/create_logs_dataset.ipynb cell 1.
+    * Inference stays on Spark's reader here, not the driver-side
+    * `CsvSchemaBridge` that bronze reads use: a `multiLine` record
+    * spans lines, which line-based inference cannot see.
     */
   def csv(spark: SparkSession, path: String): DataFrame =
     spark.read

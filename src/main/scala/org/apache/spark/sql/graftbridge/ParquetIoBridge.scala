@@ -34,7 +34,9 @@ import org.apache.spark.util.SerializableConfiguration
   * execution API, reachable because this package sits under
   * `org.apache.spark.sql` — the same placement Spark's own external
   * connector modules compile against. Keeping every Spark-private
-  * touch in `graftbridge` keeps the audit surface two small files.
+  * touch in `graftbridge` keeps the audit surface three small files,
+  * the third being [[CsvSchemaBridge]] (bronze CSV schema inference in
+  * the driver).
   */
 object ParquetIoBridge {
 

@@ -265,21 +265,22 @@ class PipelineMainSpec extends SparkSpec {
       .exists(_.contains("stray")))
   }
 
-  test("one run over the spec's bronze starts 51 Spark jobs: sinks are " +
-      "counted from their footers, each bronze schema is inferred once") {
-    // Per stage (each CSV bronze read is 2 jobs: header + inference):
-    //   bronze       4  plugin, development_stage reads
-    //   scripts     14  monitoring + plugin_mapping reads (4), two
+  test("one run over the spec's bronze starts 31 Spark jobs: no bronze " +
+      "read starts one, sinks are counted from their footers") {
+    // Per stage (a CSV bronze read infers its schema in the driver and
+    // starts no job):
+    //   bronze       0  plugin, development_stage reads
+    //   scripts     10  monitoring + plugin_mapping reads (0), two
     //                   sink writes (5 each)
-    //   gitlab      10  gitlab_repos read (2), K6 unmapped collect (2),
-    //                   mapping append (1), post-K6 mapping re-read (2),
+    //   gitlab       6  gitlab_repos read (0), K6 unmapped collect (2),
+    //                   mapping append (1), post-K6 mapping re-read (0),
     //                   gitlab_enriched write (3)
-    //   projectsync  8  sync + ad_users reads (4), per K5 sink its
+    //   projectsync  4  sync + ad_users reads (0), per K5 sink its
     //                   staging write (2); the graft sink counts the
     //                   staged rows from their footers
-    //   yougile      9  yougile_users read (2), parquet write (6), BOM
+    //   yougile      7  yougile_users read (0), parquet write (6), BOM
     //                   CSV export from the snapshot (1)
-    //   logs         6  log read (2), two sink writes (2 each)
+    //   logs         4  log read (0), two sink writes (2 each)
     //   maintenance  0
     // Before footer counting a run took 78: every `sink` re-read its
     // parquet to count it (footer-schema job + 2-job count, 6 sinks),
@@ -287,12 +288,16 @@ class PipelineMainSpec extends SparkSpec {
     // yougile snapshot inferred its schema from a footer (1). Before
     // the projectsync sinks became graft sinks a run took 57: each K5
     // sink cached and counted its delta (4) before appending it (1).
+    // Before bronze inference moved into the driver a run took 51:
+    // each of the 10 CSV bronze reads ran a header job and an
+    // inference job, both with call site `csv at PipelineMain.scala`.
     val bronze = writeBronze()
     val sinks = Files.createTempDirectory("graft_sinks_jobs").toString
     val sc = spark.sparkContext
     // counts the jobs between two marker jobs: the bus delivers in
     // order, so once the end marker is seen every job of the run is in
     val jobs = new AtomicInteger
+    val callSites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val ended = new CountDownLatch(1)
     @volatile var counting = false
     val listener = new SparkListener {
@@ -300,7 +305,11 @@ class PipelineMainSpec extends SparkSpec {
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
           case Some("pm-jobs-begin") => counting = true
           case Some("pm-jobs-end") => counting = false; ended.countDown()
-          case _ => if (counting) jobs.incrementAndGet()
+          case _ => if (counting) {
+            jobs.incrementAndGet()
+            // the call site is the name of the job's last stage
+            e.stageInfos.sortBy(_.stageId).lastOption.foreach(st => callSites.add(st.name))
+          }
         }
     }
     def marker(group: String): Unit = {
@@ -314,7 +323,10 @@ class PipelineMainSpec extends SparkSpec {
       marker("pm-jobs-end")
       assert(ended.await(60, TimeUnit.SECONDS), "listener bus never drained")
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 51)
+    val bronzeJobs = callSites.toArray.map(_.toString)
+      .filter(_.startsWith("csv at PipelineMain.scala"))
+    assert(bronzeJobs.isEmpty, s"readBronze started jobs: ${bronzeJobs.mkString(", ")}")
+    assert(jobs.get == 31)
   }
 
   test("fail-fast: breaking bronze drift aborts the first stage, no sinks written") {

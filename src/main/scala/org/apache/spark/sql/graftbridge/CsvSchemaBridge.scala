@@ -54,10 +54,9 @@ object CsvSchemaBridge {
     SQLConf.withExistingConf(conf) {
       val hadoopConf = state.newHadoopConf()
       val root = new Path(path)
-      val fs = root.getFileSystem(hadoopConf)
-      val top = fs.getFileStatus(root)
-      val files = (if (top.isFile) Seq(top) else fs.listStatus(root).toSeq
-        .filterNot(st => HadoopFSUtils.shouldFilterOutPathName(st.getPath.getName)))
+      // a file lists as itself
+      val files = root.getFileSystem(hadoopConf).listStatus(root).toSeq
+        .filterNot(st => HadoopFSUtils.shouldFilterOutPathName(st.getPath.getName))
         .map { st => require(st.isFile, s"CSV inference in the driver reads no subdirectory: ${st.getPath}"); st }
         .sortBy(st => (-st.getLen, st.getPath.getName))
       if (files.isEmpty) throw QueryCompilationErrors.dataSchemaNotSpecifiedError("CSV")

@@ -33,11 +33,13 @@ class CsvInferSpec extends SparkSpec {
   private def fields(fs: (String, DataType)*): StructType =
     StructType(fs.map { case (n, t) => StructField(n, t) })
 
-  test("ints next to longs, decimals and doubles") {
-    assertSame(dir("p.csv" ->
-      "i,l,dec,dbl,mixed\n41,41,1,1,1\n7,4100000000,12345678901234567890,1.5,x\n"),
-      fields("i" -> IntegerType, "l" -> LongType, "dec" -> DecimalType(20, 0),
-        "dbl" -> DoubleType, "mixed" -> StringType))
+  test("ints next to longs, decimals and doubles; a file path reads as its dir") {
+    val d = dir("p.csv" ->
+      "i,l,dec,dbl,mixed\n41,41,1,1,1\n7,4100000000,12345678901234567890,1.5,x\n")
+    val expected = fields("i" -> IntegerType, "l" -> LongType,
+      "dec" -> DecimalType(20, 0), "dbl" -> DoubleType, "mixed" -> StringType)
+    assertSame(d, expected)
+    assertSame(s"$d/p.csv", expected)
   }
 
   test("timestamps in the sync `date` shape, dates, booleans, an all-null column and empty cells") {

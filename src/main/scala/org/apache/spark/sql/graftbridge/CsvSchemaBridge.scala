@@ -47,17 +47,18 @@ object CsvSchemaBridge {
     // as CSVFileFormat.inferSchema builds them
     val opts = new CSVOptions(options, conf.csvColumnPruning,
       conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
-    require(!opts.multiLine, "CSV inference in the driver is line-based: multiLine is not supported")
-    require(opts.samplingRatio == 1.0, s"CSV inference in the driver reads every line: samplingRatio ${opts.samplingRatio}")
-    require(Charset.forName(opts.charset) == StandardCharsets.UTF_8, s"CSV inference in the driver reads UTF-8: ${opts.charset}")
-    require(opts.lineSeparator.isEmpty, "CSV inference in the driver splits lines as Hadoop's default reader: lineSep")
+    def refuse(what: String) = s"CSV inference in the driver does not support $what"
+    require(!opts.multiLine, refuse("multiLine"))
+    require(opts.samplingRatio == 1.0, refuse(s"samplingRatio ${opts.samplingRatio}"))
+    require(Charset.forName(opts.charset) == StandardCharsets.UTF_8, refuse(s"charset ${opts.charset}"))
+    require(opts.lineSeparator.isEmpty, refuse("lineSep"))
     SQLConf.withExistingConf(conf) {
       val hadoopConf = state.newHadoopConf()
       val root = new Path(path)
       // a file lists as itself
       val files = root.getFileSystem(hadoopConf).listStatus(root).toSeq
         .filterNot(st => HadoopFSUtils.shouldFilterOutPathName(st.getPath.getName))
-        .map { st => require(st.isFile, s"CSV inference in the driver reads no subdirectory: ${st.getPath}"); st }
+        .map { st => require(st.isFile, refuse(s"subdirectory ${st.getPath}")); st }
         .sortBy(st => (-st.getLen, st.getPath.getName))
       if (files.isEmpty) throw QueryCompilationErrors.dataSchemaNotSpecifiedError("CSV")
 

@@ -34,8 +34,9 @@ import org.apache.spark.util.HadoopFSUtils
   *
   * Line-based inference cannot see a record that spans lines, so
   * `multiLine`, a sampling ratio, a non-UTF-8 charset or a custom line
-  * separator is refused rather than inferred differently. Nothing is
-  * cached: each call reads the files as they are now.
+  * separator is refused rather than inferred differently; so is
+  * `header` false, since the first line is always taken as the header.
+  * Nothing is cached: each call reads the files as they are now.
   */
 object CsvSchemaBridge {
 
@@ -48,6 +49,7 @@ object CsvSchemaBridge {
     val opts = new CSVOptions(options, conf.csvColumnPruning,
       conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
     def refuse(what: String) = s"CSV inference in the driver does not support $what"
+    require(opts.headerFlag, refuse("a headerless file"))
     require(!opts.multiLine, refuse("multiLine"))
     require(opts.samplingRatio == 1.0, refuse(s"samplingRatio ${opts.samplingRatio}"))
     require(Charset.forName(opts.charset) == StandardCharsets.UTF_8, refuse(s"charset ${opts.charset}"))

@@ -94,10 +94,11 @@ class CsvInferSpec extends SparkSpec {
       fields("x" -> DoubleType, "y" -> IntegerType))
   }
 
-  test("multiLine, sampling, a non-UTF-8 charset and lineSep are refused") {
+  test("multiLine, sampling, a non-UTF-8 charset, lineSep and no header are refused") {
     val d = dir("p.csv" -> "a\n1\n")
     for (extra <- Seq("multiLine" -> "true", "samplingRatio" -> "0.5",
-        "encoding" -> "windows-1251", "charset" -> "ISO-8859-1", "lineSep" -> "\n"))
+        "encoding" -> "windows-1251", "charset" -> "ISO-8859-1", "lineSep" -> "\n",
+        "header" -> "false"))
       intercept[IllegalArgumentException](CsvSchemaBridge.inferSchema(spark, d, opts + extra))
     assert(CsvSchemaBridge.inferSchema(spark, d, opts + ("encoding" -> "utf-8")) ==
       fields("a" -> IntegerType))
